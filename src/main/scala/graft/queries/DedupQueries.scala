@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.dedup.Dedup
-import graft.ops.Load
+import graft.ops.{Load, RecordLinkage}
+import graft.ops.RecordLinkage.Field
 import graft.similarity.{Ann, Outliers}
 import graft.sinks.DocumentSink
 
@@ -1968,10 +1969,7 @@ object DedupQueries {
   }
 
   def q153FellegiSunter(spark: SparkSession, dir: String): DataFrame = {
-    import graft.ops.RecordLinkage
-    import graft.ops.RecordLinkage.Field
     val records = fsRecords(spark, dir)
-    val fields = FsM.map { case (n, m, mc) => Field(n, col(s"f_$n"), m, mc) }
     val a = records.filter(col("doc_id") < 100000L).select(
       col("doc_id").as("id_a"), col("f_lang").as("lang_a"),
       col("f_source").as("source_a"), col("f_head").as("head_a"),
@@ -1982,8 +1980,8 @@ object DedupQueries {
       col("f_head").as("head_b"), col("f_lenb").as("lenb_b"))
     val pairs = a.join(b, col("id_a") === col("orig")).drop("orig")
       .unionByName(a.join(b, col("id_a") + 1 === col("orig")).drop("orig"))
-    val weights = RecordLinkage.fieldWeights(records, fields)
-    RecordLinkage.scorePairs(pairs, weights, fields)
+    val weights = RecordLinkage.fieldWeights(records, erFsFields)
+    RecordLinkage.scorePairs(pairs, weights, erFsFields)
       .select(col("id_a"), col("id_b"), col("agree_lang"),
         col("agree_source"), col("agree_head"), col("agree_lenb"),
         col("n_agree"), col("score_fix"), col("decision"))
@@ -2237,14 +2235,17 @@ object DedupQueries {
   /** q235's two blocking passes over `records` (narrow key-only
     * relations — no payloads travel): inverted head-fingerprint index
     * (hot blocks df-pruned at 50, the q150 discipline) ∪ sorted
-    * neighborhood on the tail key (q151's histogram exact-rank, window
-    * 3), unioned through one (id_a, id_b) groupBy that keeps per-tier
-    * provenance. Shared by q235 (full run) and q236 (incremental run on
-    * the merged corpus) so the two candidate sets cannot drift.
+    * neighborhood on the tail key (q151's histogram exact-rank, the
+    * spec's window), unioned through one (id_a, id_b) groupBy that keeps
+    * per-tier provenance. Shared by the full runs (q235, q242) and the
+    * incremental runs on the merged corpus (q236, q243) so the
+    * candidate sets cannot drift.
     */
-  private[graft] def fsBlockCandidates(records: DataFrame): DataFrame =
+  private[graft] def fsBlockCandidates(records: DataFrame,
+      spec: ErSpec): DataFrame =
     fsBlockCandidatesFrom(records,
-      graft.ops.Ordering.exactRank(snmKeyed(records), "skey", "doc_id"))
+      graft.ops.Ordering.exactRank(snmKeyed(records), "skey", "doc_id"),
+      snmWindow = spec.snmWindow)
 
   /** The SNM key relation (doc_id, skey = tail key) — the thing the
     * maintained rank index is ordered by. */
@@ -2259,7 +2260,7 @@ object DedupQueries {
     * re-aggregating the corpus (round-12 verdict #4). */
   private[graft] def fsBlockCandidatesFrom(records: DataFrame,
       ranked: DataFrame, headsOpt: Option[DataFrame] = None,
-      snmWindow: Int = 3): DataFrame = {
+      snmWindow: Int): DataFrame = {
     // pass 1: inverted index on the head fingerprint, hot blocks pruned
     val heads = headsOpt.getOrElse(
       records.groupBy("f_head").agg(count(lit(1)).as("__c"))
@@ -2285,52 +2286,110 @@ object DedupQueries {
       .agg(max("from_head").as("from_head"), max("from_snm").as("from_snm"))
   }
 
-  def q235DedupPipeline(spark: SparkSession, dir: String): DataFrame =
-    q235DedupPipelineTapped(spark, dir, None)
+  // ------------------------------------------------- ER field specs
 
-  /** [[q235DedupPipeline]] with an optional stage tap for the
-    * decomposition tool ([[graft.tools.ErDecomp]]): when set, stage
-    * outputs persist at the tap points so a forced stage is not
-    * recomputed downstream and tap walls attribute to stages. The
-    * default path is byte-identical to the untapped pipeline. */
-  private[graft] def q235DedupPipelineTapped(spark: SparkSession, dir: String,
-      tap: Option[(String, DataFrame) => Unit]): DataFrame = {
-    import graft.ops.RecordLinkage
-    import graft.ops.RecordLinkage.Field
-    val records = fsRecords(spark, dir)
+  private val erFsFields = FsM.map { case (n, m, mc) =>
+    Field(n, col(s"f_$n"), m, mc) }
+
+  /** Reviewed-prior weights for the `body` fuzzy field (fuzzy agreement
+    * has no value histogram, so no u-estimation): +12 / −6 bits in
+    * 16.16 fixed point — strong evidence, as a 256-char edit-distance
+    * agreement should be. Same literals on both engines. */
+  private val BodyWaFix = 786432L // 12 << 16
+  private val BodyWdFix = -393216L // -(6 << 16)
+  private val BodyEditMax = 16
+
+  /** One entity-resolution field set, as data: record source, compared
+    * fields, agreement kernel, prior weight rows (field, w_agree_fix,
+    * w_disagree_fix) for fields with no value histogram, SNM window.
+    * Full scoring, generation-0 artifacts and the delta merge each have
+    * one body taking [[ErKeys]] or [[ErPayload]]. */
+  private[graft] final case class ErSpec(
+      records: (SparkSession, String) => DataFrame,
+      fields: Seq[Field],
+      flag: DataFrame => DataFrame,
+      priorWeights: Seq[(String, Long, Long)],
+      snmWindow: Int) {
+    /** The u-estimated fields: every compared field without a prior. */
+    def estimated: Seq[Field] =
+      fields.filterNot(f => priorWeights.exists(_._1 == f.name))
+    def agreeCols: Seq[Column] = fields.map(f => col(s"agree_${f.name}"))
+  }
+
+  /** q235/q236/q240/q241: the four key fields by equality, window 3. */
+  private[graft] val ErKeys = ErSpec(fsRecords, erFsFields,
+    RecordLinkage.flagPairs(_, erFsFields), Nil, 3)
+
+  /** q242/q243: the key fields plus `f_body` by bounded edit distance —
+    * THE expensive comparison the incremental probe avoids repeating on
+    * history pairs — over a widened SNM window (8). The lev_bounded
+    * kernel (q128's verify tier) is value-identical to
+    * `levenshtein(a,b) <= maxDist` but bands and early-exits instead of
+    * the builtin's full |body|² DP (q242 67.8 s → see
+    * OPTIMIZATION_r13.md). */
+  private[graft] val ErPayload = ErSpec(fsPayloadRecords,
+    erFsFields :+ Field("body", col("f_body"), 0L, 0L),
+    pairs => RecordLinkage.flagPairs(pairs, erFsFields)
+      .withColumn("agree_body",
+        (graft.functions.TextExprs.levBounded(
+          col("body_a"), col("body_b"), BodyEditMax) >= 0).cast("int")),
+    Seq(("body", BodyWaFix, BodyWdFix)), 8)
+
+  private def erSide(records: DataFrame, spec: ErSpec,
+      side: String): DataFrame =
+    records.select(col("doc_id").as(s"id_$side") +:
+      spec.fields.map(f => f.expr.as(s"${f.name}_$side")): _*)
+
+  /** Weights from the estimated fields' value `counts` plus the priors. */
+  private def erWeights(spark: SparkSession, spec: ErSpec,
+      counts: DataFrame): DataFrame = {
+    import spark.implicits._
+    val estimated = RecordLinkage.fieldWeightsFromCounts(counts,
+      spec.estimated)
+    if (spec.priorWeights.isEmpty) estimated
+    else estimated.unionByName(spec.priorWeights
+      .toDF("field", "w_agree_fix", "w_disagree_fix"))
+  }
+
+  private def erScorePairs(spec: ErSpec, cand: DataFrame,
+      records: DataFrame, weights: DataFrame): DataFrame =
+    RecordLinkage.scorePatterns(spec.flag(
+      cand.join(erSide(records, spec, "a"), "id_a")
+        .join(erSide(records, spec, "b"), "id_b")), weights, spec.fields)
+
+  /** Candidates-artifact columns; the NEXT merge re-scores the patterns. */
+  private def erCandCols(spec: ErSpec): Seq[Column] =
+    Seq(col("id_a"), col("id_b"), col("from_head"), col("from_snm"),
+      col("score_fix"), col("decision")) ++ spec.agreeCols
+
+  /** Full scoring of the whole corpus: (persisted records, scored pairs). */
+  private def erScoreFull(spark: SparkSession, spec: ErSpec,
+      dir: String): (DataFrame, DataFrame) = {
+    val records = spec.records(spark, dir)
       .persist() // feeds both blocking passes, u-estimation, and both pair sides
-    tap.foreach(_("records", records))
-    val fields = FsM.map { case (n, m, mc) => Field(n, col(s"f_$n"), m, mc) }
-    val cand0 = fsBlockCandidates(records)
-    val cand = if (tap.isDefined) cand0.persist() else cand0
-    tap.foreach(_("blocking_cand", cand))
-    // scoring tier (q153's machinery, unchanged)
-    val weights = RecordLinkage.fieldWeights(records, fields)
-    tap.foreach(_("weights", weights))
-    val sideA = records.select(col("doc_id").as("id_a") +:
-      FsM.map { case (n, _, _) => col(s"f_$n").as(s"${n}_a") }: _*)
-    val sideB = records.select(col("doc_id").as("id_b") +:
-      FsM.map { case (n, _, _) => col(s"f_$n").as(s"${n}_b") }: _*)
-    val pairs = cand.join(sideA, "id_a").join(sideB, "id_b")
-    val links = RecordLinkage.scorePairs(pairs, weights, fields)
-      .filter(col("decision") === 1)
-      .select("id_a", "id_b", "score_fix", "from_head", "from_snm")
-      .persist() // feeds cluster formation AND the per-cluster edge audit
-    tap.foreach(_("score_links", links))
-    // cluster formation + survivorship + audit
-    val labels0 = graft.graphs.ConnectedComponents.components(
-        links.select(col("id_a").as("a"), col("id_b").as("b")))
+    val cand = fsBlockCandidates(records, spec)
+    val weights = erWeights(spark, spec,
+      RecordLinkage.valueCounts(records, spec.estimated))
+    (records, erScorePairs(spec, cand, records, weights))
+  }
+
+  private def erClusters(edges: DataFrame): DataFrame =
+    graft.graphs.ConnectedComponents.components(edges)
       .withColumnRenamed("id", "doc_id")
       .withColumnRenamed("component", "cluster_id")
-    val labels = if (tap.isDefined) labels0.persist() else labels0
-    tap.foreach(_("cc_labels", labels))
-    val members = records.join(labels, "doc_id").select(
-      col("cluster_id"), col("doc_id").as("id"),
-      (col("doc_id") % 11).as("ver"),
-      when(col("f_lang") =!= "xx", col("f_lang")).as("lang"),
-      col("f_source").as("source"))
-    val golden = graft.ops.Survivorship.golden(members, "cluster_id", "id",
-      Seq("ver"), Seq("lang", "source"))
+
+  private def erGolden(records: DataFrame, labels: DataFrame): DataFrame =
+    graft.ops.Survivorship.golden(
+      records.join(labels, "doc_id").select(
+        col("cluster_id"), col("doc_id").as("id"),
+        (col("doc_id") % 11).as("ver"),
+        when(col("f_lang") =!= "xx", col("f_lang")).as("lang"),
+        col("f_source").as("source")),
+      "cluster_id", "id", Seq("ver"), Seq("lang", "source"))
+
+  /** q235's per-cluster report: golden record + link-edge audit. */
+  private def erReport(golden: DataFrame, links: DataFrame,
+      labels: DataFrame): DataFrame = {
     val edgeStats = links
       .join(labels.withColumnRenamed("doc_id", "id_a"), "id_a")
       .groupBy("cluster_id")
@@ -2346,6 +2405,16 @@ object DedupQueries {
         col("weakest_fix"), col("n_from_head"), col("n_from_snm"),
         col("lang"), col("lang_src"), col("source"), col("source_src"))
       .orderBy("cluster_id")
+  }
+
+  def q235DedupPipeline(spark: SparkSession, dir: String): DataFrame = {
+    val (records, scored) = erScoreFull(spark, ErKeys, dir)
+    val links = scored.filter(col("decision") === 1)
+      .select("id_a", "id_b", "score_fix", "from_head", "from_snm")
+      .persist() // feeds cluster formation AND the per-cluster edge audit
+    val labels = erClusters(
+      links.select(col("id_a").as("a"), col("id_b").as("b")))
+    erReport(erGolden(records, labels), links, labels)
   }
 
   val q235Sql: String = {
@@ -2381,13 +2450,6 @@ object DedupQueries {
     */
   private[graft] def erIsDelta = col("doc_id") % 13 === 4
 
-  private val erFsFields = FsM.map { case (n, m, mc) =>
-    graft.ops.RecordLinkage.Field(n, col(s"f_$n"), m, mc) }
-
-  private def erSide(records: DataFrame, side: String): DataFrame =
-    records.select(col("doc_id").as(s"id_$side") +:
-      FsM.map { case (n, _, _) => col(s"f_$n").as(s"${n}_$side") }: _*)
-
   /** Generation-0 build for q236 (registered in
     * [[graft.SparkEntry.prepare]] — Bench runs it outside the clock):
     * the FULL q235 pipeline over the HISTORY partition, persisting the
@@ -2415,18 +2477,33 @@ object DedupQueries {
     * predicate explicit — q240's two-generation build starts from a
     * history that excludes BOTH delta batches. */
   private[graft] def buildErGenerationAt(spark: SparkSession, dir: String,
-      base: String, histPred: org.apache.spark.sql.Column): Unit = {
+      base: String, histPred: Column): Unit = {
     if (new java.io.File(s"$base/_DONE").exists()) return
     ScratchDirs.deleteOnExit(base)
-    import graft.ops.RecordLinkage
-    val hist = fsRecords(spark, dir).filter(histPred).persist()
+    val hist = writeErScoring(spark, ErKeys, dir, base, histPred)
+    erClusters(spark.read.parquet(s"$base/candidates")
+        .filter(col("decision") === 1)
+        .select(col("id_a").as("a"), col("id_b").as("b")))
+      .write.mode("overwrite").parquet(s"$base/labels")
+    erGolden(hist, spark.read.parquet(s"$base/labels"))
+      .write.mode("overwrite").parquet(s"$base/golden")
+    hist.unpersist()
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$base/_DONE"))
+  }
+
+  /** Generation-0 scoring artifacts at `base` (fields, value_counts,
+    * snm_rank, snm_hist, candidates) from the `histPred` records;
+    * returns that history, persisted, for the caller to unpersist. */
+  private[graft] def writeErScoring(spark: SparkSession, spec: ErSpec,
+      dir: String, base: String, histPred: Column): DataFrame = {
+    val hist = spec.records(spark, dir).filter(histPred).persist()
     // the record store itself: history FIELD VECTORS are a maintained
     // artifact (a production corpus never re-derives them per run), so
     // the probe re-normalizes only the delta's text — at sf1 the
     // fingerprint-normalization regex over 12/13 of the corpus was the
     // probe's single biggest avoidable cost
     hist.write.mode("overwrite").parquet(s"$base/fields")
-    RecordLinkage.valueCounts(hist, erFsFields)
+    RecordLinkage.valueCounts(hist, spec.estimated)
       .write.mode("overwrite").parquet(s"$base/value_counts")
     // the maintained SNM sorted index (round-12 verdict #4): the ranked
     // relation + its key histogram are generation artifacts, so the
@@ -2436,34 +2513,14 @@ object DedupQueries {
       .write.mode("overwrite").parquet(s"$base/snm_rank")
     snmKeyed(hist).groupBy("skey").agg(count(lit(1)).as("c"))
       .write.mode("overwrite").parquet(s"$base/snm_hist")
-    val weights = RecordLinkage.fieldWeightsFromCounts(
-      spark.read.parquet(s"$base/value_counts"), erFsFields)
-    val pairs = fsBlockCandidatesFrom(hist,
-        spark.read.parquet(s"$base/snm_rank"))
-      .join(erSide(hist, "a"), "id_a").join(erSide(hist, "b"), "id_b")
-    RecordLinkage.scorePairs(pairs, weights, erFsFields)
-      .select(Seq(col("id_a"), col("id_b"), col("from_head"),
-        col("from_snm"), col("score_fix"), col("decision")) ++
-        FsM.map { case (n, _, _) => col(s"agree_$n") }: _*)
+    val weights = erWeights(spark, spec,
+      spark.read.parquet(s"$base/value_counts"))
+    val cand = fsBlockCandidatesFrom(hist,
+      spark.read.parquet(s"$base/snm_rank"), snmWindow = spec.snmWindow)
+    erScorePairs(spec, cand, hist, weights)
+      .select(erCandCols(spec): _*)
       .write.mode("overwrite").parquet(s"$base/candidates")
-    val scored = spark.read.parquet(s"$base/candidates")
-    val labels = graft.graphs.ConnectedComponents.components(
-        scored.filter(col("decision") === 1)
-          .select(col("id_a").as("a"), col("id_b").as("b")))
-      .withColumnRenamed("id", "doc_id")
-      .withColumnRenamed("component", "cluster_id")
-    labels.write.mode("overwrite").parquet(s"$base/labels")
-    val members = hist
-      .join(spark.read.parquet(s"$base/labels"), "doc_id").select(
-        col("cluster_id"), col("doc_id").as("id"),
-        (col("doc_id") % 11).as("ver"),
-        when(col("f_lang") =!= "xx", col("f_lang")).as("lang"),
-        col("f_source").as("source"))
-    graft.ops.Survivorship.golden(members, "cluster_id", "id",
-        Seq("ver"), Seq("lang", "source"))
-      .write.mode("overwrite").parquet(s"$base/golden")
-    hist.unpersist()
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$base/_DONE"))
+    hist
   }
 
   /** q236: INCREMENTAL entity resolution — q235's composed pipeline run
@@ -2506,28 +2563,21 @@ object DedupQueries {
       fsRecords(spark, dir).filter(erIsDelta), rollTo = None)
   }
 
-  /** One GENERATION-MERGE step — q236's probe factored so generations
-    * COMPOSE: merge `delta` (a new record batch, disjoint from the
-    * artifact generation at `base`) and, when `rollTo` is set, write the
-    * NEXT generation's complete artifact set there (fields,
-    * value_counts, candidates-with-patterns, labels, golden). The
-    * rolled artifacts are EXACTLY what [[buildErGenerationAt]] would
-    * produce from scratch on history∪delta (counts are additive,
-    * patterns are content-pure, labels/golden are membership-pure), so
-    * merge steps chain: tonight's output state is tomorrow's input
-    * state — q240 proves the composition against the full-recompute
-    * oracle.
-    */
-  private[graft] def erMergeStep(spark: SparkSession, base: String,
-      delta: DataFrame, rollTo: Option[String],
-      tap: (String, DataFrame) => Unit = (_, _) => ()): DataFrame = {
-    import graft.ops.RecordLinkage
+  /** [[erMerge]]'s result; `scored` carries `__hdec`, the pair's
+    * generation-0 decision (NULL for new pairs). */
+  private[graft] final case class ErMerge(records: DataFrame,
+      vcMerged: DataFrame, ranked: DataFrame, scored: DataFrame)
+
+  /** Delta scoring merge: fold `delta` (disjoint from the generation at
+    * `base`) into counts, SNM index and blocking, then score carried
+    * patterns ∪ newly flagged pairs in one scorePatterns pass. */
+  private[graft] def erMerge(spark: SparkSession, spec: ErSpec, base: String,
+      delta: DataFrame): ErMerge = {
     val records = spark.read.parquet(s"$base/fields")
       .unionByName(delta).persist()
-    tap("records", records)
     // (1) exact weight update from additive value counts
     val vcMerged = spark.read.parquet(s"$base/value_counts")
-      .unionByName(RecordLinkage.valueCounts(delta, erFsFields))
+      .unionByName(RecordLinkage.valueCounts(delta, spec.estimated))
       .groupBy("field", "v").agg(sum("c").as("c"))
       // feeds the weights AND the head-block histogram; localCheckpoint
       // (not persist) because the relation is tiny (distinct
@@ -2539,8 +2589,7 @@ object DedupQueries {
       // first consumer's job materializes it — an eager checkpoint was
       // one more driver job dispatch in a probe whose wall is job count
       .localCheckpoint(false)
-    val weights = RecordLinkage.fieldWeightsFromCounts(vcMerged, erFsFields)
-    tap("weights", weights)
+    val weights = erWeights(spark, spec, vcMerged)
     // (2) key-only blocking on the merged corpus — with both corpus-wide
     // passes served from maintained artifacts (round-12 verdict #4):
     // the head-block histogram is a filter over the already-merged
@@ -2562,8 +2611,8 @@ object DedupQueries {
       // SNM-join job materializes it in-pass instead of a dedicated
       // checkpoint job
       .localCheckpoint(false)
-    val candM = fsBlockCandidatesFrom(records, ranked, Some(heads)).persist()
-    tap("blocking_candM", candM)
+    val candM = fsBlockCandidatesFrom(records, ranked, Some(heads),
+      snmWindow = spec.snmWindow).persist()
     val candH = spark.read.parquet(s"$base/candidates")
     // (3) carried pairs keep their persisted agreement patterns
     // (provenance comes from the merged blocking — a pair can gain or
@@ -2575,48 +2624,58 @@ object DedupQueries {
     // pattern nullness cannot route.
     // localCheckpoint (not persist): both branches scan it, and a cached
     // relation re-prints its whole child plan per scan site — the pair
-    // relation is narrow (keys + tier flags + 4 small ints), so
+    // relation is narrow (keys + tier flags + small ints), so
     // truncation is cheap and keeps the printed plan/exchange budget
     // flat. LAZY (round 14): the carried branch's first job
     // materializes it, saving the dedicated checkpoint dispatch
     // __hdec rides along: the OLD decision distinguishes carried links
     // that were old edges (both endpoints in one old cluster by
-    // construction) from everything else — the raw-edge routing below
-    // exploits that to skip one corpus-scale labels join (round 14)
+    // construction) from everything else — erMergeStep's raw-edge
+    // routing exploits that to skip one corpus-scale labels join
     val markedM = candM.join(
       candH.select(Seq(col("id_a"), col("id_b"), lit(1).as("__h"),
-        col("decision").as("__hdec")) ++
-        FsM.map { case (n, _, _) => col(s"agree_$n") }: _*),
+        col("decision").as("__hdec")) ++ spec.agreeCols: _*),
       Seq("id_a", "id_b"), "left").localCheckpoint(false)
     val carried = markedM.filter(col("__h").isNotNull).drop("__h")
     val newPairs = markedM.filter(col("__h").isNull)
       .drop(Seq("__h", "__hdec") ++
-        FsM.map { case (n, _, _) => s"agree_$n" }: _*)
-      .join(erSide(records, "a"), "id_a").join(erSide(records, "b"), "id_b")
-    // patterns ride along: the rolled candidates artifact must carry
-    // them (the NEXT merge re-scores from patterns, never payloads)
-    val scoreCols = Seq(col("id_a"), col("id_b"), col("from_head"),
-      col("from_snm"), col("score_fix"), col("decision")) ++
-      FsM.map { case (n, _, _) => col(s"agree_$n") }
+        spec.fields.map(f => s"agree_${f.name}"): _*)
+      .join(erSide(records, spec, "a"), "id_a")
+      .join(erSide(records, spec, "b"), "id_b")
     // flag the new pairs FIRST, union with the carried patterns, score
-    // ONCE (round 14): the previous per-branch scorePatterns/scorePairs
-    // pair broadcast the pivoted weights twice and duplicated the score
-    // projection — one pass is plan-identical per row and drops a
-    // broadcast + an aggregation subtree from the probe
+    // ONCE (round 14): one weights broadcast and one score projection
+    // instead of one per branch
     val patternCols = Seq(col("id_a"), col("id_b"), col("from_head"),
-      col("from_snm")) ++ FsM.map { case (n, _, _) => col(s"agree_$n") }
-    val scoredAll = RecordLinkage.scorePatterns(
+      col("from_snm")) ++ spec.agreeCols
+    val scored = RecordLinkage.scorePatterns(
       carried.select(patternCols :+ col("__hdec"): _*).unionByName(
-        RecordLinkage.flagPairs(newPairs, erFsFields)
-          .select(patternCols :+
-            lit(null).cast("int").as("__hdec"): _*)),
-      weights, erFsFields)
-    val scoredM = scoredAll.select(scoreCols: _*)
+        spec.flag(newPairs)
+          .select(patternCols :+ lit(null).cast("int").as("__hdec"): _*)),
+      weights, spec.fields)
+    ErMerge(records, vcMerged, ranked, scored)
+  }
+
+  /** One GENERATION-MERGE step — q236's probe factored so generations
+    * COMPOSE: merge `delta` (a new record batch, disjoint from the
+    * artifact generation at `base`) and, when `rollTo` is set, write the
+    * NEXT generation's complete artifact set there (fields,
+    * value_counts, candidates-with-patterns, labels, golden). The
+    * rolled artifacts are EXACTLY what [[buildErGenerationAt]] would
+    * produce from scratch on history∪delta (counts are additive,
+    * patterns are content-pure, labels/golden are membership-pure), so
+    * merge steps chain: tonight's output state is tomorrow's input
+    * state — q240 proves the composition against the full-recompute
+    * oracle.
+    */
+  private[graft] def erMergeStep(spark: SparkSession, base: String,
+      delta: DataFrame, rollTo: Option[String]): DataFrame = {
+    val ErMerge(records, vcMerged, ranked, scoredAll) =
+      erMerge(spark, ErKeys, base, delta)
     val links = scoredAll.filter(col("decision") === 1)
       .select("id_a", "id_b", "score_fix", "from_head", "from_snm",
         "__hdec")
       .persist() // feeds CC, edge stats, and the removed-edge diff
-    tap("score_links", links)
+    val candH = spark.read.parquet(s"$base/candidates")
     // (4) decremental-aware incremental CC: an old link that did not
     // survive (pruned block / SNM shift / weight flip) invalidates its
     // old cluster's star — those clusters rebuild from raw edges
@@ -2668,18 +2727,12 @@ object DedupQueries {
     // the full stars∪rawEdges tree re-executed both times (measured:
     // the probe ran ~2× q235 at sf0.1 before this)
     val ccInput = stars.unionByName(rawEdges).persist()
-    tap("cc_input", ccInput)
     // localCheckpoint (components' own lineage discipline): labels feed
     // members, edge stats, AND touch detection — without truncation each
     // consumer re-executes the stars∪rawEdges tree and the printed plan
     // multiplies it ~30× (first pin came out at 3655 exchanges). LAZY
     // (round 14): the members join materializes it in-pass
-    val labels = graft.graphs.ConnectedComponents
-      .components(ccInput)
-      .withColumnRenamed("id", "doc_id")
-      .withColumnRenamed("component", "cluster_id")
-      .localCheckpoint(false)
-    tap("cc_labels", labels)
+    val labels = erClusters(ccInput).localCheckpoint(false)
     // (5) survivorship only where membership changed: a new cluster is
     // UNTOUCHED iff its members are exactly one old cluster's members
     // (same labeled set, same old size) — then its min-id label, hence
@@ -2702,27 +2755,11 @@ object DedupQueries {
         col("__nl") === col("__n") && col("__nc") === 1 &&
           col("__oldn") === col("__n"))
       .persist() // read twice: the touched filter and the reuse filter
-    tap("survivorship_status", status)
     val touched = status.filter(!col("__untouched")).select("cluster_id")
-    val members = records
-      .join(labels.join(touched, "cluster_id"), "doc_id").select(
-        col("cluster_id"), col("doc_id").as("id"),
-        (col("doc_id") % 11).as("ver"),
-        when(col("f_lang") =!= "xx", col("f_lang")).as("lang"),
-        col("f_source").as("source"))
-    val golden = graft.ops.Survivorship
-      .golden(members, "cluster_id", "id",
-        Seq("ver"), Seq("lang", "source"))
+    val golden = erGolden(records, labels.join(touched, "cluster_id"))
       .unionByName(goldenH.join(
         status.filter(col("__untouched")).select("cluster_id"),
         "cluster_id"))
-    val edgeStats = links
-      .join(labels.withColumnRenamed("doc_id", "id_a"), "id_a")
-      .groupBy("cluster_id")
-      .agg(count(lit(1)).as("n_link_edges"),
-        min("score_fix").as("weakest_fix"),
-        sum(col("from_head").cast(LongType)).as("n_from_head"),
-        sum(col("from_snm").cast(LongType)).as("n_from_snm"))
     // roll the generation forward: the written set is bit-identical to
     // a from-scratch build on history∪delta (see scaladoc), so the next
     // merge consumes it exactly as q236 consumes generation 0
@@ -2730,7 +2767,8 @@ object DedupQueries {
       ScratchDirs.deleteOnExit(g)
       records.write.mode("overwrite").parquet(s"$g/fields")
       vcMerged.write.mode("overwrite").parquet(s"$g/value_counts")
-      scoredM.write.mode("overwrite").parquet(s"$g/candidates")
+      scoredAll.select(erCandCols(ErKeys): _*)
+        .write.mode("overwrite").parquet(s"$g/candidates")
       labels.write.mode("overwrite").parquet(s"$g/labels")
       golden.write.mode("overwrite").parquet(s"$g/golden")
       // the maintained SNM index rolls forward too: merged ranks are
@@ -2743,14 +2781,7 @@ object DedupQueries {
         .write.mode("overwrite").parquet(s"$g/snm_hist")
       java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$g/_DONE"))
     }
-    golden.join(edgeStats, "cluster_id")
-      .select(col("cluster_id"), col("n_members"), col("n_link_edges"),
-        (col("n_link_edges") * 2 ===
-          col("n_members") * (col("n_members") - 1)).cast(IntegerType)
-          .as("is_clique"),
-        col("weakest_fix"), col("n_from_head"), col("n_from_snm"),
-        col("lang"), col("lang_src"), col("source"), col("source_src"))
-      .orderBy("cluster_id")
+    erReport(golden, links, labels)
   }
 
   /** Second delta batch for q240 — disjoint from [[erIsDelta]]. */
@@ -2843,9 +2874,7 @@ object DedupQueries {
       // deterministic first-seen stamp: cluster_id seconds after epoch
       col("cluster_id").cast(TimestampType).as("create_timestamp"))
     DocumentSink.index(spark, b1, store, currentRevision = 1L)
-    val merged = erMergeStep(spark, erBase(dir),
-      fsRecords(spark, dir).filter(erIsDelta), rollTo = None)
-    val g1 = shaped(merged)
+    val g1 = shaped(q236IncrementalEr(spark, dir))
     val prev = g0.select(col("cluster_id") +:
       g0.columns.filter(_ != "cluster_id")
         .map(c => col(c).as(s"__p_$c")).toSeq: _*)
@@ -2914,57 +2943,12 @@ object DedupQueries {
 
   // ------------------------------------------- q242/q243 payload-heavy ER
 
-  /** Reviewed-prior weights for the `body` fuzzy field (fuzzy agreement
-    * has no value histogram, so no u-estimation): +12 / −6 bits in
-    * 16.16 fixed point — strong evidence, as a 256-char edit-distance
-    * agreement should be. Same literals on both engines. */
-  private val BodyWaFix = 786432L // 12 << 16
-  private val BodyWdFix = -393216L // -(6 << 16)
-  private val BodyEditMax = 16
-  private[graft] val ErpSnmWindow = 8
-
-  private def bodyWeightRow(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq(("body", BodyWaFix, BodyWdFix))
-      .toDF("field", "w_agree_fix", "w_disagree_fix")
-  }
-
-  private def erpFields = erFsFields :+
-    graft.ops.RecordLinkage.Field("body", col("f_body"), 0L, 0L)
-
-  private def erpFieldNames = FsM.map(_._1) :+ "body"
-
-  private def erpSide(records: DataFrame, side: String): DataFrame =
-    records.select(col("doc_id").as(s"id_$side") +:
-      erpFieldNames.map(n => col(s"f_$n").as(s"${n}_$side")): _*)
-
-  /** Per-field agreement flags for the payload field set: equality for
-    * the 4 key fields (scorePairs' convention), bounded edit distance
-    * for the body — THE expensive comparison the incremental probe
-    * exists to avoid repeating on history pairs. */
-  private def erpFlag(pairs: DataFrame): DataFrame = {
-    val eq = FsM.map(_._1).foldLeft(pairs) { (df, n) =>
-      df.withColumn(s"agree_$n",
-        (col(s"${n}_a") === col(s"${n}_b")).cast("int"))
-    }
-    // bounded-edit-distance agreement via the lev_bounded kernel (q128's
-    // verify tier): value-identical to `levenshtein(a,b) <= maxDist` —
-    // the kernel returns the exact distance when ≤ maxDist and −1 above
-    // it — but costed for the near-dup workload (affix stripping +
-    // Ukkonen band + row-min early exit) instead of the builtin's full
-    // |body|² DP. Guide §1.2/“per-task work”: same plan shape, ~10×
-    // cheaper expression on the hot path (measured: q242 67.8 s → see
-    // OPTIMIZATION_r13.md).
-    eq.withColumn("agree_body",
-      (graft.functions.TextExprs.levBounded(
-        col("body_a"), col("body_b"), BodyEditMax) >= 0)
-        .cast("int"))
-  }
-
-  private def erpOutCols: Seq[org.apache.spark.sql.Column] =
-    Seq(col("id_a"), col("id_b"), col("from_head"), col("from_snm")) ++
-      erpFieldNames.map(n => col(s"agree_$n")) ++
-      Seq(col("n_agree"), col("score_fix"), col("decision"))
+  /** q242/q243's report: scored pairs with their patterns, pair order. */
+  private def erPairReport(scored: DataFrame): DataFrame =
+    scored.select(Seq(col("id_a"), col("id_b"), col("from_head"),
+        col("from_snm")) ++ ErPayload.agreeCols ++
+        Seq(col("n_agree"), col("score_fix"), col("decision")): _*)
+      .orderBy("id_a", "id_b")
 
   /** q242: the PAYLOAD-HEAVY Fellegi–Sunter scoring pass, full
     * recompute — q235's key-only field set extended with `f_body`
@@ -2978,39 +2962,7 @@ object DedupQueries {
     * artifact ships both walls (round-12 verdict #1).
     */
   def q242ErPayloadFull(spark: SparkSession, dir: String): DataFrame =
-    erpFull(spark, dir, erpFlag)
-
-  /** Attribution variant for tools.ErpProbe ONLY (never registered):
-    * identical pipeline with the body compare swapped for equality, so
-    * the edit-distance pass's share of q242's wall is measurable. */
-  private[graft] def q242ErPayloadEq(spark: SparkSession,
-      dir: String): DataFrame =
-    erpFull(spark, dir, pairs => {
-      val eq = FsM.map(_._1).foldLeft(pairs) { (df, n) =>
-        df.withColumn(s"agree_$n",
-          (col(s"${n}_a") === col(s"${n}_b")).cast("int"))
-      }
-      eq.withColumn("agree_body",
-        (col("body_a") === col("body_b")).cast("int"))
-    })
-
-  private def erpFull(spark: SparkSession, dir: String,
-      flag: DataFrame => DataFrame): DataFrame = {
-    import graft.ops.RecordLinkage
-    val records = fsPayloadRecords(spark, dir)
-      .persist() // feeds blocking, u-estimation, and both pair sides
-    val ranked = graft.ops.Ordering.exactRank(
-      snmKeyed(records), "skey", "doc_id")
-    val cand = fsBlockCandidatesFrom(records, ranked,
-      snmWindow = ErpSnmWindow)
-    val weights = RecordLinkage.fieldWeights(records, erFsFields)
-      .unionByName(bodyWeightRow(spark))
-    val pairs = cand.join(erpSide(records, "a"), "id_a")
-      .join(erpSide(records, "b"), "id_b")
-    RecordLinkage.scorePatterns(flag(pairs), weights, erpFields)
-      .select(erpOutCols: _*)
-      .orderBy("id_a", "id_b")
-  }
+    erPairReport(erScoreFull(spark, ErPayload, dir)._2)
 
   private[graft] def erpBase(dir: String): String =
     s"/tmp/graft_erp_${ScratchDirs.pathKey(dir)}_" +
@@ -3026,25 +2978,7 @@ object DedupQueries {
     val base = erpBase(dir)
     if (new java.io.File(s"$base/_DONE").exists()) return
     ScratchDirs.deleteOnExit(base)
-    import graft.ops.RecordLinkage
-    val hist = fsPayloadRecords(spark, dir).filter(!erIsDelta).persist()
-    hist.write.mode("overwrite").parquet(s"$base/fields")
-    RecordLinkage.valueCounts(hist, erFsFields)
-      .write.mode("overwrite").parquet(s"$base/value_counts")
-    graft.ops.Ordering.exactRank(snmKeyed(hist), "skey", "doc_id")
-      .write.mode("overwrite").parquet(s"$base/snm_rank")
-    snmKeyed(hist).groupBy("skey").agg(count(lit(1)).as("c"))
-      .write.mode("overwrite").parquet(s"$base/snm_hist")
-    val weights = RecordLinkage.fieldWeightsFromCounts(
-        spark.read.parquet(s"$base/value_counts"), erFsFields)
-      .unionByName(bodyWeightRow(spark))
-    val pairs = fsBlockCandidatesFrom(hist,
-        spark.read.parquet(s"$base/snm_rank"), snmWindow = ErpSnmWindow)
-      .join(erpSide(hist, "a"), "id_a").join(erpSide(hist, "b"), "id_b")
-    RecordLinkage.scorePatterns(erpFlag(pairs), weights, erpFields)
-      .select(erpOutCols: _*)
-      .write.mode("overwrite").parquet(s"$base/candidates")
-    hist.unpersist()
+    writeErScoring(spark, ErPayload, dir, base, !erIsDelta).unpersist()
     java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$base/_DONE"))
   }
 
@@ -3065,52 +2999,8 @@ object DedupQueries {
   def q243ErPayloadIncremental(spark: SparkSession,
       dir: String): DataFrame = {
     buildErPayloadGeneration(spark, dir) // no-op when prepare ran
-    import graft.ops.RecordLinkage
-    val base = erpBase(dir)
-    val delta = fsPayloadRecords(spark, dir).filter(erIsDelta)
-    val records = spark.read.parquet(s"$base/fields")
-      .unionByName(delta).persist()
-    val vcMerged = spark.read.parquet(s"$base/value_counts")
-      .unionByName(RecordLinkage.valueCounts(delta, erFsFields))
-      .groupBy("field", "v").agg(sum("c").as("c"))
-      // weights + head histogram; tiny relation. Lazy (round 14):
-      // materialized by its first consumer's job
-      .localCheckpoint(false)
-    val weights = RecordLinkage
-      .fieldWeightsFromCounts(vcMerged, erFsFields)
-      .unionByName(bodyWeightRow(spark))
-    val heads = vcMerged.filter(col("field") === "head" && col("c") <= 50)
-      .select(col("v").as("f_head"))
-    val ranked = graft.ops.Ordering.exactRankMerge(
-        spark.read.parquet(s"$base/snm_rank"),
-        spark.read.parquet(s"$base/snm_hist"),
-        snmKeyed(delta), "skey", "doc_id")
-      // both SNM join sides; truncate the merge. Lazy (round 14)
-      .localCheckpoint(false)
-    val candM = fsBlockCandidatesFrom(records, ranked, Some(heads),
-      snmWindow = ErpSnmWindow).persist()
-    val candH = spark.read.parquet(s"$base/candidates")
-    // same one-left-join carried/new routing as erMergeStep (lit(1)
-    // marker; patterns can be NULL so nullness cannot route)
-    val markedM = candM.join(
-      candH.select(Seq(col("id_a"), col("id_b"), lit(1).as("__h")) ++
-        erpFieldNames.map(n => col(s"agree_$n")): _*),
-      Seq("id_a", "id_b"), "left").localCheckpoint(false)
-    val carried = markedM.filter(col("__h").isNotNull).drop("__h")
-    val newPairs = markedM.filter(col("__h").isNull)
-      .drop("__h" +: erpFieldNames.map(n => s"agree_$n"): _*)
-      .join(erpSide(records, "a"), "id_a")
-      .join(erpSide(records, "b"), "id_b")
-    // one scorePatterns pass over carried ∪ freshly-flagged (round 14:
-    // erMergeStep's rationale — one weights broadcast, one projection)
-    val patternCols = Seq(col("id_a"), col("id_b"), col("from_head"),
-      col("from_snm")) ++ erpFieldNames.map(n => col(s"agree_$n"))
-    RecordLinkage.scorePatterns(
-      carried.select(patternCols: _*).unionByName(
-        erpFlag(newPairs).select(patternCols: _*)),
-      weights, erpFields)
-      .select(erpOutCols: _*)
-      .orderBy("id_a", "id_b")
+    erPairReport(erMerge(spark, ErPayload, erpBase(dir),
+      fsPayloadRecords(spark, dir).filter(erIsDelta)).scored)
   }
 
   /** Shared oracle for q242 AND q243 (full-recompute equality): the
@@ -3126,7 +3016,7 @@ object DedupQueries {
        |         substring(regexp_replace(tnorm, '[^a-z0-9 ]', '', 'g'),
        |                   1, 256) AS f_body
        |  FROM fl0),
-       |${fsGoldChainFor("", "flds", snmWindow = ErpSnmWindow)},
+       |${fsGoldChainFor("", "flds", snmWindow = ErPayload.snmWindow)},
        |ag AS MATERIALIZED (
        |  SELECT c.id_a, c.id_b, c.from_head, c.from_snm,
        |         CAST(a.f_lang = b.f_lang AS INTEGER) AS agree_lang,

@@ -676,23 +676,10 @@ object SearchQueries {
     val probes = d.filter(col("doc_id") % 37 === 0 && col("doc_id") < 10000000L)
     val wR = Window.partitionBy("query_id")
       .orderBy(col("score").desc, col("doc_id"))
-    // ONE tokenize + postings shuffle feeds BOTH scorers (round 14,
-    // guide §6 one-scan): the A/B previously built postings per scorer
-    // — two corpus tokenizes — and ran the eager vocab-size probe
-    // twice. Bm25's index is the superset artifact ((term, doc_id,
-    // __dl, tf) + the 1-row scalars); TfIdf's postings are its
-    // (term, doc_id, tf) projection and its doc count is __n.
-    // Result-identical by the FromPostings/FromIndex contracts.
-    val (post0, rawScalars) = Bm25.index(d, "text", "doc_id")
-    val post = post0.persist()
-    val vq = TfIdfSearch.queryVocabSize(probes, "text")
-    val tfi = TfIdfSearch.topKFromPostings(
-        post.select("term", "doc_id", "tf"), rawScalars.select("__n"),
-        probes, "text", "doc_id", k = 10, vq = vq)
+    val tfi = TfIdfSearch.topK(d, probes, "text", "doc_id", "doc_id", k = 10)
       .withColumn("ra", row_number().over(wR))
       .select("query_id", "doc_id", "ra")
-    val lex = Bm25.topKFromIndex(post, rawScalars, probes, "text",
-        "doc_id", k = 10, vqHint = Some(vq))
+    val lex = Bm25.topK(d, probes, "text", "doc_id", "doc_id", k = 10)
       .withColumn("rb", row_number().over(wR))
       .select("query_id", "doc_id", "rb")
     val inter = tfi.join(lex, Seq("query_id", "doc_id"))

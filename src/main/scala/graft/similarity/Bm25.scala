@@ -146,16 +146,12 @@ object Bm25 {
   def topKFromIndex(postings: DataFrame, rawScalars: DataFrame,
       queries: DataFrame, textCol: String, qidCol: String, k: Int,
       commonDfShare: Double = TfIdfSearch.DefaultCommonDfShare,
-      minCommonDf: Long = TfIdfSearch.MinCommonDf,
-      vqHint: Option[Long] = None): DataFrame = {
+      minCommonDf: Long = TfIdfSearch.MinCommonDf): DataFrame = {
     val (vPost, qTerms, stats) =
       prepFromIndex(postings, rawScalars, queries, textCol, qidCol)
-    // same tokenizer as TfIdfSearch — a caller probing several scorers
-    // passes the vocab size once (round 14) instead of re-running the
-    // eager probe job per scorer
-    val vq = vqHint.getOrElse(queries
+    val vq = queries
       .select(explode(array_distinct(tok(textCol))).as("__t"))
-      .agg(countDistinct(col("__t"))).head.getLong(0))
+      .agg(countDistinct(col("__t"))).head.getLong(0)
     if (vq <= TfIdfSearch.DenseVocabMax)
       LexicalProbe.dense(vPost, qTerms, stats.select("term", "__w"), k)
     else {

@@ -86,20 +86,13 @@ object TfIdfSearch {
     * decision made from the query vocabulary size — one SMALL eager job
     * over the query set (contract: queries are the bounded side).
     */
-  /** Query-vocabulary size — the eager COST probe [[topK]] picks its
-    * strategy with (one small job over the bounded query side). Public
-    * (round 14) so a caller running several scorers over the same
-    * probe set pays it once. */
-  def queryVocabSize(queries: DataFrame, textCol: String): Long =
-    queries
-      .select(explode(array_distinct(tok(textCol))).as("__t"))
-      .agg(countDistinct(col("__t"))).head.getLong(0)
-
   def topK(corpus: DataFrame, queries: DataFrame, textCol: String,
       idCol: String, qidCol: String, k: Int,
       commonDfShare: Double = DefaultCommonDfShare,
       minCommonDf: Long = MinCommonDf): DataFrame = {
-    val vq = queryVocabSize(queries, textCol)
+    val vq = queries
+      .select(explode(array_distinct(tok(textCol))).as("__t"))
+      .agg(countDistinct(col("__t"))).head.getLong(0)
     if (vq <= DenseVocabMax)
       topKDense(corpus, queries, textCol, idCol, qidCol, k)
     else
@@ -107,39 +100,19 @@ object TfIdfSearch {
         commonDfShare, minCommonDf)
   }
 
-  /** [[topK]] served from prebuilt (term, doc_id, tf) postings plus the
-    * 1-row (__n) doc count — identical results by construction ([[topK]]
-    * touches the corpus only through those two relations; the *FromPostings
-    * bodies ARE topKDense/topKTiered's). Lets ONE tokenize + postings
-    * shuffle feed several scorers (q224's A/B rank audit) instead of one
-    * per scorer. `vq` is the caller-supplied [[queryVocabSize]]. */
-  def topKFromPostings(postings: DataFrame, nDocs: DataFrame,
-      queries: DataFrame, textCol: String, qidCol: String, k: Int,
-      vq: Long, commonDfShare: Double = DefaultCommonDfShare,
-      minCommonDf: Long = MinCommonDf): DataFrame =
-    if (vq <= DenseVocabMax)
-      denseFromPostings(postings, nDocs, queries, textCol, qidCol, k)
-    else
-      tieredFromPostings(postings, nDocs, queries, textCol, qidCol, k,
-        commonDfShare, minCommonDf)
-
   /** Dense tier: vocab-indexed integer scoring ([[LexicalProbe.dense]]).
     * On the 31-term bench corpus this replaced a ~2·10⁹-row shuffle
     * aggregate (SCALING.md §8).
     */
   def topKDense(corpus: DataFrame, queries: DataFrame, textCol: String,
-      idCol: String, qidCol: String, k: Int): DataFrame =
-    denseFromPostings(buildPostings(corpus, textCol, idCol),
-      corpus.select(count(lit(1)).as("__n")), queries, textCol, qidCol, k)
-
-  private def denseFromPostings(postings: DataFrame, nDocs: DataFrame,
-      queries: DataFrame, textCol: String, qidCol: String,
-      k: Int): DataFrame = {
+      idCol: String, qidCol: String, k: Int): DataFrame = {
+    val postings = buildPostings(corpus, textCol, idCol)
     val qTerms = qTermsOf(queries, textCol, qidCol)
     val qVocab = qTerms.select("term").distinct()
+    val n = corpus.select(count(lit(1)).as("__n"))
     val pruned = postings.join(broadcast(qVocab), Seq("term"))
     val stats = pruned.groupBy("term").agg(count(lit(1)).as("__df"))
-      .crossJoin(broadcast(nDocs))
+      .crossJoin(broadcast(n))
       .withColumn("__w", idfW(col("__n"), col("__df")))
       .select("term", "__w")
     LexicalProbe.dense(pruned.withColumnRenamed("tf", "v"), qTerms, stats, k)
@@ -152,16 +125,11 @@ object TfIdfSearch {
   def topKTiered(corpus: DataFrame, queries: DataFrame, textCol: String,
       idCol: String, qidCol: String, k: Int,
       commonDfShare: Double = DefaultCommonDfShare,
-      minCommonDf: Long = MinCommonDf): DataFrame =
-    tieredFromPostings(buildPostings(corpus, textCol, idCol),
-      corpus.select(count(lit(1)).as("__n")), queries, textCol, qidCol, k,
-      commonDfShare, minCommonDf)
-
-  private def tieredFromPostings(postings: DataFrame, nDocs: DataFrame,
-      queries: DataFrame, textCol: String, qidCol: String, k: Int,
-      commonDfShare: Double, minCommonDf: Long): DataFrame = {
+      minCommonDf: Long = MinCommonDf): DataFrame = {
+    val postings = buildPostings(corpus, textCol, idCol)
     val qTerms = qTermsOf(queries, textCol, qidCol)
     val qVocab = qTerms.select("term").distinct()
+    val n = corpus.select(count(lit(1)).as("__n"))
 
     // postings pruned to query vocabulary — term-pruning cannot change
     // how many docs contain a surviving term, so df/tfmax read off the
@@ -173,7 +141,7 @@ object TfIdfSearch {
     // upper-bounds any doc's contribution from that term.
     val stats = pruned.groupBy("term")
       .agg(count(lit(1)).as("__df"), max("tf").as("__tfmax"))
-      .crossJoin(broadcast(nDocs))
+      .crossJoin(broadcast(n))
       .withColumn("__w", idfW(col("__n"), col("__df")))
       .withColumn("__common",
         col("__df") > greatest(col("__n") * lit(commonDfShare), lit(minCommonDf)))

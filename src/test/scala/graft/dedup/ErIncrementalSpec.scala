@@ -35,7 +35,7 @@ class ErIncrementalSpec extends SparkSpec {
     val candH = spark.read.parquet(s"$base/candidates")
       .select("id_a", "id_b")
     val records = DedupQueries.fsRecords(spark, sf)
-    val candM = DedupQueries.fsBlockCandidates(records)
+    val candM = DedupQueries.fsBlockCandidates(records, DedupQueries.ErKeys)
       .select("id_a", "id_b").persist()
 
     val carried = candM.join(candH, Seq("id_a", "id_b")).count()
@@ -91,10 +91,7 @@ class ErIncrementalSpec extends SparkSpec {
     val candH = spark.read.parquet(s"$base/candidates")
       .select("id_a", "id_b")
     val records = DedupQueries.fsPayloadRecords(spark, sf)
-    val candM = DedupQueries.fsBlockCandidatesFrom(records,
-        graft.ops.Ordering.exactRank(
-          DedupQueries.snmKeyed(records), "skey", "doc_id"),
-        snmWindow = DedupQueries.ErpSnmWindow)
+    val candM = DedupQueries.fsBlockCandidates(records, DedupQueries.ErPayload)
       .select("id_a", "id_b").persist()
     val carried = candM.join(candH, Seq("id_a", "id_b")).count()
     val fresh = candM.join(candH, Seq("id_a", "id_b"), "left_anti").persist()
@@ -139,31 +136,33 @@ class ErIncrementalSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("the probe ranks from the maintained SNM index, never the corpus") {
-    // round-12 verdict #4's pin: with the index artifact removed, the
-    // merge must FAIL — a probe that silently succeeded would be
-    // re-ranking history from raw values (the corpus-wide pass the
-    // maintained index exists to eliminate). The bit-level carry
-    // contract lives in ExactRankMergeSpec (poisoned-rank test).
-    val base = s"/tmp/graft_er_spec_noidx_${ProcessHandle.current().pid()}"
-    DedupQueries.buildErGenerationAt(spark, sf, base,
-      !DedupQueries.erIsDelta)
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmrf)
-      f.delete()
+  for ((probe, spec) <- Seq("probe" -> DedupQueries.ErKeys,
+      "payload probe" -> DedupQueries.ErPayload))
+    test(s"the $probe ranks from the maintained SNM index, never the corpus") {
+      // round-12 verdict #4's pin: with the index artifact removed, the
+      // merge must FAIL — a probe that silently succeeded would be
+      // re-ranking history from raw values (the corpus-wide pass the
+      // maintained index exists to eliminate). The bit-level carry
+      // contract lives in ExactRankMergeSpec (poisoned-rank test).
+      val base = s"/tmp/graft_er_spec_noidx_${probe.replace(' ', '_')}_" +
+        s"${ProcessHandle.current().pid()}"
+      DedupQueries.writeErScoring(spark, spec, sf, base,
+        !DedupQueries.erIsDelta).unpersist()
+      def rmrf(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rmrf)
+        f.delete()
+      }
+      rmrf(new java.io.File(s"$base/snm_rank"))
+      val delta = spec.records(spark, sf).filter(DedupQueries.erIsDelta)
+      val ex = intercept[Exception] {
+        DedupQueries.erMerge(spark, spec, base, delta).scored
+          .write.format("noop").mode("overwrite").save()
+      }
+      assert(ex.getMessage.contains("snm_rank") ||
+        ex.toString.contains("PATH_NOT_FOUND") ||
+        ex.toString.contains("Path does not exist"),
+        s"unexpected failure mode: $ex")
+      rmrf(new java.io.File(base))
+      spark.catalog.clearCache()
     }
-    rmrf(new java.io.File(s"$base/snm_rank"))
-    val delta = DedupQueries.fsRecords(spark, sf)
-      .filter(DedupQueries.erIsDelta)
-    val ex = intercept[Exception] {
-      DedupQueries.erMergeStep(spark, base, delta, rollTo = None)
-        .write.format("noop").mode("overwrite").save()
-    }
-    assert(ex.getMessage.contains("snm_rank") ||
-      ex.toString.contains("PATH_NOT_FOUND") ||
-      ex.toString.contains("Path does not exist"),
-      s"unexpected failure mode: $ex")
-    rmrf(new java.io.File(base))
-    spark.catalog.clearCache()
-  }
 }
