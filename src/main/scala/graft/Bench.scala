@@ -442,7 +442,7 @@ object Bench {
     if (trancheIdx.forall(_ == "0"))
       Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings").foreach { t =>
-        try spark.read.parquet(s"$sfDir/$t.parquet").write
+        try ops.Load.table(spark, sfDir, t).write
           .format("noop").mode("overwrite").save()
         catch { case _: Throwable => () }
       }

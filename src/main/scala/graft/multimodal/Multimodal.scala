@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SparkSe
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ops.Load
+
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
   * columns with typed metadata. The Spark-side contract — schema,
   * partition sizing, batch-shaped per-partition processing — is real and
@@ -531,7 +533,7 @@ object Multimodal {
     * for opaque blobs — exercises the plumbing without any codec.
     */
   def mediaFromDocuments(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    Load.table(spark, sfDir, "documents")
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("blob"))
 
   /** Deterministic PNG render for a doc id: size and pixel pattern derive
@@ -788,7 +790,7 @@ object Multimodal {
     */
   def syntheticAudio(spark: SparkSession, sfDir: String): DataFrame = {
     val ids = graft.ops.Par.fanOut(
-      spark.read.parquet(s"$sfDir/documents.parquet").select(col("doc_id")))
+      Load.table(spark, sfDir, "documents").select(col("doc_id")))
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("blob", BinaryType)))
     val enc = Encoders.row(schema)
@@ -839,7 +841,7 @@ object Multimodal {
   /** A speech corpus with planted silence gaps (every sampled doc id). */
   def syntheticSpeech(spark: SparkSession, sfDir: String): DataFrame = {
     val ids = graft.ops.Par.fanOut(
-      spark.read.parquet(s"$sfDir/documents.parquet")
+      Load.table(spark, sfDir, "documents")
         .select(col("doc_id")).filter(col("doc_id") % 7 === 3))
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("blob", BinaryType)))
@@ -871,7 +873,7 @@ object Multimodal {
     */
   def syntheticVideos(spark: SparkSession, sfDir: String): DataFrame = {
     val ids = graft.ops.Par.fanOut(
-      spark.read.parquet(s"$sfDir/documents.parquet")
+      Load.table(spark, sfDir, "documents")
         .select(col("doc_id")).filter(col("doc_id") % 7 === 0))
     val schema = StructType(Seq(
       StructField("video_id", LongType),
@@ -908,7 +910,7 @@ object Multimodal {
     // would serialize the render+decode pipeline onto a single core
     // (measured 4.7 s -> 0.6 s at sf0.1 on local[32])
     val ids = graft.ops.Par.fanOut(
-      spark.read.parquet(s"$sfDir/documents.parquet").select(col("doc_id")))
+      Load.table(spark, sfDir, "documents").select(col("doc_id")))
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("blob", BinaryType)))
     val enc = Encoders.row(schema)

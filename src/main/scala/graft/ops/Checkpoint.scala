@@ -21,7 +21,7 @@ object Checkpoint {
   /** Write-through: materialize and return the re-read frame. */
   def apply(df: DataFrame, name: String): DataFrame = {
     df.write.mode("overwrite").parquet(path(name))
-    df.sparkSession.read.parquet(path(name))
+    Load.parquet(df.sparkSession, path(name))
   }
 
   /** Resume if the checkpoint exists, else compute+materialize. */
@@ -32,6 +32,6 @@ object Checkpoint {
         new java.net.URI(p), spark.sparkContext.hadoopConfiguration)
       fs.exists(new org.apache.hadoop.fs.Path(p))
     } catch { case _: Exception => false }
-    if (exists) spark.read.parquet(p) else apply(compute, name)
+    if (exists) Load.parquet(spark, p) else apply(compute, name)
   }
 }

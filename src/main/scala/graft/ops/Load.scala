@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -41,8 +42,64 @@ object Load {
     if (stampOrd) Ordering.stampOrder(df) else df
   }
 
+  /** The one parquet reader of the library. A bare `spark.read.parquet`
+    * infers the schema from the file footers, and that inference runs a
+    * Spark job on every call. Here the inferred schema is kept per
+    * qualified path with the fingerprint it was inferred under, and a
+    * later read with the same fingerprint passes it as the read schema:
+    * a fresh relation (fresh attribute ids, so self-joins still resolve)
+    * built without a job.
+    *
+    * The fingerprint is the name, length and mtime of the file, or of each
+    * file of a flat directory, plus the SQL confs that change parquet
+    * inference. A path it cannot fingerprint (a glob, a missing path, a
+    * directory with subdirectories such as partitions) is read exactly as
+    * a bare `spark.read.parquet`, so its errors and partition discovery
+    * are unchanged. A new fingerprint replaces the path's entry, so the
+    * map holds at most one schema per path.
+    */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    fingerprint(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some((key, fp)) =>
+        Option(parquetSchemas.get(key)).filter(_._1 == fp) match {
+          case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            parquetSchemas.put(key, (fp, df.schema))
+            df
+        }
+    }
+
+  private val parquetSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Fingerprint, StructType)]
+
+  /** (name, length, mtime) of each file, and the inference confs. */
+  private type Fingerprint = (Seq[(String, Long, Long)], Seq[Option[String]])
+
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** (qualified path, fingerprint), or None when the path is not a plain
+    * file or flat directory. Taken before the read, so a file replaced
+    * mid-inference leaves an entry that the next read re-infers.
+    */
+  private def fingerprint(spark: SparkSession, path: String): Option[(String, Fingerprint)] =
+    if (path.exists("{}[]*?\\".contains(_))) None
+    else try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val st = fs.getFileStatus(p)
+      val files = if (st.isDirectory) fs.listStatus(p).toSeq else Seq(st)
+      if (files.exists(_.isDirectory)) None
+      else Some(fs.makeQualified(p).toString ->
+        (files.map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
+          .sortBy(_._1), InferenceConfs.map(spark.conf.getOption)))
+    } catch { case _: java.io.IOException => None }
 
   /** ORC — the other columnar format Spark ships natively; same
     * predicate-pushdown/column-pruning machinery as parquet.
@@ -57,7 +114,7 @@ object Load {
 
   /** Star-schema test tables (`/root/testdata/sf*`): one parquet per table. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
 
   /** `events` — normalize the stream table to the two columns every
     * event-time query consumes, regardless of how the parquet writer

@@ -1229,7 +1229,7 @@ ORDER BY doc_id"""
         .select(explode(col("hh")).as("e"))
         .select(col("e.item").as("token"), col("e.cnt").as("cnt"))
         .write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      Load.parquet(spark, path)
     }
     val runA = runSummary(col("doc_id") % 2 === 0, s"$base/runA")
     val runB = runSummary(col("doc_id") % 2 =!= 0, s"$base/runB")

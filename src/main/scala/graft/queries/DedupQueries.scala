@@ -869,7 +869,7 @@ object DedupQueries {
         Seq("l_returnflag"), col("l_orderkey").cast(StringType))
       .write.mode("overwrite").parquet(s"$base/regsA")
     val merged = Hll.mergeRegisters(Seq(
-      spark.read.parquet(s"$base/regsA"),
+      Load.parquet(spark, s"$base/regsA"),
       Hll.registers(li.filter(col("l_linenumber") % 2 =!= 0),
         Seq("l_returnflag"), col("l_orderkey").cast(StringType))),
       Seq("l_returnflag"))
@@ -1036,7 +1036,7 @@ object DedupQueries {
     val path = s"/tmp/graft_cms_${ScratchDirs.pathKey(dir)}_${ProcessHandle.current().pid()}"
     Cms.sketch(runA, col("l_partkey"), d, w)
       .write.mode("overwrite").parquet(path)
-    val merged = Cms.merge(spark.read.parquet(path),
+    val merged = Cms.merge(Load.parquet(spark, path),
       Cms.sketch(runB, col("l_partkey"), d, w))
     val probe = li.select("l_partkey").distinct()
       .filter(col("l_partkey") % 17 === 0)
@@ -2481,11 +2481,11 @@ object DedupQueries {
     if (new java.io.File(s"$base/_DONE").exists()) return
     ScratchDirs.deleteOnExit(base)
     val hist = writeErScoring(spark, ErKeys, dir, base, histPred)
-    erClusters(spark.read.parquet(s"$base/candidates")
+    erClusters(Load.parquet(spark, s"$base/candidates")
         .filter(col("decision") === 1)
         .select(col("id_a").as("a"), col("id_b").as("b")))
       .write.mode("overwrite").parquet(s"$base/labels")
-    erGolden(hist, spark.read.parquet(s"$base/labels"))
+    erGolden(hist, Load.parquet(spark, s"$base/labels"))
       .write.mode("overwrite").parquet(s"$base/golden")
     hist.unpersist()
     java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$base/_DONE"))
@@ -2514,9 +2514,9 @@ object DedupQueries {
     snmKeyed(hist).groupBy("skey").agg(count(lit(1)).as("c"))
       .write.mode("overwrite").parquet(s"$base/snm_hist")
     val weights = erWeights(spark, spec,
-      spark.read.parquet(s"$base/value_counts"))
+      Load.parquet(spark, s"$base/value_counts"))
     val cand = fsBlockCandidatesFrom(hist,
-      spark.read.parquet(s"$base/snm_rank"), snmWindow = spec.snmWindow)
+      Load.parquet(spark, s"$base/snm_rank"), snmWindow = spec.snmWindow)
     erScorePairs(spec, cand, hist, weights)
       .select(erCandCols(spec): _*)
       .write.mode("overwrite").parquet(s"$base/candidates")
@@ -2573,10 +2573,10 @@ object DedupQueries {
     * patterns ∪ newly flagged pairs in one scorePatterns pass. */
   private[graft] def erMerge(spark: SparkSession, spec: ErSpec, base: String,
       delta: DataFrame): ErMerge = {
-    val records = spark.read.parquet(s"$base/fields")
+    val records = Load.parquet(spark, s"$base/fields")
       .unionByName(delta).persist()
     // (1) exact weight update from additive value counts
-    val vcMerged = spark.read.parquet(s"$base/value_counts")
+    val vcMerged = Load.parquet(spark, s"$base/value_counts")
       .unionByName(RecordLinkage.valueCounts(delta, spec.estimated))
       .groupBy("field", "v").agg(sum("c").as("c"))
       // feeds the weights AND the head-block histogram; localCheckpoint
@@ -2600,8 +2600,8 @@ object DedupQueries {
     val heads = vcMerged.filter(col("field") === "head" && col("c") <= 50)
       .select(col("v").as("f_head"))
     val ranked = graft.ops.Ordering.exactRankMerge(
-        spark.read.parquet(s"$base/snm_rank"),
-        spark.read.parquet(s"$base/snm_hist"),
+        Load.parquet(spark, s"$base/snm_rank"),
+        Load.parquet(spark, s"$base/snm_hist"),
         snmKeyed(delta), "skey", "doc_id")
       // feeds BOTH sides of the SNM pair join and (when rolling) the
       // next generation's index artifact; localCheckpoint — the merged
@@ -2613,7 +2613,7 @@ object DedupQueries {
       .localCheckpoint(false)
     val candM = fsBlockCandidatesFrom(records, ranked, Some(heads),
       snmWindow = spec.snmWindow).persist()
-    val candH = spark.read.parquet(s"$base/candidates")
+    val candH = Load.parquet(spark, s"$base/candidates")
     // (3) carried pairs keep their persisted agreement patterns
     // (provenance comes from the merged blocking — a pair can gain or
     // lose a tier); only NEW pairs join the wide payloads. Routing is
@@ -2675,11 +2675,11 @@ object DedupQueries {
       .select("id_a", "id_b", "score_fix", "from_head", "from_snm",
         "__hdec")
       .persist() // feeds CC, edge stats, and the removed-edge diff
-    val candH = spark.read.parquet(s"$base/candidates")
+    val candH = Load.parquet(spark, s"$base/candidates")
     // (4) decremental-aware incremental CC: an old link that did not
     // survive (pruned block / SNM shift / weight flip) invalidates its
     // old cluster's star — those clusters rebuild from raw edges
-    val labelsH = spark.read.parquet(s"$base/labels")
+    val labelsH = Load.parquet(spark, s"$base/labels")
     val removed = candH.filter(col("decision") === 1)
       .select("id_a", "id_b")
       .join(links.select("id_a", "id_b"), Seq("id_a", "id_b"), "left_anti")
@@ -2742,7 +2742,7 @@ object DedupQueries {
     // never reads (round 14: the corpus-wide records join now runs only
     // for TOUCHED clusters' golden recompute, the actual incremental
     // contract — at 100 TB that join is corpus-sized, touched is not)
-    val goldenH = spark.read.parquet(s"$base/golden")
+    val goldenH = Load.parquet(spark, s"$base/golden")
     val status = labels.select(col("cluster_id"), col("doc_id").as("id"))
       .join(labelsH.select(col("doc_id").as("id"),
         col("cluster_id").as("__old")), Seq("id"), "left")
@@ -2774,7 +2774,7 @@ object DedupQueries {
       // the maintained SNM index rolls forward too: merged ranks are
       // already corrected, the histogram is additive
       ranked.write.mode("overwrite").parquet(s"$g/snm_rank")
-      spark.read.parquet(s"$base/snm_hist")
+      Load.parquet(spark, s"$base/snm_hist")
         .unionByName(
           snmKeyed(delta).groupBy("skey").agg(count(lit(1)).as("c")))
         .groupBy("skey").agg(sum("c").as("c"))
@@ -2864,7 +2864,7 @@ object DedupQueries {
       coalesce(col("lang_src"), lit(-1L)).as("lang_src"),
       coalesce(col("source"), lit("-")).as("source"),
       coalesce(col("source_src"), lit(-1L)).as("source_src"))
-    val g0 = shaped(spark.read.parquet(s"${erBase(dir)}/golden"))
+    val g0 = shaped(Load.parquet(spark, s"${erBase(dir)}/golden"))
     val b1 = g0.select(
       col("cluster_id").as("doc_id"),
       col("n_members"), col("lang"), col("lang_src"),

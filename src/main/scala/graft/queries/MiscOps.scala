@@ -2632,7 +2632,7 @@ object MiscOps {
     val arriving = d.filter(col("doc_id") % 3 =!= 0)
       .unionByName(history.select((col("doc_id") + 100000).as("doc_id"),
         concat(col("text"), lit(" rev2 marker tail")).as("text")))
-    val index = spark.read.parquet(s"${nearDupIdxBase(dir)}/index")
+    val index = Load.parquet(spark, s"${nearDupIdxBase(dir)}/index")
     graft.streaming.Streams.nearDupFilterBatch(arriving, index, history,
         "text", "doc_id", indexBucketsPrefiltered = true)
       .select("doc_id")

@@ -337,8 +337,8 @@ object SearchQueries {
     val d = Load.table(spark, dir, "documents")
     val delta = d.filter(col("doc_id") % 2 =!= 0)
     val base = bm25IdxBase(dir)
-    val histIdx = (spark.read.parquet(s"$base/postings"),
-      spark.read.parquet(s"$base/scalars"))
+    val histIdx = (Load.parquet(spark, s"$base/postings"),
+      Load.parquet(spark, s"$base/scalars"))
     val (mp, ms) =
       Bm25.mergeIndex(Seq(histIdx, Bm25.index(delta, "text", "doc_id")))
     val queries = d.filter(col("doc_id") % 41 === 0 && col("doc_id") < 10000000L)
@@ -599,7 +599,7 @@ object SearchQueries {
     // delta's counts — exact because generations are doc-disjoint (the
     // q152 profile-merge discipline). History POSTINGS still never scan.
     val dfd = pd.groupBy("term").agg(count(lit(1)).cast("long").as("__df"))
-    spark.read.parquet(s"$base/term_df").unionByName(dfd)
+    Load.parquet(spark, s"$base/term_df").unionByName(dfd)
       .groupBy("term").agg(sum("__df").cast("long").as("__df"))
       .write.mode("overwrite").parquet(s"$base/term_df_gen1")
     pd.unpersist()
@@ -629,9 +629,9 @@ object SearchQueries {
   def q165cPhraseIndexIncremental(spark: SparkSession, dir: String): DataFrame = {
     val base = phraseIndexIncBase(dir)
     buildPhraseIndexIncremental(spark, dir) // no-op when prepare already ran
-    val post = spark.read.parquet(s"$base/postings")
-    val tdf = spark.read.parquet(s"$base/term_df_gen1")
-    val phrases = spark.read.parquet(s"$base/phrases")
+    val post = Load.parquet(spark, s"$base/postings")
+    val tdf = Load.parquet(spark, s"$base/term_df_gen1")
+    val phrases = Load.parquet(spark, s"$base/phrases")
     graft.similarity.PhraseSearch.matchesRareFirstWithStats(post, tdf,
         graft.similarity.PhraseSearch.phraseTerms(phrases, "doc_id", "__ph"))
       .orderBy("query_id", "doc_id")
@@ -651,7 +651,7 @@ object SearchQueries {
     val base = phraseIndexBase(dir)
     buildPhraseIndex(spark, dir) // no-op when the untimed prepare already ran
     val (post, tdf) = graft.similarity.PhraseSearch.loadIndex(spark, base)
-    val phrases = spark.read.parquet(s"$base/phrases")
+    val phrases = Load.parquet(spark, s"$base/phrases")
     graft.similarity.PhraseSearch.matchesRareFirstWithStats(post, tdf,
         graft.similarity.PhraseSearch.phraseTerms(phrases, "doc_id", "__ph"))
       .orderBy("query_id", "doc_id")

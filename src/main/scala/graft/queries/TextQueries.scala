@@ -188,7 +188,7 @@ object TextQueries {
     graft.text.KneserNey.bigramCounts(hist, "text")
       .write.mode("overwrite").parquet(s"$base/counts")
     val merged = graft.text.KneserNey.mergeCounts(Seq(
-      spark.read.parquet(s"$base/counts"),
+      Load.parquet(spark, s"$base/counts"),
       graft.text.KneserNey.bigramCounts(delta, "text")))
     val direct = graft.text.KneserNey.bigramModel(d, "text")
       .select(col("v"), col("w"), col("p_fix").as("__dp"))

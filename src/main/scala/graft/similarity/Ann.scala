@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ops.Load
+
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Tiers:
@@ -347,7 +349,7 @@ object Ann {
   /** Reload a [[saveCentroids]] artifact (list order restored by id). */
   def loadCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Array[Double]] =
-    spark.read.parquet(path).orderBy("list_id").collect()
+    Load.parquet(spark, path).orderBy("list_id").collect()
       .map(_.getSeq[Double](1).toArray)
 
   /** [[ivfTopK]] against an ALREADY-TRAINED (e.g. reloaded) quantizer. */

@@ -3,6 +3,8 @@ package graft.similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Load
+
 /** Exact phrase retrieval over positional postings — the query shape
   * the bag-of-words probes ([[TfIdfSearch]], [[Bm25]]) cannot express:
   * term ORDER and adjacency matter ("new york times" ≠ "times new
@@ -89,7 +91,7 @@ object PhraseSearch {
     postings.repartition(col("term"))
       .sortWithinPartitions("term", "doc_id", "pos")
       .write.mode("overwrite").parquet(s"$path/postings")
-    val written = postings.sparkSession.read.parquet(s"$path/postings")
+    val written = Load.parquet(postings.sparkSession, s"$path/postings")
     written.groupBy("term").agg(count(lit(1)).cast("long").as("__df"))
       .write.mode("overwrite").parquet(s"$path/term_df")
   }
@@ -97,8 +99,8 @@ object PhraseSearch {
   /** (postings, term_df) reloaded from [[saveIndex]]'s layout. */
   def loadIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$path/postings"),
-      spark.read.parquet(s"$path/term_df"))
+    (Load.parquet(spark, s"$path/postings"),
+      Load.parquet(spark, s"$path/term_df"))
 
   /** [[matchesRareFirst]] with the per-term document-frequency relation
     * supplied instead of recomputed — the probe-time shape: at 100 TB the

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ops.Load
+
 /** Product quantization (PQ) — the ANN STORAGE tier: split each
   * d-dim embedding into `m` subvectors, k-means each subspace to
   * `ksub` centroids, and store per vector only the m nearest-centroid
@@ -143,7 +145,7 @@ object Pq {
   /** Reload a [[saveCodebooks]] artifact (order restored by ids). */
   def loadCodebooks(spark: org.apache.spark.sql.SparkSession,
       path: String): Codebooks =
-    spark.read.parquet(path)
+    Load.parquet(spark, path)
       .select("subspace", "id", "vec").collect()
       .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
       .map { case (_, rows) =>

@@ -3,6 +3,8 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Load
+
 /** Training-corpus export: the parquet layout a curated 100 TB corpus
   * ships in.
   *
@@ -42,7 +44,7 @@ object CorpusExport {
     */
   def read(spark: SparkSession, dir: String,
       filters: Map[String, String] = Map.empty): DataFrame =
-    filters.foldLeft(spark.read.parquet(dir)) { case (df, (k, v)) =>
+    filters.foldLeft(Load.parquet(spark, dir)) { case (df, (k, v)) =>
       df.filter(col(k) === v)
     }
 

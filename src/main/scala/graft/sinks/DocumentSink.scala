@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ops.Load
+
 /** K2/K3 — the reference's Elasticsearch sink semantics re-expressed as a
   * parquet-backed document store so the logic is testable offline and the
   * connector swappable (reference: dump_to_es.py:41-171):
@@ -79,7 +81,7 @@ object DocumentSink {
         st.isFile && st.getPath.getName.endsWith(".parquet")
       }
     val existing: Option[DataFrame] =
-      if (hasParquetFiles) Some(spark.read.parquet(storePath))
+      if (hasParquetFiles) Some(Load.parquet(spark, storePath))
       else {
         if (fs.exists(hPath)) System.err.println(
           s"[document-sink] $storePath exists but holds no parquet files " +
@@ -111,9 +113,9 @@ object DocumentSink {
 
     val tmp = storePath + "__tmp"
     swept.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val res = spark.read.parquet(tmp)
+    val res = Load.parquet(spark, tmp)
     res.write.mode(SaveMode.Overwrite).parquet(storePath)
-    spark.read.parquet(storePath)
+    Load.parquet(spark, storePath)
   }
 
   /** K3 collate projection: every kind → the unified docs index shape

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.ops.Load
+
 /** Structured Streaming surface: the streaming forms of the batch
   * operators (windowed aggregation, sessionization). The reference is
   * cron-batch only (SURVEY §7.8) — these are the forward-looking stream
@@ -15,12 +17,12 @@ object Streams {
 
   /** readStream over a directory of events parquet. Streaming sources
     * require an explicit schema, so take it from the files already in the
-    * directory (one batch-read of FOOTERS only — no data scan), then
+    * directory (footers only, no data scan; see Load.parquet), then
     * normalize `ts` to TimestampType whatever the writer encoded
     * (BIGINT nanos, timestamp[us], or timestamp_ntz — see Load.events).
     */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    val fileSchema = spark.read.parquet(dir).schema
+    val fileSchema = Load.parquet(spark, dir).schema
     val raw = spark.readStream.schema(fileSchema).parquet(dir)
     raw.schema("ts").dataType match {
       case LongType =>

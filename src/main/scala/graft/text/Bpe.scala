@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ops.Load
+
 /** One BPE merge round — the inner step of byte-pair-encoding tokenizer
   * TRAINING (Sennrich et al. 2016): count adjacent ordered token pairs
   * over the corpus, pick the most frequent, and rewrite every document
@@ -157,6 +159,6 @@ object Bpe {
 
   /** Reload a [[saveMerges]] artifact in training order. */
   def loadMerges(spark: SparkSession, path: String): Seq[(String, String)] =
-    spark.read.parquet(path).orderBy("rank").collect()
+    Load.parquet(spark, path).orderBy("rank").collect()
       .map(r => (r.getAs[String]("left"), r.getAs[String]("right"))).toSeq
 }

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Load
+
 /** Dev tool: scale the driver's sf0.1 testdata up K× for scaling
   * measurements (SCALING.md §"measured ratios"). NOT part of the library
   * surface — the driver's testdata is read-only, so scaled copies land
@@ -45,7 +47,7 @@ object ScaleUp {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def t(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
+    def t(name: String): DataFrame = Load.parquet(spark, s"$src/$name.parquet")
     def write(df: DataFrame, name: String, parts: Int): Unit =
       df.repartition(parts).write.mode("overwrite").parquet(s"$dst/$name.parquet")
 
