@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit, sum}
 
 /** Benchmark main. Two modes:
@@ -17,9 +17,18 @@ import org.apache.spark.sql.functions.{count, lit, sum}
   *     steady-state JIT within cache budget, so the artifact is
   *     comparable round-over-round.
   *   - INLINE (child mode, small SPARK_GRAFT_BENCH_ONLY subsets, or
-  *     SPARK_GRAFT_TRANCHE_SIZE=0): the classic single-JVM timed loop.
+  *     SPARK_GRAFT_TRANCHE_SIZE=0): the single-JVM timed loop.
+  *
+  * Each query is timed [[Samples]] times in interleaved passes. The
+  * artifact's `queries` map holds each query's median, `spread` its
+  * `[min, max]`, and `dispersion` the run's noise level: the median over
+  * queries of (max − min) / median.
   */
 object Bench {
+
+  /** Timed samples per query. Three is the fewest whose median ignores
+    * one sample hit by a burst of host load. */
+  val Samples = 3
 
   def main(args: Array[String]): Unit = {
     val only: Option[Set[String]] =
@@ -42,6 +51,48 @@ object Bench {
       runSharded(names, trancheSize)
   }
 
+  // ---------------------------------------------------------- per-query row
+
+  /** One query's row in the artifact. `ok` only when every sample
+    * succeeded. */
+  private[graft] final case class Timing(name: String, median: Double,
+      min: Double, max: Double, ok: Boolean)
+
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    val n = s.size
+    if (n == 0) 0.0
+    else if (n % 2 == 1) s(n / 2)
+    else (s(n / 2 - 1) + s(n / 2)) / 2
+  }
+
+  /** `samples` holds Some(seconds) per successful sample and None per
+    * failed one. A failed sample fails the query; its band then covers
+    * the samples that did succeed (0 when none did). */
+  private[graft] def summarize(name: String,
+      samples: Seq[Option[Double]]): Timing = {
+    val ts = samples.flatten
+    Timing(name, median(ts), if (ts.isEmpty) 0.0 else ts.min,
+      if (ts.isEmpty) 0.0 else ts.max,
+      ok = ts.nonEmpty && ts.size == samples.size)
+  }
+
+  /** Run-level figures: the sum of the ok queries' medians, the failed
+    * queries, and the median over ok queries of (max − min) / median. */
+  private[graft] final case class Totals(total: Double, failed: Seq[String],
+      dispersion: Double)
+
+  private[graft] def totals(rows: Seq[Timing]): Totals = {
+    // a failed query's wall time is meaningless — exclude it from the
+    // total and name it in `failed` so a broken round can never read as a
+    // speedup (round-6 advisor finding: 7 dead queries timed at ~0.06 s
+    // silently "improved" the total)
+    val ok = rows.filter(_.ok)
+    Totals(ok.map(_.median).sum, rows.filterNot(_.ok).map(_.name),
+      median(ok.collect { case t if t.median > 0 =>
+        (t.max - t.min) / t.median }))
+  }
+
   // ---------------------------------------------------------------- sharded
 
   /** Current process RSS in MB from /proc/self/status (Linux only; -1 if
@@ -58,62 +109,20 @@ object Bench {
     } catch { case scala.util.control.NonFatal(_) => -1L }
   }
 
-  /** 1-minute load average from /proc/loadavg (-1 if unreadable). Recorded
-    * per tranche so an inflated geomean is adjudicable from the artifact
-    * alone (round-11 verdict #6): a 3× tranche on an idle machine is a
-    * real regression; on a loaded machine it's ambient noise — without
-    * these fields the two are indistinguishable next round. */
-  private def loadAvg1(): Double =
-    try {
-      val src = scala.io.Source.fromFile("/proc/loadavg")
-      try src.mkString.trim.split("\\s+")(0).toDouble finally src.close()
-    } catch { case scala.util.control.NonFatal(_) => -1.0 }
-
-  /** (steal, total) cumulative jiffies from /proc/stat's aggregate cpu
-    * line; (-1,-1) if unreadable. Deltas across a tranche give the
-    * hypervisor-steal share of its wall time. */
-  private def cpuJiffies(): (Long, Long) =
-    try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try {
-        val parts = src.getLines().next().trim.split("\\s+")
-          .drop(1).map(_.toLong)
-        (if (parts.length > 7) parts(7) else 0L, parts.sum)
-      } finally src.close()
-    } catch { case scala.util.control.NonFatal(_) => (-1L, -1L) }
-
-  /** One tranche's merged record for the artifact's `tranches` array. */
+  /** One tranche's child run: its record for the artifact's `tranches`
+    * array plus the per-query rows it produced. */
   private final case class TrancheRun(i: Int, qs: Seq[String], wall: Double,
-      exit: Int, peakRss: Long, load1Before: Double, load1After: Double,
-      stealPct: Double, retries: Int, retrySkippedLoad: Boolean)
-
-  /** Reference-protection context (round-11 verdict #1): when the durable
-    * out-path IS a variance-reference candidate — the file the annotation
-    * actually read OR the primary `SPARK_GRAFT_BENCH_REF` path a FUTURE
-    * run will read (round-12 advisor, medium: the fallback path used to
-    * leave the primary default unguarded, so a suspect sf-matched run
-    * still became next round's baseline) — and any tranche is suspect,
-    * the full record goes to a `.suspect.json` side artifact and the
-    * reference receives only [[tools.BenchVariance.mergeReference]]'d
-    * times. `oldRef` is the OUT-path file's sf-matched content loaded
-    * BEFORE the first checkpoint write (checkpoints overwrite the file
-    * mid-run), so per-checkpoint merges are idempotent; when it is empty
-    * there is nothing safe to merge and the out-path is left untouched
-    * entirely. */
-  private final case class RefProtect(refPaths: Seq[String],
-      oldRef: Map[String, Double], suspectQueries: Set[String])
-
-  /** Core count this run measures at — the same value runInline builds its
-    * master URL from, visible to the sharded parent too (children inherit
-    * the env). Recorded in the artifact and used to cpu-tag the per-run
-    * record so a lower-core re-run can never clobber or mis-reference the
-    * full-core record (round-13 verdict #2). */
-  private def benchCpus(): Int =
-    sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString).toInt
+      exit: Int, peakRss: Long, rows: Seq[Timing],
+      outputRows: Map[String, Long], outputBytes: Map[String, Long]) {
+    def json: String =
+      s"""{"i":$i,"n":${qs.size},"first":"${qs.head}",""" +
+        s""""last":"${qs.last}","wall_sec":${ms(wall)},""" +
+        s""""exit":$exit,"child_peak_rss_mb":$peakRss}"""
+  }
 
   /** `BENCH_LOCAL.json` → `BENCH_LOCAL.32c.json`: the per-run sibling of a
-    * durable artifact path, keyed by core count. */
+    * durable artifact path, keyed by core count, so a run at another core
+    * count never overwrites it. */
   private def cpuTagged(path: String, cpus: Int): String =
     if (path.endsWith(".json"))
       path.stripSuffix(".json") + s".${cpus}c.json"
@@ -123,125 +132,38 @@ object Bench {
     import scala.jdk.CollectionConverters._
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val grouped = names.grouped(trancheSize).toSeq
-    // Remainder folding (round-12 verdict #2): a trailing tranche with
-    // fewer than MinQueries queries gets no suspect verdict and no
-    // auto-retry — an unflaggable inflation hole (r12's sf1 tranche 5:
-    // one query, geomean 1.718, suspect:false) — and pays a full ~29 s
-    // child-JVM spin-up for sub-second work. Fold it into the previous
-    // tranche so every query sits under the variance machinery.
+    // A trailing tranche this small pays a whole child-JVM start and
+    // warmup for sub-second work: fold it into the previous tranche.
+    val minTranche = 5
     val tranches =
-      if (grouped.size >= 2 &&
-          grouped.last.size < tools.BenchVariance.MinQueries)
+      if (grouped.size >= 2 && grouped.last.size < minTranche)
         grouped.dropRight(2) :+ (grouped(grouped.size - 2) ++ grouped.last)
       else grouped
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    // replicate THIS JVM's flags (add-opens, -Xmx, code cache) verbatim —
-    // the child must time under the same memory/JIT regime sbt gave us —
-    // and ADD the heap pre-commit flags the slimmed parent deliberately
-    // lacks (round-9 verdict: the do-nothing orchestrator was booting with
-    // -Xms8g -XX:+AlwaysPreTouch, fully committing 8 GiB of dead weight
-    // before the child committed its own 8 GiB — the run was SIGKILLed in
-    // tranche 0 and the whole artifact vanished). Only JVMs that actually
-    // run queries pre-touch their heap now.
-    val baseArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-      .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-javaagent"))
-    val heapArgs = {
-      val xmx = baseArgs.find(_.startsWith("-Xmx")).map(_.stripPrefix("-Xmx"))
+    // The child inherits this JVM's flags and ADDS the heap pre-commit
+    // flags the slimmed parent deliberately lacks (round-9 verdict: the
+    // do-nothing orchestrator was booting with -Xms8g -XX:+AlwaysPreTouch,
+    // fully committing 8 GiB of dead weight before the child committed its
+    // own 8 GiB — the run was SIGKILLed in tranche 0 and the whole artifact
+    // vanished). Only JVMs that actually run queries pre-touch their heap.
+    val heapFlags = {
+      val base = Local.jvmFlags
+      val xmx = base.find(_.startsWith("-Xmx")).map(_.stripPrefix("-Xmx"))
         .getOrElse("8g")
-      Seq(s"-Xms$xmx", "-XX:+AlwaysPreTouch")
-        .filterNot(baseArgs.contains) // idempotent if build flags change back
+      Seq(s"-Xms$xmx", "-XX:+AlwaysPreTouch").filterNot(base.contains)
     }
-    val jvmArgs = baseArgs ++ heapArgs
-    val cp = System.getProperty("java.class.path")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bench-")
-    val perQuery = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val failed = scala.collection.mutable.ArrayBuffer[String]()
-    val trancheInfo = scala.collection.mutable.ArrayBuffer[TrancheRun]()
-    // sibling-run reference for the ambient-load self-report
-    // (SCALING.md §10): per-tranche geomean-vs-ref + suspect flags in
-    // the artifact, so a crowded tranche is machine-readable instead of
-    // a human reading band medians
-    // ref must be a sibling run AT THIS SF (exact sf-string match inside
-    // the loader); when the primary ref is for another sf, fall back to
-    // the committed sf1 artifact so sf1 runs also self-report variance
-    val cpus = benchCpus()
-    val refPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "BENCH_LOCAL.json")
-    // reference candidates in preference order: the cpu-tagged per-run
-    // sibling (exact-regime comparison), then the primary path, then the
-    // committed sf1 artifact. Every load is gated on recorded sf AND cpus
-    // (round-13 verdict #2: the 8-core re-run overwrote the canonical
-    // 32-core record and cross-cpus ratios are meaningless at sf0.1).
-    val candidates = Seq(cpuTagged(refPath, cpus), refPath, "BENCH_SF1.json")
-    // refSourcePath tracks the file the annotation ACTUALLY used. The
-    // suspect-run protection below guards that file, the primary refPath
-    // and its cpu-tagged sibling — a suspect record landing on any of
-    // them poisons a future run's baseline.
-    val (refSourcePath, refTimes) = candidates.iterator
-      .map(p => p -> tools.BenchVariance.loadQueryTimesForSf(
-        p, sfDir, Some(cpus)))
-      .find(_._2.nonEmpty)
-      .getOrElse((refPath, Map.empty[String, Double]))
-    // the OUT-path's own sf-matched content, captured before the first
-    // checkpoint write clobbers it — the only safe merge base when this
-    // run turns out suspect
-    val outPathStr = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY")) "BENCH_SUBSET.json"
-      else "BENCH_LOCAL.json")
-    val oldRefAtOut = tools.BenchVariance.loadQueryTimesForSf(
-      outPathStr, sfDir, Some(cpus))
-    val cpusOnHost = Runtime.getRuntime.availableProcessors()
-    def currentVerdicts(): Seq[Option[tools.BenchVariance.TrancheVerdict]] =
-      if (refTimes.isEmpty) trancheInfo.toSeq.map(_ => None)
-      else tools.BenchVariance.annotate(
-        trancheInfo.map(_.qs).toSeq, perQuery.toMap, refTimes).map(Some(_))
-    def trancheJson(
-        verdicts: Seq[Option[tools.BenchVariance.TrancheVerdict]]): Seq[String] =
-      trancheInfo.toSeq.zip(verdicts).map { case (t, v) =>
-        // no reference → no verdict fields at all: an unchecked tranche
-        // must not read as "checked and clean"
-        val vj = v.map { tv =>
-          val vg = tv.geomean
-            .map(g => s""","geomean_vs_ref":${ms(g)}""").getOrElse("")
-          // two-kind discriminator (round-12 verdict #3): the artifact
-          // adjudicates a suspect tranche itself — ambient (machine
-          // visibly loaded, noise) vs unexplained (idle machine, treat
-          // as a regression)
-          val kind =
-            if (tv.suspect)
-              s""","suspect_kind":"${tools.BenchVariance.suspectKind(
-                t.load1Before, t.load1After, cpusOnHost)}""""
-            else ""
-          s"""$vg,"suspect":${tv.suspect}$kind"""
-        }.getOrElse("")
-        val skipped =
-          if (t.retrySkippedLoad) s""","retry_skipped_load":true""" else ""
-        s"""{"i":${t.i},"n":${t.qs.size},"first":"${t.qs.head}",""" +
-          s""""last":"${t.qs.last}","wall_sec":${ms(t.wall)},""" +
-          s""""exit":${t.exit},"child_peak_rss_mb":${t.peakRss},""" +
-          s""""load1_before":${ms(t.load1Before)},""" +
-          s""""load1_after":${ms(t.load1After)},""" +
-          s""""steal_pct":${ms(t.stealPct)},"retries":${t.retries}$skipped$vj}"""
-      }
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
 
-    /** One child-JVM run of a tranche. Returns (wall, exit, peakRss,
-      * per-query times, failed queries, output-cardinality rows); a dead
-      * or unparseable child degrades to all-failed, never aborts the
-      * merged run. */
-    def runChild(i: Int, qs: Seq[String], attempt: Int): (Double, Int, Long,
-        Map[String, Double], Seq[String], Map[String, Long],
-        Map[String, Long]) = {
-      val outFile = tmp.resolve(s"tranche_${i}_a$attempt.json")
-      val cmd = (Seq(javaBin) ++ jvmArgs ++
-        Seq("-cp", cp, "graft.Bench")).asJava
-      val pb = new ProcessBuilder(cmd)
-      pb.environment().put("SPARK_GRAFT_BENCH_TRANCHE", i.toString)
-      pb.environment().put("SPARK_GRAFT_BENCH_ONLY", qs.mkString(","))
-      pb.environment().put("SPARK_GRAFT_BENCH_OUT", outFile.toString)
+    /** One child-JVM run of a tranche; a dead or unparseable child
+      * degrades to all-failed rows, never aborts the merged run. */
+    def runChild(i: Int, qs: Seq[String],
+        outFile: java.nio.file.Path): TrancheRun = {
+      val pb = Local.child("graft.Bench", Nil, Map(
+        "SPARK_GRAFT_BENCH_TRANCHE" -> i.toString,
+        "SPARK_GRAFT_BENCH_ONLY" -> qs.mkString(","),
+        "SPARK_GRAFT_BENCH_OUT" -> outFile.toString), heapFlags)
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)
       System.err.println(
-        s"[bench] tranche $i/${tranches.size} attempt $attempt: " +
+        s"[bench] tranche $i/${tranches.size}: " +
           s"${qs.size} queries (${qs.head}..${qs.last})")
       val rssBefore = rssMb()
       val t0 = System.nanoTime()
@@ -271,158 +193,83 @@ object Bench {
       val code = proc.waitFor()
       pump.join(2000); sampler.interrupt()
       val wall = (System.nanoTime() - t0) / 1e9
-      val rssAfter = rssMb()
       System.err.println(
-        s"[bench] tranche $i attempt $attempt done: exit=$code " +
-          s"wall=${ms(wall)}s parent_rss_mb=$rssBefore->$rssAfter " +
+        s"[bench] tranche $i done: exit=$code " +
+          s"wall=${ms(wall)}s parent_rss_mb=$rssBefore->${rssMb()} " +
           s"child_peak_rss_mb=${childPeakRss.get()}")
+      def dead = TrancheRun(i, qs, wall, code, childPeakRss.get(),
+        qs.map(Timing(_, 0.0, 0.0, 0.0, ok = false)), Map.empty, Map.empty)
       if (code != 0 || !java.nio.file.Files.exists(outFile)) {
         // a dead tranche must surface as FAILURES, never vanish
         System.err.println(s"[bench] tranche $i exited $code without output")
-        (wall, code, childPeakRss.get(), Map.empty, qs, Map.empty, Map.empty)
+        dead
       } else {
         // a child killed mid-write leaves a truncated file that EXISTS —
         // a parse failure must degrade this tranche to failures, exactly
         // like the missing-file path, never abort the merged run
         try {
           val node = om.readTree(java.nio.file.Files.readAllBytes(outFile))
-          val times = node.get("queries").fields().asScala
-            .map(e => e.getKey -> e.getValue.asDouble()).toMap
-          val fs = node.get("failed").elements().asScala
-            .map(_.asText()).toSeq
-          val orows = Option(node.get("output_rows")).map(_.fields().asScala
-            .map(e => e.getKey -> e.getValue.asLong()).toMap)
-            .getOrElse(Map.empty[String, Long])
-          val obytes = Option(node.get("output_bytes")).map(_.fields().asScala
-            .map(e => e.getKey -> e.getValue.asLong()).toMap)
-            .getOrElse(Map.empty[String, Long])
-          (wall, code, childPeakRss.get(), times, fs, orows, obytes)
+          def fields(key: String) = Option(node.get(key))
+            .map(_.fields().asScala.map(e => e.getKey -> e.getValue).toMap)
+            .getOrElse(Map.empty[String, com.fasterxml.jackson.databind.JsonNode])
+          val medians = fields("queries")
+          val spread = fields("spread")
+          val failed = node.get("failed").elements().asScala
+            .map(_.asText()).toSet
+          val rows = qs.map { n =>
+            (medians.get(n), spread.get(n)) match {
+              case (Some(m), Some(b)) => Timing(n, m.asDouble(),
+                b.get(0).asDouble(), b.get(1).asDouble(), !failed(n))
+              case _ => Timing(n, 0.0, 0.0, 0.0, ok = false)
+            }
+          }
+          TrancheRun(i, qs, wall, code, childPeakRss.get(), rows,
+            fields("output_rows").map { case (k, v) => k -> v.asLong() },
+            fields("output_bytes").map { case (k, v) => k -> v.asLong() })
         } catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(
               s"[bench] tranche $i output unparseable ($e) — marking failed")
-            (wall, code, childPeakRss.get(), Map.empty, qs, Map.empty, Map.empty)
+            dead
         }
       }
     }
 
-    // one immediate retry for an absolutely-inflated tranche (round-11
-    // verdict #1: the self-flag worked but the inflated numbers still
-    // shipped; a second attempt usually lands outside the ambient burst).
-    // Keep whichever attempt sits closer to the reference in LOG distance
-    // (|log g| — a spuriously-fast retry must not beat an honest 1.1×).
-    val maxRetries = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRY", "1").toInt
-    val outRowsAll = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val outBytesAll = scala.collection.mutable.LinkedHashMap[String, Long]()
-    tranches.zipWithIndex.foreach { case (qs, i) =>
-      val load1Before = loadAvg1()
-      val (steal0, total0) = cpuJiffies()
-      var (wall, code, rss, times, tFailed, oRows, oBytes) = runChild(i, qs, 0)
-      var retries = 0
-      var retrySkippedLoad = false
-      var settled = false
-      while (!settled && retries < maxRetries && refTimes.nonEmpty &&
-          times.nonEmpty &&
-          tools.BenchVariance.shouldRetry(times, refTimes)) {
-        val g1 = tools.BenchVariance.trancheGeomeanVsRef(times, refTimes)
-        // re-check load BEFORE retrying (round-12 verdict #3): a retry
-        // into a still-live ambient burst just wastes a tranche — the
-        // artifact keeps the first attempt, flagged suspect_kind=ambient
-        val loadNow = loadAvg1()
-        if (loadNow >= cpusOnHost) {
-          System.err.println(
-            s"[bench] tranche $i suspect (geomean_vs_ref=" +
-              f"${g1.getOrElse(Double.NaN)}%.3f) but load1=$loadNow%.1f " +
-              s">= $cpusOnHost cpus — ambient burst live, skipping retry")
-          retrySkippedLoad = true
-          settled = true
-        } else {
-          System.err.println(
-            s"[bench] tranche $i suspect (geomean_vs_ref=" +
-              f"${g1.getOrElse(Double.NaN)}%.3f) — retrying once")
-          val (wall2, code2, rss2, times2, tFailed2, oRows2, oBytes2) =
-            runChild(i, qs, retries + 1)
-          retries += 1
-          val g2 = tools.BenchVariance.trancheGeomeanVsRef(times2, refTimes)
-          if (tools.BenchVariance.keepSecondAttempt(g1, g2)) {
-            wall = wall2; code = code2; rss = rss2
-            times = times2; tFailed = tFailed2; oRows = oRows2
-            oBytes = oBytes2
-          }
-        }
+    val tmp = java.nio.file.Files.createTempDirectory("graft-bench-")
+    try {
+      val done = scala.collection.mutable.ArrayBuffer[TrancheRun]()
+      tranches.zipWithIndex.foreach { case (qs, i) =>
+        done += runChild(i, qs, tmp.resolve(s"tranche_$i.json"))
+        // Crash-proofing (the round-9 deliverable failure): rewrite the
+        // merged partial artifact to the durable out-path and print a short
+        // self-contained partial-total line after EVERY tranche, so a
+        // SIGKILL at any point — including of this parent — leaves both a
+        // parseable file on disk and a parseable last line on stdout. The
+        // last tranche's emit is the final record.
+        emit(done.toSeq.flatMap(_.rows), sfDir, Some(done.toSeq.map(_.json)),
+          partial = if (i + 1 < tranches.size)
+            Some((i + 1, tranches.size)) else None,
+          outputRows = done.toSeq.flatMap(_.outputRows).toMap,
+          outputBytes = done.toSeq.flatMap(_.outputBytes).toMap)
       }
-      val load1After = loadAvg1()
-      val (steal1, total1) = cpuJiffies()
-      val stealPct =
-        if (steal0 >= 0 && steal1 >= steal0 && total1 > total0)
-          100.0 * (steal1 - steal0) / (total1 - total0)
-        else -1.0
-      times.foreach { case (k, v) => perQuery(k) = v }
-      oRows.foreach { case (k, v) => outRowsAll(k) = v }
-      oBytes.foreach { case (k, v) => outBytesAll(k) = v }
-      tFailed.foreach(failed += _)
-      trancheInfo += TrancheRun(i, qs, wall, code, rss,
-        load1Before, load1After, stealPct, retries, retrySkippedLoad)
-      // Crash-proofing (the round-9 deliverable failure): rewrite the merged
-      // partial artifact to the durable out-path and print a short
-      // self-contained partial-total line after EVERY tranche, so a SIGKILL
-      // at any point — including of this parent — leaves both a parseable
-      // file on disk and a parseable last line on stdout. The final emit
-      // below overwrites/supersedes these when the run completes.
-      val verdicts = currentVerdicts()
-      val suspectQs: Set[String] = trancheInfo.toSeq.zip(verdicts).collect {
-        case (t, Some(v)) if v.suspect => t.qs
-      }.flatten.toSet
-      // protect the variance reference from suspect-run clobber even at
-      // CHECKPOINT writes (the final write is just the last checkpoint);
-      // oldRef is the file's sf-matched content from before our first write
-      val refProtect =
-        if (suspectQs.nonEmpty)
-          Some(RefProtect(
-            Seq(refPath, cpuTagged(refPath, cpus), refSourcePath).distinct,
-            oldRefAtOut, suspectQs))
-        else None
-      val doneSoFar = tranches.take(i + 1).flatten
-      emit(doneSoFar.map(n => (n, perQuery.getOrElse(n, 0.0),
-          !failed.contains(n) && perQuery.contains(n))),
-        sfDir, Some(trancheJson(verdicts)),
-        partial = if (i + 1 < tranches.size)
-          Some((i + 1, tranches.size, names.size)) else None,
-        refProtect = refProtect,
-        outputRows = outRowsAll.toMap,
-        outputBytes = outBytesAll.toMap)
+    } finally {
+      Option(tmp.toFile.listFiles()).foreach(_.foreach(_.delete()))
+      java.nio.file.Files.deleteIfExists(tmp)
     }
   }
 
   // ----------------------------------------------------------------- inline
 
+  /** One timed sample: seconds when it succeeded, plus the observed
+    * output cardinality where the query has one. */
+  private final case class Sample(secs: Option[Double],
+      outputRows: Option[Long], outputBytes: Option[Long])
+
   private def runInline(names: Seq[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
     val allQueries = SparkEntry.queries ++ SparkEntry.benchOnly
     val benchQueries = names.map(n => n -> allQueries(n))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The warmup loop below exists so codegen compilation happens
-      // OUTSIDE each query's timed run — but the generated-class cache
-      // (StaticSQLConf) defaults to 100 entries, so a 50-query tranche
-      // evicts every warmup compilation before its timed run and each
-      // query re-pays janino inside the clock (measured: ~17% of a
-      // tranche's wall at sf0.1). Size the cache to hold the whole
-      // tranche's codegen units so the warmup does what it says; this
-      // is scale-independent (any long-lived session running many
-      // distinct queries wants it) and costs only metaspace, which the
-      // per-tranche child JVMs bound. Overridable for A/B runs.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark) // strategy + rewrite rule + SQL functions
+    val spark = Local.session(Local.cpus)
     // warmup outside the timed section: run EVERY query once at sf0.001
     // so codegen compilation + JIT for each query's operators happen
     // before its timed run — the timed section then measures steady-state
@@ -452,88 +299,88 @@ object Bench {
     System.gc()
     Thread.sleep(3000)
 
-    val results = benchQueries.map { case (name, fn) =>
-      // persisted-artifact queries: run the index build OUTSIDE the clock
-      // (SparkEntry.prepare) — the timed section is reload + probe only.
-      // A FAILED prepare must fail the row: the self-sufficient query fn
-      // would otherwise rebuild the index INSIDE the clock and record a
-      // silently-wrong number (the exact build-masks-probe distortion the
-      // prepare hook exists to eliminate).
-      val prepOk = SparkEntry.prepare.get(name).forall { p =>
-        val r = try { p(spark, sfDir); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] prepare($name) FAILED: $e"); false }
-        spark.catalog.clearCache()
-        r
+    // Interleaved passes (q1..qn, then q1..qn again), not back-to-back
+    // repeats: a burst of host load then lands on one sample of several
+    // queries, which their medians drop, instead of on every sample of one.
+    val passes = (1 to Samples).map { pass =>
+      benchQueries.map { case (name, fn) =>
+        timeOnce(spark, sfDir, name, fn, pass)
       }
-      // output-cardinality telemetry for the dedup-pair family
-      // (SparkEntry.outputCardinality): an `observe` count aggregates
-      // during the same noop write — no second evaluation, negligible
-      // overhead — and ships in the artifact so an output-driven wall
-      // ratio (pairs grow with ScaleUp replicas) is distinguishable
-      // from a plan regression without re-deriving it in prose.
-      val wantRows = SparkEntry.outputCardinality.contains(name)
-      val bytesExpr = SparkEntry.outputBytes.get(name)
-      val obs =
-        if (wantRows || bytesExpr.isDefined)
-          Some(new org.apache.spark.sql.Observation(s"__rows_$name"))
-        else None
-      val t0 = System.nanoTime()
-      // noop sink forces full evaluation of every output column —
-      // count() would let Catalyst prune the projection away
-      val ok = prepOk &&
-        (try {
-          val df0 = fn(spark, sfDir)
-          val df = obs.map { o =>
-            // one Observation, up to two aggregates (rows and/or the
-            // blob family's decoded-bytes sum) — still no re-evaluation
-            val aggs =
-              (if (wantRows) Seq(count(lit(1)).as("rows")) else Nil) ++
-                bytesExpr.map(e => sum(e).as("bytes")).toSeq
-            df0.observe(o, aggs.head, aggs.tail: _*)
-          }.getOrElse(df0)
-          df.write.format("noop").mode("overwrite").save(); true
-        }
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); false })
-      val t = (System.nanoTime() - t0) / 1e9
-      def obsLong(key: String): Option[Long] =
-        if (!ok) None
-        else obs.flatMap(o =>
-          try o.get.get(key).collect {
-            case v: Number => v.longValue()
-          }
-          catch { case scala.util.control.NonFatal(_) => None })
-      val outRows = if (wantRows) obsLong("rows") else None
-      val outBytes = if (bytesExpr.isDefined) obsLong("bytes") else None
-      // intra-query persists are part of the measured time; dropping them
-      // AFTER the clock keeps queries independent (no cross-query memory
-      // pressure / eviction noise)
-      spark.catalog.clearCache()
-      (name, t, ok, outRows, outBytes)
     }
-    // optional JIT telemetry for SCALING.md: the high-water mark answers
-    // "does the code cache still saturate mid-run?" without a JFR attach
-    if (sys.env.contains("SPARK_GRAFT_CODECACHE_STATS"))
-      codeCacheStats().foreach(s => System.err.println(s"[codecache] $s"))
+    val samples = names.indices.map(j => passes.map(_(j)))
+    val rows = names.zip(samples).map { case (n, ss) =>
+      summarize(n, ss.map(_.secs)) }
     // Stop Spark BEFORE emitting the metric lines so shutdown chatter can
     // never land after them — the short JSON must be the very last line.
-    val emitAfterStop = () => emit(results.map(r => (r._1, r._2, r._3)),
-      sfDir, None,
-      outputRows = results.collect { case (n, _, _, Some(r), _) => n -> r }.toMap,
-      outputBytes = results.collect { case (n, _, _, _, Some(b)) => n -> b }.toMap)
     spark.stop()
-    emitAfterStop()
+    emit(rows, sfDir, None,
+      outputRows = names.zip(samples).flatMap { case (n, ss) =>
+        ss.flatMap(_.outputRows).headOption.map(n -> _) }.toMap,
+      outputBytes = names.zip(samples).flatMap { case (n, ss) =>
+        ss.flatMap(_.outputBytes).headOption.map(n -> _) }.toMap)
   }
 
-  private def codeCacheStats(): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(_.getName.toLowerCase.contains("code"))
-      .map { p =>
-        val u = p.getUsage; val pk = p.getPeakUsage
-        s"${p.getName}: used=${u.getUsed / 1048576}MB " +
-          s"peak=${pk.getUsed / 1048576}MB max=${u.getMax / 1048576}MB"
-      }.toSeq
+  private def timeOnce(spark: SparkSession, sfDir: String, name: String,
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+      pass: Int): Sample = {
+    // persisted-artifact queries: run the index build OUTSIDE the clock
+    // (SparkEntry.prepare) — the timed section is reload + probe only.
+    // A FAILED prepare must fail the sample: the self-sufficient query fn
+    // would otherwise rebuild the index INSIDE the clock and record a
+    // silently-wrong number (the exact build-masks-probe distortion the
+    // prepare hook exists to eliminate).
+    val prepOk = SparkEntry.prepare.get(name).forall { p =>
+      val r = try { p(spark, sfDir); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] prepare($name) FAILED: $e"); false }
+      spark.catalog.clearCache()
+      r
+    }
+    // output-cardinality telemetry for the dedup-pair family
+    // (SparkEntry.outputCardinality): an `observe` count aggregates
+    // during the same noop write — no second evaluation, negligible
+    // overhead — and ships in the artifact so an output-driven wall
+    // ratio (pairs grow with ScaleUp replicas) is distinguishable
+    // from a plan regression without re-deriving it in prose.
+    val wantRows = SparkEntry.outputCardinality.contains(name)
+    val bytesExpr = SparkEntry.outputBytes.get(name)
+    // an Observation serves one action, so each sample gets its own
+    val obs =
+      if (wantRows || bytesExpr.isDefined)
+        Some(new Observation(s"__rows_${name}_$pass"))
+      else None
+    val t0 = System.nanoTime()
+    // noop sink forces full evaluation of every output column —
+    // count() would let Catalyst prune the projection away
+    val ok = prepOk &&
+      (try {
+        val df0 = fn(spark, sfDir)
+        val df = obs.map { o =>
+          // one Observation, up to two aggregates (rows and/or the
+          // blob family's decoded-bytes sum) — still no re-evaluation
+          val aggs =
+            (if (wantRows) Seq(count(lit(1)).as("rows")) else Nil) ++
+              bytesExpr.map(e => sum(e).as("bytes")).toSeq
+          df0.observe(o, aggs.head, aggs.tail: _*)
+        }.getOrElse(df0)
+        df.write.format("noop").mode("overwrite").save(); true
+      }
+      catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); false })
+    val t = (System.nanoTime() - t0) / 1e9
+    def obsLong(key: String): Option[Long] =
+      if (!ok) None
+      else obs.flatMap(o =>
+        try o.get.get(key).collect {
+          case v: Number => v.longValue()
+        }
+        catch { case scala.util.control.NonFatal(_) => None })
+    // intra-query persists are part of the measured time; dropping them
+    // AFTER the clock keeps queries independent (no cross-query memory
+    // pressure / eviction noise)
+    spark.catalog.clearCache()
+    Sample(if (ok) Some(t) else None,
+      if (wantRows) obsLong("rows") else None,
+      if (bytesExpr.isDefined) obsLong("bytes") else None)
   }
 
   // ------------------------------------------------------------------- emit
@@ -546,144 +393,71 @@ object Bench {
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
   /** Writes the merged artifact to the durable out-path and prints the
-    * stdout record(s). `partial = Some((done, total, nQueriesPlanned))`
-    * marks a mid-run checkpoint: the durable file is rewritten in full and
-    * ONE short self-contained line (flagged `"partial":true`) goes to
-    * stdout, so a kill between tranches still leaves the driver's
-    * tail-parse a valid total for the completed prefix. */
-  private def emit(results: Seq[(String, Double, Boolean)], sfDir: String,
+    * stdout record(s). `partial = Some((done, total))` marks a mid-run
+    * checkpoint: the durable file is rewritten in full and ONE short
+    * self-contained line (flagged `"partial":true`) goes to stdout, so a
+    * kill between tranches still leaves a reader of the last line a valid
+    * total for the completed prefix. */
+  private def emit(rows: Seq[Timing], sfDir: String,
       tranches: Option[Seq[String]],
-      partial: Option[(Int, Int, Int)] = None,
-      refProtect: Option[RefProtect] = None,
+      partial: Option[(Int, Int)] = None,
       outputRows: Map[String, Long] = Map.empty,
       outputBytes: Map[String, Long] = Map.empty): Unit = {
-    // a failed query's wall time is meaningless — exclude it from the
-    // total and name it in `failed` so a broken round can never read as a
-    // speedup (round-6 advisor finding: 7 dead queries timed at ~0.06 s
-    // silently "improved" the total)
-    val failed = results.collect { case (k, _, false) => k }
-    val total = results.collect { case (_, v, true) => v }.sum
-    val qsFull = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val qsShort = results.map { case (k, v, _) => s"\"" + k + "\":" + ms(v) }
-      .mkString("{", ",", "}")
+    val Totals(total, failed, dispersion) = totals(rows)
+    def obj(kvs: Seq[(String, String)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    def perQuery(fmt: Double => String): String =
+      s""""queries":${obj(rows.map(t => t.name -> fmt(t.median)))},""" +
+        s""""spread":${obj(rows.map(t =>
+          t.name -> s"[${fmt(t.min)},${fmt(t.max)}]"))}"""
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val trancheJson = tranches
       .map(t => s""","tranches":${t.mkString("[", ",", "]")}""")
       .getOrElse("")
     // output cardinality for the dedup-pair family (verdict #5): wall
     // time there scales with pairs FOUND, so the artifact must carry the
-    // denominator a reader needs to normalize it
-    val outRowsJson =
-      if (outputRows.isEmpty) ""
-      else outputRows.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString(""","output_rows":{""", ",", "}")
-    // decoded-bytes denominators for the blob family (round-12 verdict
-    // #6): their wall scales with codec payload, not rows
-    val outBytesJson =
-      if (outputBytes.isEmpty) ""
-      else outputBytes.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString(""","output_bytes":{""", ",", "}")
+    // denominator a reader needs to normalize it; the blob family's
+    // decoded bytes likewise (round-12 verdict #6)
+    def counts(key: String, m: Map[String, Long]): String =
+      if (m.isEmpty) ""
+      else s""","$key":${obj(m.toSeq.sortBy(_._1).map { case (k, v) =>
+        k -> v.toString })}"""
     val partialJson = partial
-      .map { case (d, t, _) => s""","partial":true,"tranches_done":$d,"tranches_total":$t""" }
+      .map { case (d, t) => s""","partial":true,"tranches_done":$d,"tranches_total":$t""" }
       .getOrElse("")
-    // cpus recorded in the artifact (round-13 verdict #2): the loader
-    // rejects a reference whose recorded cpus mismatch, so the driver's
-    // lower-core re-run can never poison the full-core baseline
-    val cpus = benchCpus()
+    val cpus = Local.cpus
+    val rest = s""""failed":$failedJson$trancheJson""" +
+      counts("output_rows", outputRows) + counts("output_bytes", outputBytes) +
+      s"""$partialJson,"sf":"$sfDir","cpus":$cpus}"""
     val jsonFull =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"failed":$failedJson$trancheJson$outRowsJson$outBytesJson$partialJson,"sf":"$sfDir","cpus":$cpus}"""
+      s"""{"metric":"total","value":$total,"unit":"sec",${perQuery(_.toString)},"dispersion":$dispersion,"samples":$Samples,$rest"""
     val jsonDetail =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":$qsShort,"failed":$failedJson$trancheJson$outRowsJson$outBytesJson$partialJson,"sf":"$sfDir","cpus":$cpus}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec",${perQuery(ms)},"dispersion":${ms(dispersion)},"samples":$Samples,$rest"""
+    // Durable copy so a harness that misses the stdout line can still
+    // recover the record from disk. Ad-hoc SUBSET runs default to their
+    // own file so a smoke run never overwrites the full-lineup record.
+    val subset = sys.env.contains("SPARK_GRAFT_BENCH_ONLY")
+    val outStr = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      if (subset) "BENCH_SUBSET.json" else "BENCH_LOCAL.json")
+    // Full-lineup runs also write a record per core count (round-13
+    // verdict #2): the 8-core re-run used to overwrite the 32-core record.
+    val tagged = !subset && !sys.env.contains("SPARK_GRAFT_BENCH_TRANCHE")
+    val record = if (tagged) cpuTagged(outStr, cpus) else outStr
     // The driver's tail capture keeps only the last ~2 KB of stdout; a
     // 200-query detail line is bigger than that, so its head (with
     // "value":total) gets truncated and the round scores parsed:null
     // (round-4 verdict #1). Emit the detail line first, then a SHORT
     // self-contained total record as the very last line — whatever prefix
-    // the tail loses, the final line always fits and always parses.
+    // the tail loses, the final line always fits, always parses, and
+    // names the file that holds the per-query map.
     val jsonTail =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${results.size},"n_failed":${failed.size}$partialJson}"""
-    // Durable copy so a harness that misses the stdout line can still
-    // recover the record from disk. Best-effort: an unwritable path must
-    // not abort the run before the primary stdout metric line prints.
-    // Ad-hoc SUBSET runs must not default onto BENCH_LOCAL.json — a
-    // 1-query sf0.01 smoke run silently clobbered the sf0.1 variance
-    // reference in round 11 and the next full run self-compared against
-    // nothing (no geomean_vs_ref fields, no suspect flags).
-    val defaultOut =
-      if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY")) "BENCH_SUBSET.json"
-      else "BENCH_LOCAL.json"
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${rows.size},"n_failed":${failed.size},"dispersion":${ms(dispersion)},"record":"$record"$partialJson}"""
+    // Best-effort: an unwritable path must not abort the run before the
+    // primary stdout metric line prints.
     try {
-      val outStr = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
-      val out = java.nio.file.Paths.get(outStr)
-      // path equality must be canonical: the sf1 run names its out-path
-      // absolutely while the fallback reference is repo-relative
-      def samePath(a: String, b: String): Boolean =
-        try java.nio.file.Paths.get(a).toAbsolutePath.normalize ==
-          java.nio.file.Paths.get(b).toAbsolutePath.normalize
-        catch { case scala.util.control.NonFatal(_) => a == b }
-      refProtect match {
-        // Suspect-run reference protection (round-11 verdict #1): when
-        // this write would land on ANY variance-reference candidate —
-        // the file the annotation read or the primary path a future run
-        // will read (round-12 advisor: the fallback case left the
-        // primary default unguarded) — ship the full record to a
-        // .suspect.json side artifact and write the reference with
-        // merged times — fresh for clean tranches, the OLD out-path
-        // entry for suspect-tranche queries (dropped when the old file
-        // lacks them: inflated references mask regressions, missing
-        // ones are visibly unchecked). When the out-path held no usable
-        // sf-matched reference, leave it untouched entirely.
-        case Some(rp) if rp.refPaths.exists(p => samePath(outStr, p)) =>
-          val side = java.nio.file.Paths.get(outStr + ".suspect.json")
-          java.nio.file.Files.write(side, jsonFull.getBytes("UTF-8"))
-          if (rp.oldRef.nonEmpty) {
-            val freshOk = results.collect { case (k, v, true) => k -> v }.toMap
-            val merged0 = tools.BenchVariance.mergeReference(
-              rp.oldRef, freshOk, rp.suspectQueries)
-            // lineup-drop semantics (old entries absent from `fresh` go)
-            // apply only to the FINAL full-lineup write: a checkpoint's
-            // `fresh` holds only done-so-far queries, and a crash after
-            // a suspect mid-run checkpoint must not strip every
-            // not-yet-run query's entry from the reference (round-12
-            // advisor, low)
-            val attempted = results.map(_._1).toSet
-            val merged =
-              if (partial.isDefined)
-                merged0 ++ rp.oldRef.filterNot { case (k, _) => attempted(k) }
-              else merged0
-            val mq = merged.toSeq.sortBy(_._1)
-              .map { case (k, v) => s"\"" + k + "\":" + v }
-              .mkString("{", ",", "}")
-            val kept = merged.keySet.count(rp.suspectQueries)
-            val mj = s"""{"metric":"total","value":${merged.values.sum},""" +
-              s""""unit":"sec","queries":$mq,"failed":[],"sf":"$sfDir",""" +
-              s""""ref_merged":true,"kept_from_old_ref":$kept,""" +
-              s""""full_run":"${side.getFileName}"}"""
-            java.nio.file.Files.write(out, mj.getBytes("UTF-8"))
-          }
-          System.err.println(
-            s"[bench] suspect tranche(s) — full record to $side; " +
-              s"reference $outStr " +
-              (if (rp.oldRef.nonEmpty) "merge-updated (suspect queries keep old times)"
-               else "left untouched (no sf-matched old reference)"))
-        case _ =>
-          java.nio.file.Files.write(out, jsonFull.getBytes("UTF-8"))
-          // per-run cpu-tagged record (round-13 verdict #2): the canonical
-          // per-query map for THIS core count, immune to being clobbered
-          // by a later run at another core count (that run tags its own
-          // file). Full-lineup runs only — ad-hoc subsets are not a
-          // round-over-round record. Suspect runs skip this write (their
-          // full record already ships in the .suspect.json side artifact),
-          // so the tagged file only ever holds clean per-query times.
-          if (!sys.env.contains("SPARK_GRAFT_BENCH_ONLY") &&
-              !sys.env.contains("SPARK_GRAFT_BENCH_TRANCHE"))
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(cpuTagged(outStr, cpus)),
-              jsonFull.getBytes("UTF-8"))
-      }
+      val bytes = jsonFull.getBytes("UTF-8")
+      java.nio.file.Files.write(java.nio.file.Paths.get(outStr), bytes)
+      if (tagged) java.nio.file.Files.write(java.nio.file.Paths.get(record), bytes)
     } catch {
       // NonFatal only: an OOM/VM error must kill the run, not be masked
       // by a clean-looking metric line

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -16,10 +15,10 @@ import java.nio.file.{Files, Paths}
   *   2. `manifest.json` is REWRITTEN after every query (atomic tmp+move,
   *      read-merge-write so tranche children extend, never clobber), so
   *      "attempted so far" is always on disk, never only in memory.
-  *   3. SHARDED by default (mirrors [[Bench.runSharded]]): the parent
-  *      creates NO SparkSession and runs each tranche of
-  *      ≤ SPARK_GRAFT_VERIFY_TRANCHE_SIZE (default 60) queries in its own
-  *      child JVM — a JVM-level death (OOM kill, codegen segfault) loses
+  *   3. SHARDED by default, through the bench's child-JVM launcher
+  *      ([[Local.child]]): the parent creates NO SparkSession and runs
+  *      each tranche of ≤ SPARK_GRAFT_VERIFY_TRANCHE_SIZE (default 60)
+  *      queries in its own child JVM — a JVM-level death (OOM kill, codegen segfault) loses
   *      only the running tranche; the parent marks its unfinished queries
   *      "died" in the manifest and CONTINUES with the next tranche.
   */
@@ -146,24 +145,14 @@ object Verify {
 
   private def runSharded(sfDir: String, outDir: String,
       names: Seq[String], trancheSize: Int): Unit = {
-    import scala.jdk.CollectionConverters._
     writeOracleSql(outDir) // FIRST: the compare's static input survives any kill
     val tranches = names.grouped(trancheSize).toSeq
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    // replicate THIS JVM's flags (add-opens, -Xmx) — the child must run
-    // under the same memory regime sbt gave us (Bench.runSharded's rule)
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toSeq
-      .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-javaagent"))
-    val cp = System.getProperty("java.class.path")
     tranches.zipWithIndex.foreach { case (qs, i) =>
       System.err.println(
         s"[verify] tranche $i/${tranches.size}: ${qs.size} queries " +
           s"(${qs.head}..${qs.last})")
-      val cmd = (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp,
-        "graft.Verify", sfDir, outDir, qs.mkString(","))).asJava
-      val pb = new ProcessBuilder(cmd)
-      pb.environment().put("SPARK_GRAFT_VERIFY_TRANCHE", i.toString)
+      val pb = Local.child("graft.Verify", Seq(sfDir, outDir, qs.mkString(",")),
+        Map("SPARK_GRAFT_VERIFY_TRANCHE" -> i.toString))
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)
       pb.redirectOutput(ProcessBuilder.Redirect.INHERIT)
       val code = pb.start().waitFor()
@@ -184,19 +173,7 @@ object Verify {
 
   private def runInline(sfDir: String, outDir: String, names: Seq[String],
       writeOracle: Boolean): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS) which Spark rejects; read
-      // as long and convert explicitly (Load.events).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark) // strategy + rewrite rule + SQL functions
+    val spark = Local.session(Local.cpus)
     if (writeOracle) writeOracleSql(outDir)
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

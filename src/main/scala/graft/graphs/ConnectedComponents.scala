@@ -135,9 +135,6 @@ object ConnectedComponents {
     }
     if (!converged)
       sys.error(s"ConnectedComponents: no convergence after $maxIter rounds")
-    if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-      System.err.println(
-        s"[cc] converged in $iters alternation rounds, ${sig._1} star edges")
     // converged edge set is a star forest: (child, root) plus the roots
     // themselves and any isolated input nodes
     val childLabels = cur.select(col("a").as("id"), col("b").as("component"))

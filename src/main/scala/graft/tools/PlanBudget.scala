@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
-
 /** Exchange-budget golden file: for EVERY query in SparkEntry.queries,
   * count the shuffle exchanges in its (initial) physical plan at
   * sf0.001 and pin them to `src/test/resources/plan_shapes.tsv`.
@@ -39,15 +37,7 @@ object PlanBudget {
     // plans after a deliberate change without rewriting the golden file;
     // ratchet the tsv by hand from the printed counts)
     val only = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftExtensions.install(spark)
+    val spark = graft.Local.session(4)
     val rows = graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only.exists(n.contains) }
       .map { case (name, fn) =>

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` for the named queries into
   * per-query files — the before/after plan evidence the optimization
   * rounds commit under plans/rNN/.
@@ -25,15 +23,7 @@ object PlanSnap {
     val names =
       if (qcsv == "all") graft.SparkEntry.queries.keys.toSeq.sorted
       else qcsv.split(',').toSeq
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftExtensions.install(spark)
+    val spark = graft.Local.session(8)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       graft.SparkEntry.prepare.get(name).foreach(p => p(spark, sfDir))

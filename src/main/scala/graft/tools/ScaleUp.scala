@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Load
@@ -37,15 +37,7 @@ object ScaleUp {
     val src = args(0)
     val dst = args(1)
     val k = args(2).toInt
-    val cpus = math.min(32, Runtime.getRuntime.availableProcessors())
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Local.session(graft.Local.maxCpus)
 
     def t(name: String): DataFrame = Load.parquet(spark, s"$src/$name.parquet")
     def write(df: DataFrame, name: String, parts: Int): Unit =
