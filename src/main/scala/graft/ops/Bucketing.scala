@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * `writeBucketed` lays a table out hash-bucketed by the join key; two
   * tables bucketed the same way join with ZERO Exchange on either side
-  * (verified in BucketingSpec via the physical plan). Buckets also serve
-  * as the unit for bucket-pruned point lookups.
+  * (verified in ScaleOpsSpec with `PlanInspect.exchangeFree`). Buckets
+  * also serve as the unit for bucket-pruned point lookups.
   */
 object Bucketing {
 
@@ -27,10 +27,4 @@ object Bucketing {
   }
 
   def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
-
-  /** True when the physical plan of `joined` contains no shuffle
-    * (Exchange) — the co-location check.
-    */
-  def isShuffleFree(joined: DataFrame): Boolean =
-    !joined.queryExecution.executedPlan.toString.contains("Exchange")
 }

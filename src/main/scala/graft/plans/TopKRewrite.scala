@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.IntegerType
   * Users who write the idiomatic window formulation get the scale plan
   * for free; registered via GraftExtensions (injectOptimizerRule).
   *
-  * Overlap note (visible in PLANS.md q5): Spark's own
+  * Overlap note (visible in q5's physical plan): Spark's own
   * InferWindowGroupLimit (3.5+) also prunes rank-filtered windows, via
   * per-partition WindowGroupLimit before the shuffle — on plans where
   * both fire the second pruning pass is a cheap no-op over ≤k rows per

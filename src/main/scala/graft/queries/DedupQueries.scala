@@ -2581,11 +2581,8 @@ object DedupQueries {
       .groupBy("field", "v").agg(sum("c").as("c"))
       // feeds the weights AND the head-block histogram; localCheckpoint
       // (not persist) because the relation is tiny (distinct
-      // (field,value) pairs) and truncating its lineage here keeps the
-      // nested-cache plan rendering bounded — an InMemoryRelation
-      // re-prints its whole child plan at every scan site, so deep
-      // cached-inside-cached subtrees explode the printed plan (and
-      // driver planning work) multiplicatively. LAZY (round 14): the
+      // (field,value) pairs) and truncating its lineage here spares
+      // both consumers the merged-counts subtree. LAZY (round 14): the
       // first consumer's job materializes it — an eager checkpoint was
       // one more driver job dispatch in a probe whose wall is job count
       .localCheckpoint(false)
@@ -2622,11 +2619,10 @@ object DedupQueries {
     // membership rides an explicit lit(1) marker because a persisted
     // pattern can be genuinely NULL (null-fielded comparison), so
     // pattern nullness cannot route.
-    // localCheckpoint (not persist): both branches scan it, and a cached
-    // relation re-prints its whole child plan per scan site — the pair
-    // relation is narrow (keys + tier flags + small ints), so
-    // truncation is cheap and keeps the printed plan/exchange budget
-    // flat. LAZY (round 14): the carried branch's first job
+    // localCheckpoint (not persist): both branches scan it, and the
+    // pair relation is narrow (keys + tier flags + small ints), so
+    // truncating its lineage is cheap and each branch starts from the
+    // materialized pairs. LAZY (round 14): the carried branch's first job
     // materializes it, saving the dedicated checkpoint dispatch
     // __hdec rides along: the OLD decision distinguishes carried links
     // that were old edges (both endpoints in one old cluster by
@@ -2729,9 +2725,8 @@ object DedupQueries {
     val ccInput = stars.unionByName(rawEdges).persist()
     // localCheckpoint (components' own lineage discipline): labels feed
     // members, edge stats, AND touch detection — without truncation each
-    // consumer re-executes the stars∪rawEdges tree and the printed plan
-    // multiplies it ~30× (first pin came out at 3655 exchanges). LAZY
-    // (round 14): the members join materializes it in-pass
+    // consumer re-executes the stars∪rawEdges tree. LAZY (round 14):
+    // the members join materializes it in-pass
     val labels = erClusters(ccInput).localCheckpoint(false)
     // (5) survivorship only where membership changed: a new cluster is
     // UNTOUCHED iff its members are exactly one old cluster's members

@@ -304,7 +304,7 @@ object SinkQueries {
       .agg(count(lit(1)).as("n_lines"),
         sum(col("l_quantity").cast(LongType)).as("sum_qty"))
       .select("l_orderkey", "n_lines", "sum_qty", "o_totalprice")
-    require(Bucketing.isShuffleFree(joined),
+    require(graft.plans.PlanInspect(joined).exchangeFree,
       s"bucketed join planned an Exchange:\n${joined.queryExecution.executedPlan}")
     graft.ops.Par.sortOnce(joined, col("l_orderkey"))
   }

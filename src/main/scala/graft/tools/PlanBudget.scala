@@ -1,6 +1,10 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.SparkSession
+
+import graft.plans.PlanInspect
 
 /** Exchange-budget golden file: for EVERY query in SparkEntry.queries,
   * count the shuffle exchanges in its (initial) physical plan at
@@ -13,23 +17,19 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   *
   *   sbt "runMain graft.tools.PlanBudget"
   *
-  * Counting rule: physical `Exchange hashpartitioning / rangepartitioning /
-  * SinglePartition` lines, excluding `ReusedExchange` (a reuse is the
-  * OPPOSITE of an extra shuffle) and excluding `BroadcastExchange`
-  * (broadcasts are bounded by contract everywhere in this repo; the
-  * scale killers a budget must catch are data shuffles).
+  * Counting rule: `PlanInspect.shuffles` (see `PlanInspect.counted`).
   */
 object PlanBudget {
 
-  private val ShuffleLine =
-    """Exchange (hashpartitioning|rangepartitioning|SinglePartition)""".r
-
-  /** Shuffle-exchange count of a physical plan string. */
-  def countShuffles(plan: String): Int =
-    plan.linesIterator.count(l =>
-      ShuffleLine.findFirstIn(l).isDefined && !l.contains("ReusedExchange"))
-
   val GoldenPath = "src/test/resources/plan_shapes.tsv"
+
+  /** The inspected plan of query `name`, built from a cold cache — the
+    * one state both the golden file and PlanBudgetSpec read.
+    */
+  def inspect(spark: SparkSession, dir: String, name: String): PlanInspect = {
+    spark.catalog.clearCache()
+    PlanInspect(graft.SparkEntry.queries(name)(spark, dir))
+  }
 
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
@@ -38,11 +38,10 @@ object PlanBudget {
     // ratchet the tsv by hand from the printed counts)
     val only = args.drop(1).toSeq
     val spark = graft.Local.session(4)
-    val rows = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.isEmpty || only.exists(n.contains) }
-      .map { case (name, fn) =>
-        val plan = fn(spark, dir).queryExecution.executedPlan.toString
-        val n = countShuffles(plan)
+    val rows = graft.SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => only.isEmpty || only.exists(n.contains))
+      .map { name =>
+        val n = inspect(spark, dir, name).shuffles
         println(s"[planbudget] $name\t$n")
         s"$name\t$n"
       }
@@ -55,10 +54,7 @@ object PlanBudget {
       "# query\tshuffle_exchanges (upper bound asserted by PlanBudgetSpec)\n" +
         "# regenerate: sbt \"runMain graft.tools.PlanBudget\"\n"
     Files.createDirectories(Paths.get(GoldenPath).getParent)
-    Files.write(Paths.get(GoldenPath),
-      (header + rows.mkString("", "\n", "\n")).getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-      StandardOpenOption.WRITE)
+    Files.write(Paths.get(GoldenPath), (header + rows.mkString("", "\n", "\n")).getBytes("UTF-8"))
     println(s"[planbudget] wrote ${rows.size} budgets to $GoldenPath")
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump `explain("formatted")` for the named queries into
   * per-query files — the before/after plan evidence the optimization
@@ -30,10 +30,7 @@ object PlanSnap {
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
-        plan.getBytes("UTF-8"),
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-        StandardOpenOption.WRITE)
+      Files.write(Paths.get(outDir, s"${name}_$suffix.txt"), plan.getBytes("UTF-8"))
       println(s"[plansnap] $outDir/${name}_$suffix.txt")
     }
     spark.stop()

@@ -50,7 +50,7 @@ class RendezvousSpec extends SparkSpec {
 
   test("the plan is narrow: no exchange anywhere") {
     val df = Rendezvous.assign((0L until 100L).toDF("k"), "k", 16)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), plan)
+    val pi = graft.plans.PlanInspect(df)
+    assert(pi.exchangeFree, pi.root.toString)
   }
 }

@@ -80,15 +80,14 @@ class ScaleOpsSpec extends SparkSpec {
     Bucketing.writeBucketed(li, "b_lineitem", "l_orderkey", numBuckets = 8)
     Bucketing.writeBucketed(o, "b_orders", "o_orderkey", numBuckets = 8)
     // disable auto-broadcast so the join would otherwise shuffle
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withoutBroadcast {
       val joined = Bucketing.read(spark, "b_lineitem")
         .join(Bucketing.read(spark, "b_orders"),
           col("l_orderkey") === col("o_orderkey"))
-      assert(Bucketing.isShuffleFree(joined),
+      assert(graft.plans.PlanInspect(joined).exchangeFree,
         s"expected no Exchange:\n${joined.queryExecution.executedPlan}")
       assert(joined.count() > 0)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    }
   }
 
   test("Par.fanOut raises partition count for small inputs, no-ops otherwise") {

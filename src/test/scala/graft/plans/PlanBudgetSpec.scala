@@ -7,11 +7,8 @@ import graft.tools.PlanBudget
   * budget (src/test/resources/plan_shapes.tsv, generated by
   * `sbt "runMain graft.tools.PlanBudget"`). A refactor that adds a
   * shuffle to ANY query path fails here; an improvement (fewer
-  * exchanges) passes — re-pin to ratchet the budget down. This is the
-  * blanket guard behind PlanShapeSpec's targeted assertions: the
-  * targeted tests pin the SHAPE of the hot paths (broadcasts, bounded
-  * heaps, partial aggregation); this pins the exchange COUNT of all of
-  * them.
+  * exchanges) passes — re-pin to ratchet the budget down. The same test
+  * checks the query's `PlanShapes` row on the plan it has just built.
   */
 class PlanBudgetSpec extends SparkSpec {
 
@@ -30,24 +27,26 @@ class PlanBudgetSpec extends SparkSpec {
     assert(missing.isEmpty,
       s"queries without an exchange budget: ${missing.toSeq.sorted.mkString(", ")} " +
         "— run: sbt \"runMain graft.tools.PlanBudget\"")
+    val stale = PlanShapes.rows.keySet -- SparkEntry.queries.keySet
+    assert(stale.isEmpty, s"shape rows for unknown queries: ${stale.toSeq.sorted.mkString(", ")}")
   }
 
-  SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+  SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
     test(s"$name stays within its shuffle budget") {
       graft.GraftExtensions.install(spark)
       // suites share one session: a relation another suite left cached
       // (InMemoryRelation carries its own partitioning) or artifacts it
-      // resized would flip join strategies and skew the count — budget
-      // plans must be built from the same cold state the golden was
-      spark.catalog.clearCache()
+      // resized would flip join strategies and skew the count — inspect
+      // builds from the same cold cache the golden file was written from
+      val pi = PlanBudget.inspect(spark, sf, name)
       golden.get(name).foreach { budget =>
-        val plan = fn(spark, sf).queryExecution.executedPlan.toString
-        val got = PlanBudget.countShuffles(plan)
-        assert(got <= budget,
-          s"$name grew from $budget to $got shuffle exchanges — an " +
+        assert(pi.shuffles <= budget,
+          s"$name grew from $budget to ${pi.shuffles} shuffle exchanges — an " +
             "unintended shuffle crept in (or re-pin deliberately via " +
-            s"PlanBudget):\n$plan")
+            s"PlanBudget):\n${pi.root}")
       }
+      val broken = PlanShapes.broken(name, pi)
+      if (broken.nonEmpty) fail(s"$name lost its plan shape: ${broken.mkString("; ")}\n${pi.root}")
     }
   }
 }

@@ -1,55 +1,71 @@
 package graft.plans
 
-import graft.SparkSpec
-import graft.queries.{DedupQueries, Relational}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+import org.apache.spark.sql.execution.joins.{CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
-/** Plan-shape regression guards: the properties that make these queries
-  * scale are visible in the physical plan — assert them so a refactor
-  * that silently drops a pushdown, a broadcast, or a partial pass fails
-  * here rather than in a 100 TB run.
+import graft.SparkSpec
+import graft.queries.DedupQueries
+
+/** Plan-shape guards that need their own setup: frames no query builds on
+  * its own, broadcast turned off, or a run (cached blocks left behind,
+  * exchanges AQE reuses only when the plan executes). Every query's own
+  * shape row lives in `PlanShapes` and runs in PlanBudgetSpec.
   */
 class PlanShapeSpec extends SparkSpec {
 
-  private def plan(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.executedPlan.toString
-
-  test("q2: filters and the 5-column projection reach the parquet scan") {
-    val p = plan(Relational.q2FilterProject(spark, sf))
-    assert(p.contains("PushedFilters: ["), s"no pushed filters:\n$p")
-    assert(p.contains("l_quantity"), "quantity filter not pushed")
-    assert(p.contains("l_discount"), "discount filter not pushed")
-    // scan must not read the full 16-column lineitem schema
-    val readSchema = p.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
-    assert(!readSchema.contains("l_shipdate"),
-      s"scan reads columns the query never uses: $readSchema")
+  private def checkRows(queries: Seq[String]): Unit = {
+    graft.GraftExtensions.install(spark)
+    queries.foreach { q =>
+      val pi = graft.tools.PlanBudget.inspect(spark, sf, q)
+      val broken = PlanShapes.broken(q, pi)
+      if (broken.nonEmpty) fail(s"$q lost its plan shape: ${broken.mkString("; ")}\n${pi.root}")
+    }
   }
 
-  test("q3: dimension joins broadcast; fact pre-agg is partial before its shuffle") {
-    val p = plan(Relational.q3Join(spark, sf))
-    assert(p.contains("BroadcastHashJoin"), s"dims not broadcast:\n$p")
-    assert(!p.contains("SortMergeJoin") || p.contains("BroadcastHashJoin"),
-      "expected broadcast dims")
-    // partial + final HashAggregate pairs (map-side combine)
-    assert("HashAggregate".r.findAllIn(p).size >= 4,
-      s"expected partial/final aggregate pairs:\n$p")
+  // Per-query guards: each checks the PlanShapes rows of the queries named
+  // before the colon; PlanBudgetSpec checks every row on its budget plan too.
+  Seq(
+    "q1: aggregation is map-side partial (HashAggregate pair around exchange)",
+    "q2: filters and the 5-column projection reach the parquet scan",
+    "q3: dimension joins broadcast; fact pre-agg is partial before its shuffle",
+    "q40: ANN ranking runs through the partial/final TopKPerKey pair, not a Window",
+    "q74: the Morton key stays inside whole-stage codegen; one range exchange",
+    "q76: the bucket histogram broadcasts back; masses agg is partial",
+    "q79: heavy hitters run with NO token-keyed exchange",
+    "q89: the BPE rewrite is the codegen'd kernel in a narrow stage",
+    "q114: KMV sketches condense map-side before the group exchange",
+    "q115/q117: the narrow curation kernels add no exchange before the output sort",
+    "q118: quantile summary is the only grouped state; window runs post-reduction",
+    "q107: the range join plans as an equi-join, never a nested loop",
+    "q100/q104: dedup and novelty windows are hash-partitioned, not global",
+    "q101: the encode stage is narrow — table ships as one reference, no shuffle before the sink sort",
+    "q105: profiling is one scan — a single Expand, no union of scans",
+    "q120: BM25 probes broadcast the query side and finish in bounded heaps",
+    "q123: unigram encode is narrow — vocab rides as a reference, no shuffle before the sink sort",
+    "q126: the entropy gate is one narrow codegen'd scan — no exchange before the sink sort",
+    "q127: bitext forward scan broadcasts the batch; heaps bound both k-NN exchanges",
+    "q129/q131/q132: the narrow kernels stay narrow",
+    "q143/q144/q145: repetition gate stays narrow; shuffle and blocking never window globally",
+    "q146: exact rank never windows the corpus — histogram broadcasts, ties partition by value",
+    "q153: u-stats are one Expand; weights reach the pairs by broadcast",
+    "q154: survivorship is partial-aggregable struct-max, no collects",
+    "q156: history's index arrives as a parquet scan, never re-tokenized",
+    "q163: history's LM counts arrive as a parquet scan, never re-tokenized",
+    "q164: HLL registers are map-side-combined max partials; slice A arrives as a parquet scan",
+    "q165: rare-first seeds broadcast; verify join is exact equi, count partial",
+    "q166: wedge join keys on the intermediate node; aggregation stays partial",
+    "q167: all three SCD2 windows share one user-keyed exchange",
+    "q168: the whole CUSUM window stack shares one key-only exchange",
+    "q170: selection rides bounded heaps; the allocation joins back broadcast",
+    "q171: median/MAD is one key exchange, two in-partition sorts, zero joins",
+    "q206/q207: media decode runs BELOW the key exchange — bytes never shuffle",
+    "q128: edit verify blocks on an equi-join; texts stay out of the blocking shuffle"
+  ).foreach { name =>
+    test(name)(checkRows(name.takeWhile(_ != ':').split('/').toSeq.map(id =>
+      graft.SparkEntry.queries.keys.find(_.startsWith(id + "_")).getOrElse(fail(s"no query $id")))))
   }
-
-  test("q1: aggregation is map-side partial (HashAggregate pair around exchange)") {
-    val p = plan(Relational.q1Agg(spark, sf))
-    val aggIdx = "HashAggregate".r.findAllIn(p).size
-    assert(aggIdx >= 2, s"no partial aggregation:\n$p")
-    assert(p.contains("Exchange hashpartitioning"), s"no hash exchange:\n$p")
-  }
-
-  test("q40: ANN ranking runs through the partial/final TopKPerKey pair, not a Window") {
-    val p = plan(DedupQueries.queries("q40_ann_brute")(spark, sf))
-    assert(p.contains("TopKPerKeyPartial"), s"no map-side top-k:\n$p")
-    // the only Window allowed is the k-rows-per-group rank numbering AFTER top-k
-    val topkIdx = p.indexOf("TopKPerKeyPartial")
-    val winIdx = p.indexOf("Window")
-    assert(winIdx < 0 || winIdx < topkIdx,
-      "full-input Window must not appear below the top-k")
-  }
+  test("exact dedup aggregates partially before the digest shuffle")(checkRows(Seq("q30_exact_dedup")))
 
   test("dedup signature stage stays inside whole-stage codegen") {
     import org.apache.spark.sql.functions._
@@ -57,218 +73,16 @@ class PlanShapeSpec extends SparkSpec {
     val df = d.select(col("doc_id"),
       graft.functions.HashExprs.minhashSig(
         graft.dedup.Dedup.shingleHashes(col("text"), 5), 64).as("sig"))
-    val p = plan(df)
-    // codegen'd stages are starred in the tree: "*(1) Project"
-    assert(p.contains("*(1)"), s"signature projection fell out of codegen:\n$p")
-  }
-
-  test("exact dedup aggregates partially before the digest shuffle") {
-    val p = plan(graft.dedup.Dedup.exactDedup(
-      spark.read.parquet(s"$sf/documents.parquet"), "text", "doc_id"))
-    assert("HashAggregate".r.findAllIn(p).size >= 2, s"no partial agg:\n$p")
-  }
-
-  test("q74: the Morton key stays inside whole-stage codegen; one range exchange") {
-    val p = plan(Relational.q74ZOrder(spark, sf))
-    assert(p.contains("morton2"), s"morton expression missing:\n$p")
-    assert(p.contains("rangepartitioning"), s"no range partitioning:\n$p")
-    // the interleave must not fall out of codegen (no CodegenFallback wrapper)
-    assert(!p.contains("Fallback"), s"morton fell out of codegen:\n$p")
-  }
-
-  test("q76: the bucket histogram broadcasts back; masses agg is partial") {
-    val p = plan(graft.queries.CurationQueries.q76Dsir(spark, sf))
-    assert(p.contains("BroadcastHashJoin"), s"histogram not broadcast:\n$p")
-    assert("HashAggregate".r.findAllIn(p).size >= 4,
-      s"expected partial/final pairs for histogram + masses:\n$p")
-  }
-
-  test("q79: heavy hitters run with NO token-keyed exchange") {
-    val p = plan(graft.queries.CurationQueries.q79FreqItems(spark, sf))
-    assert(p.contains("freq_items"), s"aggregate missing:\n$p")
-    // ObjectHashAggregate pair around a SINGLE-partition exchange of
-    // summaries — never a shuffle keyed on the token itself
-    assert(p.contains("SinglePartition"), s"expected summary gather:\n$p")
-    assert(!p.contains("hashpartitioning(token"),
-      s"token-keyed shuffle crept in:\n$p")
-  }
-
-  test("q89: the BPE rewrite is the codegen'd kernel in a narrow stage") {
-    val p = plan(graft.queries.SearchQueries.q89BpeStep(spark, sf))
-    assert(p.contains("bpe_merge"), s"kernel expression missing:\n$p")
-    assert(!p.contains("Fallback"), s"kernel fell out of codegen:\n$p")
-  }
-
-  test("q73: SemDeDup self-join reuses ONE assignment exchange (no persist, no leak)") {
-    // pin the at-scale shape: with broadcast off, both self-join sides
-    // become the same hashpartitioning(__cluster) exchange and AQE must
-    // replay its shuffle files (ReusedExchange) instead of recomputing
-    // the scan + normalize + argmin subtree
-    val thresholds = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val saved = thresholds.map(k => k -> spark.conf.getOption(k))
-    thresholds.foreach(spark.conf.set(_, "-1"))
-    try {
-      // delta, not global-empty: suites share one session and Bpe.train
-      // returns its corpus cached by contract
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val df = DedupQueries.q73SemDedup(spark, sf)
-      df.collect() // AQE finalizes reuse only on the executed plan
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("ReusedExchange"),
-        s"cluster assignment computed twice (no exchange reuse):\n$p")
-      assert(p.contains("nearest_centroid"), s"narrow argmin assignment missing:\n$p")
-      assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
-        "q73 left blocks in executor storage after materializing")
-    } finally saved.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
-  test("q69: TF-IDF builds the postings index once and leaves no cached blocks") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val df = graft.queries.SearchQueries.queries("q69_tfidf_search")(spark, sf)
-    df.collect()
-    // AQE prints "Final Plan" then "Initial Plan" — count only the final
-    val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    // the corpus-wide tokenize → explode → combine subtree is the
-    // expensive pass; every two-tier branch (stats, rare probe, common
-    // completion, fallback) must read it through ReuseExchange / AQE
-    // stage reuse — AT MOST one partial (term, doc_id) aggregate may
-    // print (reused stages print as references without re-printing the
-    // subtree, so 0 occurrences in the final-plan text is legal; 2+
-    // means the index was genuinely rebuilt). The keys=[term] stats
-    // aggregate is NOT a postings build; require the doc_id grouping key.
-    val postingsBuilds = p.linesIterator.filter(l =>
-      l.contains("HashAggregate(keys=[term") && l.contains("doc_id") &&
-        l.contains("partial_count")).size
-    assert(postingsBuilds <= 1,
-      s"postings index built $postingsBuilds times (expected <=1):\n$p")
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
-      "q69 left blocks in executor storage after materializing")
-  }
-
-  test("q114: KMV sketches condense map-side before the group exchange") {
-    val p = plan(DedupQueries.queries("q114_kmv_distinct")(spark, sf))
-    // TypedImperativeAggregates plan as ObjectHashAggregate; the scale
-    // property is the PARTIAL phase — each task reduces its slice to an
-    // O(k) sketch before anything shuffles
-    assert(p.contains("ObjectHashAggregate"), s"sketch agg missing:\n$p")
-    assert(p.contains("partial_kmv_sketch"),
-      s"no map-side sketch condensation:\n$p")
-    assert(p.contains("Exchange hashpartitioning(l_returnflag"),
-      s"expected the group-keyed exchange:\n$p")
-  }
-
-  test("q113: the NB word model joins distributed when broadcast is off") {
-    // the per-word model must NEVER require a broadcast (at web scale it
-    // outgrows one); only the |Y|-row class table and 1-row scalars may.
-    // With auto-broadcast disabled the (w, y) model join has to plan as
-    // a shuffle join — if the code forced a broadcast, this would either
-    // still print BroadcastHashJoin on the model relation or fail.
-    val thresholds = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val saved = thresholds.map(k => k -> spark.conf.getOption(k))
-    thresholds.foreach(spark.conf.set(_, "-1"))
-    try {
-      val df = graft.queries.TextQueries.queries("q113_nb_classifier")(spark, sf)
-      df.collect()
-      val p = df.queryExecution.executedPlan.toString
-      assert(!p.contains("CartesianProduct"),
-        s"unbounded cartesian in the scoring plan:\n$p")
-      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
-        s"model join did not shuffle with broadcast off:\n$p")
-    } finally saved.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
-  test("q115/q117: the narrow curation kernels add no exchange before the output sort") {
-    for (q <- Seq("q115_span_corrupt", "q117_multi_scrub")) {
-      val p = plan(graft.SparkEntry.queries(q)(spark, sf))
-      // exactly one Exchange: the rangepartitioning of the final orderBy
-      val exchanges = p.linesIterator.count(l =>
-        l.contains("Exchange") && !l.contains("ReusedExchange"))
-      assert(exchanges == 1, s"$q grew a corpus shuffle:\n$p")
-      assert(p.contains("rangepartitioning"),
-        s"$q's single exchange should be the output sort:\n$p")
-    }
-  }
-
-  test("q118: quantile summary is the only grouped state; window runs post-reduction") {
-    val df = graft.queries.CurationQueries.queries("q118_quantile_sketch")(spark, sf)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    // partial/final count pair on (key, bucket) — the bounded summary —
-    // and the rank window must consume the REDUCED relation, not raw
-    // rows: in the top-down plan text, the bucket-keyed aggregate must
-    // print BELOW (after) the Window that reads it
-    assert(p.contains("partial_count"), s"no map-side histogram combine:\n$p")
-    val winIdx = p.indexOf("Window")
-    assert(winIdx >= 0, s"no cumulative window:\n$p")
-    val below = p.substring(winIdx)
-    assert(below.contains("HashAggregate") && below.contains("bucket"),
-      s"window input is not the (key, bucket) histogram:\n$p")
-  }
-
-  test("q107: the range join plans as an equi-join, never a nested loop") {
-    val p = plan(graft.queries.MiscOps.q107RangeJoin(spark, sf))
-    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-      s"range predicate degenerated to a nested loop:\n$p")
-    assert(p.contains("Join"), s"expected a hash/sort-merge equi-join:\n$p")
-  }
-
-  test("q100/q104: dedup and novelty windows are hash-partitioned, not global") {
-    for ((q, key) <- Seq("q100_paragraph_dedup" -> "__ph",
-      "q104_ngram_novelty" -> "__gh")) {
-      val p = plan(graft.SparkEntry.queries(q)(spark, sf))
-      val winLines = p.linesIterator
-        .filter(_.contains("windowspecdefinition")).toSeq
-      assert(winLines.nonEmpty && winLines.forall(_.contains(key)),
-        s"$q window lost its $key partition key:\n${winLines.mkString("\n")}")
-    }
-  }
-
-  test("q101: the encode stage is narrow — table ships as one reference, no shuffle before the sink sort") {
-    val df = graft.queries.SearchQueries.q101BpeEncode(spark, sf)
-    val p = plan(df)
-    assert(p.contains("bpe_encode"), s"kernel expression missing:\n$p")
-    // exactly the sortOnce exchange at the top; the tokenize pipeline
-    // below it must not shuffle
-    val exchanges = "Exchange".r.findAllIn(p).size
-    assert(exchanges <= 2, s"encode pipeline shuffles:\n$p")
-  }
-
-  test("q105: profiling is one scan — a single Expand, no union of scans") {
-    val p = plan(graft.queries.MiscOps.q105Profile(spark, sf))
-    assert(p.contains("Expand"), s"expected Expand-based multi-distinct:\n$p")
-    assert(!p.contains("Union"), s"per-column scan union:\n$p")
-    assert("FileScan".r.findAllIn(p).size <= 1, s"multiple scans:\n$p")
-  }
-
-  test("q120: BM25 probes broadcast the query side and finish in bounded heaps") {
-    val p = plan(graft.queries.SearchQueries.queries("q120_bm25_search")(spark, sf))
-    assert(p.contains("TopKPerKeyPartial"), s"no map-side top-k:\n$p")
-    assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
-      s"query side not broadcast:\n$p")
-    assert(!p.contains("SortMergeJoin"),
-      s"corpus reshuffled for the probe:\n$p")
+    val pi = PlanInspect(df)
+    assert(pi.codegen("minhash_sig"), s"signature projection fell out of codegen:\n${pi.root}")
   }
 
   test("q122: the CMS sketch build combines map-side before its only exchange") {
     import org.apache.spark.sql.functions._
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
-    val p = plan(graft.ops.Cms.sketch(li, col("l_partkey"), 4, 8192))
-    // partial + final HashAggregate around one hash exchange
-    assert("HashAggregate".r.findAllIn(p).size >= 2,
-      s"sketch build not map-side combined:\n$p")
-    assert("Exchange hashpartitioning".r.findAllIn(p).size === 1,
-      s"sketch build needs exactly one exchange:\n$p")
-  }
-
-  test("q123: unigram encode is narrow — vocab rides as a reference, no shuffle before the sink sort") {
-    val p = plan(graft.queries.SearchQueries.queries("q123_unigram_encode")(spark, sf))
-    assert(p.contains("unigram_encode"), s"kernel expression missing:\n$p")
-    val exchanges = "Exchange".r.findAllIn(p).size
-    assert(exchanges <= 2, s"encode pipeline shuffles:\n$p")
+    val pi = PlanInspect(graft.ops.Cms.sketch(li, col("l_partkey"), 4, 8192))
+    assert(pi.partialFinalAgg(), s"sketch build not map-side combined:\n${pi.root}")
+    assert(pi.hashShuffles.size === 1, s"sketch build needs exactly one exchange:\n${pi.root}")
   }
 
   test("q124: PQ encode is narrow; ADC scoring broadcasts queries into the heap operator") {
@@ -277,225 +91,82 @@ class PlanShapeSpec extends SparkSpec {
     val books = graft.similarity.Pq.train(emb, "embedding", m = 4, ksub = 4,
       iterations = 1, sampleRows = 64)
     val coded = graft.similarity.Pq.encode(emb, "embedding", books)
-    assert(!plan(coded).contains("Exchange"),
-      s"PQ encode must not shuffle:\n${plan(coded)}")
+    val codedPi = PlanInspect(coded)
+    assert(codedPi.exchangeFree, s"PQ encode must not shuffle:\n${codedPi.root}")
     val adc = graft.similarity.Pq.adcTopK(coded, emb.filter(col("vec_id") < 2),
       "embedding", "vec_id", "vec_id", books, 3)
-    val p = plan(adc)
-    assert(p.contains("TopKPerKeyPartial"), s"no map-side top-k:\n$p")
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
-      s"queries not broadcast:\n$p")
+    val pi = PlanInspect(adc)
+    assert(pi.all[TopKPerKeyExec].exists(_.partial), s"no map-side top-k:\n${pi.root}")
+    assert(pi.has[BroadcastExchangeLike], s"queries not broadcast:\n${pi.root}")
   }
 
-  test("q126: the entropy gate is one narrow codegen'd scan — no exchange before the sink sort") {
-    val p = plan(graft.queries.TextQueries.queries("q126_entropy_gate")(spark, sf))
-    assert(p.contains("char_entropy_fix"), s"kernel expression missing:\n$p")
-    assert(!p.contains("Fallback"), s"entropy fell out of codegen:\n$p")
-    // the only exchange allowed is the final orderBy's range partitioning
-    assert(!p.contains("Exchange hashpartitioning"),
-      s"per-doc entropy must not shuffle:\n$p")
-  }
-
-  test("q127: bitext forward scan broadcasts the batch; heaps bound both k-NN exchanges") {
-    val p = plan(graft.queries.DedupQueries.queries("q127_bitext_mine")(spark, sf))
-    assert(p.contains("TopKPerKeyPartial"), s"no map-side top-k:\n$p")
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
-      s"mining batch not broadcast:\n$p")
-    // the corpus must never be the build side of a shuffled join
-    assert(!p.contains("SortMergeJoin"), s"corpus reshuffled:\n$p")
-  }
-
-  test("q129/q131/q132: the narrow kernels stay narrow") {
-    // temperature mix: one corpus aggregation; the waterline joins are
-    // all broadcast (per-language relation)
-    val p129 = plan(graft.queries.ScrubQueries.queries("q129_temperature_mix")(spark, sf))
-    assert(p129.contains("pow2_neg_fix") && p129.contains("log2fix"),
-      s"fixed-point kernels missing:\n$p129")
-    assert(!p129.contains("SortMergeJoin"),
-      s"per-language relation reshuffled:\n$p129")
-    // chat render: no explode, no hash exchange before the sink sort
-    val p131 = plan(graft.queries.TextQueries.queries("q131_chat_render")(spark, sf))
-    assert(!p131.contains("Generate"), s"render fell back to explode:\n$p131")
-    assert(!p131.contains("Exchange hashpartitioning"),
-      s"in-row render must not shuffle:\n$p131")
-    // wordpiece: kernel present, vocab as reference, narrow until the sort
-    val p132 = plan(graft.queries.SearchQueries.queries("q132_wordpiece_encode")(spark, sf))
-    assert(p132.contains("wordpiece_encode"), s"kernel missing:\n$p132")
-    assert(!p132.contains("Exchange hashpartitioning"),
-      s"encode pipeline shuffles:\n$p132")
-  }
-
-  test("q143/q144/q145: repetition gate stays narrow; shuffle and blocking never window globally") {
-    // repetition gate: the kernel runs in one narrow scan — no exchange
-    // except the output sort
-    val p143 = plan(graft.queries.TextQueries.queries("q143_repetition_gate")(spark, sf))
-    assert(p143.contains("repetition_profile"), s"kernel missing:\n$p143")
-    assert(!p143.contains("Exchange hashpartitioning"),
-      s"narrow gate must not hash-shuffle:\n$p143")
-    // shard shuffle: rank windows are PARTITIONED by shard — a window
-    // without partitioning would funnel the corpus through one task
-    val p144 = plan(graft.queries.CurationQueries.queries("q144_train_shuffle")(spark, sf))
-    assert(p144.contains("windowspecdefinition(shard"),
-      s"rank window lost its shard partitioning:\n$p144")
-    // block spans: the stream-offset windows are bucket-partitioned and
-    // the only unpartitioned window runs on the 65536-row histogram,
-    // never on corpus rows (it sits under the tiny broadcast side)
-    val p145 = plan(graft.queries.CurationQueries.queries("q145_block_spans")(spark, sf))
-    assert(p145.contains("windowspecdefinition(__bkt"),
-      s"exact prefix window lost its bucket partitioning:\n$p145")
-    assert(p145.contains("BroadcastHashJoin"),
-      s"bucket bases must broadcast back:\n$p145")
-  }
-
-  test("q146: exact rank never windows the corpus — histogram broadcasts, ties partition by value") {
-    val p = plan(graft.queries.CurationQueries.queries("q146_curriculum")(spark, sf))
-    assert(p.contains("BroadcastHashJoin"),
-      s"rank bases must broadcast back:\n$p")
-    assert(p.contains("windowspecdefinition(n_tokens"),
-      s"tie-break window lost its value partitioning:\n$p")
-    // the only unpartitioned windows run on the tiny histogram relation
-    // (under the broadcast exchange), never on corpus rows
-    val corpusWindow = p.linesIterator.exists(l =>
-      l.contains("Window") && l.contains("windowspecdefinition(") &&
-        !l.contains("windowspecdefinition(n_tokens") && l.contains("doc_id"))
-    assert(!corpusWindow, s"corpus-wide window found:\n$p")
-  }
-
-  test("q153: u-stats are one Expand; weights reach the pairs by broadcast") {
-    val p = plan(DedupQueries.queries("q153_fellegi_sunter")(spark, sf))
-    assert(p.contains("Generate explode"),
-      s"u-stats lost the single-scan field explode:\n$p")
-    // the 1-row pivoted weight relation must broadcast onto the pairs,
-    // never shuffle them
-    assert(p.contains("BroadcastNestedLoopJoin") ||
-      p.contains("BroadcastExchange"), s"weights not broadcast:\n$p")
-  }
-
-  test("q154: survivorship is partial-aggregable struct-max, no collects") {
-    val p = plan(graft.queries.CurationQueries
-      .queries("q154_golden_record")(spark, sf))
-    assert(p.contains("partial_max") || p.contains("partial max"),
-      s"field picks lost map-side combine:\n$p")
-    assert(!p.toLowerCase.contains("collect_list"),
-      s"survivorship must never collect cluster members:\n$p")
-  }
-
-  test("q156: history's index arrives as a parquet scan, never re-tokenized") {
-    val p = plan(graft.queries.SearchQueries
-      .queries("q156_incremental_index")(spark, sf))
-    assert(p.contains("graft_bm25idx"),
-      s"history postings not read from the persisted artifact:\n$p")
-  }
-
-  test("q163: history's LM counts arrive as a parquet scan, never re-tokenized") {
-    val p = plan(graft.queries.TextQueries
-      .queries("q163_incremental_lm")(spark, sf))
-    assert(p.contains("graft_knlm"),
-      s"history counts not read from the persisted artifact:\n$p")
-  }
-
-  test("q164: HLL registers are map-side-combined max partials; slice A arrives as a parquet scan") {
-    val p = plan(DedupQueries.queries("q164_hll_distinct")(spark, sf))
-    assert(p.contains("graft_hllreg"),
-      s"slice registers not read from the persisted artifact:\n$p")
-    assert(p.contains("partial_max") || p.contains("partial max"),
-      s"register build lost map-side combine:\n$p")
-  }
-
-  test("q165: rare-first seeds broadcast; verify join is exact equi, count partial") {
-    val p = plan(graft.queries.SearchQueries
-      .queries("q165_phrase_search")(spark, sf))
-    // the seed relation (and the per-query others) broadcast onto the
-    // postings — candidate generation never re-shuffles the corpus
-    assert(p.contains("BroadcastHashJoin"),
-      s"seed terms not broadcast — corpus would re-shuffle per query:\n$p")
-    // the verify step is an equi-join on (term, doc_id, pos) — a shuffle
-    // by design (the bucketed index makes it co-located at scale), but
-    // NEVER a product
-    assert(!p.contains("CartesianProduct") &&
-      !p.contains("BroadcastNestedLoopJoin"),
-      s"verify degenerated to a product:\n$p")
-    assert(p.contains("partial_count"),
-      s"anchor counting lost map-side combine:\n$p")
-  }
-
-  test("q166: wedge join keys on the intermediate node; aggregation stays partial") {
-    val p = plan(graft.queries.CurationQueries
-      .queries("q166_link_predict")(spark, sf))
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      s"wedge enumeration degenerated to a product:\n$p")
-    assert(p.contains("partial_count"),
-      s"pair counting lost map-side combine:\n$p")
-  }
-
-  test("q167: all three SCD2 windows share one user-keyed exchange") {
-    val p = plan(graft.queries.MiscOps.queries("q167_scd2_history")(spark, sf))
-    val exchanges = p.linesIterator.count(l =>
-      l.contains("Exchange hashpartitioning"))
-    assert(exchanges == 1,
-      s"expected a single key exchange for lag/lead/version, got $exchanges:\n$p")
-  }
-
-  test("q168: the whole CUSUM window stack shares one key-only exchange") {
-    val p = plan(graft.queries.MiscOps.queries("q168_cusum_shift")(spark, sf))
-    val keyOnly = p.linesIterator.count(l =>
-      l.contains("Exchange hashpartitioning(event_type#") &&
-        !l.contains("bucket"))
-    assert(keyOnly == 1,
-      s"baseline + cumsums + running mins should share ONE event_type " +
-        s"exchange, found $keyOnly:\n$p")
-    assert(!p.contains("CartesianProduct"), s"spine joined as a product:\n$p")
-  }
-
-  test("q170: selection rides bounded heaps; the allocation joins back broadcast") {
-    val p = plan(graft.queries.ScrubQueries
-      .queries("q170_stratified_sample")(spark, sf))
-    assert(p.contains("TopKPerKeyPartial"),
-      s"stratum selection lost the map-side bounded heap:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"alloc relation should broadcast onto the ranked sample:\n$p")
-  }
-
-  test("q171: median/MAD is one key exchange, two in-partition sorts, zero joins") {
-    // the round-8 formulation executed the input three times and joined
-    // the med/mad relations back; the window-lift rewrite must keep the
-    // whole screen on a single hashpartitioning(keys) exchange
-    val p = plan(graft.queries.MiscOps.queries("q171_robust_outliers")(spark, sf))
-    assert(!p.contains("Join"), s"med/mad joined back — single-pass lost:\n$p")
-    val hashEx = p.linesIterator.count(l =>
-      l.contains("Exchange hashpartitioning") && !l.contains("ReusedExchange"))
-    assert(hashEx == 1, s"expected ONE key exchange, got $hashEx:\n$p")
-    assert("FileScan".r.findAllIn(p).size <= 1,
-      s"input relation scanned more than once:\n$p")
-  }
-
-  test("q206/q207: media decode runs BELOW the key exchange — bytes never shuffle") {
-    // the decode mapPartitions stage must be UPSTREAM of (printed below)
-    // every hash exchange: features reduce blobs to fixed-size values
-    // before anything wide. If a refactor moved the explode/decode past
-    // the shuffle, MapPartitions would print above an Exchange here.
-    for (q <- Seq("q206_video_scene_dedup", "q207_voice_activity")) {
-      val p = plan(graft.SparkEntry.queries(q)(spark, sf))
-      val ex = p.indexOf("Exchange hashpartitioning")
-      val mp = p.indexOf("MapPartitions")
-      assert(ex >= 0 && mp >= 0, s"$q plan missing exchange or decode:\n$p")
-      assert(mp > ex, s"$q decodes media AFTER a shuffle:\n$p")
+  test("q73: SemDeDup self-join reuses ONE assignment exchange (no persist, no leak)") {
+    // pin the at-scale shape: with broadcast off, both self-join sides
+    // become the same hashpartitioning(__cluster) exchange and AQE must
+    // replay its shuffle files (ReusedExchange) instead of recomputing
+    // the scan + normalize + argmin subtree
+    withoutBroadcast {
+      // delta, not global-empty: suites share one session and Bpe.train
+      // returns its corpus cached by contract
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val df = DedupQueries.q73SemDedup(spark, sf)
+      df.collect() // AQE finalizes reuse only on the executed plan
+      val pi = PlanInspect(df)
+      assert(pi.reused >= 1, s"cluster assignment computed twice (no exchange reuse):\n${pi.root}")
+      assert(pi.usesExpr("nearest_centroid"), s"narrow argmin assignment missing:\n${pi.root}")
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+        "q73 left blocks in executor storage after materializing")
     }
   }
 
-  test("q128: edit verify blocks on an equi-join; texts stay out of the blocking shuffle") {
-    val p = plan(graft.queries.DedupQueries.queries("q128_edit_verify")(spark, sf))
-    assert(p.contains("lev_bounded"), s"kernel expression missing:\n$p")
-    // two independent asserts (round-9 verdict #3: the old combined
-    // expression's `&&`/`||` precedence made the right disjunct true
-    // whenever BNLJ was absent, so a CartesianProduct slipped through)
-    assert(!p.contains("CartesianProduct"),
-      s"blocking degenerated to a cartesian product:\n$p")
-    assert(!p.contains("BroadcastNestedLoopJoin"),
-      s"blocking degenerated to a nested loop:\n$p")
-    // the candidate-pair join keys on the block tuple, never on text
-    val blockJoins = p.linesIterator.filter(_.contains("hashpartitioning"))
-    assert(!blockJoins.exists(_.contains("__t#")),
-      s"document text crossed the blocking exchange:\n$p")
+  test("q69: TF-IDF builds the postings index once and leaves no cached blocks") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val df = graft.queries.SearchQueries.queries("q69_tfidf_search")(spark, sf)
+    df.collect()
+    // every two-tier branch (stats, rare probe, common completion,
+    // fallback) reads the corpus-wide tokenize → explode → combine pass
+    // through stage reuse: AT MOST one partial (term, doc_id) count on the
+    // final plan (the keys=[term] stats aggregate is not a postings build)
+    val pi = PlanInspect(df)
+    val postingsBuilds = pi.all[BaseAggregateExec].count { a =>
+      val keys = a.groupingExpressions.map(_.name)
+      a.requiredChildDistributionExpressions.isEmpty &&
+        keys.contains("term") && keys.contains("doc_id") &&
+        a.aggregateExpressions.exists(_.aggregateFunction.prettyName == "count")
+    }
+    assert(postingsBuilds <= 1,
+      s"postings index built $postingsBuilds times (expected <=1):\n${pi.root}")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "q69 left blocks in executor storage after materializing")
+  }
+
+  test("shared subtrees shuffle once at run time: AQE reuses the exchange the plan repeats") {
+    // the un-run plan repeats these subtrees (each consumer plans its own
+    // copy); the executed plan must replay one shuffle for all of them
+    for ((q, key) <- Seq("q149_corpus_overlap" -> "h", "q162_transitions" -> "user_id",
+        "q199_next_event" -> "user_id", "q208_doremi_step" -> "source",
+        "q228_neyman_allocation" -> "lang")) {
+      spark.catalog.clearCache()
+      val df = graft.SparkEntry.queries(q)(spark, sf)
+      df.collect()
+      val pi = PlanInspect(df)
+      assert(pi.hashShuffles.count(_.keys == Seq(key)) == 1, s"$q shuffles on $key more than once:\n${pi.root}")
+    }
+  }
+
+  test("q113: the NB word model joins distributed when broadcast is off") {
+    // the per-word model must NEVER require a broadcast (at web scale it
+    // outgrows one); only the |Y|-row class table and 1-row scalars may.
+    // With auto-broadcast disabled the (w, y) model join has to plan as
+    // a shuffle join — if the code forced a broadcast, this would either
+    // still plan BroadcastHashJoin on the model relation or fail.
+    withoutBroadcast {
+      val df = graft.queries.TextQueries.queries("q113_nb_classifier")(spark, sf)
+      df.collect()
+      val pi = PlanInspect(df)
+      assert(!pi.has[CartesianProductExec], s"unbounded cartesian in the scoring plan:\n${pi.root}")
+      assert(pi.has[SortMergeJoinExec] || pi.has[ShuffledHashJoinExec],
+        s"model join did not shuffle with broadcast off:\n${pi.root}")
+    }
   }
 }

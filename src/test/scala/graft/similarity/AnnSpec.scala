@@ -47,9 +47,10 @@ class AnnSpec extends SparkSpec {
 
   test("ivfAssign plan is narrow: no joins, no exchanges") {
     val out = Ann.ivfAssign(embeddings.limit(200), "vec_id", "embedding", nLists = 4)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), s"assignment must not join:\n$plan")
-    assert(!plan.contains("Exchange"), s"assignment must not shuffle:\n$plan")
+    val pi = graft.plans.PlanInspect(out)
+    assert(!pi.has[org.apache.spark.sql.execution.joins.BaseJoinExec],
+      s"assignment must not join:\n${pi.root}")
+    assert(pi.exchangeFree, s"assignment must not shuffle:\n${pi.root}")
   }
 
   test("ivfTopK recall vs exact baseline is reasonable") {
