@@ -158,7 +158,7 @@ case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
 /** Integer sparse dot over (doc idx[], doc tf[], query idx[], query w[]),
   * -1 sentinel for disjoint index sets (see [[VectorKernels.sparseDotLong]]).
   * One narrow codegen'd merge per (doc, query) pair — the scoring kernel
-  * of [[graft.similarity.TfIdfSearch]]'s dense tier.
+  * of [[graft.similarity.LexicalProbe]]'s dense tier.
   */
 case class SparseDotLong(first: Expression, second: Expression,
     third: Expression, fourth: Expression) extends QuaternaryExpression {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 import graft.ops.Load
 import graft.text.{QualityRules, SpanDedup}
-import graft.similarity.{Bm25, TfIdfSearch}
+import graft.similarity.{Bm25, Lexical, TfIdf}
 
 /** Driver queries for the span-dedup / quality-rules / lexical-search
   * tier (beyond-reference training-data operators; see COVERAGE.md).
@@ -117,13 +117,13 @@ object SearchQueries {
 
   /** q69: inverted-index TF-IDF top-5 retrieval; query set = every 31st
     * document searching the whole corpus. Fixed-point ln-free idf keeps
-    * scores exact int64 (see [[TfIdfSearch]]), so the oracle's window
-    * formulation must hash-match, ties and all.
+    * scores exact int64 (see [[graft.similarity.Lexical]]), so the
+    * oracle's window formulation must hash-match, ties and all.
     */
   def q69TfIdfSearch(spark: SparkSession, dir: String): DataFrame = {
     val d = Load.table(spark, dir, "documents")
     val queries = d.filter(col("doc_id") % 31 === 0)
-    TfIdfSearch.topK(d, queries, "text", "doc_id", "doc_id", k = 5)
+    TfIdf.topK(d, queries, "text", "doc_id", "doc_id", k = 5)
       .orderBy("query_id", "doc_id")
   }
 
@@ -163,7 +163,7 @@ object SearchQueries {
   def q120Bm25Search(spark: SparkSession, dir: String): DataFrame = {
     val d = Load.table(spark, dir, "documents")
     val queries = d.filter(col("doc_id") % 37 === 0 && col("doc_id") < 10000000L)
-    graft.similarity.Bm25.topK(d, queries, "text", "doc_id", "doc_id", k = 5)
+    Bm25.topK(d, queries, "text", "doc_id", "doc_id", k = 5)
       .orderBy("query_id", "doc_id")
   }
 
@@ -213,7 +213,7 @@ object SearchQueries {
     * strong in only one modality surface; docs present in both dominate.
     */
   def q177HybridRrf(spark: SparkSession, dir: String): DataFrame = {
-    import graft.similarity.{Ann, Bm25, Rrf}
+    import graft.similarity.{Ann, Rrf}
     val d = Load.table(spark, dir, "documents")
     val e = Load.table(spark, dir, "embeddings").select("vec_id", "embedding")
     val queries = d.filter(col("doc_id") % 37 === 0 && col("doc_id") < 10000000L)
@@ -295,7 +295,7 @@ object SearchQueries {
       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
   /** q156: incremental inverted-index maintenance
-    * ([[graft.similarity.Bm25.index]]/`mergeIndex`/`topKFromIndex`) —
+    * ([[graft.similarity.Lexical]]: `index`/`mergeIndex`/`topKFromIndex`) —
     * the retrieval leg of the artifact-algebra trio (q152 profiles,
     * q155 cluster labels): history's index (raw postings + (n, tot)
     * scalars — NOT the derived avgdl/idf, which change under merge)
@@ -340,7 +340,7 @@ object SearchQueries {
     val histIdx = (Load.parquet(spark, s"$base/postings"),
       Load.parquet(spark, s"$base/scalars"))
     val (mp, ms) =
-      Bm25.mergeIndex(Seq(histIdx, Bm25.index(delta, "text", "doc_id")))
+      Lexical.mergeIndex(Seq(histIdx, Bm25.index(delta, "text", "doc_id")))
     val queries = d.filter(col("doc_id") % 41 === 0 && col("doc_id") < 10000000L)
     val inc = Bm25.topKFromIndex(mp, ms, queries, "text", "doc_id", k = 5)
     val direct = Bm25.topK(d, queries, "text", "doc_id", "doc_id", k = 5)
@@ -676,7 +676,7 @@ object SearchQueries {
     val probes = d.filter(col("doc_id") % 37 === 0 && col("doc_id") < 10000000L)
     val wR = Window.partitionBy("query_id")
       .orderBy(col("score").desc, col("doc_id"))
-    val tfi = TfIdfSearch.topK(d, probes, "text", "doc_id", "doc_id", k = 10)
+    val tfi = TfIdf.topK(d, probes, "text", "doc_id", "doc_id", k = 10)
       .withColumn("ra", row_number().over(wR))
       .select("query_id", "doc_id", "ra")
     val lex = Bm25.topK(d, probes, "text", "doc_id", "doc_id", k = 10)

@@ -1,12 +1,12 @@
 package graft.similarity
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The shared probe engine behind the lexical retrieval family
-  * ([[TfIdfSearch]], [[Bm25]]): top-k documents per query under any
-  * score of the form
+/** The probe engine behind [[Lexical]] retrieval (both scorings,
+  * [[TfIdf]] and [[Bm25]]): top-k documents per query under any score of
+  * the form
   *
   *   score(q, d) = Σ_{t ∈ q ∩ d}  v(t, d) · w(t)
   *
@@ -53,7 +53,7 @@ import org.apache.spark.sql.types._
   *  - `vPost`  — (term, doc_id, v): integer doc-side posting values,
   *    already pruned to the query vocabulary (pruning cannot change
   *    df of surviving terms, so caller stats stay full-corpus exact);
-  *  - `stats`  — (term, __w [, __common, __u]): query-vocab-sized →
+  *  - `stats`  — (term, __df, __vmax, __w, __n): query-vocab-sized →
   *    broadcastable by the same contract that broadcasts the query
   *    terms themselves;
   *  - `qTerms` — (query_id, term), distinct per query.
@@ -80,15 +80,15 @@ private[similarity] object LexicalProbe {
     finish(scored, k)
   }
 
-  /** Dense vocab-indexed probe (see object doc). `stats` needs only
-    * (term, __w).
-    */
+  /** Dense vocab-indexed probe (see object doc). */
   def dense(vPost: DataFrame, qTerms: DataFrame, stats: DataFrame,
       k: Int): DataFrame = {
-    // (term → dense idx): ≤ caller's vocab bound rows, so the
-    // single-partition ordering window is a bounded driver-scale sort,
-    // not a corpus one
-    val idx = stats.select("term", "__w")
+    // (term → dense idx) over the query vocabulary: ≤ caller's vocab
+    // bound rows, so the single-partition ordering window is a bounded
+    // driver-scale sort, not a corpus one. Indexing the query terms, not
+    // the stats, keeps the doc side off the stats: a doc side that read
+    // only the stats' terms would plan a tf-free copy of the postings.
+    val idx = qTerms.select("term").distinct()
       .withColumn("__idx",
         (row_number().over(org.apache.spark.sql.expressions.Window
           .orderBy("term")) - 1).cast(IntegerType))
@@ -99,6 +99,7 @@ private[similarity] object LexicalProbe {
         transform(col("__p"), p => p.getField("__idx")).as("__di"),
         transform(col("__p"), p => p.getField("v").cast(LongType)).as("__dv"))
     val qVecs = qTerms.join(broadcast(idx), Seq("term"))
+      .join(broadcast(stats.select("term", "__w")), Seq("term"))
       .groupBy("query_id")
       .agg(sort_array(collect_list(struct(col("__idx"), col("__w")))).as("__p"))
       .select(col("query_id"),
@@ -114,11 +115,17 @@ private[similarity] object LexicalProbe {
     finish(scored, k)
   }
 
-  /** Two-tier bound-pruned probe (see object doc). `stats` needs
-    * (term, __w, __common, __u).
+  /** Two-tier bound-pruned probe (see object doc). A term is common when
+    * its df exceeds both `commonDfShare` of the corpus and `minCommonDf`;
+    * u = w·vmax upper-bounds any doc's contribution from that term.
     */
-  def tiered(vPost: DataFrame, qTerms: DataFrame, stats: DataFrame,
-      k: Int): DataFrame = {
+  def tiered(vPost: DataFrame, qTerms: DataFrame, termStats: DataFrame,
+      k: Int, commonDfShare: Double, minCommonDf: Long): DataFrame = {
+    val stats = termStats
+      .withColumn("__common",
+        col("__df") > greatest(col("__n") * lit(commonDfShare), lit(minCommonDf)))
+      .withColumn("__u", col("__w") * col("__vmax"))
+      .select("term", "__w", "__common", "__u")
     val wPost = vPost.join(broadcast(stats), Seq("term"))
 
     // ---- phase A: rare-term fan-out (bounded by construction) ----

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ops.Load
 
 /** Exact phrase retrieval over positional postings — the query shape
-  * the bag-of-words probes ([[TfIdfSearch]], [[Bm25]]) cannot express:
+  * the bag-of-words scorings of [[Lexical]] cannot express:
   * term ORDER and adjacency matter ("new york times" ≠ "times new
   * york"). The classical positional-index formulation, declaratively:
   * a phrase of length L with terms tᵢ at offsets i matches doc d at

@@ -32,15 +32,15 @@ class EdgeCasesSpec extends SparkSpec {
     assert(cooc.isEmpty, "no pairs exist in 0/1-token docs")
   }
 
-  test("tf-idf search with an empty query set and an empty corpus") {
-    val docs = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
-    val noQueries = graft.similarity.TfIdfSearch.topK(
-      docs, emptyDocs, "text", "doc_id", "doc_id", k = 3)
-    assert(noQueries.isEmpty)
-    val emptyCorpus = graft.similarity.TfIdfSearch.topK(
-      emptyDocs, docs, "text", "doc_id", "doc_id", k = 3)
-    assert(emptyCorpus.isEmpty)
-  }
+  for (scoring <- Seq(graft.similarity.TfIdf, graft.similarity.Bm25))
+    test(s"$scoring search with an empty query set and an empty corpus") {
+      val docs = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
+      val blank = Seq((1L, "   "), (2L, "")).toDF("doc_id", "text")
+      assert(scoring.topK(docs, emptyDocs, "text", "doc_id", "doc_id", k = 3).isEmpty)
+      assert(scoring.topK(emptyDocs, docs, "text", "doc_id", "doc_id", k = 3).isEmpty)
+      assert(scoring.topK(blank, docs, "text", "doc_id", "doc_id", k = 3).isEmpty,
+        "a whitespace-only corpus has no postings")
+    }
 
   test("snapshot diff where one side is empty") {
     val v = Seq((1L, "a")).toDF("id", "text")

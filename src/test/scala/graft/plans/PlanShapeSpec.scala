@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
 import org.apache.spark.sql.execution.joins.{CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
@@ -119,26 +118,28 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("q69: TF-IDF builds the postings index once and leaves no cached blocks") {
+  /** The executed plan runs exactly one hash shuffle keyed on the postings
+    * keys: the probe (posting values) and the per-term stats (df, vmax)
+    * read the same postings aggregate. A consumer that needs fewer of its
+    * columns gets a pruned copy AQE cannot reuse, and the corpus is
+    * tokenized, exploded and shuffled twice.
+    */
+  private def postingsShuffledOnce(q: String, keys: String*): Unit = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val df = graft.queries.SearchQueries.queries("q69_tfidf_search")(spark, sf)
-    df.collect()
-    // every two-tier branch (stats, rare probe, common completion,
-    // fallback) reads the corpus-wide tokenize → explode → combine pass
-    // through stage reuse: AT MOST one partial (term, doc_id) count on the
-    // final plan (the keys=[term] stats aggregate is not a postings build)
+    val df = graft.queries.SearchQueries.queries(q)(spark, sf)
+    df.collect() // AQE reuses exchanges only on the executed plan
     val pi = PlanInspect(df)
-    val postingsBuilds = pi.all[BaseAggregateExec].count { a =>
-      val keys = a.groupingExpressions.map(_.name)
-      a.requiredChildDistributionExpressions.isEmpty &&
-        keys.contains("term") && keys.contains("doc_id") &&
-        a.aggregateExpressions.exists(_.aggregateFunction.prettyName == "count")
-    }
-    assert(postingsBuilds <= 1,
-      s"postings index built $postingsBuilds times (expected <=1):\n${pi.root}")
+    val n = pi.hashShuffles.count(_.keys.toSet == keys.toSet)
+    assert(n == 1, s"$q shuffles its postings (${keys.mkString(",")}) $n times:\n${pi.root}")
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
-      "q69 left blocks in executor storage after materializing")
+      s"$q left blocks in executor storage after materializing")
   }
+
+  test("q69: TF-IDF builds the postings index once and leaves no cached blocks")(
+    postingsShuffledOnce("q69_tfidf_search", "term", "doc_id"))
+
+  test("q120: BM25 builds the postings index once and leaves no cached blocks")(
+    postingsShuffledOnce("q120_bm25_search", "term", "doc_id", "__dl"))
 
   test("shared subtrees shuffle once at run time: AQE reuses the exchange the plan repeats") {
     // the un-run plan repeats these subtrees (each consumer plans its own

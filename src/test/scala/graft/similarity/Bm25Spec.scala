@@ -4,8 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** BM25 semantics on hand-checkable fixtures + strategy-equality laws
-  * (q120 carries the DuckDB hash oracle at driver scale).
+/** BM25 semantics on hand-checkable fixtures (q120 carries the DuckDB
+  * hash oracle at driver scale; the strategy-equality law over both
+  * scorings is in LexicalSpec).
   */
 class Bm25Spec extends SparkSpec {
 
@@ -19,29 +20,7 @@ class Bm25Spec extends SparkSpec {
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSeq.sorted
 
-  /** A corpus with a shared common term, rare discriminative terms, and
-    * length spread — enough to exercise idf, saturation, and length
-    * normalization together.
-    */
-  private def corpus: DataFrame = docs(
-    1L -> "spark shuffle exchange partition spark spark",
-    2L -> "spark catalyst optimizer rule rewrite plan cost model join order",
-    3L -> "shuffle shuffle shuffle shuffle shuffle shuffle shuffle shuffle",
-    4L -> "partition pruning at the scan keeps io down spark",
-    5L -> "an entirely unrelated recipe for bread flour water salt yeast",
-    6L -> "catalyst expression codegen stage fusion spark plan")
-
-  test("all three strategies return identical rows") {
-    val qs = corpus.filter(col("doc_id").isin(1L, 5L))
-    val naive = Bm25.topKNaive(corpus, qs, "text", "doc_id", "doc_id", k = 3)
-    val dense = Bm25.topKDense(corpus, qs, "text", "doc_id", "doc_id", k = 3)
-    for (share <- Seq(0.01, 0.2, 0.9)) {
-      val tiered = Bm25.topKTiered(corpus, qs, "text", "doc_id", "doc_id",
-        k = 3, commonDfShare = share, minCommonDf = 1L)
-      assert(rows(tiered) === rows(naive), s"tiered(share=$share) != naive")
-    }
-    assert(rows(dense) === rows(naive))
-  }
+  private def corpus: DataFrame = LexicalSpec.lengthSpread(spark)
 
   test("length normalization: same tf, shorter doc scores higher") {
     // both docs contain the probe term once; doc 2 is 4x longer
@@ -100,7 +79,7 @@ class Bm25Spec extends SparkSpec {
     val c = corpus
     val partA = c.filter(col("doc_id") % 2 === 0)
     val partB = c.filter(col("doc_id") % 2 =!= 0)
-    val merged = Bm25.mergeIndex(Seq(
+    val merged = Lexical.mergeIndex(Seq(
       Bm25.index(partA, "text", "doc_id"),
       Bm25.index(partB, "text", "doc_id")))
     val q = docs(9L -> "spark shuffle join", 8L -> "partition cost")

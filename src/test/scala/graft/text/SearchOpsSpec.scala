@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.SparkSpec
-import graft.similarity.TfIdfSearch
+import graft.similarity.{LexicalSpec, TfIdf}
 import org.apache.spark.sql.functions._
 
 /** Planted-fixture specs for the span-dedup / quality-rules / tf-idf
@@ -84,7 +84,7 @@ class SearchOpsSpec extends SparkSpec {
     assert(!f(5L).getAs[Boolean]("flag_stopwords"))
   }
 
-  // ---- TfIdfSearch ----
+  // ---- TF-IDF (LexicalSpec runs the strategy-equality law over both scorings) ----
 
   test("tf-idf ranks rare-term matches above common-term matches") {
     val corpus = docs(
@@ -93,7 +93,7 @@ class SearchOpsSpec extends SparkSpec {
       3L -> "plain filler words and then some more filler",
       4L -> "another document of plain common text entirely")
     val queries = docs(10L -> "zyzzyva filler")
-    val top = TfIdfSearch.topK(corpus, queries, "text", "doc_id", "doc_id", k = 2)
+    val top = TfIdf.topK(corpus, queries, "text", "doc_id", "doc_id", k = 2)
       .orderBy(desc("score")).collect()
     assert(top.map(_.getLong(1)).head === 1L) // the zyzzyva doc wins
     assert(top.length === 2)
@@ -104,38 +104,27 @@ class SearchOpsSpec extends SparkSpec {
       1L -> "alpha beta gamma delta epsilon",
       2L -> "beta gamma something else here",
       3L -> "totally unrelated content lives here")
-    val top = TfIdfSearch.topK(d, d.filter(col("doc_id") === 1),
+    val top = TfIdf.topK(d, d.filter(col("doc_id") === 1),
       "text", "doc_id", "doc_id", k = 3).orderBy(desc("score")).collect()
     assert(top.head.getLong(1) === 1L)
   }
 
   test("two-tier topK equals the one-tier reference at every df share") {
-    // corpus with genuinely common terms ("the"/"and" in nearly every
-    // doc) plus rare discriminative terms; queries drawn from the corpus
-    // so some are bound-safe and some (the all-common doc 8) must fall
-    // back. Shares sweep the knob across regimes: 0.0 → everything
-    // common (pure fallback), 1.0 → nothing common (pure phase A).
-    val corpus = docs(
-      1L -> "the quick zyzzyva and the lazy aardwolf ran off the cliff",
-      2L -> "the common words and the usual filler run on and on here",
-      3L -> "the zyzzyva appeared again and the observer noted the time",
-      4L -> "and the weather stayed calm the entire quiet evening there",
-      5L -> "quantum chromodynamics and the lattice the gauge the field",
-      6L -> "the aardwolf and the aardvark share the letter the prefix",
-      7L -> "the gauge field and the lattice spacing govern the theory",
-      8L -> "the and the and the and the and the and",
-      9L -> "observer effects and the measurement the problem the core",
-      10L -> "prefix trees and the suffix arrays the index the text")
+    // queries drawn from the common-term corpus so some are bound-safe
+    // and some (the all-common doc 8) must fall back. Shares sweep the
+    // knob across regimes: 0.0 → everything common (pure fallback),
+    // 1.0 → nothing common (pure phase A).
+    val corpus = LexicalSpec.commonTerms(spark)
     val queries = corpus.filter(col("doc_id") % 3 === 1) // 1,4,7,10
-    val naive = TfIdfSearch.topKNaive(corpus, queries, "text", "doc_id", "doc_id", k = 3)
+    val naive = TfIdf.topKNaive(corpus, queries, "text", "doc_id", "doc_id", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
     for (share <- Seq(0.0, 0.05, 0.3, 0.7, 1.0)) {
-      val tiered = TfIdfSearch.topKTiered(corpus, queries, "text", "doc_id", "doc_id",
+      val tiered = TfIdf.topKTiered(corpus, queries, "text", "doc_id", "doc_id",
           k = 3, commonDfShare = share, minCommonDf = 0L)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
       assert(tiered === naive, s"two-tier diverged from reference at share=$share")
     }
-    val dense = TfIdfSearch.topKDense(corpus, queries, "text", "doc_id", "doc_id", k = 3)
+    val dense = TfIdf.topKDense(corpus, queries, "text", "doc_id", "doc_id", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
     assert(dense === naive, "dense tier diverged from reference")
   }
@@ -148,7 +137,7 @@ class SearchOpsSpec extends SparkSpec {
       2L -> "apple dates elderberry",
       3L -> "fig grape honeydew")
     val queries = docs(7L -> "apple banana")
-    val out = TfIdfSearch.topKDense(corpus, queries, "text", "doc_id", "doc_id", k = 3)
+    val out = TfIdf.topKDense(corpus, queries, "text", "doc_id", "doc_id", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(out === Array((7L, 1L), (7L, 2L)))
   }
@@ -163,9 +152,9 @@ class SearchOpsSpec extends SparkSpec {
       4L -> "the and of rare4 words",
       5L -> "the and of here now")
     val queries = docs(99L -> "the and of")
-    val naive = TfIdfSearch.topKNaive(corpus, queries, "text", "doc_id", "doc_id", k = 2)
+    val naive = TfIdf.topKNaive(corpus, queries, "text", "doc_id", "doc_id", k = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    val tiered = TfIdfSearch.topKTiered(corpus, queries, "text", "doc_id", "doc_id",
+    val tiered = TfIdf.topKTiered(corpus, queries, "text", "doc_id", "doc_id",
         k = 2, commonDfShare = 0.2, minCommonDf = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
     assert(tiered === naive)
@@ -175,7 +164,7 @@ class SearchOpsSpec extends SparkSpec {
     // one shared term, tf=2 in the corpus doc: score = 2 * floor((N-df+.5)/(df+.5)*2^20)
     val corpus = docs(1L -> "term term", 2L -> "other stuff", 3L -> "more things")
     val queries = docs(9L -> "term")
-    val score = TfIdfSearch.topK(corpus, queries, "text", "doc_id", "doc_id", k = 1)
+    val score = TfIdf.topK(corpus, queries, "text", "doc_id", "doc_id", k = 1)
       .collect().head.getLong(2)
     val w = math.floor((3 - 1 + 0.5) / (1 + 0.5) * (1L << 20).toDouble).toLong
     assert(score === 2L * w)
