@@ -1,22 +1,30 @@
 package graft
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit, sum}
 
 /** Benchmark main. Two modes:
   *
-  *   - SHARDED (default for > trancheSize queries): the parent process
-  *     creates NO SparkSession — it splits the sorted query list into
-  *     tranches of ≤ SPARK_GRAFT_TRANCHE_SIZE (default 50), runs each
-  *     tranche in its own child JVM (same flags, sequential), merges
-  *     the per-tranche JSON files, and emits the usual artifact. One
+  *   - SHARDED (default for > SPARK_GRAFT_TRANCHE_SIZE queries): the
+  *     parent process creates NO SparkSession — it runs the sorted query
+  *     list through [[Local.runTranches]] (tranches of ≤
+  *     SPARK_GRAFT_TRANCHE_SIZE, default 50, each in its own child JVM
+  *     with the same flags, sequential), merges the per-tranche JSON
+  *     files, and emits the usual artifact. One
   *     JVM running 200+ whole-stage-codegen'd queries saturates even a
   *     1 GB reserved code cache mid-run and the sweeper deoptimizes
   *     hot methods — round-8's artifact showed 16 queries timing
   *     SLOWER at sf0.1 in the full run than at sf1 in isolation, a
   *     2.3× phantom regression. Per-tranche JVMs keep every query's
   *     steady-state JIT within cache budget, so the artifact is
-  *     comparable round-over-round.
-  *   - INLINE (child mode, small SPARK_GRAFT_BENCH_ONLY subsets, or
+  *     comparable round-over-round. A dead child or a truncated tranche
+  *     file reads as failed rows, and the merged record is rewritten
+  *     after every tranche.
+  *   - INLINE (tranche child, small SPARK_GRAFT_BENCH_ONLY subsets, or
   *     SPARK_GRAFT_TRANCHE_SIZE=0): the single-JVM timed loop.
   *
   * Each query is timed [[Samples]] times in interleaved passes. The
@@ -31,8 +39,10 @@ object Bench {
   val Samples = 3
 
   def main(args: Array[String]): Unit = {
+    // a tranche child gets its subset as its one argument
     val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSet)
+      (if (Local.trancheIndex.isDefined) args.headOption
+       else sys.env.get("SPARK_GRAFT_BENCH_ONLY")).map(_.split(',').toSet)
     // SKIP complements ONLY for full-lineup runs that must drop a few
     // deliberately-expensive rows (the sf1 artifact excludes the
     // payload-ER pair: q242 is comparison-heavy BY DESIGN and owns a
@@ -43,12 +53,7 @@ object Bench {
     // bench lineup = oracled queries + the sketch-tier scale-path rows
     val names = (SparkEntry.queries.keys ++ SparkEntry.benchOnly.keys).toSeq
       .filter(n => only.forall(_.contains(n)) && !skip.contains(n)).sorted
-    val trancheSize = sys.env.getOrElse("SPARK_GRAFT_TRANCHE_SIZE", "50").toInt
-    val isChild = sys.env.contains("SPARK_GRAFT_BENCH_TRANCHE")
-    if (isChild || trancheSize <= 0 || names.size <= trancheSize)
-      runInline(names)
-    else
-      runSharded(names, trancheSize)
+    if (Local.sharded(names)) runSharded(names) else runInline(names)
   }
 
   // ---------------------------------------------------------- per-query row
@@ -95,29 +100,58 @@ object Bench {
 
   // ---------------------------------------------------------------- sharded
 
-  /** Current process RSS in MB from /proc/self/status (Linux only; -1 if
-    * unreadable). Used by the tranche canary so a dead run says what died. */
-  private def rssMb(pid: Long = -1): Long = {
-    val path = if (pid < 0) "/proc/self/status" else s"/proc/$pid/status"
-    try {
-      val src = scala.io.Source.fromFile(path)
-      try src.getLines().collectFirst {
-        case l if l.startsWith("VmRSS:") =>
-          l.split("\\s+")(1).toLong / 1024
-      }.getOrElse(-1L)
-      finally src.close()
-    } catch { case scala.util.control.NonFatal(_) => -1L }
-  }
-
   /** One tranche's child run: its record for the artifact's `tranches`
     * array plus the per-query rows it produced. */
-  private final case class TrancheRun(i: Int, qs: Seq[String], wall: Double,
-      exit: Int, peakRss: Long, rows: Seq[Timing],
-      outputRows: Map[String, Long], outputBytes: Map[String, Long]) {
+  private[graft] final case class TrancheRun(t: Local.Tranche,
+      rows: Seq[Timing], outputRows: Map[String, Long],
+      outputBytes: Map[String, Long]) {
     def json: String =
-      s"""{"i":$i,"n":${qs.size},"first":"${qs.head}",""" +
-        s""""last":"${qs.last}","wall_sec":${ms(wall)},""" +
-        s""""exit":$exit,"child_peak_rss_mb":$peakRss}"""
+      s"""{"i":${t.i},"n":${t.names.size},"first":"${t.names.head}",""" +
+        s""""last":"${t.names.last}","wall_sec":${ms(t.wall)},""" +
+        s""""exit":${t.exit},"child_peak_rss_mb":${t.peakRssMb}}"""
+  }
+
+  /** A finished tranche's rows from the JSON file its child wrote. A dead
+    * child, a missing file or an unparseable one degrades the tranche to
+    * all-failed rows, never aborts the merged run. */
+  private[graft] def readTranche(t: Local.Tranche, file: Path): TrancheRun = {
+    def dead = TrancheRun(t, t.names.map(Timing(_, 0.0, 0.0, 0.0, ok = false)),
+      Map.empty, Map.empty)
+    if (t.exit != 0 || !Files.exists(file)) {
+      // a dead tranche must surface as FAILURES, never vanish
+      System.err.println(s"[bench] tranche ${t.i} exited ${t.exit} without output")
+      dead
+    } else {
+      // a child killed mid-write leaves a truncated file that EXISTS —
+      // a parse failure must degrade this tranche to failures, exactly
+      // like the missing-file path, never abort the merged run
+      try {
+        val node = new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(Files.readAllBytes(file))
+        def fields(key: String) = Option(node.get(key))
+          .map(_.fields().asScala.map(e => e.getKey -> e.getValue).toMap)
+          .getOrElse(Map.empty[String, com.fasterxml.jackson.databind.JsonNode])
+        val medians = fields("queries")
+        val spread = fields("spread")
+        val failed = node.get("failed").elements().asScala
+          .map(_.asText()).toSet
+        val rows = t.names.map { n =>
+          (medians.get(n), spread.get(n)) match {
+            case (Some(m), Some(b)) => Timing(n, m.asDouble(),
+              b.get(0).asDouble(), b.get(1).asDouble(), !failed(n))
+            case _ => Timing(n, 0.0, 0.0, 0.0, ok = false)
+          }
+        }
+        TrancheRun(t, rows,
+          fields("output_rows").map { case (k, v) => k -> v.asLong() },
+          fields("output_bytes").map { case (k, v) => k -> v.asLong() })
+      } catch {
+        case NonFatal(e) =>
+          System.err.println(
+            s"[bench] tranche ${t.i} output unparseable ($e) — marking failed")
+          dead
+      }
+    }
   }
 
   /** `BENCH_LOCAL.json` → `BENCH_LOCAL.32c.json`: the per-run sibling of a
@@ -128,17 +162,8 @@ object Bench {
       path.stripSuffix(".json") + s".${cpus}c.json"
     else path + s".${cpus}c.json"
 
-  private def runSharded(names: Seq[String], trancheSize: Int): Unit = {
-    import scala.jdk.CollectionConverters._
+  private def runSharded(names: Seq[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val grouped = names.grouped(trancheSize).toSeq
-    // A trailing tranche this small pays a whole child-JVM start and
-    // warmup for sub-second work: fold it into the previous tranche.
-    val minTranche = 5
-    val tranches =
-      if (grouped.size >= 2 && grouped.last.size < minTranche)
-        grouped.dropRight(2) :+ (grouped(grouped.size - 2) ++ grouped.last)
-      else grouped
     // The child inherits this JVM's flags and ADDS the heap pre-commit
     // flags the slimmed parent deliberately lacks (round-9 verdict: the
     // do-nothing orchestrator was booting with -Xms8g -XX:+AlwaysPreTouch,
@@ -151,95 +176,13 @@ object Bench {
         .getOrElse("8g")
       Seq(s"-Xms$xmx", "-XX:+AlwaysPreTouch").filterNot(base.contains)
     }
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-
-    /** One child-JVM run of a tranche; a dead or unparseable child
-      * degrades to all-failed rows, never aborts the merged run. */
-    def runChild(i: Int, qs: Seq[String],
-        outFile: java.nio.file.Path): TrancheRun = {
-      val pb = Local.child("graft.Bench", Nil, Map(
-        "SPARK_GRAFT_BENCH_TRANCHE" -> i.toString,
-        "SPARK_GRAFT_BENCH_ONLY" -> qs.mkString(","),
-        "SPARK_GRAFT_BENCH_OUT" -> outFile.toString), heapFlags)
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      System.err.println(
-        s"[bench] tranche $i/${tranches.size}: " +
-          s"${qs.size} queries (${qs.head}..${qs.last})")
-      val rssBefore = rssMb()
-      val t0 = System.nanoTime()
-      val proc = pb.start()
-      // drain child stdout onto OUR stderr: the parent's final merged
-      // lines must be the only JSON on stdout (driver tail-parses it)
-      val pump = new Thread(() => {
-        val in = proc.getInputStream
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { System.err.write(buf, 0, n); n = in.read(buf) }
-      })
-      pump.setDaemon(true); pump.start()
-      // canary: sample the child's RSS once a second so a SIGKILLed run
-      // records how big the child actually got before it died
-      val childPeakRss = new java.util.concurrent.atomic.AtomicLong(-1)
-      val sampler = new Thread(() => {
-        var live = true
-        while (live && proc.isAlive) {
-          val r = rssMb(proc.pid())
-          if (r > childPeakRss.get()) childPeakRss.set(r)
-          try Thread.sleep(1000)
-          catch { case _: InterruptedException => live = false }
-        }
-      })
-      sampler.setDaemon(true); sampler.start()
-      val code = proc.waitFor()
-      pump.join(2000); sampler.interrupt()
-      val wall = (System.nanoTime() - t0) / 1e9
-      System.err.println(
-        s"[bench] tranche $i done: exit=$code " +
-          s"wall=${ms(wall)}s parent_rss_mb=$rssBefore->${rssMb()} " +
-          s"child_peak_rss_mb=${childPeakRss.get()}")
-      def dead = TrancheRun(i, qs, wall, code, childPeakRss.get(),
-        qs.map(Timing(_, 0.0, 0.0, 0.0, ok = false)), Map.empty, Map.empty)
-      if (code != 0 || !java.nio.file.Files.exists(outFile)) {
-        // a dead tranche must surface as FAILURES, never vanish
-        System.err.println(s"[bench] tranche $i exited $code without output")
-        dead
-      } else {
-        // a child killed mid-write leaves a truncated file that EXISTS —
-        // a parse failure must degrade this tranche to failures, exactly
-        // like the missing-file path, never abort the merged run
-        try {
-          val node = om.readTree(java.nio.file.Files.readAllBytes(outFile))
-          def fields(key: String) = Option(node.get(key))
-            .map(_.fields().asScala.map(e => e.getKey -> e.getValue).toMap)
-            .getOrElse(Map.empty[String, com.fasterxml.jackson.databind.JsonNode])
-          val medians = fields("queries")
-          val spread = fields("spread")
-          val failed = node.get("failed").elements().asScala
-            .map(_.asText()).toSet
-          val rows = qs.map { n =>
-            (medians.get(n), spread.get(n)) match {
-              case (Some(m), Some(b)) => Timing(n, m.asDouble(),
-                b.get(0).asDouble(), b.get(1).asDouble(), !failed(n))
-              case _ => Timing(n, 0.0, 0.0, 0.0, ok = false)
-            }
-          }
-          TrancheRun(i, qs, wall, code, childPeakRss.get(), rows,
-            fields("output_rows").map { case (k, v) => k -> v.asLong() },
-            fields("output_bytes").map { case (k, v) => k -> v.asLong() })
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(
-              s"[bench] tranche $i output unparseable ($e) — marking failed")
-            dead
-        }
-      }
-    }
-
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bench-")
+    val tmp = Files.createTempDirectory("graft-bench-")
+    def out(i: Int) = tmp.resolve(s"tranche_$i.json")
     try {
       val done = scala.collection.mutable.ArrayBuffer[TrancheRun]()
-      tranches.zipWithIndex.foreach { case (qs, i) =>
-        done += runChild(i, qs, tmp.resolve(s"tranche_$i.json"))
+      Local.runTranches("graft.Bench", Nil, names, Local.trancheSize, heapFlags,
+          i => Map("SPARK_GRAFT_BENCH_OUT" -> out(i).toString)) { t =>
+        done += readTranche(t, out(t.i))
         // Crash-proofing (the round-9 deliverable failure): rewrite the
         // merged partial artifact to the durable out-path and print a short
         // self-contained partial-total line after EVERY tranche, so a
@@ -247,14 +190,13 @@ object Bench {
         // parseable file on disk and a parseable last line on stdout. The
         // last tranche's emit is the final record.
         emit(done.toSeq.flatMap(_.rows), sfDir, Some(done.toSeq.map(_.json)),
-          partial = if (i + 1 < tranches.size)
-            Some((i + 1, tranches.size)) else None,
+          partial = if (t.i + 1 < t.count) Some((t.i + 1, t.count)) else None,
           outputRows = done.toSeq.flatMap(_.outputRows).toMap,
           outputBytes = done.toSeq.flatMap(_.outputBytes).toMap)
       }
     } finally {
       Option(tmp.toFile.listFiles()).foreach(_.foreach(_.delete()))
-      java.nio.file.Files.deleteIfExists(tmp)
+      Files.deleteIfExists(tmp)
     }
   }
 
@@ -285,8 +227,7 @@ object Bench {
     // mode only tranche 0 needs the touch — re-reading every table in all
     // five child JVMs was pure fixed overhead against a possible driver
     // wall-clock kill (round-9 verdict 1c).
-    val trancheIdx = sys.env.get("SPARK_GRAFT_BENCH_TRANCHE")
-    if (trancheIdx.forall(_ == "0"))
+    if (Local.trancheIndex.forall(_ == 0))
       Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings").foreach { t =>
         try ops.Load.table(spark, sfDir, t).write
@@ -373,7 +314,7 @@ object Bench {
         try o.get.get(key).collect {
           case v: Number => v.longValue()
         }
-        catch { case scala.util.control.NonFatal(_) => None })
+        catch { case NonFatal(_) => None })
     // intra-query persists are part of the measured time; dropping them
     // AFTER the clock keeps queries independent (no cross-query memory
     // pressure / eviction noise)
@@ -441,7 +382,7 @@ object Bench {
       if (subset) "BENCH_SUBSET.json" else "BENCH_LOCAL.json")
     // Full-lineup runs also write a record per core count (round-13
     // verdict #2): the 8-core re-run used to overwrite the 32-core record.
-    val tagged = !subset && !sys.env.contains("SPARK_GRAFT_BENCH_TRANCHE")
+    val tagged = !subset && Local.trancheIndex.isEmpty
     val record = if (tagged) cpuTagged(outStr, cpus) else outStr
     // The driver's tail capture keeps only the last ~2 KB of stdout; a
     // 200-query detail line is bigger than that, so its head (with
@@ -456,12 +397,12 @@ object Bench {
     // primary stdout metric line prints.
     try {
       val bytes = jsonFull.getBytes("UTF-8")
-      java.nio.file.Files.write(java.nio.file.Paths.get(outStr), bytes)
-      if (tagged) java.nio.file.Files.write(java.nio.file.Paths.get(record), bytes)
+      Files.write(java.nio.file.Paths.get(outStr), bytes)
+      if (tagged) Files.write(java.nio.file.Paths.get(record), bytes)
     } catch {
       // NonFatal only: an OOM/VM error must kill the run, not be masked
       // by a clean-looking metric line
-      case scala.util.control.NonFatal(e) =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] durable write failed: $e")
     }
     System.out.flush()

@@ -107,6 +107,14 @@ object Datasets {
     */
   private val SheetCol = "__sheet"
 
+  /** fix_values (datasets.py:130-137): keep rows with a chart title,
+    * strip '%' from `value`, and drop rows whose value is then empty.
+    */
+  def fixValues(df: DataFrame): DataFrame = df
+    .filter(col("chart_title").isNotNull && col("chart_title") =!= "")
+    .withColumn("value", regexp_replace(col("value"), "%", ""))
+    .filter(col("value").isNotNull && col("value") =!= "")
+
   /** Full pipeline. `sheets` = transposed sheet tables in source order. */
   def run(
       spark: SparkSession,
@@ -171,12 +179,8 @@ object Datasets {
           array_sort(RowOps.expandYearList(col("extrapulation_years"))),
           y => y.cast(StringType))))
 
-    // 6. fix_values: need chart_title; strip %; drop empty values
-    //    (datasets.py:130-137)
-    val fixed = withEy
-      .filter(col("chart_title").isNotNull && col("chart_title") =!= "")
-      .withColumn("value", regexp_replace(col("value"), "%", ""))
-      .filter(col("value").isNotNull && col("value") =!= "")
+    // 6. fix_values (datasets.py:130-137)
+    val fixed = fixValues(withEy)
 
     // 7. value → decimal with groupChar (datasets.py:345), units assert +
     //    percent rescale (datasets.py:140-147)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.core.{Flow, Resource}
 import graft.ops.{Checkpoint, Load}
+import graft.pipelines.Datasets
 import graft.sinks.{DocumentSink, DumpToPath}
 import graft.sources.LoadDatapackage
 
@@ -81,8 +82,7 @@ object SinkQueries {
   /** K1+K9+P8 — dump/checkpoint round-trip (reference: datasets.py:465
     * dump_to_path, datasets.py:130-137 fix_values scrub, broken_links.py
     * :86-98 checkpoint resume): build a datasets-shaped resource from
-    * `part`, apply the P8 value scrub (strip '%', drop rows without a
-    * chart title), dump it as CSV + datapackage.json, load the package
+    * `part`, apply the P8 value scrub (`Datasets.fixValues`), dump it as CSV + datapackage.json, load the package
     * BACK through the descriptor (explicit Table Schema, no re-inference),
     * checkpoint the reloaded frame to parquet, and read the checkpoint.
     * Complex cells (the `tags` array) round-trip through the K1 JSON-in-
@@ -97,12 +97,8 @@ object SinkQueries {
         .otherwise(format_string("Chart %d", col("p_partkey"))).as("chart_title"),
       format_string("%d%%", col("p_partkey") % 200).as("value"),
       array(lit("a"), col("p_brand")).as("tags"))
-    // P8 fix_values (datasets.py:130-137): % strip + drop no-title rows
-    val scrubbed = raw
-      .filter(col("chart_title").isNotNull && col("chart_title") =!= "")
-      .withColumn("value", regexp_replace(col("value"), "%", ""))
-    val ctx = Flow.run(spark)(
-      Flow.resource(Resource(scrubbed, "charts", primaryKey = Seq("row_id"))))
+    val ctx = Flow.run(spark)(Flow.resource(
+      Resource(Datasets.fixValues(raw), "charts", primaryKey = Seq("row_id"))))
     DumpToPath.dump(ctx, out)                               // K1
     val reloaded = LoadDatapackage.load(spark, out)("charts") // S1 descriptor
     require(reloaded.primaryKey == Seq("row_id"),

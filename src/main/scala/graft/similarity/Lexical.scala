@@ -114,17 +114,22 @@ sealed abstract class Lexical {
     // surviving postings, so stats stay full-corpus exact — but tot
     // (inside scalars) counts the UNPRUNED postings
     val pruned = postings.join(broadcast(qTerms.select("term").distinct()), Seq("term"))
-    val vPost = (if (docLength) pruned.crossJoin(broadcast(scalars)) else pruned)
-      .select(col("term"), col("doc_id"), value.as("v"))
+    // when v reads the scalars, __n rides the valued postings into the
+    // stats: read alone, it would come from a copy of the (n, tot) scalars
+    // whose sum(tf) column pruning empties, and Catalyst would tokenize
+    // and explode the corpus again under that empty aggregate
+    val n = if (docLength) Seq(col("__n")) else Nil
+    val valued = (if (docLength) pruned.crossJoin(broadcast(scalars)) else pruned)
+      .select(Seq(col("term"), col("doc_id"), value.as("v")) ++ n: _*)
     // every v is >= 0, so count_if(v >= 0) is df; unlike count(1) (or
     // count(v), which the optimizer rewrites to it) it reads v, so the
     // stats read the same postings aggregate as the probe and AQE replays
     // ONE postings shuffle for both instead of a tf-free copy
-    val stats = vPost.groupBy("term")
-      .agg(count_if(col("v") >= 0).as("__df"), max("v").as("__vmax"))
-      .crossJoin(broadcast(scalars.select("__n")))
+    val perTerm = valued.groupBy("term").agg(count_if(col("v") >= 0).as("__df"),
+      max("v").as("__vmax") +: n.map(max(_).as("__n")): _*)
+    val stats = (if (docLength) perTerm else perTerm.crossJoin(broadcast(scalars)))
       .withColumn("__w", idfW(col("__n"), col("__df")))
-    (vPost, qTerms, stats)
+    (valued.select("term", "doc_id", "v"), qTerms, stats)
   }
 
   private def prep(corpus: DataFrame, queries: DataFrame, textCol: String,

@@ -2,6 +2,9 @@ package graft.sinks
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
@@ -27,27 +30,26 @@ object DumpToPath {
     case _                                => "any"
   }
 
-  private def fieldJson(f: StructField): String = {
-    val extras = if (f.metadata == Metadata.empty) "" else {
-      val m = f.metadata.json
-      if (m == "{}") "" else "," + m.stripPrefix("{").stripSuffix("}")
-    }
-    s"""{"name":${quote(f.name)},"type":"${frictionlessType(f.dataType)}"$extras}"""
+  private val Json = new ObjectMapper()
+
+  private def fieldJson(f: StructField): ObjectNode = {
+    // es:* annotations ride as extra keys after name and type
+    Json.createObjectNode().put("name", f.name).put("type", frictionlessType(f.dataType))
+      .setAll[ObjectNode](Json.readTree(f.metadata.json).asInstanceOf[ObjectNode])
   }
 
-  private def quote(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-
-  def resourceDescriptor(r: Resource): String = {
-    val fields = r.df.schema.fields.map(fieldJson).mkString("[", ",", "]")
-    val pk =
-      if (r.primaryKey.isEmpty) ""
-      else s""","primaryKey":${r.primaryKey.map(quote).mkString("[", ",", "]")}"""
-    s"""{"name":${quote(r.name)},"path":${quote(r.path.getOrElse(r.name + ".csv"))},""" +
-      s""""profile":"tabular-data-resource","schema":{"fields":$fields$pk}}"""
+  private def resourceDescriptor(r: Resource): ObjectNode = {
+    val node = Json.createObjectNode().put("name", r.name)
+      .put("path", r.path.getOrElse(r.name + ".csv"))
+      .put("profile", "tabular-data-resource")
+    val schema = node.putObject("schema")
+    val fields = schema.putArray("fields")
+    r.df.schema.fields.foreach(f => fields.add(fieldJson(f)))
+    if (r.primaryKey.nonEmpty) {
+      val pk = schema.putArray("primaryKey")
+      r.primaryKey.foreach(k => pk.add(k))
+    }
+    node
   }
 
   /** Write the whole package: one CSV directory per resource + a combined
@@ -60,10 +62,11 @@ object DumpToPath {
         .option("header", true)
         .csv(s"$outDir/${r.name}")
     }
-    val resources = ctx.values.map(resourceDescriptor).mkString("[", ",", "]")
-    val dp = s"""{"name":${quote(packageName)},"resources":$resources}"""
+    val dp = Json.createObjectNode().put("name", packageName)
+    val resources = dp.putArray("resources")
+    ctx.values.foreach(r => resources.add(resourceDescriptor(r)))
     Files.write(Paths.get(s"$outDir/datapackage.json"),
-      dp.getBytes("UTF-8"),
+      Json.writeValueAsBytes(dp),
       StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
       StandardOpenOption.WRITE)
   }

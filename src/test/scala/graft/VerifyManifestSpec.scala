@@ -2,37 +2,40 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The verify manifest's crash-safety contract: flat-JSON round-trip
-  * through the same escaper the writer uses, merge semantics (children
-  * extend, later statuses win), and corrupt-input degradation to empty
-  * rather than an abort — the partial artifact must survive anything.
+/** The verify manifest's crash-safety contract: the Jackson-backed reader
+  * round-trips what the writer escapes, merge semantics (children extend,
+  * later statuses win), and corrupt-input degradation to empty rather than
+  * an abort — the partial artifact must survive anything.
   */
 class VerifyManifestSpec extends AnyFunSuite {
 
-  test("parseFlatJson round-trips escaped keys and values") {
-    val s = """{"q1_agg": "ok", "weird\nname\t\"x\"": "error", "u": ""}"""
-    val m = Verify.parseFlatJson(s)
+  test("parseManifest round-trips escaped keys and values") {
+    val s = """{"q1_agg": "ok", "weird\nname\t\"x\"": "error", "u": ""}"""
+    val m = Verify.parseManifest(s)
     assert(m("q1_agg") == "ok")
     assert(m("weird\nname\t\"x\"") == "error")
-    assert(m("u") == "")
+    assert(m("u") == "")
+    // and through the writer: control characters and quotes in a key
+    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-spec").toString
+    val odd = "tab\there \"q\" \u0001 back\\slash"
+    Verify.mergeManifest(dir, Seq(odd -> "ok"))
+    assert(Verify.parseManifest(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$dir/manifest.json"))) == Map(odd -> "ok"))
   }
 
-  test("parseFlatJson degrades to empty on garbage, never throws") {
-    assert(Verify.parseFlatJson("") == Map.empty)
-    assert(Verify.parseFlatJson("{\"truncated\": \"o") == Map.empty)
-    assert(Verify.parseFlatJson("not json at all") == Map.empty)
+  test("parseManifest degrades to empty on garbage, never throws") {
+    assert(Verify.parseManifest("") == Map.empty)
+    assert(Verify.parseManifest("{\"truncated\": \"o") == Map.empty)
+    assert(Verify.parseManifest("not json at all") == Map.empty)
+    // a value that is not a status string
+    assert(Verify.parseManifest("{\"k\": 12}") == Map.empty)
   }
 
-  test("parseFlatJson bails on a missing colon instead of looping forever") {
-    // round-11 advice: indexOf(':', afterK) == -1 made indexOf('"', -1)
-    // rescan from 0 and the loop stopped advancing — a hang, not a parse
-    // failure. Must return empty promptly.
-    val t = new Thread(() => assert(Verify.parseFlatJson("{\"k\" \"v\"}") == Map.empty))
+  test("parseManifest returns promptly on colon-less input") {
+    // the flat-JSON parser this reader replaced once looped forever here
+    val t = new Thread(() => assert(Verify.parseManifest("{\"k\" \"v\"}") == Map.empty))
     t.setDaemon(true); t.start(); t.join(5000)
-    assert(!t.isAlive, "parseFlatJson hung on colon-less input")
-    // colon present but BEFORE the key's end was already impossible via
-    // the writer; still, a colon with no following quote must degrade too
-    assert(Verify.parseFlatJson("{\"k\": 12}") == Map.empty)
+    assert(!t.isAlive, "parseManifest hung on colon-less input")
   }
 
   test("manifest merge: children extend, later statuses win") {
@@ -42,7 +45,7 @@ class VerifyManifestSpec extends AnyFunSuite {
     Verify.mergeManifest(dir, Seq("qa" -> "ok", "qb" -> "ok"))
     Verify.mergeManifest(dir, Seq("qc" -> "died"))
     Verify.mergeManifest(dir, Seq("qc" -> "ok")) // rerun: status replaced
-    val m = Verify.parseFlatJson(java.nio.file.Files.readString(
+    val m = Verify.parseManifest(java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$dir/manifest.json")))
     assert(m == Map("qa" -> "ok", "qb" -> "ok", "qc" -> "ok"))
   }

@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.sql.execution.GenerateExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
 import org.apache.spark.sql.execution.joins.{CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
@@ -119,10 +120,10 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   /** The executed plan runs exactly one hash shuffle keyed on the postings
-    * keys: the probe (posting values) and the per-term stats (df, vmax)
-    * read the same postings aggregate. A consumer that needs fewer of its
-    * columns gets a pruned copy AQE cannot reuse, and the corpus is
-    * tokenized, exploded and shuffled twice.
+    * keys and explodes the corpus once: the probe (posting values) and the
+    * per-term stats (df, vmax, N) read the same postings aggregate. A
+    * consumer that needs fewer of its columns gets a pruned copy AQE
+    * cannot reuse, and the corpus is tokenized and exploded again.
     */
   private def postingsShuffledOnce(q: String, keys: String*): Unit = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
@@ -131,6 +132,9 @@ class PlanShapeSpec extends SparkSpec {
     val pi = PlanInspect(df)
     val n = pi.hashShuffles.count(_.keys.toSet == keys.toSet)
     assert(n == 1, s"$q shuffles its postings (${keys.mkString(",")}) $n times:\n${pi.root}")
+    // the corpus-side explode is the one over the tokenized `__ws` column
+    val explodes = pi.all[GenerateExec].count(_.generator.references.map(_.name).toSet == Set("__ws"))
+    assert(explodes == 1, s"$q tokenizes and explodes its corpus $explodes times:\n${pi.root}")
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
       s"$q left blocks in executor storage after materializing")
   }
