@@ -1,5 +1,5 @@
 package graft
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
@@ -176,27 +176,22 @@ object Bench {
         .getOrElse("8g")
       Seq(s"-Xms$xmx", "-XX:+AlwaysPreTouch").filterNot(base.contains)
     }
-    val tmp = Files.createTempDirectory("graft-bench-")
+    val tmp = Files.createDirectories(Paths.get(ScratchDirs.fresh(sfDir, "bench")))
     def out(i: Int) = tmp.resolve(s"tranche_$i.json")
-    try {
-      val done = scala.collection.mutable.ArrayBuffer[TrancheRun]()
-      Local.runTranches("graft.Bench", Nil, names, Local.trancheSize, heapFlags,
-          i => Map("SPARK_GRAFT_BENCH_OUT" -> out(i).toString)) { t =>
-        done += readTranche(t, out(t.i))
-        // Crash-proofing (the round-9 deliverable failure): rewrite the
-        // merged partial artifact to the durable out-path and print a short
-        // self-contained partial-total line after EVERY tranche, so a
-        // SIGKILL at any point — including of this parent — leaves both a
-        // parseable file on disk and a parseable last line on stdout. The
-        // last tranche's emit is the final record.
-        emit(done.toSeq.flatMap(_.rows), sfDir, Some(done.toSeq.map(_.json)),
-          partial = if (t.i + 1 < t.count) Some((t.i + 1, t.count)) else None,
-          outputRows = done.toSeq.flatMap(_.outputRows).toMap,
-          outputBytes = done.toSeq.flatMap(_.outputBytes).toMap)
-      }
-    } finally {
-      Option(tmp.toFile.listFiles()).foreach(_.foreach(_.delete()))
-      Files.deleteIfExists(tmp)
+    val done = scala.collection.mutable.ArrayBuffer[TrancheRun]()
+    Local.runTranches("graft.Bench", Nil, names, Local.trancheSize, heapFlags,
+        i => Map("SPARK_GRAFT_BENCH_OUT" -> out(i).toString)) { t =>
+      done += readTranche(t, out(t.i))
+      // Crash-proofing (the round-9 deliverable failure): rewrite the
+      // merged partial artifact to the durable out-path and print a short
+      // self-contained partial-total line after EVERY tranche, so a
+      // SIGKILL at any point — including of this parent — leaves both a
+      // parseable file on disk and a parseable last line on stdout. The
+      // last tranche's emit is the final record.
+      emit(done.toSeq.flatMap(_.rows), sfDir, Some(done.toSeq.map(_.json)),
+        partial = if (t.i + 1 < t.count) Some((t.i + 1, t.count)) else None,
+        outputRows = done.toSeq.flatMap(_.outputRows).toMap,
+        outputBytes = done.toSeq.flatMap(_.outputBytes).toMap)
     }
   }
 

@@ -7,14 +7,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Flow FROM it; judges.py:132-148 chains four incremental checkpoints).
   *
   * Materialize a DataFrame to parquet under the checkpoint root and read
-  * it back — later flows (or later runs) resume from the materialized
-  * copy instead of recomputing the lineage. Parquet keeps the schema;
-  * cross-run reuse falls out of the path convention.
+  * it back — later flows resume from the materialized copy instead of
+  * recomputing the lineage. Parquet keeps the schema.
+  *
+  * The root is `GRAFT_CHECKPOINT_DIR` when set (a deployment path),
+  * else `checkpoints` under this JVM's [[graft.ScratchDirs]] root, which
+  * dies with the JVM. Cross-run resume through [[orElse]] therefore
+  * needs the variable set.
   */
 object Checkpoint {
 
   def root: String =
-    sys.env.getOrElse("GRAFT_CHECKPOINT_DIR", "/tmp/graft-checkpoints")
+    sys.env.getOrElse("GRAFT_CHECKPOINT_DIR", s"${graft.ScratchDirs.root}/checkpoints")
 
   def path(name: String): String = s"$root/$name"
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ScratchDirs
 import graft.ops.{Load, Par, Reshape, RowOps}
 import graft.pipelines.Zotero
 import graft.sources.CsvIndex
@@ -134,20 +135,11 @@ object CompositeQueries {
     * each indexed CSV, W4 synthesize per-file `<search_id>-<rownum>` ids
     * from stamped arrival order, P3 regex-delete fields, R5 harvest URLs
     * from the whole row. The CSV slices are materialized once per SF dir
-    * from `supplier` (sorted single files, so arrival order = key order
-    * and the oracle can replay the rownums).
+    * and JVM from `supplier` (sorted single files, so arrival order = key
+    * order and the oracle can replay the rownums).
     */
   def q29FanOutHarvest(spark: SparkSession, dir: String): DataFrame = {
-    // fixture cache keyed on the FULL canonical source path (no basename
-    // collisions), built in a temp dir and atomically renamed with a
-    // _DONE marker — a crash mid-build or a concurrent builder can never
-    // leave a half-cache that later runs silently trust
-    val base = new java.io.File(
-      s"/tmp/graft_csvidx_${new java.io.File(dir).getName}_${ScratchDirs.pathKey(dir)}")
-    val done = new java.io.File(base, "_DONE")
-    if (!done.exists()) {
-      val tmp = new java.io.File(
-        base.getPath + ".tmp" + ProcessHandle.current().pid())
+    val base = ScratchDirs.built(dir, "csvidx") { base =>
       val sup = Load.table(spark, dir, "supplier")
         .withColumn("notes", format_string(
           "visit http://ex.org/s/%d and https://ex.org/n/%d today",
@@ -157,13 +149,7 @@ object CompositeQueries {
         sup.filter(col("s_suppkey") % 2 === m)
           .coalesce(1).sortWithinPartitions("s_suppkey")
           .write.option("header", true).mode("overwrite")
-          .csv(s"$tmp/$name")
-      }
-      new java.io.File(tmp, "_DONE").createNewFile()
-      ScratchDirs.deleteRecursively(base) // partial cache from a dead builder
-      if (!tmp.renameTo(base)) {
-        if (done.exists()) ScratchDirs.deleteRecursively(tmp) // lost the race
-        else sys.error(s"q29 fixture build: cannot move $tmp to $base")
+          .csv(s"$base/$name")
       }
     }
     val fanned = CsvIndex.fanOut(spark,

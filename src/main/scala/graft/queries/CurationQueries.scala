@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ScratchDirs
 import graft.graphs.ConnectedComponents
 import graft.ops.Load
 import graft.text.{Decontaminate, Scrub, Sequences, Splits, TextAnalysis}
@@ -1219,8 +1220,7 @@ ORDER BY doc_id"""
     * spec-tested (FreqItemsSpec).
     */
   def q108SketchMerge(spark: SparkSession, dir: String): DataFrame = {
-    val base = s"/tmp/graft_hh_${ScratchDirs.pathKey(dir)}_${ProcessHandle.current().pid()}"
-    ScratchDirs.deleteRecursively(new java.io.File(base))
+    val base = ScratchDirs.fresh(dir, "hh")
     val docs = Load.table(spark, dir, "documents")
     def runSummary(filter: Column, path: String): DataFrame = {
       docs.filter(filter)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ScratchDirs
 import graft.dedup.Dedup
 import graft.ops.{Load, RecordLinkage}
 import graft.ops.RecordLinkage.Field
@@ -589,9 +590,6 @@ object DedupQueries {
       .orderBy("query_id", "rank")
   }
 
-  private def ivfArtifactBase(dir: String): String =
-    s"/tmp/graft_ivf_${ScratchDirs.pathKey(dir)}_${ProcessHandle.current().pid()}"
-
   /** One-time IVF quantizer build for q43b: train on the planted-dup
     * corpus, save the centroids to parquet. Registered in
     * [[graft.SparkEntry.prepare]] so Bench runs it OUTSIDE the clock —
@@ -601,15 +599,12 @@ object DedupQueries {
     * per-query cost is reload + probe). The bit-exact round-trip
     * assertion lives in AnnSpec, not in the timed path.
     */
-  def buildIvfArtifact(spark: SparkSession, dir: String): Unit = {
-    val base = ivfArtifactBase(dir)
-    if (new java.io.File(s"$base/_DONE").exists()) return
-    ScratchDirs.deleteOnExit(base)
-    val (corpus, _) = withPlantedDuplicates(spark, dir)
-    Ann.saveCentroids(spark, Ann.ivfTrain(corpus, "embedding", nLists = 16),
-      base)
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$base/_DONE"))
-  }
+  def buildIvfArtifact(spark: SparkSession, dir: String): String =
+    ScratchDirs.built(dir, "ivf") { base =>
+      val (corpus, _) = withPlantedDuplicates(spark, dir)
+      Ann.saveCentroids(spark, Ann.ivfTrain(corpus, "embedding", nLists = 16),
+        base)
+    }
 
   /** q43b: the IVF index as a PERSISTED artifact — the coarse quantizer
     * is trained and saved by [[buildIvfArtifact]] (no-op when the untimed
@@ -621,8 +616,8 @@ object DedupQueries {
     */
   def q43bAnnIvfReload(spark: SparkSession, dir: String): DataFrame = {
     val (corpus, queries) = withPlantedDuplicates(spark, dir)
-    buildIvfArtifact(spark, dir) // no-op when the untimed prepare already ran
-    val reloaded = Ann.loadCentroids(spark, ivfArtifactBase(dir))
+    val base = buildIvfArtifact(spark, dir) // no-op when the untimed prepare already ran
+    val reloaded = Ann.loadCentroids(spark, base)
     Ann.ivfTopKWithCentroids(corpus, queries, "vec_id", "embedding",
         k = 3, centroids = reloaded, nprobe = 4)
       .select("query_id", "rank", "neighbor_id")
@@ -862,9 +857,7 @@ object DedupQueries {
   def q164HllDistinct(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.Hll
     val li = Load.table(spark, dir, "lineitem")
-    val base = s"/tmp/graft_hllreg_${ScratchDirs.pathKey(dir)}_" +
-      ProcessHandle.current().pid()
-    ScratchDirs.deleteRecursively(new java.io.File(base))
+    val base = ScratchDirs.fresh(dir, "hllreg")
     Hll.registers(li.filter(col("l_linenumber") % 2 === 0),
         Seq("l_returnflag"), col("l_orderkey").cast(StringType))
       .write.mode("overwrite").parquet(s"$base/regsA")
@@ -1033,7 +1026,7 @@ object DedupQueries {
     val li = Load.table(spark, dir, "lineitem")
     val runA = li.filter(col("l_orderkey") % 2 === 0)
     val runB = li.filter(col("l_orderkey") % 2 === 1)
-    val path = s"/tmp/graft_cms_${ScratchDirs.pathKey(dir)}_${ProcessHandle.current().pid()}"
+    val path = ScratchDirs.fresh(dir, "cms")
     Cms.sketch(runA, col("l_partkey"), d, w)
       .write.mode("overwrite").parquet(path)
     val merged = Cms.merge(Load.parquet(spark, path),
@@ -2438,9 +2431,6 @@ object DedupQueries {
 
   // ------------------------------------------------ q236 incremental ER
 
-  private[graft] def erBase(dir: String): String =
-    s"/tmp/graft_er_${ScratchDirs.pathKey(dir)}_${ProcessHandle.current().pid()}"
-
   /** The delta partition for q236's two-generation split: ~1/13 of the
     * fsRecords corpus plays "today's ingest batch" against the rest as
     * the already-clustered history. Applied to the FINAL record id so
@@ -2470,26 +2460,24 @@ object DedupQueries {
     *   - `golden`        — the survivorship output per cluster, reused
     *     verbatim for clusters the delta does not touch.
     */
-  def buildErGeneration(spark: SparkSession, dir: String): Unit =
-    buildErGenerationAt(spark, dir, erBase(dir), !erIsDelta)
+  def buildErGeneration(spark: SparkSession, dir: String): String =
+    buildErGenerationAt(spark, dir, "er", !erIsDelta)
 
-  /** [[buildErGeneration]] with the artifact location and the history
+  /** [[buildErGeneration]] with the artifact tag and the history
     * predicate explicit — q240's two-generation build starts from a
     * history that excludes BOTH delta batches. */
   private[graft] def buildErGenerationAt(spark: SparkSession, dir: String,
-      base: String, histPred: Column): Unit = {
-    if (new java.io.File(s"$base/_DONE").exists()) return
-    ScratchDirs.deleteOnExit(base)
-    val hist = writeErScoring(spark, ErKeys, dir, base, histPred)
-    erClusters(Load.parquet(spark, s"$base/candidates")
-        .filter(col("decision") === 1)
-        .select(col("id_a").as("a"), col("id_b").as("b")))
-      .write.mode("overwrite").parquet(s"$base/labels")
-    erGolden(hist, Load.parquet(spark, s"$base/labels"))
-      .write.mode("overwrite").parquet(s"$base/golden")
-    hist.unpersist()
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$base/_DONE"))
-  }
+      tag: String, histPred: Column): String =
+    ScratchDirs.built(dir, tag) { base =>
+      val hist = writeErScoring(spark, ErKeys, dir, base, histPred)
+      erClusters(Load.parquet(spark, s"$base/candidates")
+          .filter(col("decision") === 1)
+          .select(col("id_a").as("a"), col("id_b").as("b")))
+        .write.mode("overwrite").parquet(s"$base/labels")
+      erGolden(hist, Load.parquet(spark, s"$base/labels"))
+        .write.mode("overwrite").parquet(s"$base/golden")
+      hist.unpersist()
+    }
 
   /** Generation-0 scoring artifacts at `base` (fields, value_counts,
     * snm_rank, snm_hist, candidates) from the `histPred` records;
@@ -2554,12 +2542,12 @@ object DedupQueries {
     * corpus. Every shortcut above must be invisible in the output.
     */
   def q236IncrementalEr(spark: SparkSession, dir: String): DataFrame = {
-    buildErGeneration(spark, dir) // no-op when the untimed prepare ran
+    val base = buildErGeneration(spark, dir) // no-op when the untimed prepare ran
     // history fields come from the persisted record store; only the
     // delta's text pays the normalization regex (the doc_id filter
     // pushes below the projection into both union sides of fsRecords,
     // so the non-delta rows are pruned at the scan)
-    erMergeStep(spark, erBase(dir),
+    erMergeStep(spark, base,
       fsRecords(spark, dir).filter(erIsDelta), rollTo = None)
   }
 
@@ -2759,7 +2747,6 @@ object DedupQueries {
     // a from-scratch build on history∪delta (see scaladoc), so the next
     // merge consumes it exactly as q236 consumes generation 0
     rollTo.foreach { g =>
-      ScratchDirs.deleteOnExit(g)
       records.write.mode("overwrite").parquet(s"$g/fields")
       vcMerged.write.mode("overwrite").parquet(s"$g/value_counts")
       scoredAll.select(erCandCols(ErKeys): _*)
@@ -2774,16 +2761,12 @@ object DedupQueries {
           snmKeyed(delta).groupBy("skey").agg(count(lit(1)).as("c")))
         .groupBy("skey").agg(sum("c").as("c"))
         .write.mode("overwrite").parquet(s"$g/snm_hist")
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$g/_DONE"))
     }
     erReport(golden, links, labels)
   }
 
   /** Second delta batch for q240 — disjoint from [[erIsDelta]]. */
   private[graft] def erIsDelta2 = col("doc_id") % 13 === 9
-
-  private[graft] def er2Base(dir: String, gen: Int): String =
-    s"/tmp/graft_er2g${gen}_${ScratchDirs.pathKey(dir)}_${ProcessHandle.current().pid()}"
 
   /** Two-generation build for q240 (prepare hook): generation 0 from a
     * history that excludes BOTH deltas, then ONE [[erMergeStep]] that
@@ -2792,18 +2775,17 @@ object DedupQueries {
     * night's merge against artifacts that were themselves produced by a
     * merge, not by a from-scratch build.
     */
-  def buildErGenerations2(spark: SparkSession, dir: String): Unit = {
-    val g1 = er2Base(dir, 1)
-    if (new java.io.File(s"$g1/_DONE").exists()) return
-    buildErGenerationAt(spark, dir, er2Base(dir, 0),
-      !erIsDelta && !erIsDelta2)
-    // constructing the merge output is enough: the roll writes are
-    // eager actions inside erMergeStep; the returned relation is the
-    // night-1 report, not needed here
-    erMergeStep(spark, er2Base(dir, 0),
-      fsRecords(spark, dir).filter(erIsDelta), rollTo = Some(g1))
-      .write.format("noop").mode("overwrite").save()
-  }
+  def buildErGenerations2(spark: SparkSession, dir: String): String =
+    ScratchDirs.built(dir, "er2g1") { g1 =>
+      val g0 = buildErGenerationAt(spark, dir, "er2g0",
+        !erIsDelta && !erIsDelta2)
+      // constructing the merge output is enough: the roll writes are
+      // eager actions inside erMergeStep; the returned relation is the
+      // night-1 report, not needed here
+      erMergeStep(spark, g0,
+        fsRecords(spark, dir).filter(erIsDelta), rollTo = Some(g1))
+        .write.format("noop").mode("overwrite").save()
+    }
 
   /** q240: MULTI-GENERATION incremental ER — the induction step q236
     * only asserts once: night 0 builds, night 1 merges delta 1 and
@@ -2815,8 +2797,8 @@ object DedupQueries {
     * incrementally forever instead of only for one privileged delta.
     */
   def q240IncrementalEr2Gen(spark: SparkSession, dir: String): DataFrame = {
-    buildErGenerations2(spark, dir) // no-op when the untimed prepare ran
-    erMergeStep(spark, er2Base(dir, 1),
+    val g1 = buildErGenerations2(spark, dir) // no-op when the untimed prepare ran
+    erMergeStep(spark, g1,
       fsRecords(spark, dir).filter(erIsDelta2), rollTo = None)
   }
 
@@ -2843,12 +2825,8 @@ object DedupQueries {
     * MERGE, exactly as in q45.
     */
   def q241NightlyErSink(spark: SparkSession, dir: String): DataFrame = {
-    buildErGeneration(spark, dir) // no-op when the untimed prepare ran
-    val scratch = new java.io.File(
-      s"/tmp/graft_ernight_${ScratchDirs.pathKey(dir)}_" +
-        s"${ProcessHandle.current().pid()}")
-    ScratchDirs.deleteRecursively(scratch)
-    val store = s"$scratch/store"
+    val base = buildErGeneration(spark, dir) // no-op when the untimed prepare ran
+    val store = ScratchDirs.fresh(dir, "ernight") + "/store"
     // JSON-stable golden payload: to_json drops null fields, so the
     // nullable survivorship columns are coalesced to sentinels on BOTH
     // sides of the oracle compare
@@ -2859,7 +2837,7 @@ object DedupQueries {
       coalesce(col("lang_src"), lit(-1L)).as("lang_src"),
       coalesce(col("source"), lit("-")).as("source"),
       coalesce(col("source_src"), lit(-1L)).as("source_src"))
-    val g0 = shaped(Load.parquet(spark, s"${erBase(dir)}/golden"))
+    val g0 = shaped(Load.parquet(spark, s"$base/golden"))
     val b1 = g0.select(
       col("cluster_id").as("doc_id"),
       col("n_members"), col("lang"), col("lang_src"),
@@ -2959,22 +2937,14 @@ object DedupQueries {
   def q242ErPayloadFull(spark: SparkSession, dir: String): DataFrame =
     erPairReport(erScoreFull(spark, ErPayload, dir)._2)
 
-  private[graft] def erpBase(dir: String): String =
-    s"/tmp/graft_erp_${ScratchDirs.pathKey(dir)}_" +
-      s"${ProcessHandle.current().pid()}"
-
   /** Generation-0 build for q243 (prepare hook, untimed): history
     * partition scored in full — including the levenshtein pass — and
     * persisted with per-field agreement patterns, plus the same
     * maintained artifacts q236 rolls (additive counts, SNM rank index
     * + histogram, record store). */
   private[graft] def buildErPayloadGeneration(spark: SparkSession,
-      dir: String): Unit = {
-    val base = erpBase(dir)
-    if (new java.io.File(s"$base/_DONE").exists()) return
-    ScratchDirs.deleteOnExit(base)
+      dir: String): String = ScratchDirs.built(dir, "erp") { base =>
     writeErScoring(spark, ErPayload, dir, base, !erIsDelta).unpersist()
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$base/_DONE"))
   }
 
   /** q243: the INCREMENTAL twin of q242 — same output, but the nightly
@@ -2993,8 +2963,8 @@ object DedupQueries {
     */
   def q243ErPayloadIncremental(spark: SparkSession,
       dir: String): DataFrame = {
-    buildErPayloadGeneration(spark, dir) // no-op when prepare ran
-    erPairReport(erMerge(spark, ErPayload, erpBase(dir),
+    val base = buildErPayloadGeneration(spark, dir) // no-op when prepare ran
+    erPairReport(erMerge(spark, ErPayload, base,
       fsPayloadRecords(spark, dir).filter(erIsDelta)).scored)
   }
 

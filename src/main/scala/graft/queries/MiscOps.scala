@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ScratchDirs
 import graft.i18n.Translate
 import graft.ops._
 
@@ -2586,6 +2587,24 @@ object MiscOps {
       |WHERE fp NOT IN (SELECT fp FROM fp WHERE doc_id % 3 = 0)
       |ORDER BY doc_id""".stripMargin
 
+  /** Generation-0 build for q130 (prepare hook, untimed — the
+    * probe-a-maintained-artifact rule of q156/q165b/q43b/q236): the
+    * history LSH signature index is the artifact a streaming ingest
+    * MAINTAINS, so its build + parquet write run outside the bench
+    * clock; the timed query is batch-probe + exact-Jaccard verify only.
+    * Built WITH the bucket cap (buildSignatureIndex's build-time prune),
+    * so the probe passes `indexBucketsPrefiltered = true` — value-
+    * identical to the probe-time histogram by the cap's own contract.
+    * Self-sufficient: the query calls this first, no-op once built. */
+  private[graft] def buildNearDupHistIndex(spark: SparkSession,
+      dir: String): String = ScratchDirs.built(dir, "ndidx") { base =>
+    val history = Load.table(spark, dir, "documents")
+      .select("doc_id", "text").filter(col("doc_id") % 3 === 0)
+    graft.dedup.Dedup.buildSignatureIndex(history, "text", "doc_id",
+        maxBucketSize = Some(100))
+      .write.mode("overwrite").parquet(s"$base/index")
+  }
+
   /** q130: the streaming NEAR-dup filter's batch twin
     * ([[graft.streaming.Streams.nearDupFilterBatch]]) — one tier above
     * q78's exact-fingerprint probe: arriving docs ≥ 0.8 n-gram-Jaccard
@@ -2599,40 +2618,14 @@ object MiscOps {
     * the same kernel through foreachBatch micro-batches and asserts
     * stream == batch.
     */
-  private def nearDupIdxBase(dir: String): String =
-    s"/tmp/graft_ndidx_${ScratchDirs.pathKey(dir)}_" +
-      ProcessHandle.current().pid()
-
-  /** Generation-0 build for q130 (prepare hook, untimed — the
-    * probe-a-maintained-artifact rule of q156/q165b/q43b/q236): the
-    * history LSH signature index is the artifact a streaming ingest
-    * MAINTAINS, so its build + parquet write run outside the bench
-    * clock; the timed query is batch-probe + exact-Jaccard verify only.
-    * Built WITH the bucket cap (buildSignatureIndex's build-time prune),
-    * so the probe passes `indexBucketsPrefiltered = true` — value-
-    * identical to the probe-time histogram by the cap's own contract.
-    * Self-sufficient: the query calls this first, no-op once built. */
-  private[graft] def buildNearDupHistIndex(spark: SparkSession,
-      dir: String): Unit = {
-    val base = nearDupIdxBase(dir)
-    if (new java.io.File(s"$base/_DONE").exists()) return
-    ScratchDirs.deleteOnExit(base)
-    val history = Load.table(spark, dir, "documents")
-      .select("doc_id", "text").filter(col("doc_id") % 3 === 0)
-    graft.dedup.Dedup.buildSignatureIndex(history, "text", "doc_id",
-        maxBucketSize = Some(100))
-      .write.mode("overwrite").parquet(s"$base/index")
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$base/_DONE"))
-  }
-
   def q130StreamNearDup(spark: SparkSession, dir: String): DataFrame = {
-    buildNearDupHistIndex(spark, dir) // no-op when the untimed prepare ran
+    val base = buildNearDupHistIndex(spark, dir) // no-op when the untimed prepare ran
     val d = Load.table(spark, dir, "documents").select("doc_id", "text")
     val history = d.filter(col("doc_id") % 3 === 0)
     val arriving = d.filter(col("doc_id") % 3 =!= 0)
       .unionByName(history.select((col("doc_id") + 100000).as("doc_id"),
         concat(col("text"), lit(" rev2 marker tail")).as("text")))
-    val index = Load.parquet(spark, s"${nearDupIdxBase(dir)}/index")
+    val index = Load.parquet(spark, s"$base/index")
     graft.streaming.Streams.nearDupFilterBatch(arriving, index, history,
         "text", "doc_id", indexBucketsPrefiltered = true)
       .select("doc_id")

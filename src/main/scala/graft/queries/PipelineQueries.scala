@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ScratchDirs
 import graft.ops.Load
 import graft.pipelines.Judges
 
@@ -139,15 +140,16 @@ object PipelineQueries {
     * ORDER BY inside list().
     */
   def q111SpecReplay(spark: SparkSession, dir: String): DataFrame = {
+    val dump = ScratchDirs.fresh(dir, "q111_dump")
     val spec =
-      """{"pipeline": [
+      s"""{"pipeline": [
         | {"run": "load", "params": {"table": "lineitem"}},
         | {"run": "filter_rows", "params": {"resource": "lineitem",
         |   "equals": [{"l_returnflag": "A"}]}},
         | {"run": "select_fields", "params": {"resource": "lineitem",
         |   "fields": ["l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"]}},
         | {"run": "unpivot", "params": {"resource": "lineitem",
-        |   "regex": "^l_(quantity|extendedprice)$", "key": "measure", "value": "value"}},
+        |   "regex": "^l_(quantity|extendedprice)$$", "key": "measure", "value": "value"}},
         | {"run": "add_computed_field", "params": {"resource": "lineitem",
         |   "target": "label", "with": "{measure}-{l_linenumber}"}},
         | {"run": "set_constant", "params": {"resource": "lineitem",
@@ -160,7 +162,7 @@ object PipelineQueries {
         |   "keys": ["l_orderkey"],
         |   "spec": {"label": "collect", "value": "collect", "n": "count", "planted": "max"}}},
         | {"run": "checkpoint", "params": {"resource": "lineitem", "name": "q111_packed"}},
-        | {"run": "dump_to_path", "params": {"out-path": "/tmp/graft-q111-dump"}},
+        | {"run": "dump_to_path", "params": {"out-path": "$dump"}},
         | {"run": "sort", "params": {"resource": "lineitem", "by": ["l_orderkey"]}}
         |]}""".stripMargin
     graft.runner.SpecInterpreter.run(spark, dir, spec)("lineitem").df

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ScratchDirs
 import graft.core.{Flow, Resource}
 import graft.ops.{Checkpoint, Load}
 import graft.pipelines.Datasets
@@ -17,20 +18,12 @@ import graft.sources.LoadDatapackage
   * the base tables can reproduce.
   *
   * Each query rebuilds its scratch state from zero on every call
-  * (delete + rewrite, keyed by canonical sf-dir + pid) — runs never
-  * observe another run's leftovers, and repeated bench iterations are
-  * identical. The scratch tables are tiny (≤ |customer| rows), so the
-  * rebuild is noise even at sf0.1.
+  * ([[graft.ScratchDirs.fresh]]: this JVM's dir for the sf-dir and the
+  * query's tag, emptied) — runs never observe another run's leftovers,
+  * and repeated bench iterations are identical. The scratch tables are
+  * tiny (≤ |customer| rows), so the rebuild is noise even at sf0.1.
   */
 object SinkQueries {
-
-  /** Per-(sf-dir, process) scratch root, wiped on entry. */
-  private def freshScratch(dir: String, tag: String): String = {
-    val root = new java.io.File(
-      s"/tmp/graft_${tag}_${ScratchDirs.pathKey(dir)}_${ProcessHandle.current().pid()}")
-    ScratchDirs.deleteRecursively(root)
-    root.getPath
-  }
 
   /** K2+J4+K3 — the document-sink lifecycle (reference: dump_to_es.py
     * :43-94 revision sweep + create_timestamp carry-over, :105-132
@@ -43,7 +36,7 @@ object SinkQueries {
     * rowcount (only re-indexed docs survive revision 2).
     */
   def q45SinkLifecycle(spark: SparkSession, dir: String): DataFrame = {
-    val store = freshScratch(dir, "sink") + "/store"
+    val store = ScratchDirs.fresh(dir, "sink") + "/store"
     val c = Load.table(spark, dir, "customer")
     val b1 = c.select(
       col("c_custkey").cast(LongType).as("doc_id"),
@@ -89,8 +82,7 @@ object SinkQueries {
     * CSV convention, surfacing as the JSON string the descriptor declares.
     */
   def q46DumpRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = freshScratch(dir, "dump")
-    val out = s"$scratch/pkg"
+    val out = ScratchDirs.fresh(dir, "dump") + "/pkg"
     val raw = Load.table(spark, dir, "part").select(
       col("p_partkey").cast(LongType).as("row_id"),
       when(col("p_partkey") % 9 === 0, lit(null).cast(StringType))
@@ -103,8 +95,7 @@ object SinkQueries {
     val reloaded = LoadDatapackage.load(spark, out)("charts") // S1 descriptor
     require(reloaded.primaryKey == Seq("row_id"),
       "primaryKey must survive the descriptor round-trip")   // K11
-    val cp = Checkpoint(reloaded.df,                          // K9
-      s"q46_${new java.io.File(scratch).getName}")
+    val cp = Checkpoint(reloaded.df, "q46_dump")              // K9
     cp.select("row_id", "chart_title", "value", "tags").orderBy("row_id")
   }
 
@@ -130,7 +121,7 @@ object SinkQueries {
     */
   def q39XlsxRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import graft.sinks.Xlsx
-    val path = freshScratch(dir, "xlsx") + "/book.xlsx"
+    val path = ScratchDirs.fresh(dir, "xlsx") + "/book.xlsx"
     val rows = Load.table(spark, dir, "nation")
       .select(col("n_nationkey").cast(LongType).as("key"),
         col("n_name"), col("n_regionkey").cast(LongType))
@@ -176,7 +167,7 @@ object SinkQueries {
     * ORC reader are both hash-gated.
     */
   def q80OrcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = freshScratch(dir, "orc") + "/docs_orc"
+    val out = ScratchDirs.fresh(dir, "orc") + "/docs_orc"
     Load.table(spark, dir, "documents")
       .select("doc_id", "lang", "source", "n_chars")
       .write.mode("overwrite").orc(out)
@@ -197,7 +188,7 @@ object SinkQueries {
     * CASE on the generation split.
     */
   def q86SchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val out = freshScratch(dir, "evo") + "/store"
+    val out = ScratchDirs.fresh(dir, "evo") + "/store"
     val d = Load.table(spark, dir, "documents")
     d.filter(col("doc_id") % 2 === 0).select("doc_id", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$out/gen=1")
@@ -224,7 +215,7 @@ object SinkQueries {
     */
   def q95Sitemap(spark: SparkSession, dir: String): DataFrame = {
     import graft.sinks.Sitemap
-    val out = freshScratch(dir, "sitemap")
+    val out = ScratchDirs.fresh(dir, "sitemap")
     val docs = Load.table(spark, dir, "documents")
       .withColumn("url", concat(lit("https://yodaat.org/item/"), col("doc_id"),
         lit("?lang=he&kind="), col("source")))
@@ -330,7 +321,7 @@ object SinkQueries {
     * aggregation is map-side combined.
     */
   def q148JsonlShards(spark: SparkSession, dir: String): DataFrame = {
-    val out = freshScratch(dir, "jsonl") + "/shards"
+    val out = ScratchDirs.fresh(dir, "jsonl") + "/shards"
     val d = Load.table(spark, dir, "documents").select("doc_id", "text")
     val sharded = graft.text.Splits.shardShuffle(d, "doc_id", 8, "11")
     graft.sinks.CorpusExport.writeJsonlShards(sharded, out, "shard", "pos",
@@ -382,7 +373,7 @@ object SinkQueries {
     * the base table — the round trip must be invisible.
     */
   def q197OrcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = freshScratch(dir, "orc") + "/docs"
+    val out = ScratchDirs.fresh(dir, "orc") + "/docs"
     Load.table(spark, dir, "documents")
       .select("doc_id", "lang", "n_chars", "text")
       .write.mode("overwrite").format("orc").save(out)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ScratchDirs
 import graft.ops.Load
 import graft.text.TextAnalysis
 
@@ -182,9 +183,7 @@ object TextQueries {
     val d = Load.table(spark, dir, "documents")
     val hist = d.filter(col("doc_id") % 2 === 0)
     val delta = d.filter(col("doc_id") % 2 =!= 0)
-    val base = s"/tmp/graft_knlm_${ScratchDirs.pathKey(dir)}_" +
-      ProcessHandle.current().pid()
-    ScratchDirs.deleteRecursively(new java.io.File(base))
+    val base = ScratchDirs.fresh(dir, "knlm")
     graft.text.KneserNey.bigramCounts(hist, "text")
       .write.mode("overwrite").parquet(s"$base/counts")
     val merged = graft.text.KneserNey.mergeCounts(Seq(

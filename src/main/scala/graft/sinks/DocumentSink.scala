@@ -1,5 +1,7 @@
 package graft.sinks
 
+import com.fasterxml.jackson.databind.ObjectMapper
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -26,12 +28,16 @@ import graft.ops.Load
   */
 object DocumentSink {
 
+  private val Json = new ObjectMapper()
+
   /** ES-style mapping JSON from field metadata: `es:keyword` → keyword,
     * `es:hebrew` → text + hebrew analyzer subfield, `es:boost` → boost,
     * `es:index=false` → unindexed (reference mapping gen dump_to_es.py:10-39).
     */
   def mappingJson(schema: StructType): String = {
-    def fieldMapping(f: StructField): String = {
+    val mapping = Json.createObjectNode()
+    val props = mapping.putObject("properties")
+    schema.fields.foreach { f =>
       val m = f.metadata
       def has(k: String) = m.contains(k)
       val esType =
@@ -45,15 +51,14 @@ object DocumentSink {
           case ArrayType(StringType, _) => "text"
           case _ => "object"
         }
-      val parts = Seq(s""""type":"$esType"""") ++
-        (if (has("es:boost")) Seq(s""""boost":${m.getDouble("es:boost")}""") else Nil) ++
-        (if (has("es:index") && !m.getBoolean("es:index")) Seq(""""index":false""") else Nil) ++
-        (if (has("es:hebrew") && m.getBoolean("es:hebrew"))
-          Seq(""""fields":{"hebrew":{"type":"text","analyzer":"hebrew"}}""")
-        else Nil)
-      s""""${f.name}":{${parts.mkString(",")}}"""
+      val field = props.putObject(f.name).put("type", esType)
+      if (has("es:boost")) field.put("boost", m.getDouble("es:boost"))
+      if (has("es:index") && !m.getBoolean("es:index")) field.put("index", false)
+      if (has("es:hebrew") && m.getBoolean("es:hebrew"))
+        field.putObject("fields").putObject("hebrew")
+          .put("type", "text").put("analyzer", "hebrew")
     }
-    schema.fields.map(fieldMapping).mkString("""{"properties":{""", ",", "}}")
+    Json.writeValueAsString(mapping)
   }
 
   /** Index a batch with ES-sink semantics. `storePath` holds the previous

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,9 +20,16 @@ trait SparkSpec extends AnyFunSuite {
     try body
     finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
+
+  def scratch(tag: String): String = SparkSpec.scratch(tag)
 }
 
 object SparkSpec {
+  /** An empty dir for `tag` in this JVM's [[ScratchDirs]] root, which
+    * the root's exit hook removes. Tags are unique per call site. */
+  def scratch(tag: String): String =
+    Files.createDirectories(Paths.get(ScratchDirs.fresh("spec", tag))).toString
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -27,7 +27,7 @@ class TrancheSpec extends AnyFunSuite {
 
   test("a dead child is reported with its exit code and the next tranche still runs; " +
       "Verify marks what it never reached died") {
-    val dir = Files.createTempDirectory("graft-tranche-spec")
+    val dir = Path.of(SparkSpec.scratch("tranche"))
     val seen = scala.collection.mutable.ArrayBuffer[Local.Tranche]()
     val (out, err) = (new ByteArrayOutputStream, new ByteArrayOutputStream)
     val (stdout, stderr) = (System.out, System.err)
@@ -53,10 +53,15 @@ class TrancheSpec extends AnyFunSuite {
     val dead = ts(1).names
     assert(manifest == names.map(_ -> "ok").toMap ++
       dead.map(_ -> "died") + (dead.head -> "error"))
+
+    // each child's scratch root went with it, the sys.exit(3) one too
+    val roots = ts.map(t => Files.readString(dir.resolve(s"root_${t.i}")))
+    assert(roots.distinct.size == ts.size && roots.forall(_.startsWith("/tmp/graft-")), roots)
+    assert(roots.forall(r => !Files.exists(Path.of(r))), roots)
   }
 
   test("Bench reads a dead, missing or truncated tranche file as failed rows") {
-    val dir = Files.createTempDirectory("graft-bench-tranche-spec")
+    val dir = Path.of(SparkSpec.scratch("bench_tranche"))
     val t = Local.Tranche(0, 1, Seq("qa", "qb"), 1.5, 0, 100)
     val good = dir.resolve("good.json")
     Files.writeString(good, """{"metric":"total","value":1.0,""" +
@@ -80,9 +85,10 @@ class TrancheSpec extends AnyFunSuite {
 }
 
 /** A tranche child for [[TrancheSpec]]: `<dir> <dieOn> <subset>`. Writes its
-  * subset to `<dir>/tranche_<i>`, prints a line on stdout, and records
-  * every query ok in the Verify manifest; tranche `dieOn` records only its
-  * first query, as an error, and exits 3.
+  * subset to `<dir>/tranche_<i>`, writes a file under its own scratch
+  * root and that root's path to `<dir>/root_<i>`, prints a line on stdout,
+  * and records every query ok in the Verify manifest; tranche `dieOn`
+  * records only its first query, as an error, and exits 3.
   */
 object TrancheProbe {
   def main(args: Array[String]): Unit = {
@@ -90,6 +96,9 @@ object TrancheProbe {
     val i = Local.trancheIndex.get
     val qs = subset.split(',').toSeq
     Files.write(Path.of(dir, s"tranche_$i"), qs.asJava)
+    val scratch = Files.createDirectories(Path.of(ScratchDirs.fresh(dir, "probe")))
+    Files.writeString(scratch.resolve("state"), "x")
+    Files.writeString(Path.of(dir, s"root_$i"), ScratchDirs.root.getPath)
     println(s"probe $i on stdout")
     Thread.sleep(300) // long enough for the parent's RSS sampler to see it
     if (i == dieOn.toInt) {

@@ -16,7 +16,7 @@ class VerifyManifestSpec extends AnyFunSuite {
     assert(m("weird\nname\t\"x\"") == "error")
     assert(m("u") == "")
     // and through the writer: control characters and quotes in a key
-    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-spec").toString
+    val dir = SparkSpec.scratch("manifest_escape")
     val odd = "tab\there \"q\" \u0001 back\\slash"
     Verify.mergeManifest(dir, Seq(odd -> "ok"))
     assert(Verify.parseManifest(java.nio.file.Files.readString(
@@ -39,8 +39,7 @@ class VerifyManifestSpec extends AnyFunSuite {
   }
 
   test("manifest merge: children extend, later statuses win") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-manifest-spec").toString
+    val dir = SparkSpec.scratch("manifest_merge")
     // simulate tranche-0 child writes, a parent "died" mark, then a rerun
     Verify.mergeManifest(dir, Seq("qa" -> "ok", "qb" -> "ok"))
     Verify.mergeManifest(dir, Seq("qc" -> "died"))

@@ -36,7 +36,7 @@ class ClusterQualitySpec extends SparkSpec {
     val rows = Seq((0L, a), (1L, b), (2L, c), (10L, d), (11L, e),
       (12L, f), (99L, (1 to 100).map("zzz" + _).mkString(" ")))
       .map { case (id, t) => (id, t, "en", "s", 0L) }
-    val dir = s"/tmp/graft_q220_spec_${ProcessHandle.current().pid()}"
+    val dir = scratch("q220")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = DedupQueries.q220ClusterQuality(spark, dir).collect()

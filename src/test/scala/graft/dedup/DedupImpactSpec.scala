@@ -28,7 +28,7 @@ class DedupImpactSpec extends SparkSpec {
       (11L, (1 to 100).map("zzz" + _).mkString(" "), "bb"),
       (12L, (1 to 100).map("www" + _).mkString(" "), "bb"))
       .map { case (id, t, lang) => (id, t, lang, "s", 0L) }
-    val dir = s"/tmp/graft_q225_spec_${ProcessHandle.current().pid()}"
+    val dir = scratch("q225")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = DedupQueries.q225DedupImpact(spark, dir).collect()

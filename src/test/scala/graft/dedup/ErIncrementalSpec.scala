@@ -31,7 +31,7 @@ class ErIncrementalSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     assert(full == inc, s"incremental drift: ${inc.size} vs ${full.size} rows")
 
-    val base = DedupQueries.erBase(sf)
+    val base = DedupQueries.buildErGeneration(spark, sf)
     val candH = spark.read.parquet(s"$base/candidates")
       .select("id_a", "id_b")
     val records = DedupQueries.fsRecords(spark, sf)
@@ -87,7 +87,7 @@ class ErIncrementalSpec extends SparkSpec {
     assert(full == inc,
       s"payload incremental drift: ${inc.size} vs ${full.size} rows")
 
-    val base = DedupQueries.erpBase(sf)
+    val base = DedupQueries.buildErPayloadGeneration(spark, sf)
     val candH = spark.read.parquet(s"$base/candidates")
       .select("id_a", "id_b")
     val records = DedupQueries.fsPayloadRecords(spark, sf)
@@ -124,7 +124,7 @@ class ErIncrementalSpec extends SparkSpec {
       s"generation composition drift: ${twoGen.size} vs ${full.size} rows")
     // the rolled generation-1 artifact set is complete (the next merge's
     // whole input contract)
-    val g1 = DedupQueries.er2Base(sf, 1)
+    val g1 = DedupQueries.buildErGenerations2(spark, sf)
     for (a <- Seq("fields", "value_counts", "candidates", "labels", "golden",
         "snm_rank", "snm_hist"))
       assert(new java.io.File(s"$g1/$a").exists(), s"missing rolled $a")
@@ -144,8 +144,7 @@ class ErIncrementalSpec extends SparkSpec {
       // re-ranking history from raw values (the corpus-wide pass the
       // maintained index exists to eliminate). The bit-level carry
       // contract lives in ExactRankMergeSpec (poisoned-rank test).
-      val base = s"/tmp/graft_er_spec_noidx_${probe.replace(' ', '_')}_" +
-        s"${ProcessHandle.current().pid()}"
+      val base = scratch(s"er_noidx_${probe.replace(' ', '_')}")
       DedupQueries.writeErScoring(spark, spec, sf, base,
         !DedupQueries.erIsDelta).unpersist()
       def rmrf(f: java.io.File): Unit = {

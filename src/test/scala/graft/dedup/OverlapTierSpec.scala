@@ -24,7 +24,7 @@ class OverlapTierSpec extends SparkSpec {
       (1L, text(20 to 60), "en", "b", 0L),   // overlaps a on w20..w40
       (2L, text(100 to 140), "en", "c", 0L), // disjoint
       (3L, "too short", "en", "d", 0L))
-    val base = s"/tmp/graft_q215_tier_${ProcessHandle.current().pid()}"
+    val base = scratch("q215_tier")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$base/documents.parquet")
     val exact = DedupQueries.q215SourceOverlapMatrix(spark, base)

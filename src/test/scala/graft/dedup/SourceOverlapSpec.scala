@@ -17,7 +17,7 @@ class SourceOverlapSpec extends SparkSpec {
     // first gram only; source c: too short for any 8-gram
     val nine = (1 to 9).map("w" + _).mkString(" ")
     val eight = (1 to 8).map("w" + _).mkString(" ")
-    val base = s"/tmp/graft_q215_spec_${ProcessHandle.current().pid()}"
+    val base = scratch("q215")
     Seq((0L, nine, "en", "a", 0L), (1L, eight, "en", "b", 0L),
         (2L, "tiny text", "en", "c", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -29,7 +29,7 @@ class SurvivorQualitySpec extends SparkSpec {
       (10L, (1 to 100).map("yyy" + _).mkString(" ")),
       (11L, ((1 to 100).map("yyy" + _).updated(50, "xxx51")).mkString(" ")))
       .map { case (id, t) => (id, t, "en", "s", 0L) }
-    val dir = s"/tmp/graft_q234_spec_${ProcessHandle.current().pid()}"
+    val dir = scratch("q234")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = DedupQueries.q234SurvivorQuality(spark, dir).collect()

@@ -27,7 +27,7 @@ class ThresholdSweepSpec extends SparkSpec {
         if (i < 8) "ddd" + i else w }.mkString(" ")),
       (99L, (1 to 100).map("zzz" + _).mkString(" "))) // isolated
       .map { case (id, t) => (id, t, "en", "s", 0L) }
-    val dir = s"/tmp/graft_q231_spec_${ProcessHandle.current().pid()}"
+    val dir = scratch("q231")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = DedupQueries.q231ThresholdSensitivity(spark, dir).collect()
@@ -45,7 +45,7 @@ class ThresholdSweepSpec extends SparkSpec {
     import s.implicits._
     val rows = (1L to 25L).map(i =>
       (i, s"filler text number $i with the and of words", "en", "s", 100L))
-    val dir = s"/tmp/graft_q232_spec_${ProcessHandle.current().pid()}"
+    val dir = scratch("q232")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = TextQueries.q232QualityTokenCurve(spark, dir).collect()

@@ -67,7 +67,7 @@ class KmvSpec extends SparkSpec {
   }
 
   test("sketch round-trips through a parquet artifact bit-exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("kmv").toString
+    val dir = scratch("kmv")
     val sk = strings(6000, "art").groupBy(lit(1).as("g"))
       .agg(Kmv.sketch($"h", 256).as("sk"))
     sk.write.mode("overwrite").parquet(s"$dir/sk")

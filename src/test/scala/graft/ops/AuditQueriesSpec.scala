@@ -111,7 +111,7 @@ class AuditQueriesSpec extends SparkSpec {
       (29L, (A ++ Seq("x") ++ B).mkString(" ")), // benchmark
       (1L, trainToks.mkString(" ")))
       .toDF("doc_id", "text")
-    val base = s"/tmp/graft_q212_spec_${ProcessHandle.current().pid()}"
+    val base = scratch("q212")
     df.write.mode("overwrite").parquet(s"$base/documents.parquet")
     val out = AuditQueries.q212ContaminationSpans(spark, base)
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -126,7 +126,7 @@ class AuditQueriesSpec extends SparkSpec {
     // every eigenvector component equals the normalization cap
     val vs = (-2 to 2).flatMap(t => Seq.fill(3)(
       Array.fill(4)(0.5f * t)))
-    val base = s"/tmp/graft_q213_spec_${ProcessHandle.current().pid()}"
+    val base = scratch("q213")
     vs.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }
       .toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$base/embeddings.parquet")
@@ -159,7 +159,7 @@ class AuditQueriesSpec extends SparkSpec {
     val docs = (0L to 7L).map(i => (i, common, "en", "s", 0L)) ++ Seq(
       (8L, "the zyx the wvu the tsr qpo", "en", "s", 0L),
       (9L, "solo", "en", "s", 0L))
-    val base = s"/tmp/graft_q214_spec_${ProcessHandle.current().pid()}"
+    val base = scratch("q214")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$base/documents.parquet")
     val out = AuditQueries.q214MinkMembership(spark, base)
@@ -207,7 +207,7 @@ class AuditQueriesSpec extends SparkSpec {
       (0L, "the cat sat on the mat", "en", "s", 0L),   // calibration
       (1L, "the dog sat on the rug", "en", "s", 0L),
       (2L, "a completely different text here", "en", "s", 0L))
-    val base = s"/tmp/graft_q217_spec_${ProcessHandle.current().pid()}"
+    val base = scratch("q217")
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$base/documents.parquet")
     val out = AuditQueries.q217ConformalGate(spark, base).collect()

@@ -16,7 +16,7 @@ class LoadEventsEncodingSpec extends SparkSpec {
   import spark.implicits._
 
   test("all three physical time encodings yield identical (ts, ts_ns)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-evt-enc").toString
+    val dir = scratch("evt_enc")
     // exact-microsecond instants, incl. epoch, sub-second, and a
     // realistic 2024 value; all ns values are exact 1000-multiples so
     // truncating and flooring division agree (the Load.events contract)

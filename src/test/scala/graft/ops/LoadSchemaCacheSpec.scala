@@ -24,9 +24,6 @@ import graft.SparkSpec
 class LoadSchemaCacheSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(): String =
-    Files.createTempDirectory("graft-load-cache").toString
-
   /** Spark jobs started while `body` ran, and its result. */
   private def jobsDuring[T](body: => T): (Int, T) = {
     val sc = spark.sparkContext
@@ -46,10 +43,10 @@ class LoadSchemaCacheSpec extends SparkSpec {
   private def fields(s: StructType) = s.map(f => f.name -> f.dataType)
 
   test("a second read of an unchanged file starts no Spark job and returns the same schema") {
-    val dir = s"${tmp()}/t.parquet"
+    val dir = s"${scratch("load_cache_t")}/t.parquet"
     Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1).write.parquet(dir)
     val part = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).head
-    val file = s"${tmp()}/single.parquet"
+    val file = s"${scratch("load_cache_single")}/single.parquet"
     Files.copy(part.toPath, java.nio.file.Paths.get(file))
     // a flat directory as Spark writes it, and a single file
     Seq(dir, file).foreach { p =>
@@ -63,7 +60,7 @@ class LoadSchemaCacheSpec extends SparkSpec {
   }
 
   test("overwriting the path with different columns returns the new schema") {
-    val p = s"${tmp()}/t.parquet"
+    val p = s"${scratch("load_cache_overwrite")}/t.parquet"
     Seq((1L, "a")).toDF("k", "v").write.parquet(p)
     assert(fields(Load.parquet(spark, p).schema) == Seq("k" -> LongType, "v" -> StringType))
     Seq((1.5, true)).toDF("x", "y").write.mode("overwrite").parquet(p)
@@ -73,7 +70,7 @@ class LoadSchemaCacheSpec extends SparkSpec {
   }
 
   test("flipping spark.sql.legacy.parquet.nanosAsLong re-infers the schema") {
-    val p = s"${tmp()}/nanos.parquet"
+    val p = s"${scratch("load_cache_nanos")}/nanos.parquet"
     val schema = MessageTypeParser.parseMessageType(
       "message e { required int64 id; required int64 ts (TIMESTAMP(NANOS,true)); }")
     val w = ExampleParquetWriter.builder(new Path(p)).withType(schema).build()
@@ -95,7 +92,7 @@ class LoadSchemaCacheSpec extends SparkSpec {
   }
 
   test("a partitioned directory, a glob and a missing path take the uncached path") {
-    val base = tmp()
+    val base = scratch("load_cache_uncached")
     val rows = Seq((1L, "a", 1), (2L, "b", 2))
     rows.toDF("k", "v", "part").write.partitionBy("part").parquet(s"$base/pt")
     rows.toDF("k", "v", "part").write.parquet(s"$base/flat")

@@ -22,7 +22,7 @@ class MiscModulesSpec extends SparkSpec {
   }
 
   test("csv index fan-out synthesizes per-file migdar_id") {
-    val dir = java.nio.file.Files.createTempDirectory("csvidx")
+    val dir = java.nio.file.Paths.get(scratch("csvidx"))
     def writeCsv(name: String, body: String) = {
       val p = dir.resolve(name)
       java.nio.file.Files.write(p, body.getBytes("UTF-8")); p.toString
@@ -58,7 +58,7 @@ class MiscModulesSpec extends SparkSpec {
   }
 
   test("xlsx assets: cell grid from a chart doc, one file per row") {
-    val out = java.nio.file.Files.createTempDirectory("assets").toString
+    val out = scratch("assets")
     val docs = spark.sql(
       """SELECT 'dataset/abc' AS doc_id, 'כותרת' AS chart_title,
         |  array(named_struct('series_title', 'S1',

@@ -17,7 +17,7 @@ class SkewAuditSpec extends SparkSpec {
     import s.implicits._
     // key 7: 288 rows; keys 0..31 except 7: 1 row each → total 319
     val rows = Seq.fill(288)(7L) ++ (0L to 31L).filter(_ != 7L)
-    val dir = s"/tmp/graft_q227_spec_${ProcessHandle.current().pid()}"
+    val dir = scratch("q227")
     rows.toDF("l_suppkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val out = MiscOps.q227SkewAudit(spark, dir).collect()
@@ -43,7 +43,7 @@ class SkewAuditSpec extends SparkSpec {
       Seq.fill(4)(("aa", 100L)) ++ // var 0 → w 0
         Seq(("bb", 0L), ("bb", 0L), ("bb", 10L), ("bb", 10L)) ++ // var 400
         Seq(("cc", 0L), ("cc", 0L), ("cc", 0L), ("cc", 10L)) // var 300
-    val dir = s"/tmp/graft_q228_spec_${ProcessHandle.current().pid()}"
+    val dir = scratch("q228")
     rows.map { case (l, c) => (1L, "t", l, "s", c) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -22,7 +22,7 @@ class TClosenessSpec extends SparkSpec {
       (1 to 10).map(i => (i.toLong, 100.0, 0, "S")) ++
         (11 to 20).map(i => (i.toLong, 100.0, 1, "S")) ++
         (21 to 30).map(i => (i.toLong, 300.0, 0, "S"))
-    val dir = s"/tmp/graft_q222_spec_${ProcessHandle.current().pid()}"
+    val dir = scratch("q222")
     rows.toDF("c_custkey", "c_acctbal", "c_nationkey", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     val out = AuditQueries.q222TCloseness(spark, dir).collect()

@@ -110,7 +110,7 @@ class PipelinesSpec extends SparkSpec {
   }
 
   test("sitemap pipeline writes per-kind-language xmls") {
-    val out = java.nio.file.Files.createTempDirectory("sm").toString
+    val out = scratch("sm")
     val pubs = Seq("publications/p1").toDF("doc_id")
     val orgs = Seq("org/1").toDF("doc_id")
     val ds = Seq("dataset/abc").toDF("doc_id")

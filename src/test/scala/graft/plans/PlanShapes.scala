@@ -185,7 +185,7 @@ object PlanShapes {
     "q43_ann_ivf" -> Seq(codegen("nearest_centroid"), has[BroadcastHashJoinExec]),
     "q43b_ann_ivf_reload" -> Seq(codegen("nearest_centroid"), has[BroadcastHashJoinExec]),
     "q44_salted_join" -> Seq(has[UnionExec], has[GenerateExec], joinsUnder[UnionExec](2)),
-    "q46_dump_roundtrip" -> Seq(sinkOnly, reads("q46_graft_dump")),
+    "q46_dump_roundtrip" -> Seq(sinkOnly, reads("/q46_dump")),
     "q47_components" -> Seq(has[RDDScanExec]),
     "q48_decontaminate" -> Seq(joinOf(LeftSemi), has[BroadcastHashJoinExec]),
     "q49_domain_cap" -> Seq(topK, no[WindowExec]),
@@ -259,7 +259,7 @@ object PlanShapes {
     "q119_weighted_sample" -> Seq(topK, no[WindowExec], codegen("log2fix")),
     "q120_bm25_search" -> Seq(topK, broadcast, no[SortMergeJoinExec]),
     "q121_unimax_mix" -> Seq(partial(), keyed("lang")),
-    "q122_cms_frequency" -> Seq(partial(), keyed("depth", "bucket"), broadcasts("graft_cms")),
+    "q122_cms_frequency" -> Seq(partial(), keyed("depth", "bucket"), broadcasts("/cms_")),
     "q123_unigram_encode" -> Seq(uses("unigram_encode"), codegen("unigram_encode"),
       exchangesAtMost(2), sinkOnly),
     "q126_entropy_gate" -> Seq(codegen("char_entropy_fix"), hashShuffles(0), sinkOnly),
@@ -296,14 +296,14 @@ object PlanShapes {
       keyed("field", "v"), partial()),
     "q154_golden_record" -> Seq(partial("max"), Shape("no collect_list", !_.usesExpr("collect_list")),
       keyedOnce("cluster_id")),
-    "q156_incremental_index" -> Seq(reads("graft_bm25idx")),
+    "q156_incremental_index" -> Seq(reads("/bm25idx_")),
     "q157_cube" -> Seq(exactly[ExpandExec](1), partial(), hashShuffles(1), scansOnce),
     "q158_asof_forward" -> Seq(has[UnionExec], no[BaseJoinExec], keyedOnce("user_id")),
     "q159_time_spine" -> Seq(has[GenerateExec], noProduct),
     "q160_psi_drift" -> Seq(partial(), codegen("log2fix")),
     "q161_integrity_audit" -> Seq(joinOf(LeftAnti)),
-    "q163_incremental_lm" -> Seq(reads("graft_knlm"), keyed("v", "w")),
-    "q164_hll_distinct" -> Seq(reads("graft_hllreg"), partial("max")),
+    "q163_incremental_lm" -> Seq(reads("/knlm_"), keyed("v", "w")),
+    "q164_hll_distinct" -> Seq(reads("/hllreg_"), partial("max")),
     "q165_phrase_search" -> Seq(has[BroadcastHashJoinExec], no[CartesianProductExec],
       no[BroadcastNestedLoopJoinExec], partial("count")),
     "q165b_phrase_index_reload" -> Seq(reads("postings"), reads("term_df"), notReads("documents"),

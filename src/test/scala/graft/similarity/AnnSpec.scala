@@ -167,8 +167,7 @@ class AnnSpec extends SparkSpec {
     }
     val trained = Ann.ivfTrain(rows.toDF("vec_id", "embedding"),
       "embedding", nLists = 4, iterations = 5, sampleRows = 100)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-ann-roundtrip").toString
+    val path = scratch("ann_roundtrip")
     Ann.saveCentroids(spark, trained, path)
     val reloaded = Ann.loadCentroids(spark, path)
     assert(reloaded.length == trained.length &&

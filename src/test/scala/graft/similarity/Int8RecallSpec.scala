@@ -33,7 +33,7 @@ class Int8RecallSpec extends SparkSpec {
       202L -> Array(0.6f, 1.0f), 203L -> Array(0.6f, 1.1f),
       204L -> Array(0.6f, 1.2f),
       300L -> Array(0f, 0f)) // zero candidate: excluded, not NaN-top
-    val dir = s"/tmp/graft_q221_spec_${ProcessHandle.current().pid()}"
+    val dir = scratch("q221")
     rows.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val out = DedupQueries.q221Int8Recall(spark, dir).collect()

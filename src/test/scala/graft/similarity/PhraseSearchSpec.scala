@@ -81,8 +81,7 @@ class PhraseSearchSpec extends SparkSpec {
 
     // the persisted-index path (q165b): save postings + derived term-df,
     // reload, probe with the precomputed stats — row-for-row equal again
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-postidx-spec").toString
+    val path = scratch("postidx")
     PhraseSearch.saveIndex(post, path)
     val (rp, rtdf) = PhraseSearch.loadIndex(spark, path)
     val c = PhraseSearch.matchesRareFirstWithStats(rp, rtdf, terms)
@@ -100,8 +99,7 @@ class PhraseSearchSpec extends SparkSpec {
     val phrases = Seq(10L -> Seq("a", "b", "c"), 14L -> Seq("z", "z", "y"))
       .toDF("query_id", "ph")
     val terms = PhraseSearch.phraseTerms(phrases, "query_id", "ph")
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-postidx-inc-spec").toString
+    val base = this.scratch("postidx_inc")
     // generation 0: history only
     PhraseSearch.saveIndex(
       PhraseSearch.postings(hist, "text", "doc_id"), base)

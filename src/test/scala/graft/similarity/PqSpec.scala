@@ -64,7 +64,7 @@ class PqSpec extends SparkSpec {
   test("codebooks round-trip through the parquet artifact bit-exactly") {
     val books = Pq.train(emb, "embedding", m = 4, ksub = 4,
       iterations = 2, sampleRows = 100)
-    val path = s"/tmp/graft_pq_spec_${ProcessHandle.current().pid()}"
+    val path = scratch("pq")
     Pq.saveCodebooks(spark, books, path)
     val re = Pq.loadCodebooks(spark, path)
     assert(re.length === books.length)

@@ -6,15 +6,9 @@ import graft.SparkSpec
 
 class CorpusExportSpec extends SparkSpec {
 
-  private def freshDir(): String = {
-    val d = java.nio.file.Files.createTempDirectory("corpus_export")
-    d.toFile.deleteOnExit()
-    d.toString + "/out"
-  }
-
   test("hive layout: one directory per (lang, source); read-back is lossless") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val out = freshDir()
+    val out = scratch("corpus_hive") + "/out"
     CorpusExport.write(docs, out, Seq("lang", "source"), orderCol = "n_chars")
     val langDirs = new java.io.File(out).listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
@@ -27,7 +21,7 @@ class CorpusExportSpec extends SparkSpec {
 
   test("partition filters prune at the scan, not post-scan") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val out = freshDir()
+    val out = scratch("corpus_prune") + "/out"
     CorpusExport.write(docs, out, Seq("lang"), orderCol = "doc_id")
     val firstLang = docs.select("lang").distinct().limit(1)
       .collect()(0).getString(0)
@@ -41,7 +35,7 @@ class CorpusExportSpec extends SparkSpec {
 
   test("maxRecordsPerFile splits oversized partitions into parallel files") {
     val docs = spark.read.parquet(s"$sf/documents.parquet").coalesce(1)
-    val out = freshDir()
+    val out = scratch("corpus_split") + "/out"
     CorpusExport.write(docs, out, Seq("lang"), orderCol = "doc_id",
       maxRecordsPerFile = 10L)
     val someLang = new java.io.File(out).listFiles()
@@ -61,7 +55,7 @@ class CorpusExportSpec extends SparkSpec {
       (4L, "unicode שלום")) // Hebrew: non-ASCII survives
       .toDF("doc_id", "text")
     val sharded = graft.text.Splits.shardShuffle(docs, "doc_id", 2, "s")
-    val out = freshDir()
+    val out = scratch("corpus_jsonl") + "/out"
     CorpusExport.writeJsonlShards(sharded, out, "shard", "pos",
       Seq("doc_id", "pos", "text"))
     val schema = StructType(Seq(

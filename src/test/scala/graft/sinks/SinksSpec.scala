@@ -12,11 +12,8 @@ import graft.ops.ScdMerge
 class SinksSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   test("DocumentSink: carry-over keeps first-seen timestamp, sweep deletes stale") {
-    val store = tmpDir("docsink") + "/store"
+    val store = scratch("docsink") + "/store"
     val b1 = Seq(("d1", 5L), ("d2", 5L)).toDF("doc_id", "revision")
       .withColumn("create_timestamp", lit(null).cast(TimestampType))
     val s1 = DocumentSink.index(spark, b1, store, currentRevision = 5L)
@@ -55,8 +52,17 @@ class SinksSpec extends SparkSpec {
     assert(json.contains(""""n":{"type":"long"}"""))
   }
 
+  test("mappingJson escapes quotes and backslashes in field names") {
+    // a Hebrew acronym writes its gershayim as an ASCII quote
+    val names = Seq("מע\"מ", "a\\b")
+    val json = DocumentSink.mappingJson(StructType(names.map(StructField(_, StringType))))
+    val props = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json).get("properties")
+    assert(props.size == 2)
+    names.foreach(n => assert(props.get(n).get("type").asText == "text", json))
+  }
+
   test("DumpToPath writes csv + datapackage.json with schema") {
-    val out = tmpDir("dump")
+    val out = scratch("dump")
     val df = Seq((1L, "a", Seq("x", "y"))).toDF("id", "name", "tags")
     val ctx = Flow.resource(Resource(df, "items", primaryKey = Seq("id")))(Flow.empty)
     DumpToPath.dump(ctx, out, "testpkg")
@@ -68,7 +74,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("datapackage round-trip: DumpToPath → LoadDatapackage restores schema, pk, es:* metadata") {
-    val out = tmpDir("dp_roundtrip")
+    val out = scratch("dp_roundtrip")
     val meta = new MetadataBuilder().putBoolean("es:keyword", true).build()
     val df = Seq((1L, "alpha", Seq("x", "y")), (2L, "beta", Seq("z")))
       .toDF("id", "name", "tags")
@@ -91,7 +97,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("Sitemap writes per-resource xml + index") {
-    val out = tmpDir("sitemap")
+    val out = scratch("sitemap")
     val df = Seq("https://ex.org/a?x=1&y=2", "https://ex.org/b").toDF("url")
     Sitemap.dump(Map("orgs" -> df), "url", "https://ex.org", out)
     val xml = new String(Files.readAllBytes(Paths.get(s"$out/sitemap.orgs.xml")), "UTF-8")

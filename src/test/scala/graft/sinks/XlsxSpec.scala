@@ -6,7 +6,7 @@ import graft.sinks.Xlsx.Sheet
 class XlsxSpec extends SparkSpec {
 
   private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory("xlsx").resolve(name).toString
+    s"${scratch(s"xlsx_$name")}/$name"
 
   test("address codec: letters round-trip past Z") {
     assert(Xlsx.colLetters(1) == "A" && Xlsx.colLetters(26) == "Z" &&
@@ -107,7 +107,7 @@ class XlsxSpec extends SparkSpec {
   }
 
   test("writeAssets with the real XLSX writer emits one workbook per doc") {
-    val out = java.nio.file.Files.createTempDirectory("assets").toString
+    val out = scratch("xlsx_assets")
     val docs = spark.sql(
       """SELECT 'dataset/abc' AS doc_id, 'T' AS chart_title,
         |  array(named_struct('series_title', 'S1',

@@ -16,7 +16,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming windowed agg == batch windowed agg") {
     // file stream source needs a DIRECTORY of files
-    val dir = java.nio.file.Files.createTempDirectory("events_stream")
+    val dir = java.nio.file.Paths.get(scratch("events_stream"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("part-0.parquet"))
@@ -40,7 +40,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming KMV windowed-distinct == batch q116 exactly (set-function state)") {
-    val dir = java.nio.file.Files.createTempDirectory("events_kmv_stream")
+    val dir = java.nio.file.Paths.get(scratch("events_kmv_stream"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("part-0.parquet"))
@@ -63,7 +63,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming MG trending == batch q137 exactly (summary as state buffer)") {
-    val dir = java.nio.file.Files.createTempDirectory("events_mg_stream")
+    val dir = java.nio.file.Paths.get(scratch("events_mg_stream"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("part-0.parquet"))
@@ -88,7 +88,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup-within-watermark drops planted duplicate event_ids") {
     // source dir: the events file + a copy of itself = every event twice
-    val dir = java.nio.file.Files.createTempDirectory("events_dup_stream")
+    val dir = java.nio.file.Paths.get(scratch("events_dup_stream"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"), dir.resolve("a.parquet"))
     java.nio.file.Files.copy(
@@ -109,7 +109,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming interval join == batch funnel join (q53 twin)") {
-    val dir = java.nio.file.Files.createTempDirectory("events_join_stream")
+    val dir = java.nio.file.Paths.get(scratch("events_join_stream"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("part-0.parquet"))
@@ -134,7 +134,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-stream LEFT OUTER interval join == batch twin after the watermark flush (q186 twin)") {
-    val dir = java.nio.file.Files.createTempDirectory("events_outer_stream")
+    val dir = java.nio.file.Paths.get(scratch("events_outer_stream"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("part-0.parquet"))
@@ -156,7 +156,7 @@ class StreamingSpec extends SparkSpec {
       // run with it (eviction-only batches don't fire without new data)
       Seq(("flush1", 10, -1L), ("flush2", 20, -2L)).foreach {
         case (d, days, id) =>
-          val tmp = java.nio.file.Files.createTempDirectory(d)
+          val tmp = java.nio.file.Paths.get(scratch(s"outer_$d"))
           val base = spark.read.parquet(s"$sf/events.parquet")
             .orderBy(col("ts").desc).limit(1)
             .withColumn("ts", col("ts") + expr(s"interval $days days"))
@@ -193,7 +193,7 @@ class StreamingSpec extends SparkSpec {
     import graft.text.TextAnalysis
     // arriving stream source: the documents file (ids %3<>0 are new)
     // plus a replay of the history slice under shifted ids
-    val dir = java.nio.file.Files.createTempDirectory("docs_stream")
+    val dir = java.nio.file.Paths.get(scratch("docs_stream"))
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select("doc_id", "text")
     val history = docs.filter(col("doc_id") % 3 === 0)
@@ -224,8 +224,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming near-dup filter == batch twin regardless of micro-batch boundaries (q130 twin)") {
-    val dir = java.nio.file.Files.createTempDirectory("neardup_stream")
-    val out = java.nio.file.Files.createTempDirectory("neardup_out").toString
+    val dir = java.nio.file.Paths.get(scratch("neardup_stream"))
+    val out = scratch("neardup_out")
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select("doc_id", "text")
     val history = docs.filter(col("doc_id") % 3 === 0)
@@ -267,9 +267,9 @@ class StreamingSpec extends SparkSpec {
 
   test("late rows beyond the watermark are dropped from closed windows") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("late_stream")
+    val dir = java.nio.file.Paths.get(scratch("late_stream"))
     def addFile(tag: String, rows: Seq[(Long, String)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory(s"late_$tag")
+      val tmp = java.nio.file.Paths.get(scratch(s"late_$tag"))
       rows.toDF("event_id", "ts_s")
         .select(col("event_id"), to_timestamp(col("ts_s")).as("ts"))
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
@@ -309,8 +309,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("idempotent foreachBatch sink: a replayed batch does not duplicate") {
-    val src = java.nio.file.Files.createTempDirectory("idem_src")
-    val out = java.nio.file.Files.createTempDirectory("idem_out").toString
+    val src = java.nio.file.Paths.get(scratch("idem_src"))
+    val out = scratch("idem_out")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       src.resolve("part-0.parquet"))

@@ -123,7 +123,7 @@ class BpeSpec extends SparkSpec {
       (1L, "s t u s t u s t"), (2L, "t u s t u v v v")).toDF("doc_id", "text")
     val (_, merges) = Bpe.train(docs, "text", rounds = 3, sep = "_")
     assert(merges.nonEmpty)
-    val dir = java.nio.file.Files.createTempDirectory("bpe_artifact").toString
+    val dir = scratch("bpe_artifact")
     Bpe.saveMerges(spark, merges, dir)
     val reloaded = Bpe.loadMerges(spark, dir)
     assert(reloaded == merges, "rank order or strings changed in round-trip")

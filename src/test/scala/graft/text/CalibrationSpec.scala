@@ -42,7 +42,7 @@ class CalibrationSpec extends SparkSpec {
               else "zebra yak zebra zebra yak"
       (i, t, y, "s", 0L)
     }
-    val base = s"/tmp/graft_q216_spec_${ProcessHandle.current().pid()}"
+    val base = scratch("q216")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$base/documents.parquet")
     val out = TextQueries.q216NbCalibration(spark, base).collect()

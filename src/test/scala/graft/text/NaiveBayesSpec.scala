@@ -54,7 +54,7 @@ class NaiveBayesSpec extends SparkSpec {
   }
 
   test("model round-trips through parquet artifacts without changing predictions") {
-    val dir = java.nio.file.Files.createTempDirectory("nb").toString
+    val dir = scratch("nb")
     model.wordProbs.write.mode("overwrite").parquet(s"$dir/wp")
     model.classStats.write.mode("overwrite").parquet(s"$dir/cs")
     val reloaded = NaiveBayes.Model(

@@ -15,7 +15,7 @@ class NbKappaSpec extends SparkSpec {
   private def write(rows: Seq[(Long, String, String)], tag: String): String = {
     val s = spark
     import s.implicits._
-    val dir = s"/tmp/graft_q229_${tag}_${ProcessHandle.current().pid()}"
+    val dir = scratch(s"q229_$tag")
     rows.map { case (id, t, l) => (id, t, l, "s", 0L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
