@@ -38,56 +38,24 @@ object GraftExtensions {
       s"$what must be an integer literal, got $other")
   }
 
-  private def strArg(e: Expression, what: String): String = e match {
-    case Literal(s: org.apache.spark.unsafe.types.UTF8String, _) => s.toString
-    case other => throw new IllegalArgumentException(
-      s"$what must be a string literal, got $other")
-  }
-
   private def info(name: String, usage: String): ExpressionInfo =
     new ExpressionInfo("graft", null, name, usage, "")
 
-  /** (name, info, builder) for every SQL-exposed native expression. */
-  val sqlFunctions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("simhash64", info("simhash64",
-      "simhash64(hashes) - 64-bit SimHash of an array<bigint> of shingle hashes"),
-      { case Seq(c) => SimHash64(c) }: Seq[Expression] => Expression),
-    ("shingle_hash64", info("shingle_hash64",
-      "shingle_hash64(text, n) - distinct char-n-gram hashes, normalization fused"),
-      { case Seq(c, n) => ShingleHash64(c, intArg(n, "n")) }),
-    ("minhash_sig", info("minhash_sig",
-      "minhash_sig(hashes, k) - classic k-mix MinHash signature"),
-      { case Seq(c, k) => MinHashSig(c, intArg(k, "k")) }),
-    ("minhash_sig_oph", info("minhash_sig_oph",
-      "minhash_sig_oph(hashes, k) - one-permutation MinHash, k a power of two"),
-      { case Seq(c, k) => MinHashSigOph(c, intArg(k, "k")) }),
-    ("cosine_sim", info("cosine_sim",
-      "cosine_sim(a, b) - cosine similarity of two array<float> vectors"),
-      { case Seq(a, b) => CosineSim(a, b) }),
+  /** (name, info, builder) for every SQL-exposed native expression: each
+    * SQL-callable entry of the kernel table, then the two aggregates. */
+  val sqlFunctions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] =
+    Kernels.all.filter(_.sqlCallable).map { k =>
+      (k.name, info(k.name, s"${k.name}(${k.params.map(_.getSimpleName).mkString(", ")}) - " +
+        s"${k.staticObject.getSimpleName.stripSuffix("$")}.${k.method}"), k.expr _)
+    } ++ Seq(
     ("bounded_collect_long", info("bounded_collect_long",
       "bounded_collect_long(v, cap) - collect bigints, NULL past cap or below 2"),
       { case Seq(c, cap) =>
         BoundedCollectLong(c, intArg(cap, "cap")).toAggregateExpression() }),
-    ("compression_ratio", info("compression_ratio",
-      "compression_ratio(text) - deflate(text)/len(text), the redundancy signal"),
-      { case Seq(c) => CompressionRatio(c) }),
-    ("morton2", info("morton2",
-      "morton2(a, b) - 64-bit Z-order interleave of two bigints (low 32 bits each)"),
-      { case Seq(a, b) => Morton2(a, b) }),
     ("freq_items", info("freq_items",
       "freq_items(tokens, capacity) - Misra-Gries heavy hitters over array<string>"),
       { case Seq(c, cap) =>
-        FreqItems(c, intArg(cap, "capacity")).toAggregateExpression() }),
-    ("url_parts", info("url_parts",
-      "url_parts(url) - one-pass struct<protocol,authority,path,query,host>, NULL on malformed"),
-      { case Seq(c) => UrlParts(c) }),
-    ("bpe_merge", info("bpe_merge",
-      "bpe_merge(tokens, l, r, sep) - greedy leftmost single-rule BPE rewrite"),
-      { case Seq(c, l, r, sep) =>
-        BpeMerge(c, strArg(l, "l"), strArg(r, "r"), strArg(sep, "sep")) }),
-    ("cdc_chunks", info("cdc_chunks",
-      "cdc_chunks(text) - content-defined chunk array (Rabin-style boundaries)"),
-      { case Seq(c) => CdcChunks(c) }))
+        FreqItems(c, intArg(cap, "capacity")).toAggregateExpression() }))
 
   /** Install everything into an already-running session (extensions
     * normally apply only at session build time).

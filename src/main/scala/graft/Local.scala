@@ -36,7 +36,8 @@ object Local {
 
   /** `local[cores]` session with one shuffle partition per core, UTC,
     * no UI, and the library's planner extensions installed. Timestamps
-    * stored as TIMESTAMP(NANOS) read as longs (`Load.events` converts). */
+    * stored as TIMESTAMP(NANOS) read as longs (`Load.events` converts).
+    * Managed tables live in [[ScratchDirs.warehouse]]. */
   def session(cores: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
@@ -45,6 +46,7 @@ object Local {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.warehouse.dir", ScratchDirs.warehouse)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftExtensions.install(spark) // strategy + rewrite rule + SQL functions

@@ -28,6 +28,10 @@ private[graft] object ScratchDirs {
     r
   }
 
+  /** The session's `spark.sql.warehouse.dir`: managed tables
+    * (`saveAsTable`) go with the root. */
+  def warehouse: String = new File(root, "warehouse").getPath
+
   /** Hex key of the dir's canonical path — stable per filesystem
     * location, distinct across locations sharing a basename.
     */

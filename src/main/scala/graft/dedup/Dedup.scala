@@ -73,8 +73,8 @@ object Dedup {
   }
 
   /** MinHash signature: k permutations approximated by k seeded mixes of
-    * one xxhash64 per shingle — a single-pass native expression
-    * (graft.functions.MinHashSig); the builtin-only formulation would
+    * one xxhash64 per shingle — a single-pass `minhash_sig` kernel
+    * ([[graft.functions.HashKernels.minhashSig]]); the builtin-only formulation would
     * traverse the shingle array k times.
     */
   def minhashSignature(shingleArr: Column, k: Int = 64): Column =
@@ -306,8 +306,8 @@ object Dedup {
   // ---- simhash ---------------------------------------------------------
 
   /** 64-bit SimHash over shingle hashes: bit i of the result is 1 iff the
-    * majority of shingles have bit i set in their hash. One-pass native
-    * expression (graft.functions.SimHash64).
+    * majority of shingles have bit i set in their hash. One-pass
+    * `simhash64` kernel ([[graft.functions.HashKernels.simhash64]]).
     */
   def simhash(shingleArr: Column): Column =
     graft.functions.HashExprs.simhash64(transform(shingleArr, s => xxhash64(s)))
@@ -357,7 +357,7 @@ object Dedup {
   // ---- exact n-gram jaccard -------------------------------------------
 
   /** Exact Jaccard similarity of two shingle arrays (general form —
-    * builds per-row hash sets; use `jaccardSorted` on ShingleHash64
+    * builds per-row hash sets; use `jaccardSorted` on `shingle_hash64`
     * output).
     */
   def jaccard(a: Column, b: Column): Column = {

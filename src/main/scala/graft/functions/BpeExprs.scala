@@ -1,13 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** O(n) greedy-leftmost BPE merge over a token array — the codegen'd
+/** O(n) greedy-leftmost BPE merge over a token array — the `bpe_merge`
   * kernel behind [[graft.text.Bpe.applyMerge]]. A builtin `aggregate`
   * fold expresses the same scan but copies the accumulator array per
   * element (quadratic) and runs interpreted; this is one linear pass.
@@ -36,39 +33,11 @@ object BpeKernels {
   }
 }
 
-/** `bpe_merge(tokens, l, r, sep)`: greedy leftmost single-rule BPE
-  * rewrite; the rule strings ride as codegen reference objects.
-  */
-case class BpeMerge(child: Expression, l: String, r: String, sep: String)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def prettyName: String = "bpe_merge"
-
-  private lazy val lU = UTF8String.fromString(l)
-  private lazy val rU = UTF8String.fromString(r)
-  private lazy val mergedU = UTF8String.fromString(l + sep + r)
-
-  override def nullSafeEval(input: Any): Any =
-    BpeKernels.merge(input.asInstanceOf[ArrayData], lU, rU, mergedU)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lRef = ctx.addReferenceObj("l", lU, "org.apache.spark.unsafe.types.UTF8String")
-    val rRef = ctx.addReferenceObj("r", rU, "org.apache.spark.unsafe.types.UTF8String")
-    val mRef = ctx.addReferenceObj("m", mergedU, "org.apache.spark.unsafe.types.UTF8String")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeKernels.merge($c, $lRef, $rRef, $mRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeMerge =
-    copy(child = newChild)
-}
-
 /** A trained BPE merge table prepared for the encode kernel: rank lookup
   * as nested UTF8String maps (zero-allocation probes) plus per-rank
-  * left/right/merged token strings. Ships to executors once as a codegen
-  * reference object — the table is a bounded tokenizer artifact (~50k
-  * rules), like the k-means centroids.
+  * left/right/merged token strings. Built once per JVM from a
+  * [[BpeMerges]] value — the table is a bounded tokenizer artifact (~50k
+  * rules).
   */
 final class BpeTable(merges: Seq[(String, String)], sep: String)
     extends Serializable {
@@ -132,6 +101,12 @@ object BpeEncodeKernel {
     run(toks, t)
   }
 
+  /** The `bpe_encode` entry. */
+  def encodeWord(word: UTF8String, m: BpeMerges): ArrayData = encode(word, m.table)
+
+  /** The `bpe_encode_tokens` entry. */
+  def encodeArray(arr: ArrayData, m: BpeMerges): ArrayData = encodeTokens(arr, m.table)
+
   private def run(toks0: java.util.ArrayList[AnyRef],
       t: BpeTable): ArrayData = {
     var toks = toks0
@@ -167,67 +142,24 @@ object BpeEncodeKernel {
   }
 }
 
-/** `bpe_encode(word, table)`: tokenize one word with a trained merge
-  * table. The table rides as a single reference object, so the whole
-  * encode stays inside whole-stage codegen.
+/** What a `bpe_encode` call is compared by: the merge list and the
+  * separator. The kernel reads its [[BpeTable]], built once per JVM.
   */
-case class BpeEncode(child: Expression, merges: Seq[(String, String)],
-    sep: String) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "bpe_encode"
-
-  @transient private lazy val table = new BpeTable(merges, sep)
-
-  override def nullSafeEval(input: Any): Any =
-    BpeEncodeKernel.encode(input.asInstanceOf[UTF8String], table)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tRef = ctx.addReferenceObj("bpeTable", table, "graft.functions.BpeTable")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeEncodeKernel.encode($c, $tRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpeEncode =
-    copy(child = newChild)
-}
-
-/** `bpe_encode_tokens(tokens, table)`: the word-level variant — apply a
-  * trained table to an existing token array (q89's granularity, where
-  * the alphabet is whole words).
-  */
-case class BpeEncodeTokens(child: Expression, merges: Seq[(String, String)],
-    sep: String) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def prettyName: String = "bpe_encode_tokens"
-
-  @transient private lazy val table = new BpeTable(merges, sep)
-
-  override def nullSafeEval(input: Any): Any =
-    BpeEncodeKernel.encodeTokens(input.asInstanceOf[ArrayData], table)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tRef = ctx.addReferenceObj("bpeTable", table, "graft.functions.BpeTable")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeEncodeKernel.encodeTokens($c, $tRef);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): BpeEncodeTokens = copy(child = newChild)
+final case class BpeMerges(merges: Seq[(String, String)], sep: String) {
+  @transient lazy val table: BpeTable = KernelTables(this)(m => new BpeTable(m.merges, m.sep))
 }
 
 object BpeExprs {
-  import org.apache.spark.sql.{GraftBridge => EU}
-
+  /** Greedy leftmost single-rule BPE rewrite. */
   def bpeMerge(tokens: Column, l: String, r: String, sep: String): Column =
-    EU.column(BpeMerge(EU.expression(tokens), l, r, sep))
+    Kernels.bpeMerge(tokens, l, r, sep)
 
-  def bpeEncode(word: Column, merges: Seq[(String, String)],
-      sep: String): Column =
-    EU.column(BpeEncode(EU.expression(word), merges, sep))
+  /** Tokenize one word with a trained merge table. */
+  def bpeEncode(word: Column, merges: Seq[(String, String)], sep: String): Column =
+    Kernels.bpeEncode(word, BpeMerges(merges, sep))
 
-  def bpeEncodeTokens(tokens: Column, merges: Seq[(String, String)],
-      sep: String): Column =
-    EU.column(BpeEncodeTokens(EU.expression(tokens), merges, sep))
+  /** The word-level variant: apply a trained table to an existing token
+    * array (q89's granularity, where the alphabet is whole words). */
+  def bpeEncodeTokens(tokens: Column, merges: Seq[(String, String)], sep: String): Column =
+    Kernels.bpeEncodeTokens(tokens, BpeMerges(merges, sep))
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Content-defined chunking (Rabin-style): cut a document into chunks
@@ -56,26 +53,7 @@ object CdcKernels {
   }
 }
 
-/** `cdc_chunks(text)`: content-defined chunk array. */
-case class CdcChunks(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "cdc_chunks"
-
-  override def nullSafeEval(input: Any): Any =
-    CdcKernels.chunks(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CdcKernels.chunks($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): CdcChunks =
-    copy(child = newChild)
-}
-
 object CdcExprs {
-  import org.apache.spark.sql.{GraftBridge => EU}
-
-  def cdcChunks(text: Column): Column =
-    EU.column(CdcChunks(EU.expression(text)))
+  /** `cdc_chunks(text)`: content-defined chunk array. */
+  def cdcChunks(text: Column): Column = Kernels.cdcChunks(text)
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Exact integer −log₂ for fixed-point probabilities — the piece that
   * lets perplexity-style LM scoring stay float-free end to end. A
@@ -79,53 +76,14 @@ object FixedLogKernel {
   }
 }
 
-/** `log2fix(p)`: codegen'd exact fixed-point binary log (see
-  * [[FixedLogKernel.log2fix]]).
-  */
-case class Log2Fix(child: Expression, scaleBits: Int, fracBits: Int)
-    extends UnaryExpression {
-  require(scaleBits >= 1 && scaleBits <= 30, "scaleBits must be in [1, 30]")
-  require(fracBits >= 0 && fracBits <= 32, "fracBits must be in [0, 32]")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "log2fix"
-
-  override def nullSafeEval(input: Any): Any =
-    FixedLogKernel.log2fix(input.asInstanceOf[Long], scaleBits, fracBits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.FixedLogKernel.log2fix($c, $scaleBits, $fracBits);")
-
-  override protected def withNewChildInternal(newChild: Expression): Log2Fix =
-    copy(child = newChild)
-}
-
-/** `pow2_neg_fix(y)`: codegen'd fixed-point 2^(−y/2¹⁶) at scale 2³¹
-  * (see [[FixedLogKernel.pow2NegFix]]).
-  */
-case class Pow2NegFix(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "pow2_neg_fix"
-
-  override def nullSafeEval(input: Any): Any =
-    FixedLogKernel.pow2NegFix(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.FixedLogKernel.pow2NegFix($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Pow2NegFix =
-    copy(child = newChild)
-}
-
 object FixedLogExprs {
-  import org.apache.spark.sql.{GraftBridge => EU}
+  /** Exact fixed-point binary log (see [[FixedLogKernel.log2fix]]). */
+  def log2fix(p: Column, scaleBits: Int, fracBits: Int): Column = {
+    require(scaleBits >= 1 && scaleBits <= 30, "scaleBits must be in [1, 30]")
+    require(fracBits >= 0 && fracBits <= 32, "fracBits must be in [0, 32]")
+    Kernels.log2fix(p, scaleBits, fracBits)
+  }
 
-  def log2fix(p: Column, scaleBits: Int, fracBits: Int): Column =
-    EU.column(Log2Fix(EU.expression(p), scaleBits, fracBits))
-
-  def pow2NegFix(y: Column): Column =
-    EU.column(Pow2NegFix(EU.expression(y)))
+  /** Fixed-point 2^(−y/2¹⁶) at scale 2³¹ (see [[FixedLogKernel.pow2NegFix]]). */
+  def pow2NegFix(y: Column): Column = Kernels.pow2NegFix(y)
 }

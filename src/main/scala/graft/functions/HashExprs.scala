@@ -1,21 +1,17 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom Catalyst expressions for the dedup hot path. Each implements
-  * `doGenCode` as a call into a static kernel (`HashKernels`), so the
-  * expression participates in whole-stage codegen — no interpreted-eval
-  * glue, no per-row boxing — while the kernel itself is one pass of tight
-  * JVM arithmetic. The builtin-only formulation needs 64 (simhash) / k
-  * (minhash) separate array traversals with per-element expression trees,
-  * and materializes every shingle as a UTF8String. At 100 TB of documents
-  * this is the difference between a scan-bound and a CPU-bound dedup
-  * stage.
+/** Kernels for the dedup hot path. Each is a static method that a
+  * [[Kernels]] entry calls, so the call sits inside whole-stage codegen
+  * with no interpreted-eval glue and no per-row boxing, while the kernel
+  * itself is one pass of tight JVM arithmetic. The builtin-only
+  * formulation needs 64 (simhash) / k (minhash) separate array traversals
+  * with per-element expression trees, and materializes every shingle as a
+  * UTF8String. At 100 TB of documents this is the difference between a
+  * scan-bound and a CPU-bound dedup stage.
   */
 object HashKernels {
 
@@ -241,7 +237,7 @@ object HashKernels {
 
   /** Intersection size of two SORTED long arrays by merge walk — O(n+m),
     * zero allocation; `array_intersect` builds a hash set per row.
-    * ShingleHash64 output is sorted by construction, so the exact-Jaccard
+    * [[shingleHash64]] output is sorted by construction, so the exact-Jaccard
     * verify tier runs on this.
     */
   def sortedIntersectCount(a: ArrayData, b: ArrayData): Int = {
@@ -324,6 +320,32 @@ object HashKernels {
     mx.toDouble / n
   }
 
+  /** The `simhash64` entry: NULL for an empty hash array. */
+  def simhash64OrNull(arr: ArrayData): java.lang.Long =
+    if (arr.numElements() == 0) null else java.lang.Long.valueOf(simhash64(arr))
+
+  /** The `minhash_sig` entry: NULL for an empty hash array. Slot j mixes
+    * with a distinct 64-bit multiply-add-xorshift (splitmix-style) — k
+    * cheap mixes of one base hash instead of k full string hashes; the
+    * seed constants are derived once per JVM per k.
+    */
+  def minhashSigOrNull(arr: ArrayData, k: Int): ArrayData =
+    if (arr.numElements() == 0) null
+    else {
+      val seeds = KernelTables(("minhash_sig", Integer.valueOf(k)))(_ => Array(
+        Array.tabulate(k)(j => splitmix(j * 2 + 1) | 1L),
+        Array.tabulate(k)(j => splitmix(j * 2 + 2))))
+      minhashSig(arr, seeds(0), seeds(1))
+    }
+
+  /** The `minhash_sig_oph` entry: NULL for an empty hash array. A SQL
+    * caller's k is checked here, since any other k gives a wrong
+    * signature rather than an error. */
+  def minhashSigOphOrNull(arr: ArrayData, k: Int): ArrayData = {
+    require(k > 0 && (k & (k - 1)) == 0, s"k must be a power of two, got $k")
+    if (arr.numElements() == 0) null else minhashSigOph(arr, k)
+  }
+
   def splitmix(x0: Long): Long = {
     var x = x0 + 0x9E3779B97F4A7C15L
     x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
@@ -332,225 +354,32 @@ object HashKernels {
   }
 }
 
-/** 64-bit SimHash over pre-hashed shingles. Null/empty input → null. */
-case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "simhash64"
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    if (arr.numElements() == 0) null else HashKernels.simhash64(arr)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      if ($c.numElements() == 0) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = graft.functions.HashKernels.simhash64($c);
-      }""")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-/** MinHash signature of length k over pre-hashed shingles: slot j holds
-  * min over shingles of mix_j(h) where mix_j is a distinct 64-bit
-  * multiply-add-xorshift (splitmix-style) — k cheap mixes of one base
-  * hash instead of k full string hashes. Null/empty input → null.
-  */
-case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "minhash_sig"
-
-  // Seed constants derived once per slot (splitmix64 of the slot index).
-  @transient private lazy val mults: Array[Long] =
-    Array.tabulate(k)(j => HashKernels.splitmix(j * 2 + 1) | 1L)
-  @transient private lazy val adds: Array[Long] =
-    Array.tabulate(k)(j => HashKernels.splitmix(j * 2 + 2))
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    if (arr.numElements() == 0) null else HashKernels.minhashSig(arr, mults, adds)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val multsRef = ctx.addReferenceObj("mults", mults, "long[]")
-    val addsRef = ctx.addReferenceObj("adds", adds, "long[]")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      if ($c.numElements() == 0) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = graft.functions.HashKernels.minhashSig($c, $multsRef, $addsRef);
-      }""")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-/** One-permutation-hashing MinHash signature (see HashKernels
-  * .minhashSigOph): O(n + k) per doc. Null/empty input → null; k must be
-  * a power of two.
-  */
-case class MinHashSigOph(child: Expression, k: Int) extends UnaryExpression {
-  require(k > 0 && (k & (k - 1)) == 0, s"k must be a power of two, got $k")
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "minhash_sig_oph"
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    if (arr.numElements() == 0) null else HashKernels.minhashSigOph(arr, k)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      if ($c.numElements() == 0) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = graft.functions.HashKernels.minhashSigOph($c, $k);
-      }""")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigOph =
-    copy(child = newChild)
-}
-
-/** Distinct character-n-gram hashes of a string in ONE pass, with the
-  * lowercase + whitespace-collapse normalization fused into the same
-  * character scan (replaces a separate `regexp_replace(lower(...))`).
-  */
-case class ShingleHash64(child: Expression, n: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "shingle_hash64"
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.shingleHash64(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashKernels.shingleHash64($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHash64 =
-    copy(child = newChild)
-}
-
-/** Distinct winnowing fingerprints (window-minimum n-gram hashes) in
-  * one codegen'd pass (see kernel doc).
-  */
-case class WinnowHash64(child: Expression, n: Int, w: Int)
-    extends UnaryExpression {
-  require(n > 0 && w > 0, s"need n > 0 and w > 0, got n=$n w=$w")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "winnow_hash64"
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.winnowHash64(input.asInstanceOf[UTF8String], n, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashKernels.winnowHash64($c, $n, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowHash64 =
-    copy(child = newChild)
-}
-
-/** Intersection size of two SORTED array<bigint> columns (merge walk).
-  * Inputs MUST be sorted ascending and deduplicated — ShingleHash64's
-  * output contract.
-  */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_intersect_count"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    HashKernels.sortedIntersectCount(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.HashKernels.sortedIntersectCount($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCount =
-    copy(left = newLeft, right = newRight)
-}
-
-/** One-pass top-token-fraction (see HashKernels.topTokenFraction). */
-case class TopTokenFraction(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "top_token_fraction"
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.topTokenFraction(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashKernels.topTokenFraction($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): TopTokenFraction =
-    copy(child = newChild)
-}
-
-/** One-pass fingerprint normalization (see HashKernels.fingerprintNormalize). */
-case class FingerprintNormalize(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "fingerprint_normalize"
-
-  override def nullSafeEval(input: Any): Any =
-    HashKernels.fingerprintNormalize(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashKernels.fingerprintNormalize($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): FingerprintNormalize =
-    copy(child = newChild)
-}
-
+/** Column wrappers; argument checks run when the plan is built. */
 object HashExprs {
-  import org.apache.spark.sql.{GraftBridge => EU}
+  def simhash64(hashes: Column): Column = Kernels.simhash64(hashes)
 
-  /** Column wrappers (classic-API expression bridge). */
-  def simhash64(hashes: Column): Column =
-    EU.column(SimHash64(EU.expression(hashes)))
+  def minhashSig(hashes: Column, k: Int): Column = Kernels.minhashSig(hashes, k)
 
-  def minhashSig(hashes: Column, k: Int): Column =
-    EU.column(MinHashSig(EU.expression(hashes), k))
-
-  def minhashSigOph(hashes: Column, k: Int): Column =
-    EU.column(MinHashSigOph(EU.expression(hashes), k))
+  def minhashSigOph(hashes: Column, k: Int): Column = {
+    require(k > 0 && (k & (k - 1)) == 0, s"k must be a power of two, got $k")
+    Kernels.minhashSigOph(hashes, k)
+  }
 
   /** Shingle hashes of RAW text — normalization is fused inside. */
-  def shingleHash64(text: Column, n: Int): Column =
-    EU.column(ShingleHash64(EU.expression(text), n))
+  def shingleHash64(text: Column, n: Int): Column = Kernels.shingleHash64(text, n)
 
   /** Winnowing fingerprints of RAW text — normalization fused inside. */
-  def winnowHash64(text: Column, n: Int, w: Int): Column =
-    EU.column(WinnowHash64(EU.expression(text), n, w))
+  def winnowHash64(text: Column, n: Int, w: Int): Column = {
+    require(n > 0 && w > 0, s"need n > 0 and w > 0, got n=$n w=$w")
+    Kernels.winnowHash64(text, n, w)
+  }
 
   /** Merge-walk intersection size of two sorted array<bigint> columns. */
-  def sortedIntersectCount(a: Column, b: Column): Column =
-    EU.column(SortedIntersectCount(EU.expression(a), EU.expression(b)))
+  def sortedIntersectCount(a: Column, b: Column): Column = Kernels.sortedIntersectCount(a, b)
 
   /** One-pass fingerprint normalization (lower, keep word chars, collapse spaces). */
-  def fingerprintNormalize(text: Column): Column =
-    EU.column(FingerprintNormalize(EU.expression(text)))
+  def fingerprintNormalize(text: Column): Column = Kernels.fingerprintNormalize(text)
 
   /** One-pass most-frequent-token fraction. */
-  def topTokenFraction(text: Column): Column =
-    EU.column(TopTokenFraction(EU.expression(text)))
+  def topTokenFraction(text: Column): Column = Kernels.topTokenFraction(text)
 }

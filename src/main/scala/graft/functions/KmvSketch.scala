@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -159,24 +158,8 @@ case class KmvUnion(
   * so the value and every downstream comparison stay non-negative in
   * signed-64 engines.
   */
-case class KmvHash62(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "kmv_hash62"
-
-  override def nullSafeEval(input: Any): Any =
-    KmvHash62.hashJava(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.KmvHash62.hashJava($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): KmvHash62 =
-    copy(child = newChild)
-}
-
 object KmvHash62 {
-  /** Codegen entry point. CODEPOINT iteration, not UTF-16 units: the
+  /** The `kmv_hash62` entry. CODEPOINT iteration, not UTF-16 units: the
     * DuckDB mirror (`ord(substring(...))`) walks codepoints, and a
     * surrogate-pair divergence would silently break the oracle on
     * non-BMP input (the CDC-kernel lesson).
@@ -197,20 +180,13 @@ object KmvHash62 {
 /** `kmv_estimate(sketch, k)`: the KMV cardinality estimator. Below k
   * the sketch is exhaustive → exact size; at capacity,
   * floor((k−1) · 2^62 / h_k), computed in 128-bit (BigInt) because the
-  * numerator overflows int64 for k > 2 — this is a per-GROUP scalar on
-  * already-aggregated output (cold path), hence CodegenFallback rather
-  * than a codegen'd kernel. Clamped to Long.Max; h_k = 0 cannot occur
-  * for k ≥ 2 (hashes are distinct non-negatives, so h_k ≥ k−1 ≥ 1).
+  * numerator overflows int64 for k > 2 — a per-GROUP scalar on
+  * already-aggregated output (cold path). Clamped to Long.Max; h_k = 0
+  * cannot occur for k ≥ 2 (hashes are distinct non-negatives, so
+  * h_k ≥ k−1 ≥ 1).
   */
-case class KmvEstimate(child: Expression, k: Int)
-    extends UnaryExpression with CodegenFallback {
-  require(k >= 2, "kmv_estimate: k must be >= 2")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "kmv_estimate"
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+object KmvEstimate {
+  def estimate(arr: ArrayData, k: Int): Long = {
     val n = arr.numElements()
     if (n < k) n.toLong
     else {
@@ -219,16 +195,13 @@ case class KmvEstimate(child: Expression, k: Int)
       if (est > Long.MaxValue) Long.MaxValue else est.toLong
     }
   }
-
-  override protected def withNewChildInternal(newChild: Expression): KmvEstimate =
-    copy(child = newChild)
 }
 
 object Kmv {
   import org.apache.spark.sql.{GraftBridge => EU}
 
   /** 62-bit splitmix token hash; see [[KmvHash62]]. */
-  def hash62(s: Column): Column = EU.column(KmvHash62(EU.expression(s)))
+  def hash62(s: Column): Column = Kernels.kmvHash62(s)
 
   /** KMV sketch of a 62-bit hash column; see [[KmvSketch]]. */
   def sketch(hash: Column, k: Int): Column =
@@ -239,6 +212,8 @@ object Kmv {
     EU.column(KmvUnion(EU.expression(sketches), k).toAggregateExpression())
 
   /** Cardinality estimate of a sketch; see [[KmvEstimate]]. */
-  def estimate(sketch: Column, k: Int): Column =
-    EU.column(KmvEstimate(EU.expression(sketch), k))
+  def estimate(sketch: Column, k: Int): Column = {
+    require(k >= 2, "kmv_estimate: k must be >= 2")
+    Kernels.kmvEstimate(sketch, k)
+  }
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Multi-pattern blocklist scrub: replace every occurrence of any of N
@@ -22,9 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * position (every pattern re-tried at every character), so a 10k-term
   * blocklist makes regexp_replace quadratic-ish in practice. This is an
   * Aho–Corasick automaton instead — O(text + matches) independent of
-  * term count — built ONCE per executor from the term list (a codegen
-  * reference object, the BPE-merge-table pattern) and shared by every
-  * row. Matching is on exact character sequences (caller normalizes
+  * term count — built ONCE per JVM from the term list (a literal
+  * argument, compared by value) and shared by every row. Matching is on exact character sequences (caller normalizes
   * case); terms may contain spaces (phrases).
   */
 object MultiReplaceKernel {
@@ -100,18 +96,8 @@ object MultiReplaceKernel {
     }
   }
 
-  // one automaton per distinct term list per executor. Terms are plan
-  // literals so a single query contributes one entry — but a long-lived
-  // session running MANY distinct blocklists would accumulate, so the
-  // cache is bounded: past 64 entries it resets (worst case the next
-  // call rebuilds its automaton — correctness never depends on a hit)
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[Seq[String], Automaton]()
-
-  def automaton(terms: Seq[String]): Automaton = {
-    if (cache.size > 64) cache.clear()
-    cache.computeIfAbsent(terms, ts => new Automaton(ts.toArray))
-  }
+  /** One automaton per distinct term list per JVM. */
+  def automaton(terms: Seq[String]): Automaton = KernelTables(terms)(ts => new Automaton(ts.toArray))
 
   /** Leftmost-longest non-overlapping replace. Two phases: AC collects
     * END-anchored longest matches, then a reverse greedy pass selects
@@ -142,40 +128,16 @@ object MultiReplaceKernel {
     }
     sb.toString
   }
-}
 
-/** `multi_replace(text)` for a fixed term list + replacement. */
-case class MultiReplace(child: Expression, terms: Seq[String], repl: String)
-    extends UnaryExpression {
-  require(terms.nonEmpty && terms.forall(_.nonEmpty),
-    "multi_replace: terms must be non-empty")
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "multi_replace"
-
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(MultiReplaceKernel.replaceAll(
-      input.asInstanceOf[UTF8String].toString, terms, repl))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // Scala 2.13's Seq = immutable.Seq; the reference-obj type must name
-    // the exact erased parameter type or janino rejects the call and the
-    // whole projection silently falls back to interpreter mode
-    val termsRef = ctx.addReferenceObj("terms", terms,
-      "scala.collection.immutable.Seq")
-    val replRef = ctx.addReferenceObj("repl", repl, "java.lang.String")
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.MultiReplaceKernel.replaceAll($c.toString(), $termsRef, $replRef))")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MultiReplace =
-    copy(child = newChild)
+  /** The `multi_replace` entry. */
+  def replace(text: UTF8String, terms: Seq[String], repl: UTF8String): UTF8String =
+    UTF8String.fromString(replaceAll(text.toString, terms, repl.toString))
 }
 
 object MultiReplaceExpr {
-  import org.apache.spark.sql.{GraftBridge => EU}
-
-  def multiReplace(text: Column, terms: Seq[String], repl: String): Column =
-    EU.column(MultiReplace(EU.expression(text), terms, repl))
+  /** `multi_replace(text)` for a fixed term list + replacement. */
+  def multiReplace(text: Column, terms: Seq[String], repl: String): Column = {
+    require(terms.nonEmpty && terms.forall(_.nonEmpty), "multi_replace: terms must be non-empty")
+    Kernels.multiReplace(text, terms, repl)
+  }
 }

@@ -3,12 +3,9 @@ package graft.functions
 import java.text.Normalizer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Unicode normalization (NFC/NFD/NFKC/NFKD) as a codegen'd expression —
+/** Unicode normalization (NFC/NFD/NFKC/NFKD) as a per-row kernel —
   * the canonical first step of text cleaning: crawled text mixes
   * composed and decomposed forms of the same glyph ("é" as one codepoint
   * or as e+U+0301), which breaks exact dedup, shingling, and vocabulary
@@ -26,33 +23,11 @@ object NormalizeKernel {
   }
 }
 
-/** `unicode_normalize(s)`: normalize to the given form. */
-case class UnicodeNormalize(child: Expression, form: String)
-    extends UnaryExpression {
-  require(Seq("NFC", "NFD", "NFKC", "NFKD").contains(form),
-    s"unknown normalization form: $form")
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "unicode_normalize"
-
-  @transient private lazy val f = Normalizer.Form.valueOf(form)
-
-  override def nullSafeEval(input: Any): Any =
-    NormalizeKernel.normalize(input.asInstanceOf[UTF8String], f)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fRef = ctx.addReferenceObj("form", f, "java.text.Normalizer.Form")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NormalizeKernel.normalize($c, $fRef);")
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): UnicodeNormalize = copy(child = newChild)
-}
-
 object NormalizeExprs {
-  import org.apache.spark.sql.{GraftBridge => EU}
-
-  def unicodeNormalize(s: Column, form: String): Column =
-    EU.column(UnicodeNormalize(EU.expression(s), form))
+  /** `unicode_normalize(s)`: normalize to the given form. */
+  def unicodeNormalize(s: Column, form: String): Column = {
+    require(Seq("NFC", "NFD", "NFKC", "NFKD").contains(form),
+      s"unknown normalization form: $form")
+    Kernels.unicodeNormalize(s, Normalizer.Form.valueOf(form))
+  }
 }

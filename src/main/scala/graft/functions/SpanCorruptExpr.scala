@@ -2,10 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass span-corruption kernel: given a token array and a per-token
@@ -49,34 +46,8 @@ object SpanCorruptKernel {
   }
 }
 
-/** `span_corrupt(tokens, flags)` → struct(inp, tgt, k); see
-  * [[SpanCorruptKernel]].
-  */
-case class SpanCorrupt(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("inp", ArrayType(StringType, containsNull = false), nullable = false),
-    StructField("tgt", ArrayType(StringType, containsNull = false), nullable = false),
-    StructField("k", IntegerType, nullable = false)))
-  override def prettyName: String = "span_corrupt"
-
-  override def nullSafeEval(toks: Any, flags: Any): Any =
-    SpanCorruptKernel.corrupt(
-      toks.asInstanceOf[ArrayData], flags.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, f) =>
-      s"graft.functions.SpanCorruptKernel.corrupt($t, $f)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SpanCorrupt =
-    copy(left = newLeft, right = newRight)
-}
-
 object SpanCorruptExpr {
-  import org.apache.spark.sql.{GraftBridge => EU}
-
-  def spanCorrupt(tokens: Column, flags: Column): Column =
-    EU.column(SpanCorrupt(EU.expression(tokens), EU.expression(flags)))
+  /** `span_corrupt(tokens, flags)` → struct(inp, tgt, k); see
+    * [[SpanCorruptKernel]]. */
+  def spanCorrupt(tokens: Column, flags: Column): Column = Kernels.spanCorrupt(tokens, flags)
 }

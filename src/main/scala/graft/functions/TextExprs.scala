@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-quality kernels that need byte-level work no builtin expresses. */
@@ -341,143 +338,21 @@ object TextKernels {
   }
 }
 
-/** deflate(text).length / text.length. Codegen'd like the hash kernels —
-  * the expression stays inside whole-stage codegen; the zlib call
-  * dominates per-row cost either way.
-  */
-case class CompressionRatio(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "compression_ratio"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.compressionRatio(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels.compressionRatio($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): CompressionRatio =
-    copy(child = newChild)
-}
-
-/** Threshold Levenshtein (−1 above `maxDist`) with affix stripping +
-  * Ukkonen band (see kernel doc) — the near-dup verify kernel.
-  */
-case class LevBounded(left: Expression, right: Expression, maxDist: Int)
-    extends BinaryExpression {
-  require(maxDist >= 0)
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = true
-  override def prettyName: String = "lev_bounded"
-
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    TextKernels.levBounded(l.asInstanceOf[UTF8String],
-      r.asInstanceOf[UTF8String], maxDist)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) =>
-      s"${ev.value} = graft.functions.TextKernels.levBounded($l, $r, $maxDist);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LevBounded =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Per-codepoint entropy in 16.16 fixed-point bits (see kernel doc). */
-case class CharEntropyFix(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "char_entropy_fix"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.charEntropyFix(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels.charEntropyFix($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): CharEntropyFix =
-    copy(child = newChild)
-}
-
-/** Gopher repetition profile: [den, top2..top4, dup5..dup10] exact
-  * integers in one codegen'd pass (see kernel doc).
-  */
-case class RepetitionProfile(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "repetition_profile"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.repetitionProfile(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels.repetitionProfile($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): RepetitionProfile =
-    copy(child = newChild)
-}
-
-/** All word-n-gram strings (ordered, non-distinct) in one codegen'd pass. */
-case class WordGrams(child: Expression, n: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "word_grams"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.wordGrams(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels.wordGrams($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): WordGrams =
-    copy(child = newChild)
-}
-
-/** Distinct word-n-gram hashes in one codegen'd pass (see kernel doc). */
-case class WordGramHash64(child: Expression, n: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "word_gram_hash64"
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.wordGramHash64(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels.wordGramHash64($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): WordGramHash64 =
-    copy(child = newChild)
-}
-
 object TextExprs {
-  import org.apache.spark.sql.{GraftBridge => EU}
+  def compressionRatio(text: Column): Column = Kernels.compressionRatio(text)
 
-  def compressionRatio(text: Column): Column =
-    EU.column(CompressionRatio(EU.expression(text)))
+  def charEntropyFix(text: Column): Column = Kernels.charEntropyFix(text)
 
-  def charEntropyFix(text: Column): Column =
-    EU.column(CharEntropyFix(EU.expression(text)))
+  /** Threshold Levenshtein (−1 above `maxDist`), the near-dup verify kernel. */
+  def levBounded(l: Column, r: Column, maxDist: Int): Column = {
+    require(maxDist >= 0)
+    Kernels.levBounded(l, r, maxDist)
+  }
 
-  def levBounded(l: Column, r: Column, maxDist: Int): Column =
-    EU.column(LevBounded(EU.expression(l), EU.expression(r), maxDist))
+  def wordGramHash64(text: Column, n: Int): Column = Kernels.wordGramHash64(text, n)
 
-  def wordGramHash64(text: Column, n: Int): Column =
-    EU.column(WordGramHash64(EU.expression(text), n))
+  def wordGrams(text: Column, n: Int): Column = Kernels.wordGrams(text, n)
 
-  def wordGrams(text: Column, n: Int): Column =
-    EU.column(WordGrams(EU.expression(text), n))
-
-  def repetitionProfile(text: Column): Column =
-    EU.column(RepetitionProfile(EU.expression(text)))
+  /** Gopher repetition profile: [den, top2..top4, dup5..dup10]. */
+  def repetitionProfile(text: Column): Column = Kernels.repetitionProfile(text)
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unigram-LM (SentencePiece-style) Viterbi tokenization: segment a
@@ -30,8 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * engine, run, or partitioning.
   *
   * Scale: the vocab (a trained artifact, ~10⁴–10⁵ pieces like the BPE
-  * merge table) ships ONCE per executor as a codegen reference object;
-  * the encode itself is a narrow per-row kernel — no shuffle, no join,
+  * merge table) is built ONCE per JVM from its piece list; the encode
+  * itself is a narrow per-row kernel — no shuffle, no join,
   * O(len · maxPieceLen) hash probes per word.
   */
 object UnigramKernel {
@@ -92,11 +89,14 @@ object UnigramKernel {
     }
     new GenericArrayData(java.util.Arrays.copyOfRange(out, k, n))
   }
+
+  /** The `unigram_encode` entry. */
+  def encodeWord(word: UTF8String, p: UnigramPieces): ArrayData = encode(word, p.vocab)
 }
 
 /** A unigram vocabulary prepared for the Viterbi kernel: piece → cost
   * probes as a UTF8String hash map + the max piece length bounding the
-  * DP window. Ships to executors once as a codegen reference object.
+  * DP window. Built once per JVM from a [[UnigramPieces]] value.
   * Costs must be ≥ 0 (fixed-point −log₂ p is); duplicate pieces keep
   * the first cost.
   */
@@ -116,35 +116,19 @@ final class UnigramVocab(pieces: Seq[(String, Long)], val unkCost: Long)
   }
 }
 
-/** `unigram_encode(word)`: min-cost Viterbi segmentation of one word
-  * against a fixed vocabulary (see [[UnigramKernel]]).
-  */
-case class UnigramEncode(child: Expression, pieces: Seq[(String, Long)],
-    unkCost: Long) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "unigram_encode"
-
-  @transient private lazy val vocab = new UnigramVocab(pieces, unkCost)
-
-  override def nullSafeEval(input: Any): Any =
-    UnigramKernel.encode(input.asInstanceOf[UTF8String], vocab)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vRef = ctx.addReferenceObj("unigramVocab", vocab,
-      "graft.functions.UnigramVocab")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.UnigramKernel.encode($c, $vRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): UnigramEncode =
-    copy(child = newChild)
+/** What a `unigram_encode` call is compared by: the pieces and the
+  * unknown-codepoint cost. */
+final case class UnigramPieces(pieces: Seq[(String, Long)], unkCost: Long) {
+  @transient lazy val vocab: UnigramVocab = KernelTables(this)(p => new UnigramVocab(p.pieces, p.unkCost))
 }
 
 object UnigramExprs {
-  import org.apache.spark.sql.{GraftBridge => EU}
-
-  def unigramEncode(word: Column, pieces: Seq[(String, Long)],
-      unkCost: Long): Column =
-    EU.column(UnigramEncode(EU.expression(word), pieces, unkCost))
+  /** `unigram_encode(word)`: min-cost Viterbi segmentation of one word
+    * against a fixed vocabulary (see [[UnigramKernel]]). A bad piece or
+    * cost fails here, when the plan is built. */
+  def unigramEncode(word: Column, pieces: Seq[(String, Long)], unkCost: Long): Column = {
+    val p = UnigramPieces(pieces, unkCost)
+    p.vocab
+    Kernels.unigramEncode(word, p)
+  }
 }

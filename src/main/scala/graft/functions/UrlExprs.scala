@@ -2,9 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass URL decomposition: `url_parts(url)` → struct<protocol,
@@ -30,34 +27,6 @@ object UrlKernels {
   }
 }
 
-case class UrlParts(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("protocol", StringType),
-    StructField("authority", StringType),
-    StructField("path", StringType),
-    StructField("query", StringType),
-    StructField("host", StringType)))
-  override def nullable: Boolean = true
-  override def prettyName: String = "url_parts"
-
-  override def nullSafeEval(input: Any): Any =
-    UrlKernels.parts(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow)
-        graft.functions.UrlKernels.parts($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): UrlParts =
-    copy(child = newChild)
-}
-
 object UrlExprs {
-  import org.apache.spark.sql.{GraftBridge => EU}
-
-  def urlParts(url: Column): Column =
-    EU.column(UrlParts(EU.expression(url)))
+  def urlParts(url: Column): Column = Kernels.urlParts(url)
 }

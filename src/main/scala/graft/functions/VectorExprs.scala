@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
 /** Native vector kernels for the similarity path. The builtin
   * formulation (`aggregate(zip_with(...))` per measure, per hyperplane)
@@ -89,109 +86,28 @@ object VectorKernels {
   }
 }
 
-/** Cosine similarity of two `array<float>` columns, computed in double. */
-case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "cosine_sim"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.VectorKernels.cosine($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Signed-random-projection bucket id of an `array<float>` vector: one
-  * sign bit per hyperplane, packed into a long. The plane matrix rides
-  * along as a codegen reference object — evaluated once per row total,
-  * not once per plane.
-  */
-case class SrpBucket(child: Expression, planes: Array[Array[Double]])
-    extends UnaryExpression {
-  require(planes.nonEmpty && planes.length <= 63, "1..63 hyperplanes")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "srp_bucket"
-
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.srpBucket(input.asInstanceOf[ArrayData], planes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planes, "double[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VectorKernels.srpBucket($c, $planesRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SrpBucket =
-    copy(child = newChild)
-}
-
-/** Index of the nearest centroid (squared L2) — the IVF coarse-quantizer
-  * assignment as one narrow codegen'd expression.
-  */
-case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
-    extends UnaryExpression {
-  require(centroids.nonEmpty, "at least one centroid")
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "nearest_centroid"
-
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.nearestCentroid(input.asInstanceOf[ArrayData], centroids)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VectorKernels.nearestCentroid($c, $centsRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
-    copy(child = newChild)
-}
-
-/** Integer sparse dot over (doc idx[], doc tf[], query idx[], query w[]),
-  * -1 sentinel for disjoint index sets (see [[VectorKernels.sparseDotLong]]).
-  * One narrow codegen'd merge per (doc, query) pair — the scoring kernel
-  * of [[graft.similarity.LexicalProbe]]'s dense tier.
-  */
-case class SparseDotLong(first: Expression, second: Expression,
-    third: Expression, fourth: Expression) extends QuaternaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "sparse_dot_long"
-
-  override def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    VectorKernels.sparseDotLong(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      c.asInstanceOf[ArrayData], d.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, c, d) =>
-      s"${ev.value} = graft.functions.VectorKernels.sparseDotLong($a, $b, $c, $d);")
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): SparseDotLong =
-    copy(first = f, second = s, third = t, fourth = q)
-}
-
 object VectorExprs {
-  import org.apache.spark.sql.{GraftBridge => EU}
+  /** Cosine similarity of two `array<float>` columns, computed in double. */
+  def cosineSim(a: Column, b: Column): Column = Kernels.cosineSim(a, b)
 
-  def cosineSim(a: Column, b: Column): Column =
-    EU.column(CosineSim(EU.expression(a), EU.expression(b)))
+  /** Signed-random-projection bucket id: one sign bit per hyperplane,
+    * packed into a long. The plane matrix is one literal, compared by
+    * reference. */
+  def srpBucket(vec: Column, planes: Array[Array[Double]]): Column = {
+    require(planes.nonEmpty && planes.length <= 63, "1..63 hyperplanes")
+    Kernels.srpBucket(vec, planes)
+  }
 
-  def srpBucket(vec: Column, planes: Array[Array[Double]]): Column =
-    EU.column(SrpBucket(EU.expression(vec), planes))
+  /** Index of the nearest centroid (squared L2) — the IVF coarse-quantizer
+    * assignment as one narrow expression. */
+  def nearestCentroid(vec: Column, centroids: Array[Array[Double]]): Column = {
+    require(centroids.nonEmpty, "at least one centroid")
+    Kernels.nearestCentroid(vec, centroids)
+  }
 
-  def nearestCentroid(vec: Column, centroids: Array[Array[Double]]): Column =
-    EU.column(NearestCentroid(EU.expression(vec), centroids))
-
+  /** Integer sparse dot over (doc idx[], doc tf[], query idx[], query w[]),
+    * -1 for disjoint index sets (see [[VectorKernels.sparseDotLong]]) — the
+    * scoring kernel of [[graft.similarity.LexicalProbe]]'s dense tier. */
   def sparseDotLong(docIdx: Column, docTf: Column, qIdx: Column, qW: Column): Column =
-    EU.column(SparseDotLong(EU.expression(docIdx), EU.expression(docTf),
-      EU.expression(qIdx), EU.expression(qW)))
+    Kernels.sparseDotLong(docIdx, docTf, qIdx, qW)
 }

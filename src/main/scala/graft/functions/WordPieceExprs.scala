@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** WordPiece (BERT-style) tokenization: greedy LONGEST-match-first
@@ -23,9 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    substring at word start (p = 0) and `"##" + substring` inside;
   *  - first (longest) hit is consumed; no hit at any p → `["[UNK]"]`.
   *
-  * Scale: the vocabulary ships once per executor as a codegen
-  * reference object (the BPE-merge-table pattern); encode is a narrow
-  * per-row kernel — no shuffle, no join, O(len · maxLen) set probes
+  * Scale: the vocabulary is built once per JVM from its entry list
+  * (the BPE-merge-table pattern); encode is a narrow per-row kernel — no shuffle, no join, O(len · maxLen) set probes
   * per word.
   */
 object WordPieceKernel {
@@ -61,12 +57,15 @@ object WordPieceKernel {
     }
     new GenericArrayData(out.toArray)
   }
+
+  /** The `wordpiece_encode` entry. */
+  def encodeWord(word: UTF8String, e: WordPieceEntries): ArrayData = encode(word, e.vocab)
 }
 
 /** A WordPiece vocabulary prepared for the greedy kernel: a UTF8String
   * set (continuation entries carry their `##` prefix) + the max piece
-  * length in codepoints NOT counting the marker. Ships to executors
-  * once as a codegen reference object.
+  * length in codepoints NOT counting the marker. Built once per JVM
+  * from a [[WordPieceEntries]] value.
   */
 final class WordPieceVocab(entries: Seq[String]) extends Serializable {
   val pieces = new java.util.HashSet[UTF8String]()
@@ -82,34 +81,18 @@ final class WordPieceVocab(entries: Seq[String]) extends Serializable {
   }
 }
 
-/** `wordpiece_encode(word)`: greedy longest-match segmentation of one
-  * word against a fixed vocabulary (see [[WordPieceKernel]]).
-  */
-case class WordPieceEncode(child: Expression, entries: Seq[String])
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "wordpiece_encode"
-
-  @transient private lazy val vocab = new WordPieceVocab(entries)
-
-  override def nullSafeEval(input: Any): Any =
-    WordPieceKernel.encode(input.asInstanceOf[UTF8String], vocab)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vRef = ctx.addReferenceObj("wordpieceVocab", vocab,
-      "graft.functions.WordPieceVocab")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WordPieceKernel.encode($c, $vRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): WordPieceEncode =
-    copy(child = newChild)
+/** What a `wordpiece_encode` call is compared by: the vocabulary entries. */
+final case class WordPieceEntries(entries: Seq[String]) {
+  @transient lazy val vocab: WordPieceVocab = KernelTables(this)(e => new WordPieceVocab(e.entries))
 }
 
 object WordPieceExprs {
-  import org.apache.spark.sql.{GraftBridge => EU}
-
-  def wordpieceEncode(word: Column, entries: Seq[String]): Column =
-    EU.column(WordPieceEncode(EU.expression(word), entries))
+  /** `wordpiece_encode(word)`: greedy longest-match segmentation of one
+    * word against a fixed vocabulary (see [[WordPieceKernel]]). A bad
+    * vocabulary entry fails here, when the plan is built. */
+  def wordpieceEncode(word: Column, entries: Seq[String]): Column = {
+    val e = WordPieceEntries(entries)
+    e.vocab
+    Kernels.wordpieceEncode(word, e)
+  }
 }

@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Morton (Z-order) bit interleaving — the space-filling-curve key for
   * multi-dimensional data skipping. Sorting a table by the interleaved
@@ -28,30 +25,9 @@ object ZOrderKernels {
   def morton2(a: Long, b: Long): Long = spread(a) | (spread(b) << 1)
 }
 
-/** `morton2(a, b)`: 64-bit Morton code of two long columns (low 32 bits
-  * each; a on even bit positions). Five shift-mask rounds per operand —
-  * branch-free, codegen'd, stays inside whole-stage codegen.
-  */
-case class Morton2(left: Expression, right: Expression) extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "morton2"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ZOrderKernels.morton2(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.ZOrderKernels.morton2($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Morton2 =
-    copy(left = newLeft, right = newRight)
-}
-
 object ZOrderExprs {
-  import org.apache.spark.sql.{GraftBridge => EU}
-
-  def morton2(a: Column, b: Column): Column =
-    EU.column(Morton2(EU.expression(a), EU.expression(b)))
+  /** `morton2(a, b)`: 64-bit Morton code of two long columns (low 32 bits
+    * each; a on even bit positions). Five shift-mask rounds per operand,
+    * branch-free. */
+  def morton2(a: Column, b: Column): Column = Kernels.morton2(a, b)
 }

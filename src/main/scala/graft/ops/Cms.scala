@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * or engine (the oracle replays the polynomial+splitmix hash in
   * HUGEINT). The per-depth STRING re-hash trades d−1 extra polynomial
   * passes per row for reusing the one hash kernel both engines already
-  * agree on; if profiling ever surfaces it, the [[graft.functions
-  * .HashExprs]] MinHashSig mix (one hash + d affine-xorshift remixes)
+  * agree on; if profiling ever surfaces it, the `minhash_sig` mix
+  * ([[graft.functions.HashKernels.minhashSig]]: one hash + d affine-xorshift remixes)
   * is the drop-in replacement — at the cost of a new SQL mirror.
   *
   * Scale shape: the sketch build is one map-side-combined groupBy —

@@ -7,6 +7,7 @@ import scala.reflect.ClassTag
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.optimizer.BuildLeft
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{CollapseCodegenStages, CommandResultExec, FileSourceScanExec, InputAdapter, ReusedSubqueryExec, SortExec, SparkPlan, WholeStageCodegenExec}
@@ -88,8 +89,8 @@ final class PlanInspect private (val root: SparkPlan) {
     case _ => false
   }
 
-  /** Some plan expression is named `name`. */
-  def usesExpr(name: String): Boolean = nodes.exists(_.plan.expressions.exists(_.exists(_.prettyName == name)))
+  /** Some plan expression is named `name` (see [[PlanInspect.name]]). */
+  def usesExpr(name: String): Boolean = nodes.exists(_.plan.expressions.exists(_.exists(named(name))))
 
   /** An expression named `name` runs inside a whole-stage-codegen stage,
     * and no occurrence of it is a `CodegenFallback`. AQE collapses a stage
@@ -98,7 +99,7 @@ final class PlanInspect private (val root: SparkPlan) {
     */
   def codegen(name: String): Boolean = {
     val hits = nodes.flatMap(n => n.plan.expressions.flatMap(_.collect {
-      case e if e.prettyName == name => n -> e
+      case e if named(name)(e) => n -> e
     }))
     def inStage(n: Node): Boolean = {
       def collapses = CollapseCodegenStages().apply(n.plan).isInstanceOf[WholeStageCodegenExec]
@@ -143,6 +144,18 @@ object PlanInspect {
     }
     case _ => false
   }
+
+  /** An expression's name in plan checks: a kernel call (a `StaticInvoke`
+    * of a [[graft.functions.Kernels]] entry) by its entry's SQL name,
+    * every other expression by its `prettyName`.
+    */
+  def name(e: Expression): String = e match {
+    case s: StaticInvoke => graft.functions.Kernels.called(s.staticObject, s.functionName)
+      .fold(s.prettyName)(_.name)
+    case _ => e.prettyName
+  }
+
+  def named(n: String)(e: Expression): Boolean = name(e) == n
 
   private def is[T](p: AnyRef)(implicit t: ClassTag[T]): Boolean = t.runtimeClass.isInstance(p)
   private def refs(es: Seq[Expression]): Seq[String] = es.flatMap(_.references.map(_.name)).distinct

@@ -145,7 +145,7 @@ object DedupQueries {
 
   /** Normalized text → char codes → distinct 5-gram polynomial+finalizer
     * shingle hashes (`shl(doc_id, hlist)`, HUGEINT < 2^64) over source
-    * relation `src`, mirroring ShingleHash64 exactly.
+    * relation `src`, mirroring `shingle_hash64` exactly.
     */
   private[queries] def shingleCtesFrom(src: String): String = {
     val poly = "list_reduce(list_prepend(1125899906842597::HUGEINT, " +
@@ -300,7 +300,7 @@ object DedupQueries {
       col("id_a"), col("id_b"))
   }
 
-  /** Mirrors ShingleHash64's fused normalization (lowercase + collapse
+  /** Mirrors `shingle_hash64`'s fused normalization (lowercase + collapse
     * whitespace + trim) and character-5-gram shingling, then brute-forces
     * |A∩B|/|A∪B| over every pair — no LSH shortcut, so any candidate the
     * Spark side's LSH tier dropped would surface here.
@@ -395,7 +395,7 @@ object DedupQueries {
   }
 
   /** Brute-force mirror of q35: same left-to-right double dot-product
-    * fold as CosineSim (bit-identical, proven by q40), no bucket tier.
+    * fold as `cosine_sim` (bit-identical, proven by q40), no bucket tier.
     */
   val q35Sql: String =
     """WITH uni AS (
@@ -544,7 +544,7 @@ object DedupQueries {
   }
 
   /** Shared oracle for q41/q43: brute-force cosine top-3 over the planted
-    * corpus — same double left-fold as CosineSim (bit-identical per q40);
+    * corpus — same double left-fold as `cosine_sim` (bit-identical per q40);
     * the duplicates tie at the top and order by neighbor_id in both
     * engines.
     */
@@ -1465,7 +1465,7 @@ object DedupQueries {
     * measure BETWEEN snapshots (doc-level diffing is q84; this is
     * content-level): two overlapping corpus views (doc_id % 3 ≠ 0 vs
     * % 2 ≠ 0) reduce to per-shingle side flags in ONE hash-keyed
-    * shuffle (`max(in_a)`, `max(in_b)` per 64-bit ShingleHash64 value),
+    * shuffle (`max(in_a)`, `max(in_b)` per 64-bit `shingle_hash64` value),
     * giving EXACT |A|, |B|, |A∪B|, |A∩B| — plus the bounded-state
     * estimator a 100 TB run would use instead: the k = 256 smallest
     * hashes of the union (unsigned order, TakeOrdered — k·partitions

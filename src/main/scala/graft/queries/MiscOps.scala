@@ -2762,7 +2762,7 @@ object MiscOps {
        |ORDER BY pa."column"""".stripMargin
   }
 
-  /** q106: Unicode NFC normalization ([[graft.functions.UnicodeNormalize]])
+  /** q106: Unicode NFC normalization ([[graft.functions.NormalizeKernel]])
     * — fold decomposed accents back to composed codepoints before any
     * hashing/dedup/tokenization. The corpus is ASCII, so the query
     * plants decomposed text (every 'a' → 'a' + combining acute U+0301)

@@ -117,7 +117,7 @@ object ScrubQueries {
       |WHERE n_copies >= 1
       |ORDER BY doc_id, copy_idx""".stripMargin
 
-  /** q117: multi-pattern blocklist scrub ([[graft.functions.MultiReplace]]
+  /** q117: multi-pattern blocklist scrub ([[graft.functions.MultiReplaceKernel]]
     * — Aho–Corasick, O(text) per doc independent of term count, vs the
     * O(terms)-per-position regex alternation it replaces at 10k-term
     * blocklist scale). The blocklist is corpus-derived (top-10 unigrams

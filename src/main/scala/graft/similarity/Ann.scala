@@ -174,7 +174,7 @@ object Ann {
   /** Signed-random-projection bucket id: one bit per hyperplane (sign of
     * dot product), packed into a long. nBits planes → 2^nBits buckets.
     * Native one-pass kernel; the plane matrix (same deterministic
-    * components as always) is a codegen reference object.
+    * components as always) is one literal argument of the kernel call.
     */
   def srpBucket(vec: Column, dim: Int, nBits: Int = 8): Column = {
     val planes = Array.tabulate(nBits, dim)((p, h) => planeComponent(p, h))
@@ -279,8 +279,8 @@ object Ann {
   }
 
   /** Nearest-centroid list id as a NARROW column expression — the native
-    * one-pass argmin kernel (centroid matrix rides as a codegen reference
-    * object): no crossJoin row explosion, no argmin shuffle.
+    * one-pass argmin kernel (the centroid matrix is one literal argument
+    * of the kernel call): no crossJoin row explosion, no argmin shuffle.
     *
     * Wrapped in `coalesce(..., -1)` to make the result NON-NULLABLE:
     * every caller joins on this column, and a nullable join key makes

@@ -32,7 +32,7 @@ object SparseCosine {
 
   /** Word n-gram terms, NON-distinct (tf counts need every occurrence);
     * strict: documents shorter than n words get no terms. Rides the
-    * one-pass `WordGrams` kernel — the builtin
+    * one-pass `word_grams` kernel — the builtin
     * `transform(sequence, slice, array_join)` chain costs ~8 µs/gram
     * and was 90% of q62's runtime.
     */

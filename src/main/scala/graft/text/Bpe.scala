@@ -43,7 +43,7 @@ object Bpe {
       .map(r => (r.getString(0), r.getString(1)))
 
   /** Greedy leftmost application of merge (l, r) to a token array — the
-    * codegen'd O(n) kernel ([[graft.functions.BpeMerge]]). (The same
+    * O(n) `bpe_merge` kernel ([[graft.functions.BpeKernels.merge]]). (The same
     * scan is expressible as a builtin `aggregate` fold with
     * (acc, pending) state, but that copies the accumulator array per
     * element and runs interpreted: 10.2 s → 0.7 s at sf0.1.)
@@ -82,9 +82,9 @@ object Bpe {
 
   /** ENCODE (inference) against a trained merge table: split `textCol`
     * into words, tokenize each word with the table-driven priority-queue
-    * kernel ([[graft.functions.BpeEncode]]). Output: one row per token —
+    * kernel ([[graft.functions.BpeEncodeKernel.encode]]). Output: one row per token —
     * (original columns…, widx, tidx, token). A pure narrow map + explode:
-    * no shuffle; the table ships once per executor as a reference object,
+    * no shuffle; the table is built once per JVM from the merge list,
     * never per row. This is the apply half of [[train]] — together they
     * are the full tokenizer lifecycle.
     */

@@ -50,7 +50,7 @@ object Decontaminate {
     * n-gram with the benchmark corpus.
     *
     * Tier 1 scans the training side with the one-pass
-    * `WordGramHash64` kernel — 8-byte hashes only, no gram strings
+    * `word_gram_hash64` kernel — 8-byte hashes only, no gram strings
     * (the string formulation measured 12 µs/gram: 2.8 of q48's 3.6 s at
     * sf0.1) — and semi-joins the broadcast benchmark hash set to find
     * CANDIDATE DOCS. Tier 2 re-derives gram strings for those few docs
@@ -58,7 +58,7 @@ object Decontaminate {
     * 2⁻⁶⁴ kernel-hash collision can never flag a clean document.
     */
   /** (doc_id, gram) exploded DISTINCT word n-gram strings — the exact
-    * verify tier's input. One-pass `WordGrams` kernel: the builtin
+    * verify tier's input. One-pass `word_grams` kernel: the builtin
     * slice/join chain costs ~8 µs/gram and dominated tier 2 whenever
     * the candidate set was not tiny. Empty arrays (texts shorter than
     * n words) vanish in the explode.

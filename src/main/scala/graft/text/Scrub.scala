@@ -34,9 +34,11 @@ object Scrub {
     * digits, every second one doubled, digits of products summed. The
     * PRECISION tier of card-number detection — a 13–19 digit run that
     * fails Luhn is an order id or a phone, not a card, and redacting it
-    * destroys data for no privacy gain. Pure codegen'd higher-order
-    * builtins (transform-with-index + aggregate): no UDF, stays inside
-    * WholeStageCodegen.
+    * destroys data for no privacy gain. Higher-order builtins (filter,
+    * transform-with-index, aggregate), no UDF; each is a
+    * `CodegenFallback`, so the operator that evaluates this runs
+    * interpreted, outside whole-stage codegen (q190's plan fails
+    * `PlanInspect.codegen`).
     */
   def luhnSum(digits: Column): Column = {
     val ds = reverse(filter(split(digits, ""), c => c.rlike("[0-9]")))
@@ -77,7 +79,7 @@ object Scrub {
 
   /** Character-level compression proxy: distinct 4-gram hash count over
     * total 4-gram count; low ratio = highly repetitive text. Uses the
-    * native one-pass ShingleHash64 (distinct) vs length arithmetic.
+    * one-pass `shingle_hash64` kernel (distinct) vs length arithmetic.
     */
   def distinctNgramRatio(text: Column, n: Int = 4): Column = {
     val norm = regexp_replace(lower(text), "\\s+", " ")

@@ -62,8 +62,8 @@ object TextAnalysis {
   /** Deflate-compression ratio (compressed/raw bytes) — the Gopher-style
     * redundancy signal that catches repetition the token-level heuristics
     * (duplicateLineFraction, topTokenFraction) miss: looped generations,
-    * templated boilerplate, near-identical paragraph stacks. Native
-    * codegen'd expression (graft.functions.CompressionRatio); no SQL
+    * templated boilerplate, near-identical paragraph stacks. The
+    * `compression_ratio` kernel ([[graft.functions.TextKernels.compressionRatio]]); no SQL
     * oracle (DuckDB has no deflate), so correctness is spec-pinned on
     * planted high/low-entropy fixtures.
     */

@@ -16,7 +16,7 @@ object Unigram {
   /** Tokenize `textCol` word-by-word with Viterbi segmentation. Output:
     * (original columns…, widx, tidx, token) — one row per piece, the
     * [[Bpe.encode]] shape. Pure narrow map + explode: no shuffle; the
-    * vocabulary ships once per executor as a codegen reference object.
+    * vocabulary is built once per JVM from its piece list.
     */
   def encode(df: DataFrame, textCol: String, pieces: Seq[(String, Long)],
       unkCost: Long): DataFrame = {

@@ -38,6 +38,7 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.warehouse.dir", ScratchDirs.warehouse)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

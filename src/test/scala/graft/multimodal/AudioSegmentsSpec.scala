@@ -22,7 +22,7 @@ class AudioSegmentsSpec extends SparkSpec {
     // via the fake codec instead: it emits 8 windows, every third silent
     val df = Seq((7L, "blobA".getBytes("UTF-8"))).toDF("id", "blob")
     val out = AudioSegments.silenceSegments(df, "id", "blob",
-      Multimodal.FakeAudioCodec, windowSamples = 400).collect()(0)
+      FakeAudioCodec, windowSamples = 400).collect()(0)
     assert(out.getLong(1) == 8L)
     // fake plants silence every 3rd window from a hash offset: islands
     // must alternate, so segments is in [5, 7] and speech+silent = 8

@@ -9,7 +9,7 @@ class MultimodalSpec extends SparkSpec {
   test("media features are stable across repartitioning (batch-shape safety)") {
     val media = Multimodal.mediaFromDocuments(spark, sf)
     def features(parts: Int) =
-      Multimodal.withImageFeatures(media.repartition(parts), "blob", Multimodal.FakeDecoder)
+      Multimodal.withImageFeatures(media.repartition(parts), "blob", FakeDecoder)
         .select(col("doc_id"), col("image_features.phash"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(features(1) == features(7))
@@ -17,7 +17,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("sniff metadata carries byte length") {
     val media = Multimodal.mediaFromDocuments(spark, sf)
-    val out = Multimodal.withMediaMeta(media, "blob", Multimodal.FakeDecoder)
+    val out = Multimodal.withMediaMeta(media, "blob", FakeDecoder)
       .select(col("doc_id"), col("media_meta.n_bytes"), length(col("blob")).cast("long"))
       .collect()
     out.foreach(r => assert(r.getLong(1) == r.getLong(2)))
@@ -25,14 +25,14 @@ class MultimodalSpec extends SparkSpec {
 
   test("sampledFrames explodes one row per frame with stable index") {
     val media = Multimodal.mediaFromDocuments(spark, sf).limit(10)
-    val frames = Multimodal.sampledFrames(media, "doc_id", "blob", 1000, Multimodal.FakeDecoder)
+    val frames = Multimodal.sampledFrames(media, "doc_id", "blob", 1000, FakeDecoder)
     val counts = frames.groupBy("id").count().collect().map(_.getLong(1))
     assert(counts.forall(c => c >= 1 && c <= 4))
   }
 
   test("resize emits a binary column") {
     val media = Multimodal.mediaFromDocuments(spark, sf).limit(5)
-    val out = Multimodal.resized(media, "blob", 32, 32, Multimodal.FakeDecoder)
+    val out = Multimodal.resized(media, "blob", 32, 32, FakeDecoder)
     assert(out.schema("resized").dataType.typeName == "binary")
     assert(out.count() == 5)
   }

@@ -11,7 +11,7 @@ class VideoDedupSpec extends SparkSpec {
   private def run(vs: Seq[(Long, Seq[Array[Byte]])]) =
     VideoDedup.sceneSummary(
         vs.toDF("video_id", "frames"), "video_id", "frames",
-        Multimodal.FakeDecoder)
+        FakeDecoder)
       .collect()
       // (n_frames, n_segments, dup_group_size); n_bad_frames is col 3
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(4))))
@@ -45,7 +45,7 @@ class VideoDedupSpec extends SparkSpec {
       (3L, None: Option[Seq[Array[Byte]]]))
       .toDF("video_id", "frames")
     val got = VideoDedup.sceneSummary(df, "video_id", "frames",
-        Multimodal.FakeDecoder)
+        FakeDecoder)
       .collect()
       .map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
@@ -85,7 +85,7 @@ class VideoDedupSpec extends SparkSpec {
     val a = run(vs)
     val b = VideoDedup.sceneSummary(
         vs.toDF("video_id", "frames").repartition(11), "video_id", "frames",
-        Multimodal.FakeDecoder)
+        FakeDecoder)
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(4))))
       .toMap

@@ -62,17 +62,6 @@ class ScaleOpsSpec extends SparkSpec {
   test("bucketed tables join with zero Exchange") {
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
     spark.sql("DROP TABLE IF EXISTS b_orders")
-    // a fresh in-memory catalog doesn't know tables from prior JVMs, but
-    // their warehouse directories survive — clear them too
-    for (t <- Seq("b_lineitem", "b_orders")) {
-      val p = java.nio.file.Paths.get(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
       .select("l_orderkey", "l_quantity")
     val o = spark.read.parquet(s"$sf/orders.parquet")
@@ -88,6 +77,16 @@ class ScaleOpsSpec extends SparkSpec {
         s"expected no Exchange:\n${joined.queryExecution.executedPlan}")
       assert(joined.count() > 0)
     }
+  }
+
+  test("managed tables go under the scratch root, never into ./spark-warehouse") {
+    def cwdWarehouse = Option(new java.io.File("spark-warehouse").list()).toSeq.flatten.toSet
+    val before = cwdWarehouse
+    assert(graft.queries.SinkQueries.q96BucketedJoin(spark, sf).count() > 0)
+    assert(cwdWarehouse == before)
+    val location = spark.sql(s"DESCRIBE TABLE EXTENDED b96_li_${graft.ScratchDirs.pathKey(sf)}")
+      .filter(col("col_name") === "Location").head().getString(1)
+    assert(location.stripPrefix("file:").startsWith(graft.ScratchDirs.warehouse + "/"), location)
   }
 
   test("Par.fanOut raises partition count for small inputs, no-ops otherwise") {

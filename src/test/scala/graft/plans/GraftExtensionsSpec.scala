@@ -116,6 +116,12 @@ class GraftExtensionsSpec extends SparkSpec {
     new graft.GraftExtensions().apply(ext)
     // building the extensions must at minimum not throw; behavior is
     // covered by the live-install tests above
-    assert(graft.GraftExtensions.sqlFunctions.size == 12)
+    val names = graft.GraftExtensions.sqlFunctions.map(_._1)
+    assert(names.distinct == names)
+    assert(names.toSet == graft.functions.Kernels.all.filter(_.sqlCallable).map(_.name).toSet +
+      "bounded_collect_long" + "freq_items")
+    assert(Seq("simhash64", "shingle_hash64", "minhash_sig", "minhash_sig_oph", "cosine_sim",
+      "bounded_collect_long", "compression_ratio", "morton2", "freq_items", "url_parts",
+      "bpe_merge", "cdc_chunks").forall(names.contains))
   }
 }

@@ -33,7 +33,7 @@ object PlanShapes {
     Shape(what, _.nodes.exists(pf.applyOrElse(_, (_: Node) => false)))
   private def every(what: String)(pf: PartialFunction[Node, Boolean]) =
     Shape(what, _.nodes.forall(pf.applyOrElse(_, (_: Node) => true)))
-  private def evaluates(n: Node, e: String) = n.plan.expressions.exists(_.exists(_.prettyName == e))
+  private def evaluates(n: Node, e: String) = n.plan.expressions.exists(_.exists(PlanInspect.named(e)))
   private def keys(pi: PlanInspect) = pi.hashShuffles.map(_.keys.toSet)
 
   private def has[T <: SparkPlan: ClassTag] = Shape(s"has ${cls[T]}", _.has[T])
@@ -45,7 +45,7 @@ object PlanShapes {
   private def codegen(e: String) = Shape(s"$e inside whole-stage codegen", _.codegen(e))
   private def uses(e: String) = Shape(s"uses $e", _.usesExpr(e))
   private def noFallback(e: String) = Shape(s"$e present, never a CodegenFallback", pi => pi.usesExpr(e) &&
-    !pi.nodes.exists(_.plan.expressions.exists(_.exists(x => x.prettyName == e && is[CodegenFallback](x)))))
+    !pi.nodes.exists(_.plan.expressions.exists(_.exists(x => PlanInspect.named(e)(x) && is[CodegenFallback](x)))))
   /** Some build side reads `table`, and none reads `not`. */
   private def broadcasts(table: String, not: String = "") = Shape(s"$table broadcasts, $not never", { pi =>
     val sides = pi.broadcastSides.map(PlanInspect(_))

@@ -102,7 +102,7 @@ class PropertiesSpec extends AnyFunSuite {
     })
   }
 
-  // --- ShingleHash64 model check --------------------------------------
+  // --- shingleHash64 model check --------------------------------------
 
   test("topTokenFraction kernel == split/count model (incl. empty-token edges)") {
     import org.apache.spark.unsafe.types.UTF8String
@@ -189,13 +189,8 @@ class PropertiesSpec extends AnyFunSuite {
         if (norm.isEmpty) 0
         else (0 until math.max(1, norm.length - n + 1))
           .map(i => norm.substring(i, math.min(i + n, norm.length))).distinct.size
-      val expr = graft.functions.ShingleHash64(
-        org.apache.spark.sql.catalyst.expressions.Literal(
-          org.apache.spark.unsafe.types.UTF8String.fromString(s)), n)
-      val got = expr.eval(null) match {
-        case null => -1
-        case a: org.apache.spark.sql.catalyst.util.ArrayData => a.numElements()
-      }
+      val got = graft.functions.HashKernels.shingleHash64(
+        org.apache.spark.unsafe.types.UTF8String.fromString(s), n).numElements()
       // hash collisions across distinct n-grams are possible in theory but
       // not at these sizes; equality is the expected outcome
       got == model
