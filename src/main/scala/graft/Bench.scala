@@ -51,7 +51,7 @@ object Bench {
       sys.env.get("SPARK_GRAFT_BENCH_SKIP").map(_.split(',').toSet)
         .getOrElse(Set.empty)
     // bench lineup = oracled queries + the sketch-tier scale-path rows
-    val names = (SparkEntry.queries.keys ++ SparkEntry.benchOnly.keys).toSeq
+    val names = SparkEntry.rows.map(_.name)
       .filter(n => only.forall(_.contains(n)) && !skip.contains(n)).sorted
     if (Local.sharded(names)) runSharded(names) else runInline(names)
   }
@@ -204,16 +204,16 @@ object Bench {
 
   private def runInline(names: Seq[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val allQueries = SparkEntry.queries ++ SparkEntry.benchOnly
-    val benchQueries = names.map(n => n -> allQueries(n))
+    val byName = SparkEntry.rows.map(q => q.name -> q).toMap
+    val benchQueries = names.map(byName)
     val spark = Local.session(Local.cpus)
     // warmup outside the timed section: run EVERY query once at sf0.001
     // so codegen compilation + JIT for each query's operators happen
     // before its timed run — the timed section then measures steady-state
     // execution, not first-run compilation
     val warmDir = "/root/testdata/sf0.001"
-    benchQueries.foreach { case (_, fn) =>
-      try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+    benchQueries.foreach { q =>
+      try q.run(spark, warmDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
     // touch the target-SF tables so the timed section reads a warm page
@@ -239,9 +239,7 @@ object Bench {
     // repeats: a burst of host load then lands on one sample of several
     // queries, which their medians drop, instead of on every sample of one.
     val passes = (1 to Samples).map { pass =>
-      benchQueries.map { case (name, fn) =>
-        timeOnce(spark, sfDir, name, fn, pass)
-      }
+      benchQueries.map(timeOnce(spark, sfDir, _, pass))
     }
     val samples = names.indices.map(j => passes.map(_(j)))
     val rows = names.zip(samples).map { case (n, ss) =>
@@ -256,33 +254,30 @@ object Bench {
         ss.flatMap(_.outputBytes).headOption.map(n -> _) }.toMap)
   }
 
-  private def timeOnce(spark: SparkSession, sfDir: String, name: String,
-      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+  private def timeOnce(spark: SparkSession, sfDir: String, q: Query,
       pass: Int): Sample = {
+    val name = q.name
     // persisted-artifact queries: run the index build OUTSIDE the clock
-    // (SparkEntry.prepare) — the timed section is reload + probe only.
+    // (Query.prepare) — the timed section is reload + probe only.
     // A FAILED prepare must fail the sample: the self-sufficient query fn
     // would otherwise rebuild the index INSIDE the clock and record a
     // silently-wrong number (the exact build-masks-probe distortion the
     // prepare hook exists to eliminate).
-    val prepOk = SparkEntry.prepare.get(name).forall { p =>
+    val prepOk = q.prepare.forall { p =>
       val r = try { p(spark, sfDir); true }
       catch { case e: Throwable =>
         System.err.println(s"[bench] prepare($name) FAILED: $e"); false }
       spark.catalog.clearCache()
       r
     }
-    // output-cardinality telemetry for the dedup-pair family
-    // (SparkEntry.outputCardinality): an `observe` count aggregates
-    // during the same noop write — no second evaluation, negligible
-    // overhead — and ships in the artifact so an output-driven wall
+    // output telemetry (Query.observeRows / observeBytes): an
+    // `observe` count or byte sum aggregates during the same noop
+    // write — no second evaluation, negligible overhead — and ships in the artifact so an output-driven wall
     // ratio (pairs grow with ScaleUp replicas) is distinguishable
     // from a plan regression without re-deriving it in prose.
-    val wantRows = SparkEntry.outputCardinality.contains(name)
-    val bytesExpr = SparkEntry.outputBytes.get(name)
     // an Observation serves one action, so each sample gets its own
     val obs =
-      if (wantRows || bytesExpr.isDefined)
+      if (q.observeRows || q.observeBytes.isDefined)
         Some(new Observation(s"__rows_${name}_$pass"))
       else None
     val t0 = System.nanoTime()
@@ -290,13 +285,13 @@ object Bench {
     // count() would let Catalyst prune the projection away
     val ok = prepOk &&
       (try {
-        val df0 = fn(spark, sfDir)
+        val df0 = q.run(spark, sfDir)
         val df = obs.map { o =>
           // one Observation, up to two aggregates (rows and/or the
           // blob family's decoded-bytes sum) — still no re-evaluation
           val aggs =
-            (if (wantRows) Seq(count(lit(1)).as("rows")) else Nil) ++
-              bytesExpr.map(e => sum(e).as("bytes")).toSeq
+            (if (q.observeRows) Seq(count(lit(1)).as("rows")) else Nil) ++
+              q.observeBytes.map(e => sum(e).as("bytes")).toSeq
           df0.observe(o, aggs.head, aggs.tail: _*)
         }.getOrElse(df0)
         df.write.format("noop").mode("overwrite").save(); true
@@ -315,8 +310,8 @@ object Bench {
     // pressure / eviction noise)
     spark.catalog.clearCache()
     Sample(if (ok) Some(t) else None,
-      if (wantRows) obsLong("rows") else None,
-      if (bytesExpr.isDefined) obsLong("bytes") else None)
+      if (q.observeRows) obsLong("rows") else None,
+      if (q.observeBytes.isDefined) obsLong("bytes") else None)
   }
 
   // ------------------------------------------------------------------- emit

@@ -1,10 +1,9 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Query implementations live under graft.queries.*; each map entry
-  * exercises one operator family from SURVEY.md §2 and (where
-  * SQL-expressible) carries a DuckDB oracle with identical column names.
+/** The query registry Bench, Verify and the tools read (SURVEY.md §7).
+  * Query implementations live under graft.queries.*; each file declares
+  * its [[Query]] rows once, and every map below is a view of them.
   */
 object SparkEntry {
 
@@ -12,136 +11,53 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.queries.Relational.q1Agg(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** Every registered query, file by file; names are unique. */
+  val rows: Seq[Query] = {
+    val all = Seq(
+      graft.queries.Relational.rows,
+      graft.queries.TextQueries.rows,
+      graft.queries.DedupQueries.rows,
+      graft.queries.MiscOps.rows,
+      graft.queries.PipelineQueries.rows,
+      graft.queries.ScrubQueries.rows,
+      graft.queries.CompositeQueries.rows,
+      graft.queries.SinkQueries.rows,
+      graft.queries.CurationQueries.rows,
+      graft.queries.SearchQueries.rows,
+      graft.queries.AuditQueries.rows).flatten
+    val twice = all.groupBy(_.name).collect {
+      case (n, qs) if qs.size > 1 => n }
+    require(twice.isEmpty,
+      s"query names registered twice: ${twice.toSeq.sorted}")
+    all
+  }
+
+  /** The oracle-gated queries: one per implemented operator from
+    * SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++
-      graft.queries.TextQueries.queries ++
-      graft.queries.DedupQueries.queries ++
-      graft.queries.MiscOps.queries ++
-      graft.queries.PipelineQueries.queries ++
-      graft.queries.ScrubQueries.queries ++
-      graft.queries.CompositeQueries.queries ++
-      graft.queries.SinkQueries.queries ++
-      graft.queries.CurationQueries.queries ++
-      graft.queries.SearchQueries.queries ++
-      graft.queries.AuditQueries.queries
+    rows.filter(_.oracle.isDefined).map(q => q.name -> q.run).toMap
 
-  /** Bench-only rows: the SKETCH-tier variants of the tier-swappable
-    * queries (SCALING.md §5b — `spark.graft.*Tier = sketch` routes the
-    * same algebra through mergeable O(k) state, the declared 100 TB
-    * path). They are benchmarked every round so the claimed scale-path
-    * numbers are measured, not asserted (round-10 verdict #7), but NOT
-    * in `queries`: the sketch tiers are bit-equal to the exact oracles
-    * only on-grid / below capacity by design (QuantileTierSpec /
-    * ProfileTierSpec pin the envelopes), so an oracle row would be a
-    * false gate. The conf flag is read at plan-build time; unsetting it
-    * in the finally leaves the shared bench session clean for the next
-    * query.
+  /** Bench-only rows: the sketch-tier variants (`*s`) of the
+    * tier-swappable queries (SCALING.md §5b — the same algebra through
+    * mergeable O(k) state, the declared 100 TB path). They are
+    * benchmarked so the scale-path numbers are measured, but carry no
+    * oracle: the sketch tiers equal the exact oracles only on-grid or
+    * below capacity by design (the *TierSpec suites pin the envelopes).
     */
-  def benchOnly: Map[String, (SparkSession, String) => DataFrame] = {
-    def tier(key: String, fn: (SparkSession, String) => DataFrame)(
-        spark: SparkSession, dir: String): DataFrame = {
-      spark.conf.set(key, "sketch")
-      try fn(spark, dir) finally spark.conf.unset(key)
-    }
-    Map(
-      "q105s_profile_sketch" ->
-        tier("spark.graft.distinctTier", graft.queries.MiscOps.q105Profile) _,
-      "q188s_quantile_norm_sketch" ->
-        tier("spark.graft.quantileTier", graft.queries.MiscOps.q188QuantileNorm) _,
-      "q195s_percentile_sketch" ->
-        tier("spark.graft.quantileTier", graft.queries.MiscOps.q195PercentileRank) _,
-      "q205s_perplexity_sketch" ->
-        tier("spark.graft.quantileTier",
-          graft.queries.AuditQueries.q205PerplexityBuckets) _,
-      "q215s_overlap_sketch" ->
-        tier("spark.graft.overlapTier",
-          graft.queries.DedupQueries.q215SourceOverlapMatrix) _)
-  }
-
-  /** Queries whose bench rows carry OUTPUT CARDINALITY (round-11 verdict
-    * #5): the dedup-pair family's wall time scales with true pairs found
-    * on the deliberately near-dup-heavy ScaleUp corpus — q34's 7.6×
-    * sf0.1→sf1 ratio is output growth (pairs grow superlinearly with
-    * replica count), not a plan regression, an adjudication that lived
-    * in prose for two rounds. Bench observes rows-out for these (an
-    * `observe` count — no second evaluation) and ships them in the
-    * artifact's `output_rows` map, so sec-per-1k-pairs is derivable by
-    * any reader. */
-  val outputCardinality: Set[String] = Set(
-    "q30_exact_dedup", "q31_fingerprint_dedup", "q32_minhash_pairs",
-    "q33_simhash_pairs", "q34_ngram_jaccard", "q62_sparse_cosine",
-    "q130_stream_neardup", "q150_winnow_pairs", "q151_sorted_neighborhood",
-    // round-12 verdict #6: q69's sf0.1→sf1 ratio is posting/match-list
-    // growth — rows-out is the denominator a reader needs
-    "q69_tfidf_search",
-    // the payload-ER pair's wall is candidate-volume-proportional, and
-    // the volume shifts non-obviously with scale (ScaleUp replicates
-    // head fingerprints, so hot blocks cross the 50-cap and PRUNE at
-    // sf1 while SNM pairs grow 10×) — rows-out adjudicates the ratio
-    "q242_er_payload_full", "q243_er_payload_incremental")
-
-  /** Queries whose bench rows carry DECODED-BYTES (round-12 verdict
-    * #6): the blob-decode family's wall scales with payload bytes
-    * pushed through the codec, not with output rows — and the blobs
-    * themselves never survive into the output, so the observe SUMS a
-    * per-row byte reconstruction from the output's own columns (exact
-    * for q66/q207 by construction; q61 is within one sample per doc
-    * from the duration_ms floor). Ships as `output_bytes` next to
-    * `output_rows` — same observe, second aggregate, no re-evaluation.
-    */
-  def outputBytes: Map[String, org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions._
-    Map(
-      // 16-bit mono PCM: duration_ms × sample_rate / 1000 samples × 2 B
-      "q61_audio" ->
-        (col("duration_ms") * col("sample_rate") * col("channels") * 2
-          / 1000).cast("long"),
-      // RGB pixels straight from the decode proof's n_px
-      "q66_image_pixels" -> (col("n_px") * 3).cast("long"),
-      // VAD windows are 400 samples of 16-bit mono
-      "q207_voice_activity" -> (col("n_windows") * 400L * 2).cast("long"))
-  }
+  def benchOnly: Map[String, (SparkSession, String) => DataFrame] =
+    rows.filter(_.oracle.isEmpty).map(q => q.name -> q.run).toMap
 
   /** Untimed per-query preparation (persisted-index builds): Bench runs
     * prepare(name) immediately before timing queries(name), so the timed
     * section measures the probe against the maintained artifact, not the
-    * nightly index rebuild (round-10 verdict #3). Every query here is
-    * still self-sufficient WITHOUT its prepare — the Verify/driver path
-    * never calls it.
+    * nightly index rebuild. Every query here is still self-sufficient
+    * WITHOUT its prepare — Verify never calls it.
     */
-  def prepare: Map[String, (SparkSession, String) => Unit] = Map(
-    "q165b_phrase_index_reload" ->
-      (graft.queries.SearchQueries.buildPhraseIndex _),
-    "q165c_phrase_index_incremental" ->
-      (graft.queries.SearchQueries.buildPhraseIndexIncremental _),
-    "q43b_ann_ivf_reload" ->
-      (graft.queries.DedupQueries.buildIvfArtifact _),
-    "q236_incremental_er" ->
-      (graft.queries.DedupQueries.buildErGeneration _),
-    "q240_incremental_er_2gen" ->
-      (graft.queries.DedupQueries.buildErGenerations2 _),
-    "q241_er_nightly_sink" ->
-      (graft.queries.DedupQueries.buildErGeneration _),
-    "q243_er_payload_incremental" ->
-      (graft.queries.DedupQueries.buildErPayloadGeneration _),
-    "q156_incremental_index" ->
-      (graft.queries.SearchQueries.buildBm25HistIndex _),
-    "q130_stream_neardup" ->
-      (graft.queries.MiscOps.buildNearDupHistIndex _))
+  def prepare: Map[String, (SparkSession, String) => Unit] =
+    rows.flatMap(q => q.prepare.map(q.name -> _)).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracles ++
-      graft.queries.TextQueries.oracles ++
-      graft.queries.DedupQueries.oracles ++
-      graft.queries.MiscOps.oracles ++
-      graft.queries.PipelineQueries.oracles ++
-      graft.queries.ScrubQueries.oracles ++
-      graft.queries.CompositeQueries.oracles ++
-      graft.queries.SinkQueries.oracles ++
-      graft.queries.CurationQueries.oracles ++
-      graft.queries.SearchQueries.oracles ++
-      graft.queries.AuditQueries.oracles
+    rows.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

@@ -5,8 +5,11 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Kernels for the dedup hot path. Each is a static method that a
-  * [[Kernels]] entry calls, so the call sits inside whole-stage codegen
-  * with no interpreted-eval glue and no per-row boxing, while the kernel
+  * [[Kernels]] entry calls, so in a whole-stage-codegen'd operator the
+  * call is one generated static call with no per-row boxing (an
+  * operator that also evaluates a higher-order function is a
+  * `CodegenFallback` and runs interpreted, as q20's projection of
+  * `fingerprint_normalize` does), while the kernel
   * itself is one pass of tight JVM arithmetic. The builtin-only
   * formulation needs 64 (simhash) / k (minhash) separate array traversals
   * with per-element expression trees, and materializes every shingle as a
@@ -22,8 +25,18 @@ object HashKernels {
     * order-insensitive.
     */
   def shingleHash64(input: UTF8String, n: Int): ArrayData = {
+    val hashes = gramHashes(input, n)
+    sortedDistinct(hashes, hashes.length)
+  }
+
+  /** One hash per start position of the char n-grams of `input` after
+    * inline normalization (lowercase, runs of whitespace → one space, no
+    * trailing space): a polynomial over the gram's chars spread by the
+    * splitmix finalizer. A text shorter than n hashes its one truncated
+    * gram; a text with no non-space char has none.
+    */
+  private def gramHashes(input: UTF8String, n: Int): Array[Long] = {
     val raw = input.toString
-    // inline normalization: toLowerCase + collapse \s+ to single space
     val sb = new java.lang.StringBuilder(raw.length)
     var prevWs = false
     var r = 0
@@ -38,10 +51,9 @@ object HashKernels {
       }
       r += 1
     }
-    // strip a trailing space left by terminal whitespace
     var len = sb.length()
     if (len > 0 && sb.charAt(len - 1) == ' ') len -= 1
-    if (len == 0) return new GenericArrayData(Array.empty[Long])
+    if (len == 0) return Array.emptyLongArray
     val m = math.max(1, len - n + 1)
     val hashes = new Array[Long](m)
     var i = 0
@@ -50,20 +62,22 @@ object HashKernels {
       var j = i
       val end = math.min(i + n, len)
       while (j < end) { h = h * 31 + sb.charAt(j); j += 1 }
-      // splitmix finalizer spreads the weak polynomial bits
-      h = (h ^ (h >>> 30)) * 0xBF58476D1CE4E5B9L
-      h = (h ^ (h >>> 27)) * 0x94D049BB133111EBL
-      hashes(i) = h ^ (h >>> 31)
+      hashes(i) = mix(h)
       i += 1
     }
-    java.util.Arrays.sort(hashes)
-    var w = 1
-    i = 1
+    hashes
+  }
+
+  /** The first `m` values of `a`, sorted and deduplicated (sorts `a`). */
+  private def sortedDistinct(a: Array[Long], m: Int): ArrayData = {
+    java.util.Arrays.sort(a, 0, m)
+    var w = math.min(m, 1)
+    var i = 1
     while (i < m) {
-      if (hashes(i) != hashes(i - 1)) { hashes(w) = hashes(i); w += 1 }
+      if (a(i) != a(i - 1)) { a(w) = a(i); w += 1 }
       i += 1
     }
-    new GenericArrayData(java.util.Arrays.copyOf(hashes, w))
+    new GenericArrayData(java.util.Arrays.copyOf(a, w))
   }
 
   /** Winnowing fingerprints (Schleimer, Wilkerson & Aiken 2003, the
@@ -81,37 +95,9 @@ object HashKernels {
     * gram; fewer than w positions form one window.
     */
   def winnowHash64(input: UTF8String, n: Int, w: Int): ArrayData = {
-    val raw = input.toString
-    val sb = new java.lang.StringBuilder(raw.length)
-    var prevWs = false
-    var r = 0
-    while (r < raw.length) {
-      val c = raw.charAt(r)
-      if (Character.isWhitespace(c)) {
-        if (!prevWs && sb.length() > 0) sb.append(' ')
-        prevWs = true
-      } else {
-        sb.append(Character.toLowerCase(c))
-        prevWs = false
-      }
-      r += 1
-    }
-    var len = sb.length()
-    if (len > 0 && sb.charAt(len - 1) == ' ') len -= 1
-    if (len == 0) return new GenericArrayData(Array.empty[Long])
-    val m = math.max(1, len - n + 1)
-    val hashes = new Array[Long](m)
-    var i = 0
-    while (i < m) {
-      var h = 1125899906842597L
-      var j = i
-      val end = math.min(i + n, len)
-      while (j < end) { h = h * 31 + sb.charAt(j); j += 1 }
-      h = (h ^ (h >>> 30)) * 0xBF58476D1CE4E5B9L
-      h = (h ^ (h >>> 27)) * 0x94D049BB133111EBL
-      hashes(i) = h ^ (h >>> 31)
-      i += 1
-    }
+    val hashes = gramHashes(input, n)
+    val m = hashes.length
+    if (m == 0) return new GenericArrayData(Array.emptyLongArray)
     val nw = math.max(1, m - w + 1)
     val sel = new Array[Long](nw)
     var jw = 0
@@ -126,14 +112,7 @@ object HashKernels {
       sel(jw) = mn
       jw += 1
     }
-    java.util.Arrays.sort(sel)
-    var wr = 1
-    i = 1
-    while (i < nw) {
-      if (sel(i) != sel(i - 1)) { sel(wr) = sel(i); wr += 1 }
-      i += 1
-    }
-    new GenericArrayData(java.util.Arrays.copyOf(sel, wr))
+    sortedDistinct(sel, nw)
   }
 
   /** MinHash signature; slot j = min over hashes of mix_j(h). Caller
@@ -346,9 +325,11 @@ object HashKernels {
     if (arr.numElements() == 0) null else minhashSigOph(arr, k)
   }
 
-  def splitmix(x0: Long): Long = {
-    var x = x0 + 0x9E3779B97F4A7C15L
-    x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
+  def splitmix(x0: Long): Long = mix(x0 + 0x9E3779B97F4A7C15L)
+
+  /** The splitmix64 finalizer: spreads weak polynomial bits. */
+  private def mix(x0: Long): Long = {
+    var x = (x0 ^ (x0 >>> 30)) * 0xBF58476D1CE4E5B9L
     x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
     x ^ (x >>> 31)
   }

@@ -19,9 +19,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * position (every pattern re-tried at every character), so a 10k-term
   * blocklist makes regexp_replace quadratic-ish in practice. This is an
   * Aho–Corasick automaton instead — O(text + matches) independent of
-  * term count — built ONCE per JVM from the term list (a literal
-  * argument, compared by value) and shared by every row. Matching is on exact character sequences (caller normalizes
-  * case); terms may contain spaces (phrases).
+  * term count — built ONCE per JVM from the term list (a
+  * [[MultiReplaceTerms]] literal, compared by value) and read by every
+  * row without a lookup. Matching is on exact character sequences
+  * (caller normalizes case); terms may contain spaces (phrases).
   */
 object MultiReplaceKernel {
 
@@ -96,16 +97,15 @@ object MultiReplaceKernel {
     }
   }
 
-  /** One automaton per distinct term list per JVM. */
-  def automaton(terms: Seq[String]): Automaton = KernelTables(terms)(ts => new Automaton(ts.toArray))
+  def replaceAll(text: String, terms: Seq[String], repl: String): String =
+    replaceAll(text, MultiReplaceTerms(terms).automaton, repl)
 
   /** Leftmost-longest non-overlapping replace. Two phases: AC collects
     * END-anchored longest matches, then a reverse greedy pass selects
     * the leftmost-longest non-overlapping set (identical to the
     * longest-first-alternation regex scan).
     */
-  def replaceAll(text: String, terms: Seq[String], repl: String): String = {
-    val ac = automaton(terms)
+  private def replaceAll(text: String, ac: Automaton, repl: String): String = {
     val n = text.length
     // best[i] = length of the longest term STARTING at i (0 = none)
     val best = new Array[Int](n)
@@ -130,14 +130,23 @@ object MultiReplaceKernel {
   }
 
   /** The `multi_replace` entry. */
-  def replace(text: UTF8String, terms: Seq[String], repl: UTF8String): UTF8String =
-    UTF8String.fromString(replaceAll(text.toString, terms, repl.toString))
+  def replace(text: UTF8String, terms: MultiReplaceTerms, repl: UTF8String): UTF8String =
+    UTF8String.fromString(replaceAll(text.toString, terms.automaton, repl.toString))
+}
+
+/** What a `multi_replace` call is compared by: the term list. The kernel
+  * reads the automaton, built once per JVM per distinct list, from a
+  * field of the deserialized literal, so no row hashes the terms.
+  */
+final case class MultiReplaceTerms(terms: Seq[String]) {
+  @transient lazy val automaton: MultiReplaceKernel.Automaton =
+    KernelTables(this)(t => new MultiReplaceKernel.Automaton(t.terms.toArray))
 }
 
 object MultiReplaceExpr {
   /** `multi_replace(text)` for a fixed term list + replacement. */
   def multiReplace(text: Column, terms: Seq[String], repl: String): Column = {
     require(terms.nonEmpty && terms.forall(_.nonEmpty), "multi_replace: terms must be non-empty")
-    Kernels.multiReplace(text, terms, repl)
+    Kernels.multiReplace(text, MultiReplaceTerms(terms), repl)
   }
 }

@@ -142,7 +142,7 @@ object TextKernels {
     */
   def charEntropyFix(s: UTF8String): Long = {
     val str = s.toString
-    val counts = new java.util.HashMap[Integer, Long]()
+    val counts = new java.util.HashMap[Integer, java.lang.Long]()
     var n = 0L
     var i = 0
     while (i < str.length) {
@@ -156,7 +156,7 @@ object TextKernels {
     var acc = 0L
     val it = counts.values().iterator()
     while (it.hasNext) {
-      val c = it.next()
+      val c: Long = it.next()
       val pFix = (c << 30) / n
       acc += c * (-FixedLogKernel.log2fix(pFix, 30, 16))
     }

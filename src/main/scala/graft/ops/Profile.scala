@@ -20,8 +20,8 @@ import org.apache.spark.sql.types.DecimalType
   * Exact distinct (not approx_count_distinct) is deliberate: profiles
   * feed validation thresholds and the driver's hash-equality oracle;
   * HLL estimates would make both nondeterministic. The 100 TB swap is
-  * EXECUTABLE: `sketchDistinct = true` (or the session flag
-  * `spark.graft.distinctTier = sketch`, which q105 reads) computes
+  * EXECUTABLE: `sketchDistinct = true` (q105's `sketch` argument, the
+  * bench-only q105s row) computes
   * n_distinct through [[graft.functions.Kmv.sketch]] inside the SAME
   * single-agg pass — the mergeable KMV summary keeps the determinism
   * (content is a pure set-function; integer estimator, q114-gated) at
@@ -33,11 +33,6 @@ import org.apache.spark.sql.types.DecimalType
   * nothing audits the number.
   */
 object Profile {
-
-  /** Session tier switch for n_distinct, mirroring
-    * `spark.graft.quantileTier`: `exact` (default) or `sketch`. */
-  def sketchTier(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.distinctTier").contains("sketch")
 
   def profile(df: DataFrame, cols: Seq[String],
       sketchDistinct: Boolean = false, k: Int = 1024): DataFrame = {
@@ -78,7 +73,9 @@ object Profile {
     * `mergeProfiles(sketchProfile(A), sketchProfile(B))` equals
     * `sketchProfile(A ∪ B)` EXACTLY — state equality, not just
     * bounds — so a 100 TB profile updates from each ingest delta
-    * without rescanning history. One Expand scan like [[profile]].
+    * without rescanning history. One scan per call and no Expand:
+    * with no COUNT(DISTINCT), the KMV sketch is a plain
+    * ObjectHashAggregate function (q152 plans three such scans).
     */
   def sketchProfile(df: DataFrame, cols: Seq[String],
       k: Int = 1024): DataFrame = {

@@ -113,7 +113,7 @@ object Quantiles {
   // bounded relation. Positions quantize to bucket resolution
   // (rel err < 2⁻³; exact on values < 8 and on bucket lower bounds —
   // QuantileTierSpec pins tier agreement on that lossless grid).
-  // Selected per session via spark.graft.quantileTier = exact|sketch.
+  // Callers pick the tier: q188, q195 and q205 take a `sketch` argument.
 
   /** Signed bucket id: negatives mirror below -1 so the id is monotone
     * over the full long range (`-1 - bucketOf(-v)` decreases as |v|
@@ -126,12 +126,6 @@ object Quantiles {
   def bucketValueSigned(id: Column): Column =
     when(id >= 0, bucketLowerBound(id))
       .otherwise(-bucketLowerBound(lit(-1L) - id))
-
-  /** Session tier switch: `spark.graft.quantileTier` = `exact`
-    * (default — oracle-gated bit-exact rank windows) or `sketch` (the
-    * mergeable-histogram path above). */
-  def sketchTier(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.quantileTier").contains("sketch")
 
   /** Per-key signed-bucket cumulative histogram:
     * (keys..., __bkt, __cnt, __cum, __n). */

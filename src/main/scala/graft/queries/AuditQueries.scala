@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
+import graft.Query
 import graft.functions.FixedLogExprs
 import graft.ops.{Iban, Load, Ols, RobustStats}
 
@@ -376,12 +377,13 @@ object AuditQueries {
     * rank, so both engines bucket identically even on ties (doc_id
     * tiebreak). Exact tier: the per-lang rank is a sort window; the
     * 100 TB swap is EXECUTABLE (round-9 verdict #6):
-    * `spark.graft.quantileTier = sketch` routes the same bucket
+    * `sketch = true` (the bench-only q205s row) routes the same bucket
     * algebra through [[Quantiles.rankBuckets]]' mergeable histogram
-    * (QuantileTierSpec pins tier agreement; the oracle runs the
-    * default exact tier).
+    * (QuantileTierSpec pins tier agreement; the oracle row runs the
+    * exact tier).
     */
-  def q205PerplexityBuckets(spark: SparkSession, dir: String): DataFrame = {
+  def q205PerplexityBuckets(spark: SparkSession, dir: String,
+      sketch: Boolean): DataFrame = {
     val d = Load.table(spark, dir, "documents")
     val model = graft.text.KneserNey.bigramModel(d, "text")
     val pp = graft.text.KneserNey.perplexityBits(model, d, "text", "doc_id")
@@ -392,7 +394,7 @@ object AuditQueries {
     graft.ops.Quantiles.rankBuckets(
         pp.join(d.select("doc_id", "lang"), Seq("doc_id")),
         Seq("lang"), "ppl_fix", "doc_id", k = 3, outCol = "bucket",
-        sketch = graft.ops.Quantiles.sketchTier(spark))
+        sketch = sketch)
       .select(col("doc_id"), col("lang"), col("ppl_fix"), col("bucket"))
       .orderBy("doc_id")
   }
@@ -1362,43 +1364,27 @@ object AuditQueries {
       |       CAST((1000 * sd_w) // w_total AS BIGINT) AS alloc
       |FROM w, t ORDER BY lang""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q228_neyman_allocation" -> (q228NeymanAllocation _),
-    "q222_t_closeness" -> (q222TCloseness _),
-    "q217_conformal_gate" -> (q217ConformalGate _),
-    "q214_mink_membership" -> (q214MinkMembership _),
-    "q213_top_component" -> (q213TopComponent _),
-    "q212_contamination_spans" -> (q212ContaminationSpans _),
-    "q209_rho_selection" -> (q209RhoSelection _),
-    "q210_gini_concentration" -> (q210GiniConcentration _),
-    "q211_matryoshka_variance" -> (q211MatryoshkaVariance _),
-    "q208_doremi_step" -> (q208DoremiStep _),
-    "q207_voice_activity" -> (q207VoiceActivity _),
-    "q206_video_scene_dedup" -> (q206VideoSceneDedup _),
-    "q205_perplexity_buckets" -> (q205PerplexityBuckets _),
-    "q200_iban_audit" -> (q200IbanAudit _),
-    "q201_zipf_slope" -> (q201ZipfSlope _),
-    "q202_seasonal_outliers" -> (q202SeasonalOutliers _),
-    "q203_l_diversity" -> (q203LDiversity _),
-    "q204_token_fertility" -> (q204TokenFertility _))
-
-  val oracles: Map[String, String] = Map(
-    "q228_neyman_allocation" -> q228Sql,
-    "q222_t_closeness" -> q222Sql,
-    "q217_conformal_gate" -> q217Sql,
-    "q214_mink_membership" -> q214Sql,
-    "q213_top_component" -> q213Sql,
-    "q212_contamination_spans" -> q212Sql,
-    "q209_rho_selection" -> q209Sql,
-    "q210_gini_concentration" -> q210Sql,
-    "q211_matryoshka_variance" -> q211Sql,
-    "q208_doremi_step" -> q208Sql,
-    "q207_voice_activity" -> q207Sql,
-    "q206_video_scene_dedup" -> q206Sql,
-    "q205_perplexity_buckets" -> q205Sql,
-    "q200_iban_audit" -> q200Sql,
-    "q201_zipf_slope" -> q201Sql,
-    "q202_seasonal_outliers" -> q202Sql,
-    "q203_l_diversity" -> q203Sql,
-    "q204_token_fertility" -> q204Sql)
+  val rows: Seq[Query] = Seq(
+    Query("q228_neyman_allocation", q228NeymanAllocation, Some(q228Sql)),
+    Query("q222_t_closeness", q222TCloseness, Some(q222Sql)),
+    Query("q217_conformal_gate", q217ConformalGate, Some(q217Sql)),
+    Query("q214_mink_membership", q214MinkMembership, Some(q214Sql)),
+    Query("q213_top_component", q213TopComponent, Some(q213Sql)),
+    Query("q212_contamination_spans", q212ContaminationSpans, Some(q212Sql)),
+    Query("q209_rho_selection", q209RhoSelection, Some(q209Sql)),
+    Query("q210_gini_concentration", q210GiniConcentration, Some(q210Sql)),
+    Query("q211_matryoshka_variance", q211MatryoshkaVariance, Some(q211Sql)),
+    Query("q208_doremi_step", q208DoremiStep, Some(q208Sql)),
+    // decoded bytes: VAD windows are 400 samples of 16-bit mono
+    Query("q207_voice_activity", q207VoiceActivity, Some(q207Sql),
+      observeBytes = Some((col("n_windows") * 400L * 2).cast("long"))),
+    Query("q206_video_scene_dedup", q206VideoSceneDedup, Some(q206Sql)),
+    Query("q205_perplexity_buckets", q205PerplexityBuckets(_, _, false),
+      Some(q205Sql)),
+    Query("q205s_perplexity_sketch", q205PerplexityBuckets(_, _, true), None),
+    Query("q200_iban_audit", q200IbanAudit, Some(q200Sql)),
+    Query("q201_zipf_slope", q201ZipfSlope, Some(q201Sql)),
+    Query("q202_seasonal_outliers", q202SeasonalOutliers, Some(q202Sql)),
+    Query("q203_l_diversity", q203LDiversity, Some(q203Sql)),
+    Query("q204_token_fertility", q204TokenFertility, Some(q204Sql)))
 }

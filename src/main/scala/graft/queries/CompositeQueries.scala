@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Query
 import graft.ScratchDirs
 import graft.ops.{Load, Par, Reshape, RowOps}
 import graft.pipelines.Zotero
@@ -221,17 +222,10 @@ object CompositeQueries {
     """SELECT CAST(r_regionkey AS VARCHAR) AS region_key, r_name AS region_name
       |FROM region ORDER BY region_key""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q27_publications_scrub" -> q27PublicationsScrub,
-    "q28_zotero_shape" -> q28ZoteroShape,
-    "q29_fanout_harvest" -> q29FanOutHarvest,
-    "q37_options_collect" -> q37OptionsCollect,
-    "q38_transpose_sheet" -> q38TransposeSheet)
-
-  val oracles: Map[String, String] = Map(
-    "q27_publications_scrub" -> q27Sql,
-    "q28_zotero_shape" -> q28Sql,
-    "q29_fanout_harvest" -> q29Sql,
-    "q37_options_collect" -> q37Sql,
-    "q38_transpose_sheet" -> q38Sql)
+  val rows: Seq[Query] = Seq(
+    Query("q27_publications_scrub", q27PublicationsScrub, Some(q27Sql)),
+    Query("q28_zotero_shape", q28ZoteroShape, Some(q28Sql)),
+    Query("q29_fanout_harvest", q29FanOutHarvest, Some(q29Sql)),
+    Query("q37_options_collect", q37OptionsCollect, Some(q37Sql)),
+    Query("q38_transpose_sheet", q38TransposeSheet, Some(q38Sql)))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Query
 import graft.ScratchDirs
 import graft.graphs.ConnectedComponents
 import graft.ops.Load
@@ -1667,44 +1668,6 @@ ORDER BY doc_id"""
       |            ELSE 0 END AS mean_disp_milli
       |FROM a""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q233_epoch_decorrelation" -> (q233EpochDecorrelation _),
-    "q230_shard_balance" -> (q230ShardBalance _),
-    "q223_modularity" -> (q223Modularity _),
-    "q147_layout_pipeline" -> (q147LayoutPipeline _),
-    "q146_curriculum" -> (q146Curriculum _),
-    "q145_block_spans" -> (q145BlockSpans _),
-    "q144_train_shuffle" -> (q144TrainShuffle _),
-    "q100_paragraph_dedup" -> (q100ParagraphDedup _),
-    "q108_sketch_merge" -> (q108SketchMerge _),
-    "q63_cluster_split" -> (q63ClusterSplit _),
-    "q64_chunk_windows" -> (q64Chunk _),
-    "q65_pack_sequences" -> (q65Pack _),
-    "q47_components" -> (q47Components _),
-    "q48_decontaminate" -> (q48Decontaminate _),
-    "q49_domain_cap" -> (q49DomainCap _),
-    "q52_vocab" -> (q52Vocab _),
-    "q55_dedup_clusters" -> (q55DedupClusters _),
-    "q154_golden_record" -> (q154GoldenRecord _),
-    "q155_incremental_cc" -> (q155IncrementalComponents _),
-    "q54_training_mix" -> (q54TrainingMix _),
-    "q56_boilerplate" -> (q56Boilerplate _),
-    "q57_bloom_decontaminate" -> (q57BloomDecontaminate _),
-    "q58_token_budget" -> (q58TokenBudget _),
-    "q76_dsir" -> (q76Dsir _),
-    "q77_length_stats" -> (q77LengthStats _),
-    "q79_freq_items" -> (q79FreqItems _),
-    "q87_vocab_encode" -> (q87VocabEncode _),
-    "q97_pagerank" -> (q97PageRank _),
-    "q141_triangles" -> (q141Triangles _),
-    "q166_link_predict" -> (q166LinkPredict _),
-    "q176_bfs_hops" -> (q176BfsHops _),
-    "q187_personalized_pr" -> (q187PersonalizedPr _),
-    "q179_kcore" -> (q179KCore _),
-    "q142_label_prop" -> (q142LabelProp _),
-    "q118_quantile_sketch" -> (q118QuantileSketch _),
-    "q119_weighted_sample" -> (q119WeightedSample _))
-
   /** q119: weighted sampling without replacement
     * ([[Scrub.weightedSample]]) — 20 docs per language with inclusion
     * probability ∝ length, the biased complement of q49's uniform cap.
@@ -1807,41 +1770,41 @@ ORDER BY doc_id"""
       |            ELSE (8 + (b - 8) % 8) << ((b - 8) // 8) END AS quantile
       |FROM p ORDER BY l_returnflag, q_num, q_den""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q233_epoch_decorrelation" -> q233Sql,
-    "q230_shard_balance" -> q230Sql,
-    "q223_modularity" -> q223Sql,
-    "q147_layout_pipeline" -> q147Sql,
-    "q146_curriculum" -> q146Sql,
-    "q145_block_spans" -> q145Sql,
-    "q144_train_shuffle" -> q144Sql,
-    "q100_paragraph_dedup" -> q100Sql,
-    "q108_sketch_merge" -> q108Sql,
-    "q63_cluster_split" -> q63Sql,
-    "q64_chunk_windows" -> q64Sql,
-    "q65_pack_sequences" -> q65Sql,
-    "q47_components" -> q47Sql,
-    "q48_decontaminate" -> q48Sql,
-    "q49_domain_cap" -> q49Sql,
-    "q52_vocab" -> q52Sql,
-    "q55_dedup_clusters" -> q55Sql,
-    "q154_golden_record" -> q154Sql,
-    "q155_incremental_cc" -> q155Sql,
-    "q54_training_mix" -> q54Sql,
-    "q56_boilerplate" -> q56Sql,
-    "q57_bloom_decontaminate" -> q57Sql,
-    "q58_token_budget" -> q58Sql,
-    "q76_dsir" -> q76Sql,
-    "q77_length_stats" -> q77Sql,
-    "q79_freq_items" -> q79Sql,
-    "q87_vocab_encode" -> q87Sql,
-    "q97_pagerank" -> q97Sql,
-    "q141_triangles" -> q141Sql,
-    "q166_link_predict" -> q166Sql,
-    "q176_bfs_hops" -> q176Sql,
-    "q187_personalized_pr" -> q187Sql,
-    "q179_kcore" -> q179Sql,
-    "q142_label_prop" -> q142Sql,
-    "q118_quantile_sketch" -> q118Sql,
-    "q119_weighted_sample" -> q119Sql)
+  val rows: Seq[Query] = Seq(
+    Query("q233_epoch_decorrelation", q233EpochDecorrelation, Some(q233Sql)),
+    Query("q230_shard_balance", q230ShardBalance, Some(q230Sql)),
+    Query("q223_modularity", q223Modularity, Some(q223Sql)),
+    Query("q147_layout_pipeline", q147LayoutPipeline, Some(q147Sql)),
+    Query("q146_curriculum", q146Curriculum, Some(q146Sql)),
+    Query("q145_block_spans", q145BlockSpans, Some(q145Sql)),
+    Query("q144_train_shuffle", q144TrainShuffle, Some(q144Sql)),
+    Query("q100_paragraph_dedup", q100ParagraphDedup, Some(q100Sql)),
+    Query("q108_sketch_merge", q108SketchMerge, Some(q108Sql)),
+    Query("q63_cluster_split", q63ClusterSplit, Some(q63Sql)),
+    Query("q64_chunk_windows", q64Chunk, Some(q64Sql)),
+    Query("q65_pack_sequences", q65Pack, Some(q65Sql)),
+    Query("q47_components", q47Components, Some(q47Sql)),
+    Query("q48_decontaminate", q48Decontaminate, Some(q48Sql)),
+    Query("q49_domain_cap", q49DomainCap, Some(q49Sql)),
+    Query("q52_vocab", q52Vocab, Some(q52Sql)),
+    Query("q55_dedup_clusters", q55DedupClusters, Some(q55Sql)),
+    Query("q154_golden_record", q154GoldenRecord, Some(q154Sql)),
+    Query("q155_incremental_cc", q155IncrementalComponents, Some(q155Sql)),
+    Query("q54_training_mix", q54TrainingMix, Some(q54Sql)),
+    Query("q56_boilerplate", q56Boilerplate, Some(q56Sql)),
+    Query("q57_bloom_decontaminate", q57BloomDecontaminate, Some(q57Sql)),
+    Query("q58_token_budget", q58TokenBudget, Some(q58Sql)),
+    Query("q76_dsir", q76Dsir, Some(q76Sql)),
+    Query("q77_length_stats", q77LengthStats, Some(q77Sql)),
+    Query("q79_freq_items", q79FreqItems, Some(q79Sql)),
+    Query("q87_vocab_encode", q87VocabEncode, Some(q87Sql)),
+    Query("q97_pagerank", q97PageRank, Some(q97Sql)),
+    Query("q141_triangles", q141Triangles, Some(q141Sql)),
+    Query("q166_link_predict", q166LinkPredict, Some(q166Sql)),
+    Query("q176_bfs_hops", q176BfsHops, Some(q176Sql)),
+    Query("q187_personalized_pr", q187PersonalizedPr, Some(q187Sql)),
+    Query("q179_kcore", q179KCore, Some(q179Sql)),
+    Query("q142_label_prop", q142LabelProp, Some(q142Sql)),
+    Query("q118_quantile_sketch", q118QuantileSketch, Some(q118Sql)),
+    Query("q119_weighted_sample", q119WeightedSample, Some(q119Sql)))
 }

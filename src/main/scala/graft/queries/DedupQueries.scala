@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Query
 import graft.ScratchDirs
 import graft.dedup.Dedup
 import graft.ops.{Load, RecordLinkage}
@@ -383,7 +384,8 @@ object DedupQueries {
     val uni = e.unionByName(scaled).withColumn("__b",
       Ann.srpBucket(col("embedding"), dim = 64, nBits = 12))
     // identical directions land in the same SRP bucket — join inside
-    // buckets only, then verify by exact cosine
+    // buckets only (a broadcast hash join on the bucket id, no
+    // bucket-keyed shuffle), then verify by exact cosine
     val a = uni.select(col("__b"), col("vec_id").as("id_a"), col("embedding").as("va"))
     val b = uni.select(col("__b"), col("vec_id").as("id_b"), col("embedding").as("vb"))
     a.join(b, Seq("__b"))
@@ -1539,21 +1541,22 @@ object DedupQueries {
     * as 2¹⁶ floors on that artifact, with a documents-spine source
     * list so a gram-free source still surfaces (zeros, no silent
     * drop). The 100 TB swap is EXECUTABLE (q205's tier pattern):
-    * `spark.graft.overlapTier = sketch` routes the same matrix through
-    * per-source KMV signatures ([[graft.functions.KmvSketch]], k = 256)
+    * `sketch = true` (the bench-only q215s row) routes the same matrix
+    * through per-source KMV signatures ([[graft.functions.KmvSketch]],
+    * k = 256)
     * — O(k) state per source regardless of corpus size, Broder's min-k
     * coincidence for the intersection — and because a KMV sketch is
     * EXHAUSTIVE below k distinct values, the two tiers agree
     * bit-for-bit whenever every source PAIR's gram union holds < k
-    * grams (OverlapTierSpec pins this); the oracle runs the default
-    * exact tier.
+    * grams (OverlapTierSpec pins this); the oracle row runs the exact
+    * tier.
     */
-  def q215SourceOverlapMatrix(spark: SparkSession, dir: String): DataFrame = {
+  def q215SourceOverlapMatrix(spark: SparkSession, dir: String,
+      sketch: Boolean): DataFrame = {
     val d = Load.table(spark, dir, "documents")
     val sources = d.select("source").distinct()
       .collect().map(_.getString(0)).sorted
-    if (spark.conf.getOption("spark.graft.overlapTier").contains("sketch"))
-      q215SketchMatrix(spark, d, sources)
+    if (sketch) q215SketchMatrix(spark, d, sources)
     else q215ExactMatrix(spark, d, sources)
   }
 
@@ -3501,96 +3504,69 @@ object DedupQueries {
        |GROUP BY cluster_id ORDER BY cluster_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q234_survivor_quality" -> (q234SurvivorQuality _),
-    "q231_threshold_sensitivity" -> (q231ThresholdSensitivity _),
-    "q226_blocking_recall" -> (q226BlockingRecall _),
-    "q225_dedup_impact" -> (q225DedupImpact _),
-    "q221_int8_recall" -> (q221Int8Recall _),
-    "q220_cluster_quality" -> (q220ClusterQuality _),
-    "q215_source_overlap" -> (q215SourceOverlapMatrix _),
-    "q239_overlap_tier_envelope" -> (q239OverlapTierEnvelope _),
-    "q153_fellegi_sunter" -> (q153FellegiSunter _),
-    "q235_dedup_pipeline" -> (q235DedupPipeline _),
-    "q236_incremental_er" -> (q236IncrementalEr _),
-    "q240_incremental_er_2gen" -> (q240IncrementalEr2Gen _),
-    "q241_er_nightly_sink" -> (q241NightlyErSink _),
-    "q242_er_payload_full" -> (q242ErPayloadFull _),
-    "q243_er_payload_incremental" -> (q243ErPayloadIncremental _),
-    "q151_sorted_neighborhood" -> (q151SortedNeighborhood _),
-    "q150_winnow_pairs" -> (q150WinnowPairs _),
-    "q149_corpus_overlap" -> (q149CorpusOverlap _),
-    "q134_preference_pairs" -> (q134PreferencePairs _),
-    "q128_edit_verify" -> (q128EditVerify _),
-    "q127_bitext_mine" -> (q127BitextMine _),
-    "q125_mmr_diversify" -> (q125MmrDiversify _),
-    "q124_pq_codes" -> (q124PqCodes _),
-    "q122_cms_frequency" -> (q122CmsFrequency _),
-    "q114_kmv_distinct" -> (q114KmvDistinct _),
-    "q164_hll_distinct" -> (q164HllDistinct _),
-    "q169_containment" -> (q169Containment _),
-    "q30_exact_dedup" -> q30Exact,
-    "q31_fingerprint_dedup" -> q31Fingerprint,
-    "q32_minhash_pairs" -> q32Minhash,
-    "q33_simhash_pairs" -> q33Simhash,
-    "q34_ngram_jaccard" -> q34Jaccard,
-    "q35_embed_neardup" -> q35EmbedNearDup,
-    "q36_incremental_dedup" -> q36IncrementalDedup,
-    "q40_ann_brute" -> q40AnnBrute,
-    "q41_ann_srp" -> q41AnnSrp,
-    "q42_ann_topk_heap" -> q42AnnTopKHeap,
-    "q103_hard_negatives" -> (q103HardNegatives _),
-    "q110_embedding_outliers" -> (q110EmbeddingOutliers _),
-    "q43_ann_ivf" -> q43AnnIvf,
-    "q43b_ann_ivf_reload" -> (q43bAnnIvfReload _),
-    "q62_sparse_cosine" -> q62SparseCosine,
-    "q73_semdedup" -> q73SemDedup,
-    "q83_semantic_decontaminate" -> q83SemanticDecontaminate)
-
-  val oracles: Map[String, String] = Map(
-    "q234_survivor_quality" -> q234Sql,
-    "q231_threshold_sensitivity" -> q231Sql,
-    "q226_blocking_recall" -> q226Sql,
-    "q225_dedup_impact" -> q225Sql,
-    "q221_int8_recall" -> q221Sql,
-    "q220_cluster_quality" -> q220Sql,
-    "q215_source_overlap" -> q215Sql,
-    "q239_overlap_tier_envelope" -> q239Sql,
-    "q153_fellegi_sunter" -> q153Sql,
-    "q235_dedup_pipeline" -> q235Sql,
+  val rows: Seq[Query] = Seq(
+    Query("q234_survivor_quality", q234SurvivorQuality, Some(q234Sql)),
+    Query("q231_threshold_sensitivity", q231ThresholdSensitivity,
+      Some(q231Sql)),
+    Query("q226_blocking_recall", q226BlockingRecall, Some(q226Sql)),
+    Query("q225_dedup_impact", q225DedupImpact, Some(q225Sql)),
+    Query("q221_int8_recall", q221Int8Recall, Some(q221Sql)),
+    Query("q220_cluster_quality", q220ClusterQuality, Some(q220Sql)),
+    Query("q215_source_overlap", q215SourceOverlapMatrix(_, _, false),
+      Some(q215Sql)),
+    Query("q215s_overlap_sketch", q215SourceOverlapMatrix(_, _, true), None),
+    Query("q239_overlap_tier_envelope", q239OverlapTierEnvelope, Some(q239Sql)),
+    Query("q153_fellegi_sunter", q153FellegiSunter, Some(q153Sql)),
+    Query("q235_dedup_pipeline", q235DedupPipeline, Some(q235Sql)),
     // full-recompute equality: the incremental probe must be invisible
-    "q236_incremental_er" -> q235Sql,
-    "q240_incremental_er_2gen" -> q235Sql,
-    "q241_er_nightly_sink" -> q241Sql,
-    "q242_er_payload_full" -> q242Sql,
-    "q243_er_payload_incremental" -> q242Sql,
-    "q151_sorted_neighborhood" -> q151Sql,
-    "q150_winnow_pairs" -> q150Sql,
-    "q149_corpus_overlap" -> q149Sql,
-    "q134_preference_pairs" -> q134Sql,
-    "q128_edit_verify" -> q128Sql,
-    "q127_bitext_mine" -> q127Sql,
-    "q125_mmr_diversify" -> q125Sql,
-    "q124_pq_codes" -> q124Sql,
-    "q122_cms_frequency" -> q122Sql,
-    "q114_kmv_distinct" -> q114Sql,
-    "q164_hll_distinct" -> q164Sql,
-    "q169_containment" -> q169Sql,
-    "q30_exact_dedup" -> q30Sql,
-    "q31_fingerprint_dedup" -> q31Sql,
-    "q32_minhash_pairs" -> q32Sql,
-    "q33_simhash_pairs" -> q33Sql,
-    "q34_ngram_jaccard" -> q34Sql,
-    "q35_embed_neardup" -> q35Sql,
-    "q36_incremental_dedup" -> q36Sql,
-    "q40_ann_brute" -> q40Sql,
-    "q41_ann_srp" -> q41Sql,
-    "q42_ann_topk_heap" -> q40Sql,
-    "q103_hard_negatives" -> q103Sql,
-    "q110_embedding_outliers" -> q110Sql,
-    "q43_ann_ivf" -> q41Sql,
-    "q43b_ann_ivf_reload" -> q41Sql,
-    "q62_sparse_cosine" -> q62Sql,
-    "q73_semdedup" -> q73Sql,
-    "q83_semantic_decontaminate" -> q83Sql)
+    Query("q236_incremental_er", q236IncrementalEr, Some(q235Sql),
+      prepare = Some(buildErGeneration(_, _))),
+    Query("q240_incremental_er_2gen", q240IncrementalEr2Gen, Some(q235Sql),
+      prepare = Some(buildErGenerations2(_, _))),
+    Query("q241_er_nightly_sink", q241NightlyErSink, Some(q241Sql),
+      prepare = Some(buildErGeneration(_, _))),
+    Query("q242_er_payload_full", q242ErPayloadFull, Some(q242Sql),
+      observeRows = true),
+    Query("q243_er_payload_incremental", q243ErPayloadIncremental,
+      Some(q242Sql),
+      prepare = Some(buildErPayloadGeneration(_, _)),
+      observeRows = true),
+    Query("q151_sorted_neighborhood", q151SortedNeighborhood, Some(q151Sql),
+      observeRows = true),
+    Query("q150_winnow_pairs", q150WinnowPairs, Some(q150Sql),
+      observeRows = true),
+    Query("q149_corpus_overlap", q149CorpusOverlap, Some(q149Sql)),
+    Query("q134_preference_pairs", q134PreferencePairs, Some(q134Sql)),
+    Query("q128_edit_verify", q128EditVerify, Some(q128Sql)),
+    Query("q127_bitext_mine", q127BitextMine, Some(q127Sql)),
+    Query("q125_mmr_diversify", q125MmrDiversify, Some(q125Sql)),
+    Query("q124_pq_codes", q124PqCodes, Some(q124Sql)),
+    Query("q122_cms_frequency", q122CmsFrequency, Some(q122Sql)),
+    Query("q114_kmv_distinct", q114KmvDistinct, Some(q114Sql)),
+    Query("q164_hll_distinct", q164HllDistinct, Some(q164Sql)),
+    Query("q169_containment", q169Containment, Some(q169Sql)),
+    Query("q30_exact_dedup", q30Exact, Some(q30Sql),
+      observeRows = true),
+    Query("q31_fingerprint_dedup", q31Fingerprint, Some(q31Sql),
+      observeRows = true),
+    Query("q32_minhash_pairs", q32Minhash, Some(q32Sql),
+      observeRows = true),
+    Query("q33_simhash_pairs", q33Simhash, Some(q33Sql),
+      observeRows = true),
+    Query("q34_ngram_jaccard", q34Jaccard, Some(q34Sql),
+      observeRows = true),
+    Query("q35_embed_neardup", q35EmbedNearDup, Some(q35Sql)),
+    Query("q36_incremental_dedup", q36IncrementalDedup, Some(q36Sql)),
+    Query("q40_ann_brute", q40AnnBrute, Some(q40Sql)),
+    Query("q41_ann_srp", q41AnnSrp, Some(q41Sql)),
+    Query("q42_ann_topk_heap", q42AnnTopKHeap, Some(q40Sql)),
+    Query("q103_hard_negatives", q103HardNegatives, Some(q103Sql)),
+    Query("q110_embedding_outliers", q110EmbeddingOutliers, Some(q110Sql)),
+    Query("q43_ann_ivf", q43AnnIvf, Some(q41Sql)),
+    Query("q43b_ann_ivf_reload", q43bAnnIvfReload, Some(q41Sql),
+      prepare = Some(buildIvfArtifact(_, _))),
+    Query("q62_sparse_cosine", q62SparseCosine, Some(q62Sql),
+      observeRows = true),
+    Query("q73_semdedup", q73SemDedup, Some(q73Sql)),
+    Query("q83_semantic_decontaminate", q83SemanticDecontaminate, Some(q83Sql)))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Query
 import graft.ScratchDirs
 import graft.i18n.Translate
 import graft.ops._
@@ -554,9 +555,10 @@ object MiscOps {
     // both samples are partitions of ONE table: tag the side at the scan
     // (single pass) instead of running two filtered scans through the
     // two-DataFrame ksStatistic API — the union it would build is
-    // exactly this relation (quantity is never null, so <=25 / >25 is a
-    // partition of the rows)
+    // exactly this relation once a NULL quantity, which neither
+    // `<= 25` nor `> 25` keeps, is dropped
     val tagged = Load.table(spark, dir, "lineitem")
+      .filter(col("l_quantity").isNotNull)
       .select(col("l_returnflag").as("__k"),
         (col("l_extendedprice").cast(DecimalType(18, 4)) * 100)
           .cast(LongType).as("__v"),
@@ -571,7 +573,7 @@ object MiscOps {
       |         CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * 100 AS BIGINT)
       |           AS v,
       |         CASE WHEN l_quantity <= 25 THEN 0 ELSE 1 END AS side
-      |  FROM lineitem),
+      |  FROM lineitem WHERE l_quantity IS NOT NULL),
       |h AS (
       |  SELECT k, v,
       |         sum(CASE WHEN side = 0 THEN 1 ELSE 0 END)::BIGINT AS ha,
@@ -959,7 +961,8 @@ object MiscOps {
     * interpolation). Per return flag; ties broken by the line's unique
     * (orderkey·10 + linenumber).
     */
-  def q188QuantileNorm(spark: SparkSession, dir: String): DataFrame = {
+  def q188QuantileNorm(spark: SparkSession, dir: String,
+      sketch: Boolean): DataFrame = {
     val li = Load.table(spark, dir, "lineitem")
       .select(col("l_returnflag"), col("l_quantity"),
         (col("l_extendedprice").cast(DecimalType(18, 4)) * 100)
@@ -971,9 +974,9 @@ object MiscOps {
       .select("l_returnflag", "cents")
     // executable 100 TB swap: sketch tier maps through both sides'
     // mergeable histograms instead of two per-key sort windows
-    // (QuantileTierSpec; oracle runs the default exact tier)
+    // (QuantileTierSpec; the oracle row runs the exact tier)
     val out =
-      if (Quantiles.sketchTier(spark))
+      if (sketch)
         Quantiles.quantileNormalizeSketch(a, b, Seq("l_returnflag"), "cents")
       else
         Quantiles.quantileNormalize(a, b, Seq("l_returnflag"), "cents",
@@ -1174,7 +1177,8 @@ object MiscOps {
     * identically — no tiebreak column, the property a feature
     * transform must have), outlier- and scale-immune, 2^30 fixed.
     */
-  def q195PercentileRank(spark: SparkSession, dir: String): DataFrame = {
+  def q195PercentileRank(spark: SparkSession, dir: String,
+      sketch: Boolean): DataFrame = {
     val c = Load.table(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"),
         (col("c_acctbal").cast(DecimalType(18, 4)) * 100)
@@ -1183,7 +1187,7 @@ object MiscOps {
     // histogram-bucket resolution but keeps RANK semantics (equal
     // values share a bucket, hence a percentile); oracle = exact tier
     val out =
-      if (Quantiles.sketchTier(spark))
+      if (sketch)
         Quantiles.percentileRankSketch(c, Seq("c_mktsegment"), "bal_cents")
       else Quantiles.percentileRank(c, Seq("c_mktsegment"), "bal_cents")
     out.orderBy("c_custkey")
@@ -2689,15 +2693,16 @@ object MiscOps {
     * the PROFILED set: double→string rendering differs across engines,
     * and the oracle's job is to pin the counting semantics.
     */
-  def q105Profile(spark: SparkSession, dir: String): DataFrame = {
+  def q105Profile(spark: SparkSession, dir: String,
+      sketch: Boolean): DataFrame = {
     val o = Load.table(spark, dir, "orders")
-    // executable 100 TB swap (spark.graft.distinctTier=sketch): KMV
+    // executable 100 TB swap (the q105s row): KMV
     // n_distinct in the same single-agg pass, exact below k=1024
-    // (ProfileTierSpec); oracle runs the default exact tier
+    // (ProfileTierSpec); the oracle row runs the exact tier
     graft.ops.Profile.profile(o,
       Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority",
         "o_orderdate"),
-      sketchDistinct = graft.ops.Profile.sketchTier(spark))
+      sketchDistinct = sketch)
       .orderBy("column")
   }
 
@@ -2937,141 +2942,85 @@ object MiscOps {
       |FROM top, t
       |ORDER BY n_rows DESC, suppkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q227_skew_audit" -> (q227SkewAudit _),
-    "q152_profile_merge" -> (q152ProfileMerge _),
-    "q237_distinct_tier_envelope" -> (q237DistinctTierEnvelope _),
-    "q238_quantile_tier_envelope" -> (q238QuantileTierEnvelope _),
-    "q105_profile" -> (q105Profile _),
-    "q135_profile_drift" -> (q135ProfileDrift _),
-    "q136_json_permissive" -> (q136JsonPermissive _),
-    "q137_stream_trending" -> (q137StreamTrending _),
-    "q138_rate_anomaly" -> (q138RateAnomaly _),
-    "q139_retention_cohorts" -> (q139RetentionCohorts _),
-    "q107_range_join" -> (q107RangeJoin _),
-    "q106_nfc_normalize" -> (q106NfcNormalize _),
-    "q11_set_type" -> q11SetType,
-    "q12_year_expand" -> q12YearExpand,
-    "q13_explode_dedup" -> q13ExplodeDedup,
-    "q14_links" -> q14Links,
-    "q15_recode" -> q15Recode,
-    "q16_scd_merge" -> q16ScdMerge,
-    "q167_scd2_history" -> (q167Scd2History _),
-    "q168_cusum_shift" -> (q168CusumShift _),
-    "q171_robust_outliers" -> (q171RobustOutliers _),
-    "q172_woe_iv" -> (q172WoeIv _),
-    "q173_path_mining" -> (q173PathMining _),
-    "q174_assoc_rules" -> (q174AssocRules _),
-    "q175_funnel" -> (q175Funnel _),
-    "q178_ks_drift" -> (q178KsDrift _),
-    "q180_rfm_segments" -> (q180RfmSegments _),
-    "q181_ols_trend" -> (q181OlsTrend _),
-    "q182_decayed_score" -> (q182DecayedScore _),
-    "q183_winsor_mean" -> (q183WinsorMean _),
-    "q184_benford" -> (q184Benford _),
-    "q185_streaks" -> (q185Streaks _),
-    "q186_funnel_outer" -> (q186FunnelOuter _),
-    "q188_quantile_norm" -> (q188QuantileNorm _),
-    "q192_rendezvous" -> (q192Rendezvous _),
-    "q193_twap" -> (q193Twap _),
-    "q194_session_rules" -> (q194SessionRules _),
-    "q195_percentile_rank" -> (q195PercentileRank _),
-    "q196_inventory" -> (q196Inventory _),
-    "q198_compaction_plan" -> (q198CompactionPlan _),
-    "q199_next_event" -> (q199NextEvent _),
-    "q17_fuzzy_translate" -> q17FuzzyTranslate,
-    "q17b_exact_translate" -> q17bExactTranslate,
-    "q18_nested_series" -> q18NestedSeries,
-    "q18b_series_explode" -> q18bSeriesExplode,
-    "q19_validate_units" -> q19ValidateUnits,
-    "q50_windowed_events" -> q50WindowedEvents,
-    "q116_stream_distinct" -> (q116StreamDistinct _),
-    "q51_sessionize" -> q51Sessionize,
-    "q53_funnel_join" -> q53FunnelJoin,
-    "q60_multimodal" -> q60Multimodal,
-    "q60b_luma_laplacian" -> (q60bLumaLaplacian _),
-    "q61_audio" -> q61Audio,
-    "q66_image_pixels" -> q66ImagePixels,
-    "q72_asof_join" -> q72AsOfJoin,
-    "q158_asof_forward" -> (q158AsOfForward _),
-    "q159_time_spine" -> (q159Densify _),
-    "q160_psi_drift" -> (q160PsiDrift _),
-    "q161_integrity_audit" -> (q161IntegrityAudit _),
-    "q162_transitions" -> (q162Transitions _),
-    "q75_phash_dedup" -> q75PhashDedup,
-    "q78_stream_dedup" -> q78StreamDedupTwin,
-    "q130_stream_neardup" -> (q130StreamNearDup _),
-    "q82_json_flatten" -> q82JsonFlatten,
-    "q84_snapshot_diff" -> q84SnapshotDiff,
-    "q92_ohlc" -> q92Ohlc,
-    "q85_url_canonical" -> q85UrlCanonical)
-
-  val oracles: Map[String, String] = Map(
-    "q227_skew_audit" -> q227Sql,
-    "q152_profile_merge" -> q152Sql,
-    "q237_distinct_tier_envelope" -> q237Sql,
-    "q238_quantile_tier_envelope" -> q238Sql,
-    "q105_profile" -> q105Sql,
-    "q135_profile_drift" -> q135Sql,
-    "q136_json_permissive" -> q136Sql,
-    "q137_stream_trending" -> q137Sql,
-    "q138_rate_anomaly" -> q138Sql,
-    "q139_retention_cohorts" -> q139Sql,
-    "q107_range_join" -> q107Sql,
-    "q106_nfc_normalize" -> q106Sql,
-    "q11_set_type" -> q11Sql,
-    "q12_year_expand" -> q12Sql,
-    "q13_explode_dedup" -> q13Sql,
-    "q14_links" -> q14Sql,
-    "q15_recode" -> q15Sql,
-    "q16_scd_merge" -> q16Sql,
-    "q167_scd2_history" -> q167Sql,
-    "q168_cusum_shift" -> q168Sql,
-    "q171_robust_outliers" -> q171Sql,
-    "q172_woe_iv" -> q172Sql,
-    "q173_path_mining" -> q173Sql,
-    "q174_assoc_rules" -> q174Sql,
-    "q175_funnel" -> q175Sql,
-    "q178_ks_drift" -> q178Sql,
-    "q180_rfm_segments" -> q180Sql,
-    "q181_ols_trend" -> q181Sql,
-    "q182_decayed_score" -> q182Sql,
-    "q183_winsor_mean" -> q183Sql,
-    "q184_benford" -> q184Sql,
-    "q185_streaks" -> q185Sql,
-    "q186_funnel_outer" -> q186Sql,
-    "q188_quantile_norm" -> q188Sql,
-    "q192_rendezvous" -> q192Sql,
-    "q193_twap" -> q193Sql,
-    "q194_session_rules" -> q194Sql,
-    "q195_percentile_rank" -> q195Sql,
-    "q196_inventory" -> q196Sql,
-    "q198_compaction_plan" -> q198Sql,
-    "q199_next_event" -> q199Sql,
-    "q17_fuzzy_translate" -> q17Sql,
-    "q17b_exact_translate" -> q17bSql,
-    "q18_nested_series" -> q18Sql,
-    "q18b_series_explode" -> q18bSql,
-    "q19_validate_units" -> q19Sql,
-    "q50_windowed_events" -> q50Sql,
-    "q116_stream_distinct" -> q116Sql,
-    "q51_sessionize" -> q51Sql,
-    "q53_funnel_join" -> q53Sql,
-    "q60_multimodal" -> q60Sql,
-    "q60b_luma_laplacian" -> q60bSql,
-    "q61_audio" -> q61Sql,
-    "q66_image_pixels" -> q66Sql,
-    "q72_asof_join" -> q72Sql,
-    "q158_asof_forward" -> q158Sql,
-    "q159_time_spine" -> q159Sql,
-    "q160_psi_drift" -> q160Sql,
-    "q161_integrity_audit" -> q161Sql,
-    "q162_transitions" -> q162Sql,
-    "q75_phash_dedup" -> q75Sql,
-    "q78_stream_dedup" -> q78Sql,
-    "q130_stream_neardup" -> q130Sql,
-    "q82_json_flatten" -> q82Sql,
-    "q84_snapshot_diff" -> q84Sql,
-    "q92_ohlc" -> q92Sql,
-    "q85_url_canonical" -> q85Sql)
+  val rows: Seq[Query] = Seq(
+    Query("q227_skew_audit", q227SkewAudit, Some(q227Sql)),
+    Query("q152_profile_merge", q152ProfileMerge, Some(q152Sql)),
+    Query("q237_distinct_tier_envelope", q237DistinctTierEnvelope,
+      Some(q237Sql)),
+    Query("q238_quantile_tier_envelope", q238QuantileTierEnvelope,
+      Some(q238Sql)),
+    Query("q105_profile", q105Profile(_, _, false), Some(q105Sql)),
+    Query("q105s_profile_sketch", q105Profile(_, _, true), None),
+    Query("q135_profile_drift", q135ProfileDrift, Some(q135Sql)),
+    Query("q136_json_permissive", q136JsonPermissive, Some(q136Sql)),
+    Query("q137_stream_trending", q137StreamTrending, Some(q137Sql)),
+    Query("q138_rate_anomaly", q138RateAnomaly, Some(q138Sql)),
+    Query("q139_retention_cohorts", q139RetentionCohorts, Some(q139Sql)),
+    Query("q107_range_join", q107RangeJoin, Some(q107Sql)),
+    Query("q106_nfc_normalize", q106NfcNormalize, Some(q106Sql)),
+    Query("q11_set_type", q11SetType, Some(q11Sql)),
+    Query("q12_year_expand", q12YearExpand, Some(q12Sql)),
+    Query("q13_explode_dedup", q13ExplodeDedup, Some(q13Sql)),
+    Query("q14_links", q14Links, Some(q14Sql)),
+    Query("q15_recode", q15Recode, Some(q15Sql)),
+    Query("q16_scd_merge", q16ScdMerge, Some(q16Sql)),
+    Query("q167_scd2_history", q167Scd2History, Some(q167Sql)),
+    Query("q168_cusum_shift", q168CusumShift, Some(q168Sql)),
+    Query("q171_robust_outliers", q171RobustOutliers, Some(q171Sql)),
+    Query("q172_woe_iv", q172WoeIv, Some(q172Sql)),
+    Query("q173_path_mining", q173PathMining, Some(q173Sql)),
+    Query("q174_assoc_rules", q174AssocRules, Some(q174Sql)),
+    Query("q175_funnel", q175Funnel, Some(q175Sql)),
+    Query("q178_ks_drift", q178KsDrift, Some(q178Sql)),
+    Query("q180_rfm_segments", q180RfmSegments, Some(q180Sql)),
+    Query("q181_ols_trend", q181OlsTrend, Some(q181Sql)),
+    Query("q182_decayed_score", q182DecayedScore, Some(q182Sql)),
+    Query("q183_winsor_mean", q183WinsorMean, Some(q183Sql)),
+    Query("q184_benford", q184Benford, Some(q184Sql)),
+    Query("q185_streaks", q185Streaks, Some(q185Sql)),
+    Query("q186_funnel_outer", q186FunnelOuter, Some(q186Sql)),
+    Query("q188_quantile_norm", q188QuantileNorm(_, _, false), Some(q188Sql)),
+    Query("q188s_quantile_norm_sketch", q188QuantileNorm(_, _, true), None),
+    Query("q192_rendezvous", q192Rendezvous, Some(q192Sql)),
+    Query("q193_twap", q193Twap, Some(q193Sql)),
+    Query("q194_session_rules", q194SessionRules, Some(q194Sql)),
+    Query("q195_percentile_rank", q195PercentileRank(_, _, false),
+      Some(q195Sql)),
+    Query("q195s_percentile_sketch", q195PercentileRank(_, _, true), None),
+    Query("q196_inventory", q196Inventory, Some(q196Sql)),
+    Query("q198_compaction_plan", q198CompactionPlan, Some(q198Sql)),
+    Query("q199_next_event", q199NextEvent, Some(q199Sql)),
+    Query("q17_fuzzy_translate", q17FuzzyTranslate, Some(q17Sql)),
+    Query("q17b_exact_translate", q17bExactTranslate, Some(q17bSql)),
+    Query("q18_nested_series", q18NestedSeries, Some(q18Sql)),
+    Query("q18b_series_explode", q18bSeriesExplode, Some(q18bSql)),
+    Query("q19_validate_units", q19ValidateUnits, Some(q19Sql)),
+    Query("q50_windowed_events", q50WindowedEvents, Some(q50Sql)),
+    Query("q116_stream_distinct", q116StreamDistinct, Some(q116Sql)),
+    Query("q51_sessionize", q51Sessionize, Some(q51Sql)),
+    Query("q53_funnel_join", q53FunnelJoin, Some(q53Sql)),
+    Query("q60_multimodal", q60Multimodal, Some(q60Sql)),
+    Query("q60b_luma_laplacian", q60bLumaLaplacian, Some(q60bSql)),
+    // decoded bytes: 16-bit PCM, duration_ms × sample_rate / 1000 samples
+    Query("q61_audio", q61Audio, Some(q61Sql),
+      observeBytes = Some((col("duration_ms") * col("sample_rate")
+        * col("channels") * 2 / 1000).cast("long"))),
+    // decoded bytes: RGB pixels from the decode proof's n_px
+    Query("q66_image_pixels", q66ImagePixels, Some(q66Sql),
+      observeBytes = Some((col("n_px") * 3).cast("long"))),
+    Query("q72_asof_join", q72AsOfJoin, Some(q72Sql)),
+    Query("q158_asof_forward", q158AsOfForward, Some(q158Sql)),
+    Query("q159_time_spine", q159Densify, Some(q159Sql)),
+    Query("q160_psi_drift", q160PsiDrift, Some(q160Sql)),
+    Query("q161_integrity_audit", q161IntegrityAudit, Some(q161Sql)),
+    Query("q162_transitions", q162Transitions, Some(q162Sql)),
+    Query("q75_phash_dedup", q75PhashDedup, Some(q75Sql)),
+    Query("q78_stream_dedup", q78StreamDedupTwin, Some(q78Sql)),
+    Query("q130_stream_neardup", q130StreamNearDup, Some(q130Sql),
+      prepare = Some(buildNearDupHistIndex(_, _)),
+      observeRows = true),
+    Query("q82_json_flatten", q82JsonFlatten, Some(q82Sql)),
+    Query("q84_snapshot_diff", q84SnapshotDiff, Some(q84Sql)),
+    Query("q92_ohlc", q92Ohlc, Some(q92Sql)),
+    Query("q85_url_canonical", q85UrlCanonical, Some(q85Sql)))
 }

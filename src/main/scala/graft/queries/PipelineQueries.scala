@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.ScratchDirs
 import graft.ops.Load
 import graft.pipelines.Judges
@@ -192,15 +193,9 @@ object PipelineQueries {
       |  CAST(1234567 AS BIGINT) AS planted
       |FROM up GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q70_judges_events" -> q70JudgesEvents,
-    "q71_judges_join" -> q71JudgesJoin,
-    "q88_spec_pipeline" -> (q88SpecPipeline _),
-    "q111_spec_replay" -> (q111SpecReplay _))
-
-  val oracles: Map[String, String] = Map(
-    "q70_judges_events" -> q70Sql,
-    "q71_judges_join" -> q71Sql,
-    "q88_spec_pipeline" -> q88Sql,
-    "q111_spec_replay" -> q111Sql)
+  val rows: Seq[Query] = Seq(
+    Query("q70_judges_events", q70JudgesEvents, Some(q70Sql)),
+    Query("q71_judges_join", q71JudgesJoin, Some(q71Sql)),
+    Query("q88_spec_pipeline", q88SpecPipeline, Some(q88Sql)),
+    Query("q111_spec_replay", q111SpecReplay, Some(q111Sql)))
 }

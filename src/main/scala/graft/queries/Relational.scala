@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Query
 import graft.ops._
 
 /** Oracle-checked queries over the driver's star-schema test tables, each
@@ -391,37 +392,20 @@ object Relational {
       |GROUP BY CUBE(source, lang, lb)
       |ORDER BY gid, source, lang, lb""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q157_cube" -> q157Cube,
-    "q1_agg" -> q1Agg,
-    "q2_filter_project" -> q2FilterProject,
-    "q3_join" -> q3Join,
-    "q4_join_self" -> q4JoinSelf,
-    "q5_window" -> q5Window,
-    "q6_dedup_suffix" -> q6DedupSuffix,
-    "q7_forward_fill" -> q7ForwardFill,
-    "q8_unpivot" -> q8Unpivot,
-    "q9_concatenate" -> q9Concatenate,
-    "q10_doc_id" -> q10DocId,
-    "q44_salted_join" -> q44SaltedJoin,
-    "q74_zorder" -> q74ZOrder,
-    "q93_pivot" -> q93Pivot,
-    "q94_rollup" -> q94Rollup)
-
-  val oracles: Map[String, String] = Map(
-    "q157_cube" -> q157Sql,
-    "q1_agg" -> q1Sql,
-    "q2_filter_project" -> q2Sql,
-    "q3_join" -> q3Sql,
-    "q4_join_self" -> q4Sql,
-    "q5_window" -> q5Sql,
-    "q6_dedup_suffix" -> q6Sql,
-    "q7_forward_fill" -> q7Sql,
-    "q8_unpivot" -> q8Sql,
-    "q9_concatenate" -> q9Sql,
-    "q10_doc_id" -> q10Sql,
-    "q44_salted_join" -> q44Sql,
-    "q74_zorder" -> q74Sql,
-    "q93_pivot" -> q93Sql,
-    "q94_rollup" -> q94Sql)
+  val rows: Seq[Query] = Seq(
+    Query("q157_cube", q157Cube, Some(q157Sql)),
+    Query("q1_agg", q1Agg, Some(q1Sql)),
+    Query("q2_filter_project", q2FilterProject, Some(q2Sql)),
+    Query("q3_join", q3Join, Some(q3Sql)),
+    Query("q4_join_self", q4JoinSelf, Some(q4Sql)),
+    Query("q5_window", q5Window, Some(q5Sql)),
+    Query("q6_dedup_suffix", q6DedupSuffix, Some(q6Sql)),
+    Query("q7_forward_fill", q7ForwardFill, Some(q7Sql)),
+    Query("q8_unpivot", q8Unpivot, Some(q8Sql)),
+    Query("q9_concatenate", q9Concatenate, Some(q9Sql)),
+    Query("q10_doc_id", q10DocId, Some(q10Sql)),
+    Query("q44_salted_join", q44SaltedJoin, Some(q44Sql)),
+    Query("q74_zorder", q74ZOrder, Some(q74Sql)),
+    Query("q93_pivot", q93Pivot, Some(q93Sql)),
+    Query("q94_rollup", q94Rollup, Some(q94Sql)))
 }

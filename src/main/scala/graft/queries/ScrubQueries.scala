@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.ops.{Load, Par}
 import graft.text.Scrub
 
@@ -357,19 +358,6 @@ object ScrubQueries {
       |  USING (bal_bucket, segment)
       |ORDER BY k.c_custkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q140_k_anonymity" -> (q140KAnonymity _),
-    "q129_temperature_mix" -> (q129TemperatureMix _),
-    "q121_unimax_mix" -> (q121UnimaxMix _),
-    "q117_multi_scrub" -> (q117MultiScrub _),
-    "q23_repetition" -> q23Repetition,
-    "q24_pii_redact" -> q24Redact,
-    "q190_luhn_cards" -> (q190LuhnCards _),
-    "q25_hash_sample" -> q25HashSample,
-    "q170_stratified_sample" -> (q170StratifiedSample _),
-    "q26_curation" -> q26Curation,
-    "q99_epoch_mix" -> (q99EpochMix _))
-
   /** q190: Luhn-gated card detection ([[graft.text.Scrub.luhnSum]]/
     * `luhnValid`) — the PRECISION tier q24's regex redaction lacks: a
     * 13–19 digit run that fails the ISO/IEC 7812 checksum is an order
@@ -535,16 +523,16 @@ object ScrubQueries {
       |          WHEN 'src2' THEN 1.0 ELSE 1.0 END) * 4294967296.0) AS BIGINT)
       |ORDER BY doc_id""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q140_k_anonymity" -> q140Sql,
-    "q129_temperature_mix" -> q129Sql,
-    "q121_unimax_mix" -> q121Sql,
-    "q117_multi_scrub" -> q117Sql,
-    "q23_repetition" -> q23Sql,
-    "q24_pii_redact" -> q24Sql,
-    "q190_luhn_cards" -> q190Sql,
-    "q25_hash_sample" -> q25Sql,
-    "q170_stratified_sample" -> q170Sql,
-    "q26_curation" -> q26Sql,
-    "q99_epoch_mix" -> q99Sql)
+  val rows: Seq[Query] = Seq(
+    Query("q140_k_anonymity", q140KAnonymity, Some(q140Sql)),
+    Query("q129_temperature_mix", q129TemperatureMix, Some(q129Sql)),
+    Query("q121_unimax_mix", q121UnimaxMix, Some(q121Sql)),
+    Query("q117_multi_scrub", q117MultiScrub, Some(q117Sql)),
+    Query("q23_repetition", q23Repetition, Some(q23Sql)),
+    Query("q24_pii_redact", q24Redact, Some(q24Sql)),
+    Query("q190_luhn_cards", q190LuhnCards, Some(q190Sql)),
+    Query("q25_hash_sample", q25HashSample, Some(q25Sql)),
+    Query("q170_stratified_sample", q170StratifiedSample, Some(q170Sql)),
+    Query("q26_curation", q26Curation, Some(q26Sql)),
+    Query("q99_epoch_mix", q99EpochMix, Some(q99Sql)))
 }

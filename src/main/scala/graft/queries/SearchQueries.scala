@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
+import graft.Query
 import graft.ScratchDirs
 import graft.ops.Load
 import graft.text.{QualityRules, SpanDedup}
@@ -18,7 +19,8 @@ object SearchQueries {
   /** q67: maximal duplicated word-4-gram spans across documents —
     * substring-granularity dedup (Lee et al. ACL'22 shape). The oracle
     * reconstructs grams, doc-frequencies, and the island merge with SQL
-    * window algebra; the Spark side must agree on every span boundary.
+    * window algebra; the Spark side, which plans no Window (per-doc array
+    * algebra, [[SpanDedup]]), must agree on every span boundary.
     */
   def q67SpanDedup(spark: SparkSession, dir: String): DataFrame = {
     val d = Load.table(spark, dir, "documents")
@@ -762,28 +764,6 @@ object SearchQueries {
       |WHERE d.doc_id % 37 = 0 AND d.doc_id < 10000000
       |ORDER BY query_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q224_rank_agreement" -> (q224RankAgreement _),
-    "q123_unigram_encode" -> (q123UnigramEncode _),
-    "q156_incremental_index" -> (q156IncrementalIndex _),
-    "q132_wordpiece_encode" -> (q132WordPieceEncode _),
-    "q120_bm25_search" -> (q120Bm25Search _),
-    "q177_hybrid_rrf" -> (q177HybridRrf _),
-    "q165_phrase_search" -> (q165PhraseSearch _),
-    "q165b_phrase_index_reload" -> (q165bPhraseIndexReload _),
-    "q165c_phrase_index_incremental" -> (q165cPhraseIndexIncremental _),
-    "q67_span_dedup" -> (q67SpanDedup _),
-    "q68_quality_rules" -> (q68QualityRules _),
-    "q69_tfidf_search" -> (q69TfIdfSearch _),
-    "q81_cooccurrence" -> (q81Cooccurrence _),
-    "q89_bpe_step" -> (q89BpeStep _),
-    "q101_bpe_encode" -> (q101BpeEncode _),
-    "q219_vocab_prune" -> (q219VocabPrune _),
-    "q109_tokenize_pack" -> (q109TokenizePack _),
-    "q112_bpe_artifact" -> (q112BpeArtifact _),
-    "q90_cdc_chunks" -> (q90CdcChunks _),
-    "q91_chunk_dedup" -> (q91ChunkDedup _))
-
   /** q112: the BPE merge table as a PERSISTED artifact — save the table
     * to parquet (rank, left, right), RELOAD it, require exact equality,
     * and encode the corpus with the RELOADED table. Same oracle as q101:
@@ -1323,25 +1303,33 @@ object SearchQueries {
       |FROM acc WHERE refs > 1 ORDER BY chunk_md5""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q224_rank_agreement" -> q224Sql,
-    "q123_unigram_encode" -> q123Sql,
-    "q156_incremental_index" -> q156Sql,
-    "q132_wordpiece_encode" -> q132Sql,
-    "q120_bm25_search" -> q120Sql,
-    "q177_hybrid_rrf" -> q177Sql,
-    "q165_phrase_search" -> q165Sql,
-    "q165b_phrase_index_reload" -> q165Sql, // reload must match the rebuild
-    "q165c_phrase_index_incremental" -> q165Sql, // incr merge == from-scratch
-    "q67_span_dedup" -> q67Sql,
-    "q68_quality_rules" -> q68Sql,
-    "q69_tfidf_search" -> q69Sql,
-    "q81_cooccurrence" -> q81Sql,
-    "q89_bpe_step" -> q89Sql,
-    "q101_bpe_encode" -> q101Sql,
-    "q219_vocab_prune" -> q219Sql,
-    "q109_tokenize_pack" -> q109Sql,
-    "q112_bpe_artifact" -> q101Sql, // reload must be output-identical to q101
-    "q90_cdc_chunks" -> q90Sql,
-    "q91_chunk_dedup" -> q91Sql)
+  val rows: Seq[Query] = Seq(
+    Query("q224_rank_agreement", q224RankAgreement, Some(q224Sql)),
+    Query("q123_unigram_encode", q123UnigramEncode, Some(q123Sql)),
+    Query("q156_incremental_index", q156IncrementalIndex, Some(q156Sql),
+      prepare = Some(buildBm25HistIndex(_, _))),
+    Query("q132_wordpiece_encode", q132WordPieceEncode, Some(q132Sql)),
+    Query("q120_bm25_search", q120Bm25Search, Some(q120Sql)),
+    Query("q177_hybrid_rrf", q177HybridRrf, Some(q177Sql)),
+    Query("q165_phrase_search", q165PhraseSearch, Some(q165Sql)),
+    // reload must match the rebuild
+    Query("q165b_phrase_index_reload", q165bPhraseIndexReload, Some(q165Sql),
+      prepare = Some(buildPhraseIndex(_, _))),
+    // incr merge == from-scratch
+    Query("q165c_phrase_index_incremental", q165cPhraseIndexIncremental,
+      Some(q165Sql),
+      prepare = Some(buildPhraseIndexIncremental(_, _))),
+    Query("q67_span_dedup", q67SpanDedup, Some(q67Sql)),
+    Query("q68_quality_rules", q68QualityRules, Some(q68Sql)),
+    Query("q69_tfidf_search", q69TfIdfSearch, Some(q69Sql),
+      observeRows = true),
+    Query("q81_cooccurrence", q81Cooccurrence, Some(q81Sql)),
+    Query("q89_bpe_step", q89BpeStep, Some(q89Sql)),
+    Query("q101_bpe_encode", q101BpeEncode, Some(q101Sql)),
+    Query("q219_vocab_prune", q219VocabPrune, Some(q219Sql)),
+    Query("q109_tokenize_pack", q109TokenizePack, Some(q109Sql)),
+    // reload must be output-identical to q101
+    Query("q112_bpe_artifact", q112BpeArtifact, Some(q101Sql)),
+    Query("q90_cdc_chunks", q90CdcChunks, Some(q90Sql)),
+    Query("q91_chunk_dedup", q91ChunkDedup, Some(q91Sql)))
 }

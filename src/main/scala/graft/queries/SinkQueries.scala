@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Query
 import graft.ScratchDirs
 import graft.core.{Flow, Resource}
 import graft.ops.{Checkpoint, Load}
@@ -395,25 +396,14 @@ object SinkQueries {
       |         AS content_fp
       |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q148_jsonl_shards" -> (q148JsonlShards _),
-    "q197_orc_roundtrip" -> (q197OrcRoundtrip _),
-    "q95_sitemap" -> (q95Sitemap _),
-    "q96_bucketed_join" -> (q96BucketedJoin _),
-    "q39_xlsx_roundtrip" -> q39XlsxRoundtrip,
-    "q45_sink_lifecycle" -> q45SinkLifecycle,
-    "q46_dump_roundtrip" -> q46DumpRoundtrip,
-    "q80_orc_roundtrip" -> q80OrcRoundtrip,
-    "q86_schema_evolution" -> q86SchemaEvolution)
-
-  val oracles: Map[String, String] = Map(
-    "q148_jsonl_shards" -> q148Sql,
-    "q197_orc_roundtrip" -> q197Sql,
-    "q95_sitemap" -> q95Sql,
-    "q96_bucketed_join" -> q96Sql,
-    "q39_xlsx_roundtrip" -> q39Sql,
-    "q45_sink_lifecycle" -> q45Sql,
-    "q46_dump_roundtrip" -> q46Sql,
-    "q80_orc_roundtrip" -> q80Sql,
-    "q86_schema_evolution" -> q86Sql)
+  val rows: Seq[Query] = Seq(
+    Query("q148_jsonl_shards", q148JsonlShards, Some(q148Sql)),
+    Query("q197_orc_roundtrip", q197OrcRoundtrip, Some(q197Sql)),
+    Query("q95_sitemap", q95Sitemap, Some(q95Sql)),
+    Query("q96_bucketed_join", q96BucketedJoin, Some(q96Sql)),
+    Query("q39_xlsx_roundtrip", q39XlsxRoundtrip, Some(q39Sql)),
+    Query("q45_sink_lifecycle", q45SinkLifecycle, Some(q45Sql)),
+    Query("q46_dump_roundtrip", q46DumpRoundtrip, Some(q46Sql)),
+    Query("q80_orc_roundtrip", q80OrcRoundtrip, Some(q80Sql)),
+    Query("q86_schema_evolution", q86SchemaEvolution, Some(q86Sql)))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Query
 import graft.ScratchDirs
 import graft.ops.Load
 import graft.text.TextAnalysis
@@ -1324,47 +1325,25 @@ object TextQueries {
        |FROM b, tot ORDER BY bucket""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q232_quality_token_curve" -> (q232QualityTokenCurve _),
-    "q229_nb_kappa" -> (q229NbKappa _),
-    "q104_ngram_novelty" -> (q104NgramNovelty _),
-    "q189_chunking" -> (q189Chunking _),
-    "q191_templates" -> (q191Templates _),
-    "q113_nb_classifier" -> (q113NbClassifier _),
-    "q216_nb_calibration" -> (q216NbCalibration _),
-    "q218_fim_transform" -> (q218FimTransform _),
-    "q115_span_corrupt" -> (q115SpanCorrupt _),
-    "q20_text_profile" -> q20Profile,
-    "q21_quality_score" -> q21Quality,
-    "q22_lang_id" -> q22LangId,
-    "q59_unigram_lm" -> q59UnigramLm,
-    "q98_kneser_ney" -> (q98KneserNey _),
-    "q163_incremental_lm" -> (q163IncrementalLm _),
-    "q102_perplexity_gate" -> (q102PerplexityGate _),
-    "q126_entropy_gate" -> (q126EntropyGate _),
-    "q143_repetition_gate" -> (q143RepetitionGate _),
-    "q131_chat_render" -> (q131ChatRender _),
-    "q133_sft_pipeline" -> (q133SftPipeline _))
-
-  val oracles: Map[String, String] = Map(
-    "q232_quality_token_curve" -> q232Sql,
-    "q229_nb_kappa" -> q229Sql,
-    "q126_entropy_gate" -> q126Sql,
-    "q143_repetition_gate" -> q143Sql,
-    "q131_chat_render" -> q131Sql,
-    "q133_sft_pipeline" -> q133Sql,
-    "q20_text_profile" -> q20Sql,
-    "q21_quality_score" -> q21Sql,
-    "q22_lang_id" -> q22Sql,
-    "q59_unigram_lm" -> q59Sql,
-    "q98_kneser_ney" -> q98Sql,
-    "q163_incremental_lm" -> q163Sql,
-    "q102_perplexity_gate" -> q102Sql,
-    "q104_ngram_novelty" -> q104Sql,
-    "q189_chunking" -> q189Sql,
-    "q191_templates" -> q191Sql,
-    "q113_nb_classifier" -> q113Sql,
-    "q216_nb_calibration" -> q216Sql,
-    "q218_fim_transform" -> q218Sql,
-    "q115_span_corrupt" -> q115Sql)
+  val rows: Seq[Query] = Seq(
+    Query("q232_quality_token_curve", q232QualityTokenCurve, Some(q232Sql)),
+    Query("q229_nb_kappa", q229NbKappa, Some(q229Sql)),
+    Query("q104_ngram_novelty", q104NgramNovelty, Some(q104Sql)),
+    Query("q189_chunking", q189Chunking, Some(q189Sql)),
+    Query("q191_templates", q191Templates, Some(q191Sql)),
+    Query("q113_nb_classifier", q113NbClassifier, Some(q113Sql)),
+    Query("q216_nb_calibration", q216NbCalibration, Some(q216Sql)),
+    Query("q218_fim_transform", q218FimTransform, Some(q218Sql)),
+    Query("q115_span_corrupt", q115SpanCorrupt, Some(q115Sql)),
+    Query("q20_text_profile", q20Profile, Some(q20Sql)),
+    Query("q21_quality_score", q21Quality, Some(q21Sql)),
+    Query("q22_lang_id", q22LangId, Some(q22Sql)),
+    Query("q59_unigram_lm", q59UnigramLm, Some(q59Sql)),
+    Query("q98_kneser_ney", q98KneserNey, Some(q98Sql)),
+    Query("q163_incremental_lm", q163IncrementalLm, Some(q163Sql)),
+    Query("q102_perplexity_gate", q102PerplexityGate, Some(q102Sql)),
+    Query("q126_entropy_gate", q126EntropyGate, Some(q126Sql)),
+    Query("q143_repetition_gate", q143RepetitionGate, Some(q143Sql)),
+    Query("q131_chat_render", q131ChatRender, Some(q131Sql)),
+    Query("q133_sft_pipeline", q133SftPipeline, Some(q133Sql)))
 }

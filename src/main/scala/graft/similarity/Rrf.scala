@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the inputs are ALREADY per-query bounded (each
   * retriever emitted ≤ k rows per query), so everything here runs on
-  * the ≤ |queries|·lists·k relation: one (query, doc) aggregation
-  * exchange with map-side combine, then a per-query window over
-  * ≤ lists·k rows. The corpus was only touched by the upstream
+  * the ≤ |queries|·lists·k relation: one (query, doc) aggregation,
+  * then a per-query window over ≤ lists·k rows. Inputs that arrive
+  * hash-partitioned by query (q177's retrievers) need no (query, doc)
+  * shuffle: query_id partitioning already clusters the aggregation. The corpus was only touched by the upstream
   * retrievers — fusion never sees it.
   */
 object Rrf {

@@ -46,7 +46,10 @@ object Bpe {
     * O(n) `bpe_merge` kernel ([[graft.functions.BpeKernels.merge]]). (The same
     * scan is expressible as a builtin `aggregate` fold with
     * (acc, pending) state, but that copies the accumulator array per
-    * element and runs interpreted: 10.2 s → 0.7 s at sf0.1.)
+    * element and runs interpreted: 10.2 s → 0.7 s at sf0.1.) In q89 the
+    * Filter and Project that call it also evaluate the tokenizing
+    * `filter(split(lower(text)), x -> x <> '')` lambda, so they run
+    * interpreted as well; the kernel is still the one linear pass.
     */
   def applyMerge(tokens: Column, l: String, r: String,
       sep: String = "▁"): Column =

@@ -6,9 +6,10 @@ import org.apache.spark.sql.types._
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * token counting, quality scoring, language ID, fingerprinting. All pure
-  * Column expressions (codegen'd, partition-parallel, no UDFs in the hot
-  * path) — at 100 TB these run as narrow map stages over the scan with
-  * zero shuffle.
+  * Column expressions (partition-parallel, no UDFs in the hot path) — at
+  * 100 TB these run as narrow map stages over the scan with zero
+  * shuffle. Those built on a lambda are `CodegenFallback`s, so the
+  * projection that holds one runs interpreted, kernels included (q20).
   */
 object TextAnalysis {
 

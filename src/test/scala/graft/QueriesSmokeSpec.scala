@@ -15,6 +15,15 @@ class QueriesSmokeSpec extends SparkSpec {
     assert(missing.isEmpty, s"oracles without queries: $missing")
   }
 
+  test("each query row is registered once and is oracled or bench-only") {
+    val names = SparkEntry.rows.map(_.name)
+    assert(names.diff(names.distinct).isEmpty,
+      s"names registered twice: ${names.diff(names.distinct)}")
+    val views = SparkEntry.queries.keySet ++ SparkEntry.benchOnly.keySet
+    assert(views == names.toSet && SparkEntry.queries.size +
+      SparkEntry.benchOnly.size == names.size)
+  }
+
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name runs and returns rows at sf0.001") {
       val df = fn(spark, sf)

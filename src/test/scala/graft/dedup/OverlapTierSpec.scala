@@ -27,19 +27,17 @@ class OverlapTierSpec extends SparkSpec {
     val base = scratch("q215_tier")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$base/documents.parquet")
-    val exact = DedupQueries.q215SourceOverlapMatrix(spark, base)
-      .collect().map(_.toSeq).toSeq
-    spark.conf.set("spark.graft.overlapTier", "sketch")
-    try {
-      val sketch = DedupQueries.q215SourceOverlapMatrix(spark, base)
+    def matrix(sketch: Boolean) =
+      DedupQueries.q215SourceOverlapMatrix(spark, base, sketch)
         .collect().map(_.toSeq).toSeq
-      assert(exact == sketch,
-        s"tier drift:\nexact  $exact\nsketch $sketch")
-      // the planted overlap is real: pair (a, b) intersects
-      val ab = exact.find(r => r(0) == "a" && r(1) == "b").get
-      assert(ab(4).asInstanceOf[Long] > 0L, s"planted overlap: $ab")
-      // and the gram-free source rides the spine in BOTH tiers
-      assert(exact.count(r => r(0) == "d" || r(1) == "d") == 3)
-    } finally spark.conf.unset("spark.graft.overlapTier")
+    val exact = matrix(sketch = false)
+    val sketch = matrix(sketch = true)
+    assert(exact == sketch,
+      s"tier drift:\nexact  $exact\nsketch $sketch")
+    // the planted overlap is real: pair (a, b) intersects
+    val ab = exact.find(r => r(0) == "a" && r(1) == "b").get
+    assert(ab(4).asInstanceOf[Long] > 0L, s"planted overlap: $ab")
+    // and the gram-free source rides the spine in BOTH tiers
+    assert(exact.count(r => r(0) == "d" || r(1) == "d") == 3)
   }
 }

@@ -22,7 +22,7 @@ class SourceOverlapSpec extends SparkSpec {
         (2L, "tiny text", "en", "c", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$base/documents.parquet")
-    val out = DedupQueries.q215SourceOverlapMatrix(spark, base)
+    val out = DedupQueries.q215SourceOverlapMatrix(spark, base, sketch = false)
       .collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),

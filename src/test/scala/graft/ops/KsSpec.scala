@@ -1,5 +1,8 @@
 package graft.ops
 
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, LongType}
+
 import graft.SparkSpec
 
 class KsSpec extends SparkSpec {
@@ -67,5 +70,27 @@ class KsSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getDecimal(3).longValueExact(), r.getLong(4), r.getLong(5))).toSeq
     assert(base == shuf)
+  }
+
+  test("q178 drops a NULL quantity, as the two filtered samples do") {
+    val li = Load.table(spark, sf, "lineitem")
+    val first = li.orderBy("l_orderkey", "l_linenumber").head
+    val base = scratch("q178_null_qty")
+    li.withColumn("l_quantity",
+        when(col("l_orderkey") === first.getAs[Long]("l_orderkey") &&
+            col("l_linenumber") === first.getAs[Int]("l_linenumber"),
+          lit(null).cast(li.schema("l_quantity").dataType))
+          .otherwise(col("l_quantity")))
+      .write.mode("overwrite").parquet(s"$base/lineitem.parquet")
+    val copy = Load.table(spark, base, "lineitem")
+    assert(copy.filter(col("l_quantity").isNull).count() == 1)
+    val priced = copy.select(col("l_returnflag"), col("l_quantity"),
+      (col("l_extendedprice").cast(DecimalType(18, 4)) * 100)
+        .cast(LongType).as("cents"))
+    val want = Profile.ksStatistic(priced.filter(col("l_quantity") <= 25),
+      priced.filter(col("l_quantity") > 25), "l_returnflag", "cents")
+      .orderBy("l_returnflag").collect().toSeq
+    val got = graft.queries.MiscOps.q178KsDrift(spark, base).collect().toSeq
+    assert(got == want, s"q178 $got\ntwo filtered samples $want")
   }
 }

@@ -27,26 +27,21 @@ class ProfileTierSpec extends SparkSpec {
     assert(e("v")(1) == 1L && e("v")(2) == 3L, "n_nulls=1, n_distinct=3")
   }
 
-  test("q105 under the session flag: sub-capacity columns stay exact") {
-    spark.conf.set("spark.graft.distinctTier", "sketch")
-    try {
-      val out = graft.queries.MiscOps.q105Profile(spark, sf)
+  test("q105 sketch tier: sub-capacity columns stay exact") {
+    def distincts(sketch: Boolean) =
+      graft.queries.MiscOps.q105Profile(spark, sf, sketch)
         .collect().map(r => r.getString(0) -> r.getLong(3)).toMap
-      val exact = {
-        spark.conf.set("spark.graft.distinctTier", "exact")
-        graft.queries.MiscOps.q105Profile(spark, sf)
-          .collect().map(r => r.getString(0) -> r.getLong(3)).toMap
-      }
-      // status/priority are tiny-cardinality: must agree exactly; the
-      // key columns exceed k=1024 at spec sf — estimates must be within
-      // the KMV k=1024 relative error (~3/sqrt(k) ≈ 10%)
-      for (c <- Seq("o_orderstatus", "o_orderpriority", "o_orderdate"))
-        if (exact(c) <= 1024)
-          assert(out(c) == exact(c), s"$c: ${out(c)} != exact ${exact(c)}")
-      for ((c, ex) <- exact if ex > 1024) {
-        val err = math.abs(out(c).toDouble - ex) / ex
-        assert(err < 0.10, s"$c: estimate ${out(c)} vs $ex (err $err)")
-      }
-    } finally spark.conf.set("spark.graft.distinctTier", "exact")
+    val out = distincts(sketch = true)
+    val exact = distincts(sketch = false)
+    // status/priority are tiny-cardinality: must agree exactly; the
+    // key columns exceed k=1024 at spec sf — estimates must be within
+    // the KMV k=1024 relative error (~3/sqrt(k) ≈ 10%)
+    for (c <- Seq("o_orderstatus", "o_orderpriority", "o_orderdate"))
+      if (exact(c) <= 1024)
+        assert(out(c) == exact(c), s"$c: ${out(c)} != exact ${exact(c)}")
+    for ((c, ex) <- exact if ex > 1024) {
+      val err = math.abs(out(c).toDouble - ex) / ex
+      assert(err < 0.10, s"$c: estimate ${out(c)} vs $ex (err $err)")
+    }
   }
 }

@@ -93,19 +93,16 @@ class QuantileTierSpec extends SparkSpec {
   }
 
   test("q205 sketch tier: buckets in range and monotone per lang at spec sf") {
-    spark.conf.set("spark.graft.quantileTier", "sketch")
-    try {
-      val out = graft.queries.AuditQueries
-        .q205PerplexityBuckets(spark, sf)
-        .select("lang", "ppl_fix", "bucket").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      assert(out.nonEmpty)
-      assert(out.forall(r => r._3 >= 0 && r._3 <= 2))
-      out.groupBy(_._1).foreach { case (lang, rows) =>
-        val sorted = rows.sortBy(_._2).map(_._3).toSeq
-        assert(sorted == sorted.sorted,
-          s"$lang: sketch bucket not monotone in ppl_fix")
-      }
-    } finally spark.conf.set("spark.graft.quantileTier", "exact")
+    val out = graft.queries.AuditQueries
+      .q205PerplexityBuckets(spark, sf, sketch = true)
+      .select("lang", "ppl_fix", "bucket").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    assert(out.nonEmpty)
+    assert(out.forall(r => r._3 >= 0 && r._3 <= 2))
+    out.groupBy(_._1).foreach { case (lang, rows) =>
+      val sorted = rows.sortBy(_._2).map(_._3).toSeq
+      assert(sorted == sorted.sorted,
+        s"$lang: sketch bucket not monotone in ppl_fix")
+    }
   }
 }

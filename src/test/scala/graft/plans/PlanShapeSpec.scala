@@ -127,7 +127,7 @@ class PlanShapeSpec extends SparkSpec {
     */
   private def postingsShuffledOnce(q: String, keys: String*): Unit = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val df = graft.queries.SearchQueries.queries(q)(spark, sf)
+    val df = graft.SparkEntry.queries(q)(spark, sf)
     df.collect() // AQE reuses exchanges only on the executed plan
     val pi = PlanInspect(df)
     val n = pi.hashShuffles.count(_.keys.toSet == keys.toSet)
@@ -166,7 +166,7 @@ class PlanShapeSpec extends SparkSpec {
     // a shuffle join — if the code forced a broadcast, this would either
     // still plan BroadcastHashJoin on the model relation or fail.
     withoutBroadcast {
-      val df = graft.queries.TextQueries.queries("q113_nb_classifier")(spark, sf)
+      val df = graft.SparkEntry.queries("q113_nb_classifier")(spark, sf)
       df.collect()
       val pi = PlanInspect(df)
       assert(!pi.has[CartesianProductExec], s"unbounded cartesian in the scoring plan:\n${pi.root}")
